@@ -194,9 +194,10 @@ object Generations {
    * changes. [[GenerationMemo.current]] returns `(resolvedPath,
    * artifact)` from ONE resolution, so a caller that also reads tables
    * by path can never mix two generations within an epoch. A single
-   * volatile pair is the whole state: serve paths are single-threaded
-   * per stream/server by construction, and a concurrent caller would at
-   * worst reload the same generation twice, never serve a stale one.
+   * volatile pair is the whole state, with no lock: the REST servers call
+   * it from concurrent request threads, where the worst case is two
+   * threads loading the same generation at once (one load is wasted);
+   * a caller never serves a generation older than the one it resolved.
    * Construction WARMS the memo — an unpublished root or unreadable
    * initial generation fails the deployment at construction, not in
    * epoch 0 (the fail-fast contract all four call sites had hand-rolled

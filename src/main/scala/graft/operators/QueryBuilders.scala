@@ -82,25 +82,46 @@ object QueryBuilders {
     lit(new Timestamp(ms)).cast("timestamp")
 
   /**
+   * Restrict a view partitioned by `window_day` (the streaming serving
+   * table) to the days that can hold a `window_start` in `[fromMs, toMs]`,
+   * so the scan prunes every other day directory; a view without that
+   * column is returned as is. `window_day` is `to_date(window_start)` in
+   * the WRITER's session time zone, which a reader cannot know, so the
+   * bounds are the UTC dates of the range widened by one day on each side:
+   * a zone's local date never differs from the UTC date by more than one
+   * day (offsets stay under 24 h), so no cell is pruned away whatever
+   * zones the writer and the reader use.
+   */
+  private def dayPruned(view: DataFrame, fromMs: Long, toMs: Long): DataFrame =
+    if (!view.columns.contains("window_day")) view
+    else {
+      def utcDay(ms: Long) = Instant.ofEpochMilli(ms).atZone(ZoneOffset.UTC).toLocalDate
+      view.filter(col("window_day").between(
+        lit(utcDay(fromMs).minusDays(1)), lit(utcDay(toMs).plusDays(1))))
+    }
+
+  /**
    * History: aggregate time-series over `prefixes` within `[fromMs, toMs]`.
    * Result: `(window_start, <op>)` ordered by window_start — the shape of the
    * reference response (`README.md:81-108`; columns `[timestamp, <op>]`).
    *
-   * Plan shape: prefix+time range filters push into the view scan; one
-   * partial/final hash-aggregate merges cells across prefixes (A2); sort on
-   * the (already shuffled) group key.
+   * Plan shape: prefix+time range filters push into the view scan (and
+   * prune day partitions, see [[dayPruned]]); one partial/final
+   * hash-aggregate merges cells across prefixes (A2); the aggregated,
+   * query-sized result is coalesced to one partition and sorted there —
+   * no range exchange, no sampling job.
    */
   def history(view: DataFrame, op: String, prefixes: Seq[String],
               fromMs: Long, toMs: Long): DataFrame = {
     val o = validateOp(op)
     val ps = validatePrefixes(prefixes)
     if (fromMs >= toMs) throw QueryError(s"Invalid range: from $fromMs >= to $toMs")
-    val filtered = view
+    val filtered = dayPruned(view, fromMs, toMs)
       .filter(GeoFunctions.prefixPredicate(col("key"), ps))
       .filter(col("window_start").between(tsLit(fromMs), tsLit(toMs)))
     AggCore.reAgg(filtered, Seq(col("window_start")))
       .select(col("window_start"), AggCore.opColumn(o).as(o))
-      .orderBy(col("window_start"))
+      .coalesce(1).sortWithinPartitions(col("window_start"))
   }
 
   /** History with a named interval anchored at `toMs` (Q-H2). */
@@ -118,12 +139,12 @@ object QueryBuilders {
     val o = validateOp(op)
     val ps = validatePrefixes(prefixes)
     val hourMs = truncateToHourMs(tsMs)
-    val filtered = view
+    val filtered = dayPruned(view, hourMs, hourMs)
       .filter(col("window_start") === tsLit(hourMs))
       .filter(GeoFunctions.prefixPredicate(col("key"), ps))
     AggCore.reAgg(filtered, Seq(col("key")))
       .select(col("key"), AggCore.opColumn(o).as(o))
-      .orderBy(col("key"))
+      .coalesce(1).sortWithinPartitions(col("key"))
   }
 
   /**

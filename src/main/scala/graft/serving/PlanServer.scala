@@ -1,14 +1,12 @@
 package graft.serving
 
-import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets
-
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 
 import org.apache.spark.sql.SparkSession
 
 import graft.operators.QueryBuilders.QueryError
 import graft.operators.{Capacity, Generations, JoinPlanner}
+import graft.serving.HttpEndpoint.{parseQuery, respond}
 
 /**
  * REST planning over persisted table-profile bundles — the serving face
@@ -64,39 +62,35 @@ class PlanServer(spark: SparkSession, profiles: Map[String, String],
                  port: Int = 0) {
   require(profiles.nonEmpty, "PlanServer: register at least one profile path")
 
-  private var server: HttpServer = _
+  private val endpoint = new HttpEndpoint(port, "/api/plan", handle)
 
-  def start(): Int = {
-    server = HttpServer.create(new InetSocketAddress(port), 0)
-    server.createContext("/api/plan", handle _)
-    server.setExecutor(null)
-    server.start()
-    server.getAddress.getPort
-  }
+  /** Start serving; returns the bound port. */
+  def start(): Int = endpoint.start()
 
-  def stop(): Unit = if (server != null) server.stop(0)
+  /** Stop accepting requests and wait for the handler threads to exit. */
+  def stop(): Unit = endpoint.stop()
 
   private def handle(ex: HttpExchange): Unit = {
     try {
       val path = ex.getRequestURI.getPath.split("/").filter(_.nonEmpty)
-      val params = parseQuery(Option(ex.getRequestURI.getRawQuery).getOrElse(""))
-      if (path.length != 3) respond(ex, 404, errorJson("not found", 404))
+      val params = parseQuery(ex)
+      if (path.length != 3) respond(ex, 404, Json.error("not found", 404))
       else path(2) match {
         case "join"     => respond(ex, 200, join(params))
         case "distinct" => respond(ex, 200, distinct(params))
         case "overlap"  => respond(ex, 200, overlap(params))
         case "size"     => respond(ex, 200, size(params))
-        case _          => respond(ex, 404, errorJson("not found", 404))
+        case _          => respond(ex, 404, Json.error("not found", 404))
       }
     } catch {
-      case QueryError(msg, code) => respond(ex, code, errorJson(msg, code))
+      case QueryError(msg, code) => respond(ex, code, Json.error(msg, code))
       // library-level shape/registry violations are caller errors
-      case e: IllegalArgumentException => respond(ex, 400, errorJson(e.getMessage, 400))
+      case e: IllegalArgumentException => respond(ex, 400, Json.error(e.getMessage, 400))
       case t: Throwable =>
         // log server-side, answer generically: exception text carries
         // paths/class names a public-facing 500 must not leak
         System.err.println(s"[planserver] 500 on ${ex.getRequestURI}: $t")
-        respond(ex, 500, errorJson("internal error", 500))
+        respond(ex, 500, Json.error("internal error", 500))
     }
   }
 
@@ -143,13 +137,13 @@ class PlanServer(spark: SparkSession, profiles: Map[String, String],
         .max(1L))
     val r = JoinPlanner.joinDecisionFromProfiles(spark, factPath, dimPath, th, t)
       .collect()(0)
-    messageJson(
+    Json.message(
       Seq("fact_rows", "dim_rows", "top_share", "est_join_size",
         "est_selectivity", "strategy", "fact_bytes", "dim_bytes",
         "advised_shuffle_partitions", "top_share_exact"),
-      Seq(s"[${r.getLong(0)},${r.getLong(1)},${numJson(r.get(2))}," +
-        s"${r.getLong(3)},${numJson(r.get(4))},${"\"" + r.getString(5) + "\""}," +
-        s"${r.getLong(6)},${r.getLong(7)},${r.getLong(8)},${r.getBoolean(9)}]"))
+      Seq(s"[${r.getLong(0)},${r.getLong(1)},${Json.number(r.get(2))}," +
+        s"${r.getLong(3)},${Json.number(r.get(4))},${"\"" + r.getString(5) + "\""}," +
+        s"${r.getLong(6)},${r.getLong(7)},${r.getLong(8)},${r.getBoolean(9)}]"), "plan")
   }
 
   private def size(params: Map[String, String]): String = {
@@ -160,56 +154,27 @@ class PlanServer(spark: SparkSession, profiles: Map[String, String],
       targetFileBytes = positiveLong(params, "targetFileBytes", 512L << 20)
         .max(1L))
     val r = JoinPlanner.profileSizeAdvice(spark, path, t).collect()(0)
-    messageJson(
+    Json.message(
       Seq("rows", "bytes", "advised_shuffle_partitions", "advised_files"),
-      Seq(s"[${r.getLong(0)},${r.getLong(1)},${r.getLong(2)},${r.getLong(3)}]"))
+      Seq(s"[${r.getLong(0)},${r.getLong(1)},${r.getLong(2)},${r.getLong(3)}]"), "plan")
   }
 
   private def distinct(params: Map[String, String]): String = {
     val path = profilePath(params, "table")
     val r = JoinPlanner.profileDistinctAdvice(spark, path).collect()(0)
-    messageJson(Seq("rows", "bytes", "k", "n", "hk", "estimate"),
+    Json.message(Seq("rows", "bytes", "k", "n", "hk", "estimate"),
       Seq(s"[${r.getLong(0)},${r.getLong(1)},${r.getLong(2)},${r.getLong(3)}," +
-        s"${r.getLong(4)},${numJson(r.get(5))}]"))
+        s"${r.getLong(4)},${Json.number(r.get(5))}]"), "plan")
   }
 
   private def overlap(params: Map[String, String]): String = {
     val a = profilePath(params, "a")
     val b = profilePath(params, "b")
     val r = JoinPlanner.profileOverlapAdvice(spark, a, b).collect()(0)
-    messageJson(
+    Json.message(
       Seq("k", "n_union", "hk_union", "shared", "union_est", "jaccard",
         "inter_est"),
       Seq(s"[${r.getLong(0)},${r.getLong(1)},${r.getLong(2)},${r.getLong(3)}," +
-        s"${numJson(r.get(4))},${numJson(r.get(5))},${numJson(r.get(6))}]"))
-  }
-
-  private def messageJson(columns: Seq[String], dataRows: Seq[String]): String =
-    s"""{"columns":[${columns.map(c => s""""$c"""").mkString(",")}],""" +
-      s""""data":[${dataRows.mkString(",")}],""" +
-      s""""metadata":{"metric":"plan"}}"""
-
-  private def numJson(v: Any): String = v match {
-    case null      => "null"
-    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
-    case other     => other.toString
-  }
-
-  private def errorJson(msg: String, code: Int): String =
-    s"""{"errorMessage":"${Json.escape(msg)}","errorCode":$code}"""
-
-  private def parseQuery(q: String): Map[String, String] =
-    q.split("&").filter(_.contains("=")).map { kv =>
-      val Array(kk, v) = kv.split("=", 2)
-      kk -> java.net.URLDecoder.decode(v, StandardCharsets.UTF_8)
-    }.toMap
-
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(code, bytes.length.toLong)
-    val os = ex.getResponseBody
-    os.write(bytes)
-    os.close()
+        s"${Json.number(r.get(4))},${Json.number(r.get(5))},${Json.number(r.get(6))}]"), "plan")
   }
 }

@@ -1,14 +1,12 @@
 package graft.serving
 
-import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets
-
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 
 import org.apache.spark.sql.DataFrame
 
 import graft.operators.QueryBuilders
 import graft.operators.QueryBuilders.QueryError
+import graft.serving.HttpEndpoint.{parseQuery, respond}
 
 /**
  * Thin REST layer over the query builders — the engine-side equivalent of the
@@ -27,8 +25,11 @@ import graft.operators.QueryBuilders.QueryError
  * is accepted and ignored: Spark executors replace the host fan-out, so every
  * node serves global results.
  *
- * Built on the JDK's HttpServer — zero extra dependencies; the serving layer
- * only ever touches already-aggregated, already-small query results.
+ * Built on the JDK's HttpServer ([[HttpEndpoint]]) — zero extra
+ * dependencies; requests are handled concurrently, one pool thread per
+ * core, each resolving the view and running its own Spark jobs. The
+ * serving layer only ever touches already-aggregated, already-small query
+ * results.
  */
 class RestServer(viewProvider: () => DataFrame, port: Int) {
 
@@ -40,39 +41,35 @@ class RestServer(viewProvider: () => DataFrame, port: Int) {
     * responses track the streaming upsert with no server restart. */
   private def view: DataFrame = viewProvider()
 
-  private var server: HttpServer = _
+  private val endpoint = new HttpEndpoint(port, "/api/temperature/aggregate", handle)
 
-  def start(): Int = {
-    server = HttpServer.create(new InetSocketAddress(port), 0)
-    server.createContext("/api/temperature/aggregate", handle _)
-    server.setExecutor(null)
-    server.start()
-    server.getAddress.getPort
-  }
+  /** Start serving; returns the bound port. */
+  def start(): Int = endpoint.start()
 
-  def stop(): Unit = if (server != null) server.stop(0)
+  /** Stop accepting requests and wait for the handler threads to exit. */
+  def stop(): Unit = endpoint.stop()
 
   private def handle(ex: HttpExchange): Unit = {
     try {
       val path = ex.getRequestURI.getPath.split("/").filter(_.nonEmpty)
       // path = api, temperature, aggregate, {op}, history|snapshot
-      val params = parseQuery(Option(ex.getRequestURI.getRawQuery).getOrElse(""))
-      if (path.length != 5) respond(ex, 404, errorJson("not found", 404))
+      val params = parseQuery(ex)
+      if (path.length != 5) respond(ex, 404, Json.error("not found", 404))
       else {
         val (op, kind) = (path(3), path(4))
         kind match {
           case "history"  => respond(ex, 200, history(op, params))
           case "snapshot" => respond(ex, 200, snapshot(op, params))
-          case _          => respond(ex, 404, errorJson("not found", 404))
+          case _          => respond(ex, 404, Json.error("not found", 404))
         }
       }
     } catch {
-      case QueryError(msg, code) => respond(ex, code, errorJson(msg, code))
+      case QueryError(msg, code) => respond(ex, code, Json.error(msg, code))
       case t: Throwable          =>
         // log server-side, answer generically: exception text carries
         // paths/class names a public-facing 500 must not leak
         System.err.println(s"[serving] 500 on ${ex.getRequestURI}: $t")
-        respond(ex, 500, errorJson("internal error", 500))
+        respond(ex, 500, Json.error("internal error", 500))
     }
   }
 
@@ -90,9 +87,9 @@ class RestServer(viewProvider: () => DataFrame, port: Int) {
     // reference history columns: ["timestamp", op] with epoch-ms keys
     // (README.md:83-86)
     val rows = result.collect().map { r =>
-      s"[${r.getTimestamp(0).getTime},${numJson(r.get(1))}]"
+      s"[${r.getTimestamp(0).getTime},${Json.number(r.get(1))}]"
     }
-    messageJson(Seq("timestamp", op.toLowerCase), rows)
+    Json.message(Seq("timestamp", op.toLowerCase), rows.toSeq, "temperature")
   }
 
   private def snapshot(op: String, params: Map[String, String]): String = {
@@ -103,49 +100,23 @@ class RestServer(viewProvider: () => DataFrame, port: Int) {
     if (bbox.length != 4) throw QueryError(s"Invalid bbox: ${params.getOrElse("bbox", "")}")
     val result = QueryBuilders.snapshot(view, op, ts, bbox(0), bbox(1), bbox(2), bbox(3))
     val rows = result.collect().map { r =>
-      s"""["${r.getString(0)}",${numJson(r.get(1))}]"""
+      s"""["${r.getString(0)}",${Json.number(r.get(1))}]"""
     }
-    messageJson(Seq("geohash", op.toLowerCase), rows)
-  }
-
-  private def messageJson(columns: Seq[String], dataRows: Seq[String]): String =
-    s"""{"columns":[${columns.map(c => s""""$c"""").mkString(",")}],""" +
-      s""""data":[${dataRows.mkString(",")}],""" +
-      s""""metadata":{"metric":"temperature"}}"""
-
-  private def numJson(v: Any): String = v match {
-    case null      => "null"
-    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
-    case other     => other.toString
-  }
-
-  private def errorJson(msg: String, code: Int): String =
-    s"""{"errorMessage":"${Json.escape(msg)}","errorCode":$code}"""
-
-  private def parseQuery(q: String): Map[String, String] =
-    q.split("&").filter(_.contains("=")).map { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      k -> java.net.URLDecoder.decode(v, StandardCharsets.UTF_8)
-    }.toMap
-
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(code, bytes.length.toLong)
-    val os = ex.getResponseBody
-    os.write(bytes)
-    os.close()
+    Json.message(Seq("geohash", op.toLowerCase), rows.toSeq, "temperature")
   }
 }
 
 object RestServer {
-  /** Serve the STREAMING pipeline's table live: each request re-reads the
-    * parquet serving table (fresh file listing), so micro-batch upserts are
-    * visible immediately — the Kafka-Streams interactive-query analogue
-    * (reference serves its RocksDB store the same way,
-    * `querying/QueryingService.java:39`). Listing cost per request is
-    * footer/metadata only; fine for an aggregate table, swap in a metastore
-    * table or Delta log at prod scale. */
+  /** Serve the STREAMING pipeline's table live: each request resolves the
+    * serving table afresh ([[graft.streaming.StreamingPipeline.servingView]]:
+    * one directory listing under a fixed schema, no Spark job), so
+    * micro-batch upserts are visible immediately — the Kafka-Streams
+    * interactive-query analogue (reference serves its RocksDB store the
+    * same way, `querying/QueryingService.java:39`). Requests run
+    * concurrently, and each scans only the day partitions its time range
+    * or snapshot hour can touch (plus a one-day margin,
+    * [[graft.operators.QueryBuilders]]), so a request's cost tracks the
+    * days it asks for, not the table's retention. */
   def live(spark: org.apache.spark.sql.SparkSession, tableDir: String,
            port: Int = 7070): RestServer =
     new RestServer(() => graft.streaming.StreamingPipeline.servingView(spark, tableDir), port)

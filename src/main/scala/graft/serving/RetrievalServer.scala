@@ -1,15 +1,13 @@
 package graft.serving
 
-import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets
-
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.operators.QueryBuilders.QueryError
 import graft.operators.{Retrieval, Similarity, TextAnalysis}
+import graft.serving.HttpEndpoint.{parseQuery, respond}
 
 /**
  * REST retrieval over the persisted serving artifacts — the reference's
@@ -85,38 +83,34 @@ class RetrievalServer(spark: SparkSession, lexicalPath: String,
   // (the artifact is immutable; retraining writes a fresh path)
   private val qualityWeights = qualityModelPath.map(p => graft.operators.Learn.loadModel(spark, p))
 
-  private var server: HttpServer = _
+  private val endpoint = new HttpEndpoint(port, "/api/retrieve", handle)
 
-  def start(): Int = {
-    server = HttpServer.create(new InetSocketAddress(port), 0)
-    server.createContext("/api/retrieve", handle _)
-    server.setExecutor(null)
-    server.start()
-    server.getAddress.getPort
-  }
+  /** Start serving; returns the bound port. */
+  def start(): Int = endpoint.start()
 
-  def stop(): Unit = if (server != null) server.stop(0)
+  /** Stop accepting requests and wait for the handler threads to exit. */
+  def stop(): Unit = endpoint.stop()
 
   private def handle(ex: HttpExchange): Unit = {
     try {
       val path = ex.getRequestURI.getPath.split("/").filter(_.nonEmpty)
       // path = api, retrieve, lexical|ann
-      val params = parseQuery(Option(ex.getRequestURI.getRawQuery).getOrElse(""))
-      if (path.length != 3) respond(ex, 404, errorJson("not found", 404))
+      val params = parseQuery(ex)
+      if (path.length != 3) respond(ex, 404, Json.error("not found", 404))
       else path(2) match {
         case "lexical" => respond(ex, 200, lexical(params))
         case "ann"     => respond(ex, 200, ann(params))
         case "hybrid"  => respond(ex, 200, hybrid(params))
         case "score"   => respond(ex, 200, score(params))
-        case _         => respond(ex, 404, errorJson("not found", 404))
+        case _         => respond(ex, 404, Json.error("not found", 404))
       }
     } catch {
-      case QueryError(msg, code) => respond(ex, code, errorJson(msg, code))
+      case QueryError(msg, code) => respond(ex, code, Json.error(msg, code))
       case t: Throwable          =>
         // log server-side, answer generically: exception text carries
         // paths/class names a public-facing 500 must not leak
         System.err.println(s"[serving] 500 on ${ex.getRequestURI}: $t")
-        respond(ex, 500, errorJson("internal error", 500))
+        respond(ex, 500, Json.error("internal error", 500))
     }
   }
 
@@ -134,8 +128,8 @@ class RetrievalServer(spark: SparkSession, lexicalPath: String,
     if (terms.isEmpty) throw QueryError("Missing or empty terms")
     val k = positiveInt(params, "k", 10)
     val rows = TextAnalysis.bm25QueryIndex(spark, resolved(lexicalPath), terms, k)
-      .collect().map(r => s"[${r.getLong(0)},${numJson(r.get(1))}]")
-    messageJson(Seq("doc_id", "score"), rows.toSeq)
+      .collect().map(r => s"[${r.getLong(0)},${Json.number(r.get(1))}]")
+    Json.message(Seq("doc_id", "score"), rows.toSeq, "retrieval")
   }
 
   private def ann(params: Map[String, String]): String = {
@@ -153,8 +147,8 @@ class RetrievalServer(spark: SparkSession, lexicalPath: String,
     val rows = Similarity.ivfPqQuery(index.encoded, index.centroids, index.books,
         corpus, q, k, nprobe, shortlist = math.max(50, k), excludeSelf = false)
       .orderBy(col("rnk"))
-      .collect().map(r => s"[${r.getInt(1)},${r.getLong(2)},${numJson(r.get(3))}]")
-    messageJson(Seq("rnk", "vec_id", "cos"), rows.toSeq)
+      .collect().map(r => s"[${r.getInt(1)},${r.getLong(2)},${Json.number(r.get(3))}]")
+    Json.message(Seq("rnk", "vec_id", "cos"), rows.toSeq, "retrieval")
   }
 
   private def hybrid(params: Map[String, String]): String = {
@@ -183,8 +177,8 @@ class RetrievalServer(spark: SparkSession, lexicalPath: String,
       .select(col("cid").as("doc_id"), col("rnk"))
     val rows = Retrieval.rrfFuse(lex, ann, k, idCol = "doc_id")
       .orderBy(col("rnk"))
-      .collect().map(r => s"[${r.getInt(0)},${r.getLong(1)},${numJson(r.get(2))}]")
-    messageJson(Seq("rnk", "doc_id", "rrf_score"), rows.toSeq)
+      .collect().map(r => s"[${r.getInt(0)},${r.getLong(1)},${Json.number(r.get(2))}]")
+    Json.message(Seq("rnk", "doc_id", "rrf_score"), rows.toSeq, "retrieval")
   }
 
   /** GET /api/retrieve/score?text=…[&lang=xx] — the trained quality
@@ -201,36 +195,7 @@ class RetrievalServer(spark: SparkSession, lexicalPath: String,
     import spark.implicits._
     val one = Seq((0L, text, lang)).toDF("doc_id", "text", "lang")
     val rows = graft.operators.Learn.scoreWith(one, w)
-      .collect().map(r => s"[${numJson(r.get(2))},${r.getInt(3)}]")
-    messageJson(Seq("score", "pred_label"), rows.toSeq)
-  }
-
-  private def messageJson(columns: Seq[String], dataRows: Seq[String]): String =
-    s"""{"columns":[${columns.map(c => s""""$c"""").mkString(",")}],""" +
-      s""""data":[${dataRows.mkString(",")}],""" +
-      s""""metadata":{"metric":"retrieval"}}"""
-
-  private def numJson(v: Any): String = v match {
-    case null      => "null"
-    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
-    case other     => other.toString
-  }
-
-  private def errorJson(msg: String, code: Int): String =
-    s"""{"errorMessage":"${Json.escape(msg)}","errorCode":$code}"""
-
-  private def parseQuery(q: String): Map[String, String] =
-    q.split("&").filter(_.contains("=")).map { kv =>
-      val Array(kk, v) = kv.split("=", 2)
-      kk -> java.net.URLDecoder.decode(v, StandardCharsets.UTF_8)
-    }.toMap
-
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(code, bytes.length.toLong)
-    val os = ex.getResponseBody
-    os.write(bytes)
-    os.close()
+      .collect().map(r => s"[${Json.number(r.get(2))},${r.getInt(3)}]")
+    Json.message(Seq("score", "pred_label"), rows.toSeq, "retrieval")
   }
 }

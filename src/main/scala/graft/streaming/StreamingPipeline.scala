@@ -35,8 +35,9 @@ import graft.operators.AggCore
  *
  * At scale: state is keyed by (gh-prefix, hour) — cardinality bounded by
  * 32^p × retained hours, independent of input volume; the serving table is
- * partitioned by day so snapshot/point queries prune to one partition and
- * history queries to the queried range.
+ * partitioned by day so snapshot/point queries prune to the queried day and
+ * history queries to the queried range, each plus a one-day margin
+ * ([[graft.operators.QueryBuilders]]).
  */
 object StreamingPipeline {
 
@@ -189,8 +190,7 @@ object StreamingPipeline {
     require(writersPerDay >= 1,
       s"upsertBatch: writersPerDay must be >= 1, got $writersPerDay")
     val spark = batch.sparkSession
-    val cols = Seq("key", "window_start", "window_end", "count", "sum", "avg", "window_day")
-      .map(col)
+    val cols = (cellSchema ++ daySchema).map(f => col(f.name))
     val changed = batch.select(cols: _*).cache()
     try {
       val days = changed.select(col("window_day")).distinct().collect()
@@ -290,22 +290,42 @@ object StreamingPipeline {
       throw new java.io.IOException(s"publishing $ip failed")
   }
 
+  /** The cell columns [[upsertBatch]] writes into each day file. */
+  private val cellSchema: StructType = StructType(Seq(
+    StructField("key", StringType),
+    StructField("window_start", TimestampType),
+    StructField("window_end", TimestampType),
+    StructField("count", LongType),
+    StructField("sum", DoubleType),
+    StructField("avg", DoubleType)))
+
+  /** The partition column: one `window_day=yyyy-MM-dd` directory per day. */
+  private val daySchema: StructType = StructType(Seq(StructField("window_day", DateType)))
+
   /** Load the serving table for querying (the batch view the reference's
-    * REST layer reads; feeds [[graft.operators.QueryBuilders]]). A table
-    * whose every day partition was expired by [[retainFrom]] has no
-    * parquet files left, and a bare `spark.read.parquet` surfaces that as
-    * an unrelated-looking schema-inference error — check first and fail
-    * with the actual cause. */
+    * REST layer reads; feeds [[graft.operators.QueryBuilders]]).
+    *
+    * The schema is fixed ([[upsertBatch]]'s columns plus `window_day`), so
+    * resolving the view lists the day directories and launches no Spark
+    * job; the listing is private to the returned frame and never enters
+    * the session-shared file-status cache, so a server that resolves the
+    * view per request holds no listing beyond the requests in flight.
+    *
+    * A missing table dir, or one whose every day partition was expired by
+    * [[retainFrom]], has no cells to serve — fail with that cause instead
+    * of serving an empty table. */
   def servingView(spark: SparkSession, tableDir: String): DataFrame = {
     val hfs = fileSystem(spark, tableDir)
     val p = new org.apache.hadoop.fs.Path(tableDir)
-    if (hfs.exists(p) &&
-        !hfs.listStatus(p).exists(_.getPath.getName.startsWith("window_day=")))
+    if (!hfs.exists(p))
+      throw new IllegalStateException(s"servingView: no serving table at $tableDir")
+    if (!hfs.listStatus(p).exists(_.getPath.getName.startsWith("window_day=")))
       throw new IllegalStateException(
         s"servingView: $tableDir has no day partitions — every window_day " +
           "was expired by retainFrom (or nothing was ever upserted); " +
           "re-ingest or widen retention before serving")
-    spark.read.parquet(tableDir)
+    org.apache.spark.sql.graftshim.GraftPlanBridge.parquetTable(
+      spark, tableDir, cellSchema, daySchema)
   }
 
   /**

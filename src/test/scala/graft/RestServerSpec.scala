@@ -3,12 +3,25 @@ package graft
 import scala.io.Source
 
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.AggCore
 import graft.serving.RestServer
 
-class RestServerSpec extends SparkSpec {
+class RestServerSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
+
+  // any session-conf window opened on the serving path throws for the
+  // duration of this suite instead of warning (see graft.operators.Jobs)
+  private var strictBefore: Option[String] = None
+  override def beforeAll(): Unit = {
+    strictBefore = sys.props.get("graft.strictConfScope")
+    sys.props("graft.strictConfScope") = "1"
+  }
+  override def afterAll(): Unit = strictBefore match {
+    case Some(v) => sys.props("graft.strictConfScope") = v
+    case None    => sys.props -= "graft.strictConfScope"
+  }
 
   // cells around the reference README bbox area (u155* ≈ Antwerp)
   lazy val view = AggCore.hourlyView(Seq(
@@ -21,6 +34,7 @@ class RestServerSpec extends SparkSpec {
   private def get(url: String): (Int, String) = {
     val conn = new java.net.URL(url).openConnection()
       .asInstanceOf[java.net.HttpURLConnection]
+    conn.setReadTimeout(60000) // a server that serializes requests fails, not hangs
     val code = conn.getResponseCode
     val is = if (code >= 400) conn.getErrorStream else conn.getInputStream
     val body = Source.fromInputStream(is).mkString
@@ -129,5 +143,59 @@ class RestServerSpec extends SparkSpec {
       "x\\u0001y\\u001fz")
     assert(graft.serving.Json.escape("plain") == "plain")
     assert(graft.serving.Json.escape("\b\f") == "\\b\\f")
+  }
+
+  test("requests are served concurrently: one held request does not block " +
+    "another, answers match sequential ones, and stop() ends every pool thread") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import scala.jdk.CollectionConverters._
+
+    val history = "/api/temperature/aggregate/avg/history" +
+      "?geohashes=u155&from=1704067200000&to=1704153600000"
+    val snapshot = "/api/temperature/aggregate/count/snapshot" +
+      "?ts=1704068100000&bbox=51.5,4.0,51.1,4.8"
+    val confBefore = spark.conf.getAll
+
+    val plain = new RestServer(view, port = 0)
+    val plainPort = plain.start()
+    val sequential =
+      try Seq(history, snapshot).map(p => get(s"http://localhost:$plainPort$p"))
+      finally plain.stop()
+    assert(sequential.forall(_._1 == 200), sequential)
+
+    // the first request to resolve the view is held until released
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val calls = new AtomicInteger(0)
+    val gated = new RestServer(() => {
+      if (calls.incrementAndGet() == 1) {
+        entered.countDown()
+        release.await(120, TimeUnit.SECONDS) // longer than get's read timeout
+      }
+      view
+    }, 0)
+    val port = gated.start()
+    try {
+      @volatile var held: (Int, String) = null
+      val first = new Thread(() => held = get(s"http://localhost:$port$history"))
+      first.start()
+      assert(entered.await(30, TimeUnit.SECONDS), "the first request never arrived")
+      val second = get(s"http://localhost:$port$snapshot")
+      assert(first.isAlive && held == null, "the first request must still be held")
+      release.countDown()
+      first.join(60000)
+      assert(Seq(held, second) == sequential)
+    } finally {
+      release.countDown()
+      gated.stop()
+    }
+    // a terminated pool's workers are past their last task; give each a
+    // moment to finish exiting
+    val alive = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith("graft-http-"))
+      .filter { t => t.join(5000); t.isAlive }
+    assert(alive.isEmpty, s"pool threads alive after stop(): ${alive.map(_.getName)}")
+    assert(spark.conf.getAll == confBefore, "serving must not change session conf")
   }
 }

@@ -177,4 +177,29 @@ class RetrievalServerSpec extends SparkSpec {
       new Directory(new java.io.File(root)).deleteRecursively()
     }
   }
+
+  test("concurrent requests each get the body of the same request sent alone") {
+    withServer { (port, _, _) =>
+      val qvec = Tables.embeddings(spark, Sf).filter(col("vec_id") === 3)
+        .head().getSeq[Float](1).mkString(",")
+      val paths = Seq(
+        "lexical?terms=vector,stream,hash&k=5",
+        "lexical?terms=graph&k=3",
+        s"ann?vector=$qvec&k=4&nprobe=8",
+        s"hybrid?terms=vector,stream&vector=$qvec&k=5")
+        .map(p => s"http://localhost:$port/api/retrieve/$p")
+      val alone = paths.map(get)
+      assert(alone.forall(_._1 == 200), alone)
+      // every path twice, all in flight at once
+      val results = new java.util.concurrent.ConcurrentHashMap[Int, (Int, String)]()
+      val threads = (paths ++ paths).zipWithIndex.map { case (url, i) =>
+        new Thread(() => results.put(i, get(url)))
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join(120000))
+      (paths ++ paths).indices.foreach { i =>
+        assert(results.get(i) == alone(i % paths.length), paths(i % paths.length))
+      }
+    }
+  }
 }
