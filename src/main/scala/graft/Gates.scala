@@ -40,36 +40,32 @@ private[graft] object Gates {
    * partition count (optimization guide §2.2/§2.5: derive partitioning
    * from input size instead of a constant tuned for either local mode or
    * the cluster). A stateful plan takes its shuffle-partition count from
-   * `spark.sql.shuffle.partitions` at stream start (the StreamExecution
-   * clones the session then; AQE is disabled for stateful workloads, so
-   * nothing coalesces it later), which makes the session-wide value —
-   * sized for the batch surface — wrong at BOTH scales: at fixture volume
-   * every micro-batch pays `partitions × (state-store commit + task
-   * schedule)` for KBs of state; at warehouse volume a static count
-   * undersizes the state shuffle. `ceil(feedRows /
-   * SPARK_GRAFT_STATE_ROWS_PER_PARTITION)` (default 64Ki rows/partition,
-   * clamped to [1, 4096]) sizes it from the gate's actual feed — the same
-   * derive-from-volume rule [[graft.operators.Capacity.advisedPartitions]]
-   * applies to batch exchanges. Results are partition-count independent:
-   * every streaming gate's state aggregate is exact or mergeable by
-   * construction (the law each gate pins against its oracle). The conf is
-   * restored as soon as `start` returns — the stream keeps the cloned
-   * value; the gate's batch probes keep the session's.
+   * `spark.sql.shuffle.partitions` of the session it is started from (the
+   * StreamExecution clones that session; AQE is disabled for stateful
+   * workloads, so nothing coalesces it later), which makes the
+   * session-wide value — sized for the batch surface — wrong at BOTH
+   * scales: at fixture volume every micro-batch pays `partitions ×
+   * (state-store commit + task schedule)` for KBs of state; at warehouse
+   * volume a static count undersizes the state shuffle.
+   * `ceil(feedRows / 64Ki)` (clamped to [1, 4096]) sizes it from the
+   * gate's actual feed — the same derive-from-volume rule
+   * [[graft.operators.Capacity.advisedPartitions]] applies to batch
+   * exchanges. `stream` is rebound into a private clone of its session
+   * that carries that count, and `start` starts the query from it: the
+   * caller's session conf never changes, so the gate's batch probes (and
+   * any concurrent request) keep the session's value. A memory sink's view
+   * then lives in the clone: read it through `q.sparkSession`. Results are
+   * partition-count independent: every streaming gate's state aggregate is
+   * exact or mergeable by construction (the law each gate pins against its
+   * oracle).
    */
-  private[graft] def startSized[Q](s: SparkSession, feedRows: Long)(start: => Q): Q =
-    // the set→start→restore runs under the Jobs conf-window guard: a
-    // Jobs.concurrently sibling planning a query while the temporary
-    // value is live would silently inherit it — the guard reports (and
-    // under strict scope, throws on) exactly that overlap
-    Jobs.confWindow("Gates.startSized") {
-      val perPart = sys.env.get("SPARK_GRAFT_STATE_ROWS_PER_PARTITION")
-        .map(_.toLong).filter(_ > 0).getOrElse(65536L)
-      val n = math.max(1L, math.min(4096L, (feedRows + perPart - 1) / perPart))
-      val key = "spark.sql.shuffle.partitions"
-      val prev = s.conf.get(key)
-      s.conf.set(key, n.toString)
-      try start finally s.conf.set(key, prev)
-    }
+  private[graft] def startSized[Q](feedRows: Long, stream: DataFrame)
+                                  (start: DataFrame => Q): Q = {
+    val sized = org.apache.spark.sql.graftshim.GraftPlanBridge.sizedClone(
+      stream.sparkSession)(_ => Graph.partitionsFor(feedRows, 4096))
+    start(org.apache.spark.sql.graftshim.GraftPlanBridge.ofRows(
+      sized, stream.queryExecution.analyzed))
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -258,9 +254,8 @@ private[graft] object Gates {
           .select(col("doc_id"), col("text")).as[(Long, String)].collect()
         val mem = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, String)]
-        val q = startSized(s, rows.length)(
-          mem.toDF().toDF("doc_id", "text")
-            .writeStream
+        val q = startSized(rows.length, mem.toDF().toDF("doc_id", "text"))(
+          _.writeStream
             .foreachBatch { (batch: DataFrame, _: Long) =>
               Dedup.appendBandIndex(Dedup.buildBandIndex(batch),
                 Generations.resolve(s, root))

@@ -2,8 +2,11 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /**
  * Optimization-round measurement harness (guide §1: measure first; §7.2:
@@ -16,7 +19,9 @@ import org.apache.spark.sql.SparkSession
  *    run — the local-mode stand-in for the UI's Jobs page, which separates
  *    lifecycle write jobs from compute jobs inside multi-action queries,
  *  - cold and warm wall seconds (warm = second count() on one Dataset —
- *    isolates execution from analysis/codegen, mirroring Bench's `warm`).
+ *    isolates execution from analysis/codegen, mirroring Bench's `warm`),
+ *  - for streaming entries, the distinct state-shuffle partition counts
+ *    their micro-batches reported (`state_partitions`).
  *
  * Usage: `runMain graft.Probe <outDirTag> <query1,query2,...>` with the
  * usual `SPARK_GRAFT_SF_DIR` / `SPARK_GRAFT_CPUS` env. Not part of the
@@ -41,7 +46,15 @@ object Probe {
 
     final case class JobRow(id: Int, desc: String, started: Long, var ended: Long)
     val jobs = new ConcurrentLinkedQueue[JobRow]()
+    val stateParts = new ConcurrentLinkedQueue[Long]()
     spark.sparkContext.addSparkListener(new SparkListener {
+      // progress of every streaming query, whichever session started it (a
+      // sized gate starts its query from a clone of this session)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case p: StreamingQueryListener.QueryProgressEvent =>
+          p.progress.stateOperators.foreach(op => stateParts.add(op.numShufflePartitions))
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.add(JobRow(e.jobId,
           Option(e.properties.getProperty("spark.job.description"))
@@ -65,6 +78,7 @@ object Probe {
     picked.foreach { case (name, fn) =>
       spark.catalog.clearCache()
       jobs.clear()
+      stateParts.clear()
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val tBuild = (System.nanoTime() - t0) / 1e9
@@ -92,6 +106,9 @@ object Probe {
         sb.append(f"[probe]   job ${j.id}%4d ${dur}%8.3fs  ${j.desc.take(110)}\n")
       }
       sb.append(f"[probe] $name jobs=$njobs jobsum=$sum%.3f\n")
+      if (!stateParts.isEmpty)
+        sb.append(s"[probe] $name state_partitions=" +
+          stateParts.asScala.toSeq.distinct.sorted.mkString(",") + "\n")
       print(sb.toString)
       java.nio.file.Files.write(outDir.resolve(s"${name}_jobs.txt"),
         sb.toString.getBytes("UTF-8"))

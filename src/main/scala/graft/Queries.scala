@@ -4,6 +4,8 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftPlanBridge
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.{GeoFunctions, TextFunctions, VectorFunctions}
@@ -23,21 +25,19 @@ private[graft] object Queries {
   /** Drain a finished memory-sink table into a LOCAL DataFrame and DROP
     * the temp view: each streaming entry registers a uniquely-named sink,
     * and repeated bench runs (5+ per round) must not accumulate in-memory
-    * sink tables for the JVM lifetime (round-11 advice). Sink contents
-    * are micro-batch-fixture-sized by construction, so the collect is
-    * bounded; the returned frame is a local-relation copy, independent of
-    * the dropped view. */
-  /** Feed-volume-derived state partitioning for the streaming gates —
-    * see [[Gates.startSized]] for the full contract. */
-  private def startSized[Q](s: SparkSession, feedRows: Long)(start: => Q): Q =
-    Gates.startSized(s, feedRows)(start)
-
-  private def drainMemorySink(s: SparkSession, name: String)
+    * sink tables for the JVM lifetime (round-11 advice). The view lives in
+    * the session the query `q` was started from (a sized clone, for a
+    * [[Gates.startSized]] gate); `shape` sees it rebound into `s`, so the drain
+    * plans under the caller's conf. Sink contents are micro-batch-fixture-
+    * sized by construction, so the collect is bounded; the returned frame
+    * is a local-relation copy, independent of the dropped view. */
+  private def drainMemorySink(s: SparkSession, q: StreamingQuery, name: String)
                              (shape: DataFrame => DataFrame): DataFrame = {
-    val out = shape(s.table(name))
+    val sink = q.sparkSession
+    val out = shape(GraftPlanBridge.ofRows(s, sink.table(name).queryExecution.analyzed))
     val rows = java.util.Arrays.asList(out.collect(): _*)
     val schema = out.schema
-    s.catalog.dropTempView(name)
+    sink.catalog.dropTempView(name)
     s.createDataFrame(rows, schema)
   }
 
@@ -1002,14 +1002,14 @@ private[graft] object Queries {
           .as[graft.streaming.StreamingFunnel.FEv],
         Seq("view", "click", "purchase"), withinHours = 24)
       val name = "sfr_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = startSized(s, rows.length)(
-        out.writeStream.outputMode("append").format("memory")
+      val q = Gates.startSized(rows.length, out.toDF())(
+        _.writeStream.outputMode("append").format("memory")
           .queryName(name).start())
       val (b1, b2) = rows.splitAt(rows.length / 2)
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
       mem.addData(b2.toIndexedSeq); q.processAllAvailable()
       q.stop()
-      drainMemorySink(s, name)(_
+      drainMemorySink(s, q, name)(_
         .select(col("user_id"), col("step_idx"), col("stage"), col("stage_ts"))
         .orderBy(col("user_id"), col("step_idx")))
     }),
@@ -1158,7 +1158,7 @@ private[graft] object Queries {
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
       mem.addData(b2.toIndexedSeq); q.processAllAvailable()
       q.stop()
-      drainMemorySink(s, name)(_
+      drainMemorySink(s, q, name)(_
         .select(col("id"), col("nm_in"), col("match_nm"), col("dist"),
           col("rep"))
         .orderBy(col("id"), col("match_nm")))
@@ -2073,7 +2073,7 @@ private[graft] object Queries {
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
       mem.addData(b2.toIndexedSeq); q.processAllAvailable()
       q.stop()
-      drainMemorySink(s, name)(_
+      drainMemorySink(s, q, name)(_
         .groupBy(col("id")).agg(count(lit(1)).as("n_shared"))
         .orderBy(col("id")))
     }),
@@ -2107,9 +2107,8 @@ private[graft] object Queries {
           .MemoryStream[(Long, String)]
         val epochs = scala.collection.mutable.ArrayBuffer
           .empty[Array[org.apache.spark.sql.Row]]
-        val q = startSized(s, rows.length)(
-          graft.streaming.StreamingDecon.flagStreamFromRoot(
-            mem.toDF().toDF("doc_id", "text"), root) { (ans, _) =>
+        val q = Gates.startSized(rows.length, mem.toDF().toDF("doc_id", "text"))(
+          graft.streaming.StreamingDecon.flagStreamFromRoot(_, root) { (ans, _) =>
             epochs += ans.collect()
           })
         try {
@@ -2264,14 +2263,14 @@ private[graft] object Queries {
       val out = graft.streaming.StreamingHeavyHitters.windowedTopK(
         mem.toDF().toDF("ts", "k"), col("k"), "1 hour", capacity = 64)
       val name = "shh_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = startSized(s, rows.length)(
-        out.writeStream.outputMode("complete").format("memory")
+      val q = Gates.startSized(rows.length, out)(
+        _.writeStream.outputMode("complete").format("memory")
           .queryName(name).start())
       val (b1, b2) = rows.splitAt(rows.length / 2)
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
       mem.addData(b2.toIndexedSeq); q.processAllAvailable()
       q.stop()
-      drainMemorySink(s, name)(_
+      drainMemorySink(s, q, name)(_
         .select(col("window_start"), explode(col("topk")).as("e"))
         .select(col("window_start"), col("e.item").as("item"),
           col("e.count_min").as("cnt"))
@@ -2299,14 +2298,14 @@ private[graft] object Queries {
         mem.toDF().toDF("ts", "event_id"),
         med = base.getDouble(0), mad = base.getDouble(1))
       val name = "sas_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = startSized(s, rows.length)(
-        out.writeStream.outputMode("complete").format("memory")
+      val q = Gates.startSized(rows.length, out)(
+        _.writeStream.outputMode("complete").format("memory")
           .queryName(name).start())
       val (b1, b2) = rows.splitAt(rows.length / 2)
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
       mem.addData(b2.toIndexedSeq); q.processAllAvailable()
       q.stop()
-      drainMemorySink(s, name)(_
+      drainMemorySink(s, q, name)(_
         .select(col("window_start"), col("cnt"), col("dev_score"),
           col("anomaly"))
         .orderBy(col("window_start")))
@@ -2331,14 +2330,14 @@ private[graft] object Queries {
       val out = graft.streaming.StreamingKmv.windowedDistinct(
         mem.toDF().toDF("ts", "user_id"), col("user_id"), "1 day", k = 64)
       val name = "skv_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = startSized(s, rows.length)(
-        out.writeStream.outputMode("complete").format("memory")
+      val q = Gates.startSized(rows.length, out)(
+        _.writeStream.outputMode("complete").format("memory")
           .queryName(name).start())
       val (b1, b2) = rows.splitAt(rows.length / 2)
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
       mem.addData(b2.toIndexedSeq); q.processAllAvailable()
       q.stop()
-      drainMemorySink(s, name)(_
+      drainMemorySink(s, q, name)(_
         .select(col("window_start"), col("n"), col("hk"), col("estimate"))
         .orderBy(col("window_start")))
     }),
@@ -2362,8 +2361,8 @@ private[graft] object Queries {
         mem.toDF().toDF("ts", "user_id"), col("user_id"), "1 day",
         depth = 4, width = 64)
       val name = "scm_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = startSized(s, rows.length)(
-        out.writeStream.outputMode("complete").format("memory")
+      val q = Gates.startSized(rows.length, out)(
+        _.writeStream.outputMode("complete").format("memory")
           .queryName(name).start())
       val (b1, b2) = rows.splitAt(rows.length / 2)
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
@@ -2377,7 +2376,7 @@ private[graft] object Queries {
         .groupBy(date_trunc("day", col("ts")).as("window_start"),
           col("user_id"))
         .agg(count(lit(1)).as("exact"))
-      drainMemorySink(s, name) { grids =>
+      drainMemorySink(s, q, name) { grids =>
         Sketches.gridEstimate(grids, probes, "user_id",
             depth = 4, width = 64)
           .join(exact, Seq("window_start", "user_id"), "left")
@@ -2421,7 +2420,7 @@ private[graft] object Queries {
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
       mem.addData(b2.toIndexedSeq); q.processAllAvailable()
       q.stop()
-      drainMemorySink(s, name)(_
+      drainMemorySink(s, q, name)(_
         .select(col("event_id"), col("user_id"), col("ts"), col("asof_ts"),
           col("o_orderkey"), col("o_totalprice"))
         .orderBy(col("event_id")))
@@ -2447,14 +2446,14 @@ private[graft] object Queries {
       val out = graft.streaming.StreamingHistogram.windowedHistogram(
         mem.toDF().toDF("ts", "value"), col("value"), "1 day", scale = 2)
       val name = "sdq_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = startSized(s, rows.length)(
-        out.writeStream.outputMode("complete").format("memory")
+      val q = Gates.startSized(rows.length, out)(
+        _.writeStream.outputMode("complete").format("memory")
           .queryName(name).start())
       val (b1, b2) = rows.splitAt(rows.length / 2)
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
       mem.addData(b2.toIndexedSeq); q.processAllAvailable()
       q.stop()
-      drainMemorySink(s, name) { hist =>
+      drainMemorySink(s, q, name) { hist =>
         Curation.histogramQuantiles(hist, "window_start", Seq(0.5, 0.95))
           .select(col("window_start"), col("thr_0").as("p50"),
             col("thr_1").as("p95"))
@@ -2488,7 +2487,7 @@ private[graft] object Queries {
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
       mem.addData(b2.toIndexedSeq); q.processAllAvailable()
       q.stop()
-      drainMemorySink(s, name)(_
+      drainMemorySink(s, q, name)(_
         .select(col("doc_id"), col("label"), col("score"), col("pred_label"))
         .orderBy(col("doc_id")))
     }),
@@ -2521,7 +2520,7 @@ private[graft] object Queries {
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
       mem.addData(b2.toIndexedSeq); q.processAllAvailable()
       q.stop()
-      drainMemorySink(s, name)(_
+      drainMemorySink(s, q, name)(_
         .select(col("doc_id"), col("source"), col("v"), col("lo"),
           col("hi"), col("clipped"), col("kept"))
         .orderBy(col("doc_id")))
@@ -2551,7 +2550,7 @@ private[graft] object Queries {
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
       mem.addData(b2.toIndexedSeq); q.processAllAvailable()
       q.stop()
-      drainMemorySink(s, name)(_
+      drainMemorySink(s, q, name)(_
         .select(col("vec_id"), col("list_id"), col("cos_centroid"))
         .orderBy(col("vec_id")))
     }),
@@ -2579,7 +2578,7 @@ private[graft] object Queries {
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
       mem.addData(b2.toIndexedSeq); q.processAllAvailable()
       q.stop()
-      drainMemorySink(s, name)(_
+      drainMemorySink(s, q, name)(_
         .select(col("doc_id"), col("chi2"))
         .orderBy(col("doc_id")))
     }),
@@ -2608,7 +2607,7 @@ private[graft] object Queries {
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
       mem.addData(b2.toIndexedSeq); q.processAllAvailable()
       q.stop()
-      drainMemorySink(s, name)(_
+      drainMemorySink(s, q, name)(_
         .select(col("doc_id"), col("iw"))
         .orderBy(col("doc_id")))
     }),
@@ -2638,7 +2637,7 @@ private[graft] object Queries {
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
       mem.addData(b2.toIndexedSeq); q.processAllAvailable()
       q.stop()
-      drainMemorySink(s, name)(_
+      drainMemorySink(s, q, name)(_
         .select(col("media_id"), col("dup_of"), col("hamming"))
         .orderBy(col("media_id"), col("dup_of")))
     }),
@@ -2672,7 +2671,7 @@ private[graft] object Queries {
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
       mem.addData(b2.toIndexedSeq); q.processAllAvailable()
       q.stop()
-      drainMemorySink(s, name)(_
+      drainMemorySink(s, q, name)(_
         .select(col("doc_id"), col("dup_of"), col("n_shared"))
         .orderBy(col("doc_id"), col("dup_of")))
     }),
@@ -2971,7 +2970,7 @@ private[graft] object Queries {
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
       mem.addData(b2.toIndexedSeq); q.processAllAvailable()
       q.stop()
-      drainMemorySink(s, name)(_
+      drainMemorySink(s, q, name)(_
         .select(col("vec_id"), col("proj"))
         .orderBy(col("vec_id")))
     }),
@@ -3052,7 +3051,7 @@ private[graft] object Queries {
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
       mem.addData(b2.toIndexedSeq); q.processAllAvailable()
       q.stop()
-      drainMemorySink(s, name)(_
+      drainMemorySink(s, q, name)(_
         .select(col("c_custkey"), col("bloom_hit"))
         .orderBy(col("c_custkey")))
     }),
@@ -3106,7 +3105,7 @@ private[graft] object Queries {
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
       mem.addData(b2.toIndexedSeq); q.processAllAvailable()
       q.stop()
-      drainMemorySink(s, name)(_
+      drainMemorySink(s, q, name)(_
         .select(col("doc_id"), col("n_tokens"))
         .orderBy(col("doc_id")))
     }),
@@ -3132,8 +3131,8 @@ private[graft] object Queries {
       val out = graft.streaming.StreamingBloom.windowedWords(
         mem.toDF().toDF("ts", "user_id"), col("user_id"), "1 day", m, k)
       val name = "sbd_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = startSized(s, rows.length)(
-        out.writeStream.outputMode("complete").format("memory")
+      val q = Gates.startSized(rows.length, out)(
+        _.writeStream.outputMode("complete").format("memory")
           .queryName(name).start())
       val (b1, b2) = rows.splitAt(rows.length / 2)
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
@@ -3145,7 +3144,7 @@ private[graft] object Queries {
         .select(date_trunc("day", col("ts")).as("window_start"),
           col("user_id")).distinct()
         .withColumn("is_member", lit(true))
-      drainMemorySink(s, name) { grids =>
+      drainMemorySink(s, q, name) { grids =>
         grids.crossJoin(broadcast(probes))
           .select(col("window_start"), col("user_id"),
             Bloom.containsColumn(col("words"), col("user_id"), m, k)
@@ -3186,8 +3185,8 @@ private[graft] object Queries {
       val out = graft.streaming.StreamingBloom.windowedWords(
         mem.toDF().toDF("ts", "user_id"), col("user_id"), "1 day", m, k)
       val name = "sba_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = startSized(s, rows.length)(
-        out.writeStream.outputMode("append").format("memory")
+      val q = Gates.startSized(rows.length, out)(
+        _.writeStream.outputMode("append").format("memory")
           .queryName(name).start())
       val (b1, b2) = rows.splitAt(rows.length / 2)
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
@@ -3204,7 +3203,7 @@ private[graft] object Queries {
         .select(date_trunc("day", col("ts")).as("window_start"),
           col("user_id")).distinct()
         .withColumn("is_member", lit(true))
-      drainMemorySink(s, name) { grids =>
+      drainMemorySink(s, q, name) { grids =>
         grids.crossJoin(broadcast(probes))
           .select(col("window_start"), col("user_id"),
             Bloom.containsColumn(col("words"), col("user_id"), m, k)
@@ -3238,8 +3237,8 @@ private[graft] object Queries {
       val out = graft.streaming.StreamingBloom.windowedWords(
         mem.toDF().toDF("ts", "skey"), col("skey"), "1 day", m, k)
       val name = "sbs_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = startSized(s, rows.length)(
-        out.writeStream.outputMode("complete").format("memory")
+      val q = Gates.startSized(rows.length, out)(
+        _.writeStream.outputMode("complete").format("memory")
           .queryName(name).start())
       val (b1, b2) = rows.splitAt(rows.length / 2)
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
@@ -3251,7 +3250,7 @@ private[graft] object Queries {
         .select(date_trunc("day", col("ts")).as("window_start"),
           col("skey")).distinct()
         .withColumn("is_member", lit(true))
-      drainMemorySink(s, name) { grids =>
+      drainMemorySink(s, q, name) { grids =>
         grids.crossJoin(broadcast(probes))
           .select(col("window_start"), col("skey"),
             Bloom.containsColumn(col("words"), col("skey"), m, k)
@@ -3425,12 +3424,9 @@ private[graft] object Queries {
             col("advised_shuffle_partitions"), col("top_share_exact"))
           .orderBy(col("scenario"))
         // materialize before the artifact dirs vanish (lifecycle rule);
-        // the 4-scenario collect's inputs are all sketch-bounded — run it
-        // under sketch-tuned conf (guide §1.2 step 3; main thread, after
-        // the fan-out settled)
-        val rows = JoinPlanner.withSketchConf(s,
-          JoinPlanner.sketchRowsOf(fp) +
-            profs.valuesIterator.map(JoinPlanner.sketchRowsOf).sum)(out.collect())
+        // the loaded profiles are single-partition, so the 4-scenario
+        // collect plans with no shuffle
+        val rows = out.collect()
         s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
       } finally Gates.deleteTree(tmp)
     }),
@@ -3456,9 +3452,7 @@ private[graft] object Queries {
         JoinPlanner.appendTableProfile(
           dim.filter(col("s_suppkey") % 2 =!= 0), "s_suppkey", tmp, p)
         val out = JoinPlanner.profileDistinctAdvice(s, tmp)
-        // sketch-bounded advice collect — sketch-tuned conf (main thread)
-        val rows = JoinPlanner.withSketchConf(s,
-          JoinPlanner.sketchRowsOf(p))(out.collect())
+        val rows = out.collect()
         s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
       } finally Gates.deleteTree(tmp)
     }),
@@ -3490,9 +3484,8 @@ private[graft] object Queries {
           topK = 4096, kmvK = 256)
         val mem = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, Long)]
-        val q = startSized(s, rows.length)(
-          mem.toDF().toDF("l_orderkey", "l_suppkey")
-            .writeStream
+        val q = Gates.startSized(rows.length, mem.toDF().toDF("l_orderkey", "l_suppkey"))(
+          _.writeStream
             .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
               JoinPlanner.appendTableProfile(batch, "l_suppkey", s"$tmp/fact", p,
                 sliceId = s"batch-$id")
@@ -3529,10 +3522,7 @@ private[graft] object Queries {
           s"$tmp/dim",
           JoinPlanner.JoinThresholds(broadcastMaxDimRows = 2000,
             skewShareMin = 0.9, bloomSelectivityMax = 0.001), t)
-        // sketch-bounded decision collect — sketch-tuned conf (main
-        // thread, after the drain ∥ dim-chain fan-out settled)
-        val decRows = JoinPlanner.withSketchConf(s,
-          2L * JoinPlanner.sketchRowsOf(p))(out.collect())
+        val decRows = out.collect()
         s.createDataFrame(java.util.Arrays.asList(decRows: _*), out.schema)
       } finally Gates.deleteTree(tmp)
     }),
@@ -3578,18 +3568,11 @@ private[graft] object Queries {
         val t = Capacity.SizingTargets(
           targetPartitionBytes = 64L << 10, targetFileBytes = 256L << 10,
           minPartitions = 1, maxPartitions = 4096)
-        // both decision collects read sketch-bounded inputs — sketch-tuned
-        // conf (main thread, after the compaction fan-out settled)
-        var pile: Array[org.apache.spark.sql.Row] = null
-        var post: Array[org.apache.spark.sql.Row] = null
-        val out = JoinPlanner.withSketchConf(s, 2L * JoinPlanner.sketchRowsOf(p)) {
-          pile = JoinPlanner.joinDecisionFromProfiles(s, s"$tmp/fact",
-            s"$tmp/dim", th, t).collect()
-          val o = JoinPlanner.joinDecisionFromProfiles(s, s"$tmp/fact2",
-            s"$tmp/dim2", th, t)
-          post = o.collect()
-          o
-        }
+        val pile = JoinPlanner.joinDecisionFromProfiles(s, s"$tmp/fact",
+          s"$tmp/dim", th, t).collect()
+        val out = JoinPlanner.joinDecisionFromProfiles(s, s"$tmp/fact2",
+          s"$tmp/dim2", th, t)
+        val post = out.collect()
         // numbers fold-invariant; the coverage marker may only degrade
         // (compactTableProfile scaladoc) — one collect per side, the
         // marker column sliced out driver-side
@@ -3636,9 +3619,7 @@ private[graft] object Queries {
               dim.filter(col("c_custkey") % 2 =!= 0), "c_custkey", s"$tmp/dim", p)
           })
         val out = JoinPlanner.profileOverlapAdvice(s, s"$tmp/fact", s"$tmp/dim")
-        // sketch-bounded advice collect — sketch-tuned conf (main thread)
-        val rows = JoinPlanner.withSketchConf(s,
-          2L * JoinPlanner.sketchRowsOf(p))(out.collect())
+        val rows = out.collect()
         s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
       } finally Gates.deleteTree(tmp)
     }),
@@ -3665,9 +3646,7 @@ private[graft] object Queries {
           targetPartitionBytes = 16L << 10, targetFileBytes = 64L << 10,
           minPartitions = 1, maxPartitions = 4096)
         val out = JoinPlanner.profileSizeAdvice(s, tmp, t)
-        // sketch-bounded advice collect — sketch-tuned conf (main thread)
-        val rows = JoinPlanner.withSketchConf(s,
-          JoinPlanner.sketchRowsOf(p))(out.collect())
+        val rows = out.collect()
         s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
       } finally Gates.deleteTree(tmp)
     }),
@@ -3711,18 +3690,13 @@ private[graft] object Queries {
           minPartitions = 1, maxPartitions = 4096)
         def decide() = JoinPlanner.joinDecisionFromProfiles(s,
           Generations.resolve(s, root), s"$tmp/dim", th, t)
-        // sketch-bounded decision collects — sketch-tuned conf (main
-        // thread; the compaction fold between them stays outside)
-        def collectDecision(df: org.apache.spark.sql.DataFrame) =
-          JoinPlanner.withSketchConf(s,
-            2L * JoinPlanner.sketchRowsOf(p))(df.collect())
-        val pre = collectDecision(decide())
+        val pre = decide().collect()
         val g1 = Generations.resolve(s, root)
         val g2 = Generations.advance(s, root) { dst =>
           JoinPlanner.compactTableProfile(s, g1, dst)
         }
         val out = decide()
-        val post = collectDecision(out)
+        val post = out.collect()
         // every decision NUMBER is fold-invariant; the coverage marker may
         // only DEGRADE (a fold over more keys than topK cannot promise
         // exactness under future appends — compactTableProfile scaladoc).

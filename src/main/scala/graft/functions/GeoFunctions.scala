@@ -80,9 +80,4 @@ object GeoFunctions {
       }
     }.reduce(_ || _)
   }
-
-  /** Same predicate via `startsWith` (Catalyst pushes StartsWith to parquet
-    * too); kept for A/B plan comparison in tests/bench. */
-  def prefixPredicateStartsWith(key: Column, prefixes: Seq[String]): Column =
-    prefixes.map(p => key.startsWith(lit(p))).reduce(_ || _)
 }

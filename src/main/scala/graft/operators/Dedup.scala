@@ -356,24 +356,17 @@ object Dedup {
       // PRIMITIVE collect (guide §5 — the driver should hold as little as
       // possible): a specialized (Long, Long) tuple is ~3× leaner than a
       // generic Row of boxed longs, cutting the worst-case transient
-      // allocation at the probe limit. Encoding a NULL id into the
-      // primitive tuple fails loudly inside the probe job; current
-      // producers never emit null ids, but if one ever does, fall through
-      // to the distributed loop (whose groupBy semantics define the
-      // behavior) instead of crashing the small path.
+      // allocation at the probe limit. Decoding a NULL id into the
+      // primitive tuple fails loudly; current producers never emit null
+      // ids, but if one ever does, fall through to the distributed loop
+      // (whose groupBy semantics define the behavior) instead of crashing
+      // the small path. Any other failure surfaces from the probe itself.
       val rows: Array[(Long, Long)] =
         try p2.as[(Long, Long)](org.apache.spark.sql.Encoders.tuple(
             org.apache.spark.sql.Encoders.scalaLong,
             org.apache.spark.sql.Encoders.scalaLong))
           .limit(driverEdgeLimit + 1).collect()
-        catch {
-          case e: org.apache.spark.SparkException
-              if p2.schema.exists(_.nullable) =>
-            // null id mid-encode — the only expected failure here on a
-            // nullable schema; anything else re-surfaces from the
-            // distributed path's own execution
-            null
-        }
+        catch { case e: Exception if nullIdDecode(e) => null }
       if (rows != null && rows.length <= driverEdgeLimit) {
         val idx = new java.util.HashMap[Long, Int]()
         val ids = new scala.collection.mutable.ArrayBuffer[Long]()
@@ -426,12 +419,14 @@ object Dedup {
     val edges = p2
       .union(p2.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint()
-    // distributed-loop partition sizing (guide §2.2, the
-    // [[Graph.withDistLoopConf]] discipline): the loop's per-round
-    // exchanges are edge-keyed — derive their width from the checkpointed
-    // edge volume (a cheap block count) instead of the static session
-    // value, which undersizes them at warehouse scale. AQE stays on.
-    Graph.withDistLoopConf(pairs.sparkSession, edges.count()) {
+    // distributed-loop partition sizing (guide §2.2, [[Graph.distLoop]]):
+    // the loop's per-round exchanges are edge-keyed, so their width comes
+    // from the checkpointed edge volume (a cheap block count) instead of
+    // the static session value, which undersizes them at warehouse scale.
+    // The rounds run in a sized clone of the session, whose AQE setting
+    // is the caller's.
+    Graph.distLoop(pairs.sparkSession, edges.count())(edges) { loopFrames =>
+    val Seq(edges) = loopFrames
     // round 0 fused into init: label = min(id, min neighbor) in one agg
     var labels = edges.groupBy(col("a"))
       .agg(min(col("b")).as("_nb"))
@@ -472,8 +467,18 @@ object Dedup {
       i += 1
     }
     labels.withColumnRenamed("label", "cluster_rep")
-    } // withDistLoopConf
+    } // distLoop
   }
+
+  /** A NULL id met the primitive `(Long, Long)` decoder of the
+    * [[dupClusters]] probe (anywhere in the cause chain: the decode runs
+    * on the driver, or inside a task when the plan carries it). */
+  private def nullIdDecode(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case st: org.apache.spark.SparkThrowable =>
+        st.getCondition == "NOT_NULL_ASSERT_VIOLATION"
+      case _ => false
+    }
 
   /**
    * The end-product of the dedup family: one canonical document per near-dup

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftPlanBridge
 import org.apache.spark.sql.types.DecimalType
 
 /**
@@ -142,16 +143,19 @@ object Graph {
       }
       // raw contribution sums for one half-step: scores on the `from` end
       // of each edge flow into decimal-exact sums on the `to` end
-      def rawSums(scores: DataFrame, scoreCol: String, from: String, to: String): DataFrame =
+      def rawSums(e: DataFrame, scores: DataFrame, scoreCol: String,
+                  from: String, to: String): DataFrame =
         e.join(if (small) broadcast(scores) else scores, col("node") === col(from))
           .select(col(to).as("node"), round(col(scoreCol), 12).as("c"))
           .groupBy(col("node"))
           .agg(sum(col("c").cast(DecimalType(30, 12))).cast("double").as("raw"))
-      if (small) withNodeLoopConf(spark, n) {
+      if (small) nodeLoop(spark, n)(e, nodes) { loopFrames =>
         // NODE-SIZED-STATE path (the [[pageRank]] discipline, one step
         // further): the raw sums are node-sized, so the norm and the
         // normalized score table are DRIVER arithmetic on the collected
         // rows — one Spark job per half-step instead of three
+        val Seq(e, nodes) = loopFrames
+        val spark = e.sparkSession
         val nodeList = nodes.collect().map(_.get(0))
         val schema = org.apache.spark.sql.types.StructType(Seq(
           nodes.schema.fields.head.copy(name = "node"),
@@ -162,7 +166,7 @@ object Graph {
               org.apache.spark.sql.Row(v, byNode.getOrElse(v, 0.0))): _*), schema)
         def stepSmall(scores: DataFrame, from: String, to: String,
                       what: String): (DataFrame, Map[Any, Double]) = {
-          val raw = rawSums(scores, "s", from, to).collect()
+          val raw = rawSums(e, scores, "s", from, to).collect()
             .map(r => r.get(0) -> r.getDouble(1)).toMap
           val nrm = l2(raw.values)
           require(nrm != 0.0, s"hits: zero $what norm (degenerate graph)")
@@ -186,13 +190,14 @@ object Graph {
             nodes.schema.fields.head.copy(name = "node"),
             org.apache.spark.sql.types.StructField("hub", org.apache.spark.sql.types.DoubleType),
             org.apache.spark.sql.types.StructField("auth", org.apache.spark.sql.types.DoubleType))))
-      } else withDistLoopConf(spark, e.count()) {
+      } else distLoop(spark, e.count())(e, nodes) { loopFrames =>
         // DISTRIBUTED path: norm via a 1-row aggregate, normalized scores
         // re-joined against the node set, lineage cut per half-step;
         // exchange width derived from the edge volume (cache read)
+        val Seq(e, nodes) = loopFrames
         val nodesM = nodes.select(col("node")).localCheckpoint()
         def step(scores: DataFrame, from: String, to: String, what: String): DataFrame = {
-          val raw = rawSums(scores, "s", from, to)
+          val raw = rawSums(e, scores, "s", from, to)
           val nrm = raw
             .agg(round(sqrt(sum(round(col("raw") * col("raw"), 12)
               .cast(DecimalType(30, 12))).cast("double")), 12))
@@ -288,7 +293,7 @@ object Graph {
         case Some(_) => sum(col("w"))
         case None    => count(lit(1))
       }
-      def relabeled(labels: DataFrame): DataFrame =
+      def relabeled(e: DataFrame, labels: DataFrame): DataFrame =
         e.join(if (small) broadcast(labels) else labels, col("node") === col("src"))
           .groupBy(col("dst"), col("lbl")).agg(vote.as("c"))
           .groupBy(col("dst").as("node"))
@@ -299,10 +304,12 @@ object Graph {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("lbl",
           org.apache.spark.sql.types.LongType)))
-      if (small) withNodeLoopConf(spark, n) {
+      if (small) nodeLoop(spark, n)(e, nodes) { loopFrames =>
         // node-sized-state path: the label table is driver-resident; each
         // round is ONE Spark job (cached edge scan + LocalTableScan
         // broadcast + two-stage agg + node-sized collect)
+        val Seq(e, nodes) = loopFrames
+        val spark = e.sparkSession
         val nodeList = nodes.collect().map(_.getLong(0))
         def lblTable(m: Map[Long, Long]): DataFrame =
           spark.createDataFrame(
@@ -312,7 +319,7 @@ object Graph {
         var k = 0
         var converged = false
         while (k < iters && !converged) {
-          val upd = relabeled(lblTable(lblMap)).collect()
+          val upd = relabeled(e, lblTable(lblMap)).collect()
             .map(r => r.getLong(0) -> r.getLong(1)).toMap
           val next = nodeList.map(v => v -> upd.getOrElse(v, lblMap(v))).toMap
           // fixpoint early-exit: an unchanged labeling makes every further
@@ -326,10 +333,11 @@ object Graph {
           java.util.Arrays.asList(nodeList.map(v =>
             org.apache.spark.sql.Row(v, lblMap(v))): _*), lblSchema)
           .select(col("node"), col("lbl").as("label"))
-      } else withDistLoopConf(spark, e.count()) {
+      } else distLoop(spark, e.count())(e, nodes) { loopFrames =>
         // distributed path: label lineage cut per round; no-in-edge nodes
         // keep their previous label via the left join; exchange width
         // derived from the edge volume (cache read)
+        val Seq(e, nodes) = loopFrames
         var labels = nodes.select(col("node"), col("node").as("lbl"))
           .localCheckpoint()
         var k = 0
@@ -337,7 +345,7 @@ object Graph {
         while (k < iters && !converged) {
           val prev = labels
           labels = labels.as("p")
-            .join(relabeled(labels).as("u"), Seq("node"), "left")
+            .join(relabeled(e, labels).as("u"), Seq("node"), "left")
             .select(col("node"),
               coalesce(col("u.lbl"), col("p.lbl")).as("lbl"))
             .localCheckpoint()
@@ -421,58 +429,56 @@ object Graph {
     } finally und.unpersist()
   }
 
-  /** Run a node-sized-state iteration loop under loop-tuned SQL conf
-    * (optimization guide §1.2 step 3): AQE off — each per-round collect
-    * is a tiny fixed-shape query whose broadcast inputs are
-    * LocalTableScans, so adaptive stage materialization only adds a
-    * scheduling round-trip per exchange per round — and shuffle
-    * partitions derived from the node count (map-side combine bounds
-    * every round's exchange at ≤ nodes rows per map task, so the reduce
-    * side needs `ceil(n / 64Ki)` partitions, not the session's
-    * batch-sized static count; the count stays volume-derived at any
-    * scale). The session conf is restored on exit; results are
-    * partition-count independent (exact decimal sums / deterministic
-    * argmax throughout — the property every graph oracle pins). */
-  /** Run a DISTRIBUTED iteration loop under a volume-derived shuffle
-    * partition budget (guide §2.2: size exchanges from the data moved,
-    * never a static session count — which undersizes the per-round
-    * edge-keyed join exchanges at warehouse scale): `ceil(rows / 64Ki)`
-    * clamped to [1, 65536], `rows` = the loop's per-round exchange volume
-    * (the EDGE count — every round joins edge-shaped data). AQE stays ON
-    * here, unlike [[withNodeLoopConf]]'s tiny fixed-shape rounds: the
-    * distributed rounds move real volume, and AQE's runtime re-planning
-    * (skew splits, local coalescing below the budget) is exactly right —
-    * only the partition BUDGET is derived. Conf restored on exit;
-    * results are partition-count independent (the property every graph
-    * oracle pins; the forced-distributed specs stay green). */
-  private[operators] def withDistLoopConf[A](
-      spark: org.apache.spark.sql.SparkSession, rows: Long)(body: => A): A =
-    Jobs.confWindow("Graph.withDistLoopConf") {
-      val conf = spark.conf
-      val key = "spark.sql.shuffle.partitions"
-      val prev = conf.get(key)
-      conf.set(key,
-        math.max(1L, math.min(65536L, (rows + 65535L) / 65536L)).toString)
-      try body finally conf.set(key, prev)
-    }
+  /** Rows one shuffle partition of a sized loop or streaming gate is
+    * sized for: each sizing rule divides its row volume by this. */
+  private[graft] val RowsPerPartition = 65536L
 
-  private def withNodeLoopConf[A](spark: org.apache.spark.sql.SparkSession,
-                                  n: Long)(body: => A): A =
-    // guarded mutation window (see [[Jobs.confWindow]]): a concurrent
-    // fan-out sibling planning under the loop-tuned conf is reported
-    // loudly instead of silently inheriting it
-    Jobs.confWindow("Graph.withNodeLoopConf") {
-      val conf = spark.conf
-      val keyA = "spark.sql.adaptive.enabled"
-      val keyP = "spark.sql.shuffle.partitions"
-      val prevA = conf.get(keyA)
-      val prevP = conf.get(keyP)
-      conf.set(keyA, "false")
-      conf.set(keyP, math.max(1L,
-        math.min(prevP.toLong, (n + 65535) / 65536)).toString)
-      try body
-      finally { conf.set(keyA, prevA); conf.set(keyP, prevP) }
-    }
+  /** `ceil(rows / RowsPerPartition)`, clamped to [1, `max`]. */
+  private[graft] def partitionsFor(rows: Long, max: Int): Int =
+    math.max(1L, math.min(max.toLong, (rows + RowsPerPartition - 1) / RowsPerPartition)).toInt
+
+  /** Run one iteration loop in a private sized clone of `spark`
+    * ([[org.apache.spark.sql.graftshim.GraftPlanBridge.sizedClone]]):
+    * `inputs` are rebound into the clone (their persisted data is shared),
+    * the body builds and runs every round there, and the frame it returns
+    * is rebound into `spark`, so later actions on it plan under the
+    * caller's conf. The caller's session conf is never touched: a request
+    * planned concurrently on it cannot see the loop's sizing. Results are
+    * partition-count independent (exact decimal sums and deterministic
+    * argmax throughout, the property every graph oracle pins). */
+  private def inClone(caller: org.apache.spark.sql.SparkSession,
+                      sized: org.apache.spark.sql.SparkSession,
+                      inputs: Seq[DataFrame],
+                      body: Seq[DataFrame] => DataFrame): DataFrame = {
+    val rebound = inputs.map(df => GraftPlanBridge.ofRows(sized, df.queryExecution.analyzed))
+    GraftPlanBridge.ofRows(caller, body(rebound).queryExecution.analyzed)
+  }
+
+  /** A node-sized-state loop (optimization guide §1.2 step 3). AQE is off:
+    * each per-round collect is a tiny fixed-shape query whose broadcast
+    * inputs are LocalTableScans, so adaptive stage materialization would
+    * only add a scheduling round-trip per exchange per round. Shuffle
+    * partitions are `min(session, ceil(n / 64Ki))`: map-side combine bounds
+    * every round's exchange at ≤ `n` rows per map task, so the reduce side
+    * needs partitions by node count, not the session's batch-sized count. */
+  private def nodeLoop(spark: org.apache.spark.sql.SparkSession, n: Long)
+                      (inputs: DataFrame*)
+                      (body: Seq[DataFrame] => DataFrame): DataFrame =
+    inClone(spark, GraftPlanBridge.sizedClone(spark, adaptive = Some(false))(
+      session => math.min(session, partitionsFor(n, Int.MaxValue))), inputs, body)
+
+  /** A DISTRIBUTED loop (guide §2.2: size exchanges from the data moved,
+    * never a static session count, which undersizes the per-round
+    * edge-keyed exchanges at warehouse scale): `ceil(rows / 64Ki)` clamped
+    * to [1, 65536] shuffle partitions, `rows` = the loop's per-round
+    * exchange volume (the EDGE count: every round joins edge-shaped data).
+    * AQE keeps the session's setting: the rounds move real volume, and
+    * AQE's runtime re-planning (skew splits, coalescing below the budget)
+    * is exactly right; only the partition budget is derived. */
+  private[operators] def distLoop(spark: org.apache.spark.sql.SparkSession, rows: Long)
+                                 (inputs: DataFrame*)
+                                 (body: Seq[DataFrame] => DataFrame): DataFrame =
+    inClone(spark, GraftPlanBridge.sizedClone(spark)(_ => partitionsFor(rows, 65536)), inputs, body)
 
   private def pageRankImpl(edges: DataFrame, iters: Int, damping: Double,
                            srcCol: String, dstCol: String, weightCol: Option[String],
@@ -530,7 +536,7 @@ object Graph {
         case Some(_) => round(col("rank") * (col("w").cast("double") / col("deg")), 12)
         case None    => round(col("rank") / col("deg"), 12)
       }
-      if (small) withNodeLoopConf(spark, n) {
+      if (small) nodeLoop(spark, n)(e, nodes, outdeg) { loopFrames =>
         // NODE-SIZED-STATE path (the Lloyd-codebook shape: corpus-sized
         // work distributed, model-sized state through the driver — and the
         // [[hits]] discipline of ONE Spark job per iteration): the
@@ -541,6 +547,8 @@ object Graph {
         // scan joined against two LocalTableScan broadcasts, partial/final
         // decimal aggregate, node-sized collect — no second join job to
         // apply the update, no edge-table shuffle.
+        val Seq(e, nodes, outdeg) = loopFrames
+        val spark = e.sparkSession
         def r12(x: Double): Double =
           java.math.BigDecimal.valueOf(x)
             .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue
@@ -605,12 +613,13 @@ object Graph {
           k += 1
         }
         rankTable(rankMap)
-      } else withDistLoopConf(spark, e.count()) {
+      } else distLoop(spark, e.count())(e, nodes, outdeg) { loopFrames =>
         // DISTRIBUTED path (web-scale graphs): degree-annotated cached
         // edges, shuffle joins on the edge key, rank lineage cut per round
         // ([[Dedup.dupClusters]] discipline); exchange width derived from
         // the edge volume (e is already materialized — the count is a
         // cache read)
+        val Seq(e, nodes, outdeg) = loopFrames
         val ed = e.join(outdeg, "src")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {

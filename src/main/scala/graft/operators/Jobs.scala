@@ -24,65 +24,15 @@ package graft.operators
  * thunks must be persisted AND materialized before the call — concurrent
  * first-actions on an unmaterialized cache would compute it repeatedly.
  *
- * NO-CONCURRENT-SIBLINGS-UNDER-A-CONF-WINDOW invariant: a session-conf
- * mutation window ([[confWindow]] — what `Gates.startSized` and
- * `Graph.withNodeLoopConf` open to apply a volume-derived
- * shuffle-partition count) must NEVER overlap a fan-out from another
- * thread: a sibling action PLANNING a query inside the window would
- * silently compile against the temporary conf (e.g. a corpus-sized
- * shuffle at 1 partition). Both directions are checked at runtime; a
- * violation is reported loudly (stderr) and, under
- * `-Dgraft.strictConfScope=1` / `SPARK_GRAFT_STRICT_CONF_SCOPE=1`, thrown
- * — so the race can never be introduced silently. (Default is warn, not
- * throw: the shared test session runs suites in parallel, where
- * independent short windows may brush against each other benignly —
- * every affected result in this repo is partition-count independent by
- * construction.)
+ * A fan-out needs no guard against session-conf changes: nothing in the
+ * engine sets the shared session's conf while it runs (loops and streaming
+ * gates size their shuffles in a private clone of it, see
+ * [[Graph.distLoop]]), so every sibling plans under the caller's conf.
  */
 private[graft] object Jobs {
-  private val activeFanOuts = new java.util.concurrent.atomic.AtomicInteger(0)
-  @volatile private var confWindowOwner: Thread = _
-
-  private def strictConfScope: Boolean =
-    sys.props.get("graft.strictConfScope").contains("1") ||
-      sys.env.get("SPARK_GRAFT_STRICT_CONF_SCOPE").contains("1")
-
-  private def scopeViolation(msg: String): Unit =
-    if (strictConfScope) throw new IllegalStateException(msg)
-    else System.err.println(s"[graft] conf-scope WARNING: $msg")
-
-  /** Open a session-conf mutation window (set conf → body → restore) and
-    * enforce the invariant above: no live fan-out from another thread, no
-    * overlapping window from another thread. Same-thread nesting and
-    * same-thread fan-outs inside the window are deliberate composition
-    * (the owner chose the conf its own children run under) and pass. */
-  private[graft] def confWindow[A](label: String)(body: => A): A = {
-    val me = Thread.currentThread()
-    val owner = confWindowOwner
-    if (owner != null && (owner ne me))
-      scopeViolation(s"$label: opening a session-conf window while another " +
-        s"is open on thread '${owner.getName}' — the two restores would " +
-        "race and one window's value would leak into the other's plans")
-    val live = activeFanOuts.get()
-    if (live > 0)
-      scopeViolation(s"$label: opening a session-conf window while $live " +
-        "Jobs.concurrently fan-out(s) are live — a sibling action planning " +
-        "now would silently inherit the temporary conf")
-    val prev = confWindowOwner
-    confWindowOwner = me
-    try body finally confWindowOwner = prev
-  }
-
   def concurrently(jobs: (() => Unit)*): Unit = {
     require(jobs.nonEmpty, "Jobs.concurrently: no jobs")
-    if (jobs.length == 1) { jobs.head(); return }
-    val owner = confWindowOwner
-    if (owner != null && (owner ne Thread.currentThread()))
-      scopeViolation("Jobs.concurrently: fanning out while a session-conf " +
-        s"window is open on thread '${owner.getName}' — the siblings would " +
-        "plan under that window's temporary conf")
-    activeFanOuts.incrementAndGet()
-    try concurrentlyImpl(jobs) finally activeFanOuts.decrementAndGet()
+    if (jobs.length == 1) jobs.head() else concurrentlyImpl(jobs)
   }
 
   private def concurrentlyImpl(jobs: Seq[() => Unit]): Unit = {

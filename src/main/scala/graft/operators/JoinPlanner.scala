@@ -371,7 +371,8 @@ object JoinPlanner {
     * rows, the folded KMV distinct sketch, 1-row summed stats frame, the
     * validated sketch shape, and whether EVERY committed slice's topk
     * covered its key set (`topCovered` — the recorded exactness
-    * precondition of the merged top-1 count). */
+    * precondition of the merged top-1 count). Every frame is
+    * single-partition (see [[loadTableProfile]]). */
   final case class TableProfile(cells: DataFrame, topk: DataFrame,
                                 kmv: DataFrame, stats: DataFrame,
                                 depth: Int, width: Int, topK: Int,
@@ -412,8 +413,15 @@ object JoinPlanner {
         "source data with this version")
     // ONE relation over every slice's unified table; each component is a
     // discriminator filter + projection of it (one file listing + footer
-    // set per bundle instead of four)
-    val all = spark.read.parquet(dirs.map(d => s"$d/data"): _*)
+    // set per bundle instead of four). The whole relation is SKETCH-BOUNDED
+    // — slices × (depth·width + topK + kmvK + 1) rows, KBs at any corpus
+    // scale — so it is read as ONE partition: every merge, join and
+    // aggregate over the components (here, in the decision and advice
+    // builders, in [[compactTableProfile]]) then plans with no shuffle,
+    // under whatever conf the caller's session holds. Without this each
+    // of those exchanges would pay a stage (and an AQE materialization
+    // round-trip) for a few KB.
+    val all = spark.read.parquet(dirs.map(d => s"$d/data"): _*).coalesce(1)
     def component(sub: String): DataFrame = {
       val owned = sub match {
         case "cells" => Seq("r", "c", "n")
@@ -470,53 +478,6 @@ object JoinPlanner {
    * Audited: summed rows/bytes must match the pile's. Production shape:
    * `dst` under a [[Generations]] root, published by pointer flip.
    */
-  /** Run a decision/advice COLLECT over loaded profile components
-    * under sketch-tuned SQL conf (optimization guide §1.2 step 3 — the
-    * `Graph.withNodeLoopConf` discipline applied to the planner's
-    * fixed-shape queries): every input frame is SKETCH-BOUNDED by
-    * construction — merged cells ≤ depth·width rows, topk ≤
-    * slices·topK, kmv ≤ kmvK, stats one row per slice — so each
-    * exchange holds KBs at ANY corpus scale. AQE's per-exchange stage
-    * materialization then only adds a scheduling round-trip, and the
-    * reduce side needs `ceil(sketchRows / 64Ki)` partitions (derived
-    * from the sketch SHAPE the caller passes — volume-derived, never a
-    * local constant; clamped by the session value like the graph
-    * loops). Session conf restored on exit; runs under the
-    * [[Jobs.confWindow]] guard — callers apply it ONLY on the main
-    * thread after fan-outs settle (never inside a Jobs.concurrently
-    * thunk, where the temporary conf would leak into the sibling's
-    * plans). NOT applied to [[writeSlice]] or [[compactTableProfile]] —
-    * a slice's grouped-count table is distinct-KEY-sized (potentially
-    * corpus-scale), not sketch-bounded, and the fold runs inside gate
-    * fan-out chains.
-    * Results are unchanged by construction: every decision number is a
-    * deterministic function of the merged values (partition-count
-    * independent — the property the profile oracles pin). */
-  private[graft] def withSketchConf[A](spark: org.apache.spark.sql.SparkSession,
-                                       sketchRows: Long)(body: => A): A =
-    Jobs.confWindow("JoinPlanner.withSketchConf") {
-      val conf = spark.conf
-      val keyA = "spark.sql.adaptive.enabled"
-      val keyP = "spark.sql.shuffle.partitions"
-      val prevA = conf.get(keyA)
-      val prevP = conf.get(keyP)
-      conf.set(keyA, "false")
-      conf.set(keyP, math.max(1L,
-        math.min(prevP.toLong, (sketchRows + 65535) / 65536)).toString)
-      try body
-      finally { conf.set(keyA, prevA); conf.set(keyP, prevP) }
-    }
-
-  /** The sketch-shape row bound of one loaded profile — what
-    * [[withSketchConf]] sizes from. */
-  private[graft] def sketchRowsOf(p: TableProfile): Long =
-    p.depth.toLong * p.width + p.topK.toLong + p.kmvK.toLong
-
-  /** [[sketchRowsOf]] from the build-side params (for callers that hold
-    * the [[ProfileParams]] rather than a loaded profile). */
-  private[graft] def sketchRowsOf(p: ProfileParams): Long =
-    p.depth.toLong * p.width + p.topK.toLong + p.kmvK.toLong
-
   def compactTableProfile(spark: org.apache.spark.sql.SparkSession,
                           src: String, dst: String): Unit = {
     require(src != dst, "compactTableProfile: dst must be a fresh path")
@@ -528,10 +489,8 @@ object JoinPlanner {
         "fold into a fresh generation path")
     val stage = new org.apache.hadoop.fs.Path(dst, "_staging/base")
     if (hfs.exists(stage)) hfs.delete(stage, true)
-    // NOT under [[withSketchConf]]: gates run this fold inside
-    // Jobs.concurrently chains, where a conf window would leak the
-    // sketch-sized partition count into the sibling chain's planning —
-    // the exact race the conf-window guard exists to catch
+    // the loaded components are single-partition (see
+    // [[loadTableProfile]]), so the fold below plans with no exchange
     val pre = prof.stats.collect()(0)
     val mergedTopk = prof.topk.groupBy(col("k")).agg(sum(col("cnt")).as("cnt"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

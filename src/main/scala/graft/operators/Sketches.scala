@@ -315,7 +315,10 @@ object Sketches {
       .groupBy(col("r"))
       .agg(sum(col("na").cast(org.apache.spark.sql.types.DecimalType(38, 0)) *
         col("nb")).as("ip"))
-    (0 until depth).toDF("r")
+    // one partition: the depth rows feed a global min, and over
+    // single-partition profile cells (JoinPlanner.loadTableProfile) the
+    // whole estimate then plans without a shuffle
+    (0 until depth).toDF("r").coalesce(1)
       .join(ip, Seq("r"), "left")
       .agg(min(coalesce(col("ip"), lit(0)
         .cast(org.apache.spark.sql.types.DecimalType(38, 0))))

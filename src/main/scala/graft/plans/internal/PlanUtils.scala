@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation, NoopCache}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** private[sql] bridge: build a DataFrame from a custom LogicalPlan
@@ -15,6 +16,23 @@ object GraftPlanBridge {
   def ofRows(spark: org.apache.spark.sql.SparkSession,
              plan: LogicalPlan): org.apache.spark.sql.DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A private clone of `spark` for one sized computation. The clone copies
+    * the caller's conf, temp views and functions, and shares its cache and
+    * catalog, so a plan rebound into it with [[ofRows]] still reads the
+    * caller's persisted data. Its shuffle-partition count is `partitions`
+    * applied to the caller's, and its AQE flag is `adaptive` (the caller's
+    * when `None`). Nothing set here reaches the caller, so no concurrent
+    * request on the caller's session can plan under these values. */
+  def sizedClone(spark: org.apache.spark.sql.SparkSession,
+                 adaptive: Option[Boolean] = None)
+                (partitions: Int => Int): org.apache.spark.sql.SparkSession = {
+    val clone = spark.asInstanceOf[classic.SparkSession].cloneSession()
+    val conf = clone.sessionState.conf
+    conf.setConf(SQLConf.SHUFFLE_PARTITIONS, partitions(conf.numShufflePartitions))
+    adaptive.foreach(conf.setConf(SQLConf.ADAPTIVE_EXECUTION_ENABLED, _))
+    clone
+  }
 
   /** Column → catalyst Expression (Column wraps a ColumnNode in Spark 4). */
   def expr(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =

@@ -173,22 +173,8 @@ object StreamingPipeline {
    * A crash before (2) leaves the live table untouched (orphan staging is
    * dropped on the next call); a crash after (2) is completed by [[recover]]
    * — day renames are idempotent, so any replay converges.
-   *
-   * `writersPerDay` spreads each staged day's merge write over up to
-   * that many writer tasks (deterministic `(key, window_start)` hash
-   * salt — retry-safe, never `rand()`; hash partitioning may collide a
-   * few (day, salt) combos, so the spread is an upper bound, uniform in
-   * expectation). The default 1 keeps the one-file-per-day
-   * layout that serves best; a deployment whose days are genuinely wide
-   * (|keys|·24 cells approaching a single task's comfortable write, e.g.
-   * precision-6 geohash over a dense region) raises it so the staged
-   * write itself parallelizes — out-of-band [[compact]] fixes file
-   * COUNT, but only this spreads the per-trigger merge write.
    */
-  def upsertBatch(batch: DataFrame, tableDir: String,
-                  writersPerDay: Int = 1): Unit = {
-    require(writersPerDay >= 1,
-      s"upsertBatch: writersPerDay must be >= 1, got $writersPerDay")
+  def upsertBatch(batch: DataFrame, tableDir: String): Unit = {
     val spark = batch.sparkSession
     val cols = (cellSchema ++ daySchema).map(f => col(f.name))
     val changed = batch.select(cols: _*).cache()
@@ -213,25 +199,13 @@ object StreamingPipeline {
             case _: org.apache.spark.sql.AnalysisException => // first batch: no table yet
               changed.limit(0)
           }
-        // writersPerDay writer partitions per touched day (default 1):
-        // without pinning, every shuffle task holding a day's rows writes
-        // its own file into the day dir — up to
-        // spark.sql.shuffle.partitions files PER DAY PER TRIGGER, the
-        // small-file swarm [[compact]] exists to clean up. One task per
-        // day is safe at the default because the rows are AGGREGATED
-        // CELLS (bounded by |keys|·24 per day, not raw event volume);
-        // wide-day deployments raise writersPerDay to spread the staged
-        // write itself (see the scaladoc).
-        val staged =
-          if (writersPerDay == 1)
-            existing.union(changed).repartition(col("window_day"))
-          else
-            existing.union(changed)
-              .withColumn("_w",
-                pmod(hash(col("key"), col("window_start")), lit(writersPerDay)))
-              .repartition(days.length * writersPerDay, col("window_day"), col("_w"))
-              .drop("_w")
-        staged
+        // one writer partition per touched day: without pinning, every
+        // shuffle task holding a day's rows writes its own file into the
+        // day dir — up to spark.sql.shuffle.partitions files PER DAY PER
+        // TRIGGER, the small-file swarm [[compact]] exists to clean up.
+        // One task per day is safe because the rows are AGGREGATED CELLS
+        // (bounded by |keys|·24 per day, not raw event volume)
+        existing.union(changed).repartition(col("window_day"))
           .write.mode("overwrite").partitionBy("window_day").parquet(staging.toString)
         writeIntent(hfs, tableDir, days.map(_.toString).toIndexedSeq)
         swapDays(hfs, tableDir, days.map(_.toString).toIndexedSeq)

