@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /**
@@ -20,23 +21,15 @@ import org.apache.spark.sql.SparkSession
  *     gen-00000007/...
  * }}}
  *
- * COMMIT PROTOCOL (monotone pointer sequence — stronger than the
- * delete-then-rename marker swap of
- * [[graft.streaming.StreamingPipeline.upsertBatch]], because a serving
- * pointer must NEVER be absent mid-flip):
- *   1. build the new generation completely under `root/gen-N` (readers
- *      only ever follow the pointer, so a half-built dir is invisible);
- *   2. write `_ptr/.ptr-S.tmp`, then RENAME it to `_ptr/ptr-S` where
- *      `S` = highest existing sequence + 1 — the rename is the commit
- *      point (atomic on HDFS/local, and it never replaces a file);
- *   3. old pointer files and superseded generations stay on disk until
- *      [[pruneSuperseded]] — the old generation remains readable
- *      throughout, and [[resolve]] always answers from the HIGHEST
- *      committed pointer.
- * A crash anywhere before (2) leaves the pointer on the old generation
- * (the half-built gen dir is swept by the next [[pruneSuperseded]]); a
- * crash after (2) has already flipped. There is no intermediate state a
- * reader can observe — the GenerationsSpec crash test pins exactly this.
+ * COMMIT PROTOCOL: build the new generation completely under
+ * `root/gen-N` (readers only follow the pointer), then publish pointer
+ * `_ptr/ptr-S`, S = highest + 1, through [[SeqFiles.publish]] — the same
+ * tmp→rename commit step as the serving table's manifest
+ * ([[graft.streaming.StreamingPipeline.upsertBatch]]). Old pointers and
+ * generations stay readable until [[pruneSuperseded]]; [[resolve]]
+ * answers from the HIGHEST pointer. A crash before the rename keeps the
+ * old generation serving; no reader can observe an intermediate state
+ * (the GenerationsSpec crash test pins this).
  *
  * Single-writer contract (the same as every compaction in this repo):
  * one maintenance process advances a root at a time; concurrent READERS
@@ -49,41 +42,28 @@ import org.apache.spark.sql.SparkSession
 object Generations {
 
   private val PtrDir = "_ptr"
-  private val PtrRe = "^ptr-(\\d{8})$".r
   private val GenRe = "^gen-(\\d{8})$".r
 
-  private def fs(spark: SparkSession, root: String) =
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def ptrPath(root: String) = new Path(root, PtrDir)
 
-  private def ptrPath(root: String) = new org.apache.hadoop.fs.Path(root, PtrDir)
+  /** The (sequence, name) entries `prefix-NNNNNNNN` of `dir`, ascending. */
+  private def listSeqs(hfs: FileSystem, dir: Path, prefix: String): Seq[(Long, String)] =
+    SeqFiles.numbered(SeqFiles.listAll(hfs, dir), prefix)
+      .map { case (n, s) => (n, s.getPath.getName) }
 
-  private def listSeqs(hfs: org.apache.hadoop.fs.FileSystem,
-                       dir: org.apache.hadoop.fs.Path,
-                       re: scala.util.matching.Regex): Seq[(Long, String)] =
-    // one round-trip: a missing dir surfaces as FileNotFoundException from
-    // the listing itself — probing exists() first would double the FS calls
-    // on every serve-path resolution
-    try hfs.listStatus(dir).toIndexedSeq.map(_.getPath.getName).collect {
-      case n @ re(d) => (d.toLong, n)
-    }.sortBy(_._1)
-    catch { case _: java.io.FileNotFoundException => Seq.empty }
+  private def lastSeq(hfs: FileSystem, dir: Path, prefix: String): Long =
+    listSeqs(hfs, dir, prefix).lastOption.fold(0L)(_._1)
 
   /** The committed current generation NAME (e.g. `gen-00000007`), or None
     * when nothing was ever published. Reads the HIGHEST-sequence pointer
     * file — `.tmp` staging files and any half-built generation dirs are
     * invisible by construction. */
   def current(spark: SparkSession, root: String): Option[String] =
-    readCurrent(fs(spark, root), root)
+    readCurrent(SeqFiles.fs(spark, root), root)
 
-  private def readCurrent(hfs: org.apache.hadoop.fs.FileSystem,
-                          root: String): Option[String] =
-    listSeqs(hfs, ptrPath(root), PtrRe).lastOption.map { case (_, name) =>
-      val in = hfs.open(new org.apache.hadoop.fs.Path(ptrPath(root), name))
-      val gen =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .find(_.nonEmpty).getOrElse("")
-        finally in.close()
+  private def readCurrent(hfs: FileSystem, root: String): Option[String] =
+    listSeqs(hfs, ptrPath(root), "ptr").lastOption.map { case (_, name) =>
+      val gen = SeqFiles.read(hfs, new Path(ptrPath(root), name)).headOption.getOrElse("")
       require(gen.nonEmpty, s"Generations: pointer $name at $root is empty — " +
         "the pointer dir was tampered with; republish")
       gen
@@ -100,20 +80,15 @@ object Generations {
         "advance() (or publish()) one before serving"))
 
   /** The serve-path entry point for a path that MAY be a generations root:
-    * `Some(servingGenerationPath)` when a pointer is published, `None` when
-    * the path was never published under (a raw artifact path — serve it
-    * as-is). One pointer-dir listing + one short read + one existence
-    * check for the published case, a single listing for the raw case —
-    * cheaper per request than `current()` + `resolve()` (which re-reads
-    * the pointer), and what [[graft.serving.PlanServer]] /
-    * [[graft.serving.RetrievalServer]] and the generation-aware streamed
-    * scorers call per request / per micro-batch. Still fails loudly on a
-    * DANGLING pointer (file names a generation whose dir is gone): that is
-    * a broken root, not a raw path. */
+    * `Some(servingGenerationPath)` when a pointer is published, `None` for
+    * a raw artifact path (serve it as-is). One pointer-dir listing, one
+    * short read and one existence check — what the Plan/Retrieval servers
+    * and the streamed scorers call per request / per micro-batch. Fails
+    * loudly on a DANGLING pointer (its generation dir is gone). */
   def resolveIfPublished(spark: SparkSession, root: String): Option[String] = {
-    val hfs = fs(spark, root)
+    val hfs = SeqFiles.fs(spark, root)
     readCurrent(hfs, root).map { gen =>
-      val p = new org.apache.hadoop.fs.Path(root, gen)
+      val p = new Path(root, gen)
       if (!hfs.exists(p))
         throw new IllegalStateException(
           s"Generations: pointer at $root names $gen but the directory is " +
@@ -126,35 +101,22 @@ object Generations {
     * highest existing dir OR pointer sequence — a crash-orphaned dir must
     * not be re-allocated while a pointer could still flip to it). */
   def nextGenerationName(spark: SparkSession, root: String): String = {
-    val hfs = fs(spark, root)
-    val genMax = listSeqs(hfs, new org.apache.hadoop.fs.Path(root), GenRe)
-      .lastOption.map(_._1).getOrElse(0L)
-    val ptrMax = listSeqs(hfs, ptrPath(root), PtrRe)
-      .lastOption.map(_._1).getOrElse(0L)
-    f"gen-${math.max(genMax, ptrMax) + 1}%08d"
+    val hfs = SeqFiles.fs(spark, root)
+    SeqFiles.name("gen",
+      math.max(lastSeq(hfs, new Path(root), "gen"), lastSeq(hfs, ptrPath(root), "ptr")) + 1)
   }
 
-  /** COMMIT an already-built generation dir as the serving one: stage the
-    * pointer content to `.ptr-S.tmp`, rename to `ptr-S` (the atomic commit
-    * point, S monotone). The generation must exist under `root`. */
+  /** COMMIT an already-built generation dir (it must exist under `root`)
+    * as the serving one: publish pointer `ptr-S`, S monotone. */
   def publish(spark: SparkSession, root: String, generation: String): Unit = {
     require(GenRe.matches(generation),
       s"Generations: publish expects a gen-XXXXXXXX name, got '$generation'")
-    val hfs = fs(spark, root)
-    require(hfs.exists(new org.apache.hadoop.fs.Path(root, generation)),
+    val hfs = SeqFiles.fs(spark, root)
+    require(hfs.exists(new Path(root, generation)),
       s"Generations: cannot publish $generation at $root — the directory " +
         "does not exist; build it first")
-    val seq = listSeqs(hfs, ptrPath(root), PtrRe).lastOption.map(_._1).getOrElse(0L) + 1
-    hfs.mkdirs(ptrPath(root))
-    val tmp = new org.apache.hadoop.fs.Path(ptrPath(root), f".ptr-$seq%08d.tmp")
-    val out = hfs.create(tmp, true)
-    try out.write((generation + "\n").getBytes("UTF-8"))
-    finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(ptrPath(root), f"ptr-$seq%08d")
-    if (!hfs.rename(tmp, dst))
-      throw new java.io.IOException(
-        s"Generations: committing $dst failed — concurrent publisher? " +
-          "(single-writer contract)")
+    val seq = lastSeq(hfs, ptrPath(root), "ptr") + 1
+    SeqFiles.publish(hfs, ptrPath(root), "ptr", seq, Seq(generation))
   }
 
   /**
@@ -167,41 +129,24 @@ object Generations {
    */
   def advance(spark: SparkSession, root: String)(build: String => Unit): String = {
     val gen = nextGenerationName(spark, root)
-    val path = new org.apache.hadoop.fs.Path(root, gen).toString
+    val path = new Path(root, gen).toString
     build(path)
     publish(spark, root, gen)
     path
   }
 
   /**
-   * Retention sweep: delete every generation dir EXCEPT the serving one
-   * and every pointer file below the highest — the bounded-storage half
-   * of the lifecycle ([[graft.streaming.StreamingPipeline.retainFrom]]'s
-   * role for day partitions). Also sweeps crash-orphaned half-built
-   * generation dirs and stale `.tmp` pointer stages. Idempotent and
-   * crash-safe by deletion convergence (no intent marker needed); the
-   * serving generation is re-resolved first, so a sweep can never delete
-   * what the pointer names. Returns the removed generation names. Run
-   * out-of-band, only once no reader still holds the old generation's
-   * file handles (the deployment's grace-period concern).
-   */
-  /**
    * A per-generation ARTIFACT MEMO — the serve-path discipline every
    * generation-aware reader shares (REST servers per request, streamed
    * scorers per micro-batch): resolve the serving generation
-   * ([[resolveIfPublished]]; a pointer-less root serves as-is) and
-   * rebuild the driver-held artifact exactly when the resolved path
-   * changes. [[GenerationMemo.current]] returns `(resolvedPath,
-   * artifact)` from ONE resolution, so a caller that also reads tables
-   * by path can never mix two generations within an epoch. A single
-   * volatile pair is the whole state, with no lock: the REST servers call
-   * it from concurrent request threads, where the worst case is two
-   * threads loading the same generation at once (one load is wasted);
-   * a caller never serves a generation older than the one it resolved.
-   * Construction WARMS the memo — an unpublished root or unreadable
-   * initial generation fails the deployment at construction, not in
-   * epoch 0 (the fail-fast contract all four call sites had hand-rolled
-   * before this helper).
+   * ([[resolveIfPublished]]) and rebuild the driver-held artifact exactly
+   * when the resolved path changes. [[GenerationMemo.current]] returns
+   * `(resolvedPath, artifact)` from ONE resolution, so a caller never mixes
+   * two generations within an epoch. One volatile pair, no lock: two
+   * concurrent threads may load the same generation once each, and no
+   * caller serves a generation older than the one it resolved.
+   * Construction WARMS the memo, so an unreadable initial generation
+   * fails the deployment at construction, not in epoch 0.
    */
   final class GenerationMemo[A] private[Generations] (
       spark: SparkSession, root: String, load: String => A) {
@@ -227,28 +172,32 @@ object Generations {
     * layout literals this object owns. */
   private[graft] def storageCounts(spark: SparkSession,
                                    root: String): (Int, Int) = {
-    val hfs = fs(spark, root)
-    (listSeqs(hfs, new org.apache.hadoop.fs.Path(root), GenRe).size,
-      listSeqs(hfs, ptrPath(root), PtrRe).size)
+    val hfs = SeqFiles.fs(spark, root)
+    (listSeqs(hfs, new Path(root), "gen").size,
+      listSeqs(hfs, ptrPath(root), "ptr").size)
   }
 
+  /**
+   * Retention sweep: delete every generation dir EXCEPT the serving one
+   * and every pointer file below the highest — the bounded-storage half
+   * of the lifecycle ([[graft.streaming.StreamingPipeline.retainFrom]]'s
+   * role for day partitions). Also sweeps crash-orphaned half-built
+   * generation dirs and stale `.tmp` pointer stages. Idempotent and
+   * crash-safe by deletion convergence (no intent marker needed); the
+   * serving generation is re-resolved first, so a sweep can never delete
+   * what the pointer names. Returns the removed generation names. Run
+   * out-of-band, only once no reader still holds the old generation's
+   * file handles (the deployment's grace-period concern).
+   */
   def pruneSuperseded(spark: SparkSession, root: String): Seq[String] = {
-    val hfs = fs(spark, root)
+    val hfs = SeqFiles.fs(spark, root)
     val cur = current(spark, root).getOrElse(throw new IllegalStateException(
       s"Generations: nothing published at $root — nothing to prune against"))
-    val gens = listSeqs(hfs, new org.apache.hadoop.fs.Path(root), GenRe)
-      .map(_._2).filter(_ != cur)
-    gens.foreach { g =>
-      hfs.delete(new org.apache.hadoop.fs.Path(root, g), true)
-    }
-    val ptrs = listSeqs(hfs, ptrPath(root), PtrRe)
-    ptrs.dropRight(1).foreach { case (_, name) =>
-      hfs.delete(new org.apache.hadoop.fs.Path(ptrPath(root), name), false)
-    }
-    if (hfs.exists(ptrPath(root)))
-      hfs.listStatus(ptrPath(root)).map(_.getPath)
-        .filter(_.getName.endsWith(".tmp"))
-        .foreach(p => hfs.delete(p, false))
+    val gens = listSeqs(hfs, new Path(root), "gen").map(_._2).filter(_ != cur)
+    gens.foreach(g => hfs.delete(new Path(root, g), true))
+    listSeqs(hfs, ptrPath(root), "ptr").dropRight(1)
+      .foreach { case (_, name) => hfs.delete(new Path(ptrPath(root), name), false) }
+    SeqFiles.stages(SeqFiles.listAll(hfs, ptrPath(root))).foreach(hfs.delete(_, false))
     gens
   }
 }

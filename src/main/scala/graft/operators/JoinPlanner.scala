@@ -201,9 +201,8 @@ object JoinPlanner {
    *
    * ATOMIC SLICE PUBLISH: each slice's four components are written
    * together under `path/_staging/<sliceId>` and committed by ONE
-   * directory rename to `path/slices/<sliceId>` (the
-   * [[graft.streaming.StreamingPipeline.upsertBatch]] stage→rename
-   * discipline). A crash mid-write leaves only staging — the loader
+   * directory rename to `path/slices/<sliceId>` (write everything, then
+   * commit with one rename). A crash mid-write leaves only staging — the loader
    * never sees a bundle whose cells include a slice its stats/topk do
    * not, so decisions can never silently mix slice populations. The
    * rename also makes appends IDEMPOTENT under a caller-chosen

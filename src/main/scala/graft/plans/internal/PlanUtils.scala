@@ -1,10 +1,15 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.hadoop.fs.Path
+import scala.collection.mutable
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation, NoopCache}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitionPath, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -42,21 +47,39 @@ object GraftPlanBridge {
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.Column =
     classic.ExpressionUtils.column(e)
 
-  /** A parquet table under `root` with a fixed schema, read over a private
-    * file listing. `spark.read.schema(..).parquet` would also skip schema
-    * inference, but it registers a new client in the session-shared
-    * `FileStatusCache` on every call and never reads it again: a reader that
-    * resolves the table per request fills that cache up to its size cap.
-    * Here the listing lives only as long as the returned frame. Partition
-    * values are parsed from `col=value` directories with the types of
-    * `partitionSchema`. */
-  def parquetTable(spark: org.apache.spark.sql.SparkSession, root: String,
-                   dataSchema: StructType,
-                   partitionSchema: StructType): org.apache.spark.sql.DataFrame = {
-    val index = new InMemoryFileIndex(spark, Seq(new Path(root)), Map.empty,
-      Some(StructType(dataSchema ++ partitionSchema)), NoopCache)
+  /** A parquet table over an explicit file list, with a fixed schema.
+    * Each file comes as (path, partition values as strings, byte length);
+    * the values are cast to `partitionSchema`'s types, as directory
+    * discovery would parse them. Resolving the table makes no filesystem
+    * call and launches no listing job at any file count: the index is
+    * exactly the given files, private to the returned frame (nothing
+    * enters the session-shared `FileStatusCache`). `root` only names the
+    * table in plans. */
+  def listedTable(spark: org.apache.spark.sql.SparkSession, root: String,
+                  files: Seq[(String, Seq[String], Long)], dataSchema: StructType,
+                  partitionSchema: StructType): org.apache.spark.sql.DataFrame = {
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    val index = new ListedFileIndex(spark, new Path(root), files.map { case (p, values, len) =>
+      (new FileStatus(len, false, 0, 0, 0, new Path(p)), InternalRow.fromSeq(
+        partitionSchema.zip(values).map { case (f, v) => Cast(Literal(v), f.dataType, tz).eval() }))
+    }, partitionSchema)
     val relation = HadoopFsRelation(index, partitionSchema, dataSchema,
       bucketSpec = None, new ParquetFileFormat, Map.empty)(spark)
     ofRows(spark, LogicalRelation(relation))
+  }
+
+  private class ListedFileIndex(spark: org.apache.spark.sql.SparkSession, root: Path,
+                                files: Seq[(FileStatus, InternalRow)],
+                                partitionColumns: StructType)
+      extends PartitioningAwareFileIndex(spark, Map.empty, None) {
+    override protected val leafFiles: mutable.LinkedHashMap[Path, FileStatus] =
+      mutable.LinkedHashMap(files.map { case (st, _) => st.getPath -> st }: _*)
+    override protected val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
+      files.map(_._1).groupBy(_.getPath.getParent).map { case (d, sts) => d -> sts.toArray }
+    private val spec = PartitionSpec(partitionColumns,
+      files.map { case (st, row) => PartitionPath(row, st.getPath.getParent) }.distinct)
+    override def partitionSpec(): PartitionSpec = spec
+    override def rootPaths: Seq[Path] = Seq(root)
+    override def refresh(): Unit = ()
   }
 }

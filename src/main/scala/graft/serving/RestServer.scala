@@ -109,7 +109,7 @@ class RestServer(viewProvider: () => DataFrame, port: Int) {
 object RestServer {
   /** Serve the STREAMING pipeline's table live: each request resolves the
     * serving table afresh ([[graft.streaming.StreamingPipeline.servingView]]:
-    * one directory listing under a fixed schema, no Spark job), so
+    * pinned to the newest manifest, no Spark job), so
     * micro-batch upserts are visible immediately — the Kafka-Streams
     * interactive-query analogue (reference serves its RocksDB store the
     * same way, `querying/QueryingService.java:39`). Requests run

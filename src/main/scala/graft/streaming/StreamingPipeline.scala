@@ -1,11 +1,13 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.GraftPlanBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.operators.AggCore
+import graft.operators.{AggCore, SeqFiles}
 
 /**
  * The reference's continuous ingestion topology (SURVEY.md §3.1), as
@@ -29,9 +31,9 @@ import graft.operators.AggCore
  *    + update output mode
  *  - 10 s commit interval (W4) :120 → `Trigger.ProcessingTime("10 seconds")`
  *  - RocksDB store + changelog (K1) :103-104 → parquet serving table partitioned
- *    by `window_day` + checkpointing; upsert = dynamic partition overwrite of
- *    the touched (window_start, key) cells, idempotent across micro-batch
- *    replays.
+ *    by `window_day` + checkpointing; upsert = rewrite of the touched day
+ *    partitions into new files, published by one manifest rename,
+ *    idempotent across micro-batch replays.
  *
  * At scale: state is keyed by (gh-prefix, hour) — cardinality bounded by
  * 32^p × retained hours, independent of input volume; the serving table is
@@ -100,9 +102,9 @@ object StreamingPipeline {
    *
    * Upsert semantics: each micro-batch (update mode → only cells whose
    * aggregate changed) REPLACES the (window_day) partitions it touches after
-   * merging with surviving rows — `foreachBatch` + dynamic partition
-   * overwrite. Replays of the same batch after failure rewrite the same
-   * partitions with the same content → idempotent (SURVEY.md §7.4.1).
+   * merging with surviving rows — `foreachBatch` + [[upsertBatch]]. Replays
+   * of the same batch after failure commit the same content again →
+   * idempotent (SURVEY.md §7.4.1).
    */
   def start(source: DataFrame, tableDir: String, checkpointDir: String,
             precision: Int = 6,
@@ -127,141 +129,155 @@ object StreamingPipeline {
    * shared verbatim.
    *
    * Handoff semantics (kappa): the upsert REPLACES a (key, hour) cell, so a
-   * live stream taking over must replay the same log from the start (its
-   * state then covers every reading of any cell it emits, and its first
-   * writes reproduce the backfilled values idempotently). A stream starting
-   * mid-log would emit partial aggregates and clobber backfilled cells —
-   * replace-not-add is what keeps micro-batch replays idempotent.
-   *
-   * Scale: the aggregate shuffles (key, hour) partial aggregates only, and
-   * the upsert rewrites only the day partitions the backfill touches.
+   * live stream taking over must replay the same log from the start; one
+   * starting mid-log would emit partial aggregates and clobber backfilled
+   * cells — replace-not-add is what keeps micro-batch replays idempotent.
    */
   def backfill(rawJson: DataFrame, tableDir: String, precision: Int = 6): Unit = {
     val (valid, _) = validate(parseReadings(rawJson))
     upsertBatch(hourlyAgg(keyed(valid, precision)), tableDir)
   }
 
-  /** Staging dir for an in-flight merge — the underscore prefix makes it
-    * invisible to parquet partition discovery, so readers never see it. */
-  private def stagingPath(tableDir: String) = new org.apache.hadoop.fs.Path(tableDir, "_staging")
+  /*
+   * Layout: never overwritten in place. Commit S writes new files under
+   * `tableDir/c-S/window_day=D/` and publishes `tableDir/_manifest/m-S`
+   * ([[graft.operators.SeqFiles.publish]]); that rename is the only commit
+   * point. A manifest line is `F<TAB>day<TAB>bytes<TAB>path` for a live
+   * file, or `R<TAB>path` for a dir the commit retired (a
+   * `c-N/window_day=D`, or a whole `c-N` with no live day left); paths are
+   * relative to `tableDir`. Every verb replaces whole days, so a day's
+   * files always sit in one commit dir.
+   */
 
-  /** Swap-intent marker: its EXISTENCE is the commit point. Before it
-    * appears, the live table is untouched; once it exists, the swap is
-    * replayable from staging ([[recover]]). */
-  private def intentPath(tableDir: String) = new org.apache.hadoop.fs.Path(tableDir, "_upsert_intent")
+  private type Entry = (String, String, Long) // (relative path, day, bytes)
 
-  private def fileSystem(spark: SparkSession, tableDir: String) =
-    new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private final case class Manifest(seq: Long, live: Seq[Entry], retired: Seq[String])
+
+  /** How long the files a commit retired stay on disk after it: a view
+    * resolved just before the commit still reads them. A serving request
+    * takes about 0.4 s at the median (perfbench `serve`) and seconds in
+    * its tail; ten minutes is over a thousand medians, and holds at most
+    * 60 commits of superseded day files at the reference's 10 s trigger. */
+  private val RetiredGraceMs = 10 * 60 * 1000L
+
+  private def manifestDir(tableDir: String) = new Path(tableDir, "_manifest")
+
+  private def readManifest(hfs: FileSystem, tableDir: String, seq: Long): Manifest = {
+    val rows = SeqFiles.read(hfs, new Path(manifestDir(tableDir), SeqFiles.name("m", seq)))
+      .map(_.split('\t'))
+    Manifest(seq, rows.collect { case Array("F", day, bytes, rel) => (rel, day, bytes.toLong) },
+      rows.collect { case Array("R", rel) => rel })
+  }
+
+  /** The newest manifest: one listing of `_manifest` and one read. */
+  private def latest(hfs: FileSystem, tableDir: String): Option[Manifest] =
+    SeqFiles.numbered(SeqFiles.listAll(hfs, manifestDir(tableDir)), "m").lastOption
+      .map { case (seq, _) => readManifest(hfs, tableDir, seq) }
+
+  /** The cells of `entries` as a frame over exactly those files. */
+  private def cells(spark: SparkSession, hfs: FileSystem, tableDir: String,
+                    entries: Seq[Entry]): DataFrame = {
+    val root = hfs.makeQualified(new Path(tableDir))
+    GraftPlanBridge.listedTable(spark, root.toString,
+      entries.map { case (rel, day, bytes) => (new Path(root, rel).toString, Seq(day), bytes) },
+      cellSchema, daySchema)
+  }
+
+  /** The commit of every writer verb: sweep ([[recover]]), read the newest
+    * manifest, let `rewrite(live, cellsOf, commitDir)` write the new day
+    * partitions and return the days it replaces or drops, then publish the
+    * next manifest (unless no day changed). Returns those days, sorted. */
+  private def commit(spark: SparkSession, tableDir: String)
+                    (rewrite: (Seq[Entry], Seq[String] => DataFrame, String) => Seq[String])
+      : Seq[String] = {
+    val hfs = SeqFiles.fs(spark, tableDir)
+    recover(spark, tableDir)
+    val cur = latest(hfs, tableDir)
+    val live = cur.fold(Seq.empty[Entry])(_.live)
+    val seq = cur.fold(0L)(_.seq) + 1
+    val dir = new Path(tableDir, SeqFiles.name("c", seq))
+    val replaced = rewrite(live,
+      days => cells(spark, hfs, tableDir, live.filter(e => days.contains(e._2))),
+      dir.toString).distinct.sorted
+    if (replaced.nonEmpty) {
+      val written = for {
+        day <- SeqFiles.listAll(hfs, dir).map(_.getPath).filter(_.getName.startsWith("window_day="))
+        f <- SeqFiles.listAll(hfs, day) if f.getPath.getName.endsWith(".parquet")
+      } yield (s"${dir.getName}/${day.getName}/${f.getPath.getName}",
+        day.getName.stripPrefix("window_day="), f.getLen)
+      val next = live.filterNot(e => replaced.contains(e._2)) ++ written
+      def unit(rel: String) = rel.substring(0, rel.lastIndexOf('/'))
+      def commitOf(rel: String) = rel.takeWhile(_ != '/')
+      val keptCommits = next.map(e => commitOf(e._1)).toSet
+      val retired = live.map(e => unit(e._1)).distinct.filterNot(next.map(e => unit(e._1)).toSet)
+        .map(u => if (keptCommits(commitOf(u))) u else commitOf(u)).distinct
+      SeqFiles.publish(hfs, manifestDir(tableDir), "m", seq,
+        next.map { case (rel, day, bytes) => s"F\t$day\t$bytes\t$rel" } ++
+          retired.map("R\t" + _))
+    }
+    replaced
+  }
 
   /**
    * Merge a micro-batch of changed cells into the serving table — keep every
    * existing cell whose (key, window_start) is NOT in the batch, union the
    * batch, replace only the touched day partitions. Cost per trigger is
-   * O(changed days), not O(table).
-   *
-   * Crash-atomic commit protocol (replaces the read-your-writes overwrite,
-   * which could recompute against already-deleted files if a cached block
-   * was evicted mid-write; a table format with MERGE — Delta/Iceberg —
-   * subsumes this at prod scale):
-   *   1. write the merged day partitions to `_staging` (real files on disk —
-   *      the live table is never read again after this point);
-   *   2. atomically create the `_upsert_intent` marker (the commit point);
-   *   3. per touched day: delete the live `window_day=D` dir, RENAME the
-   *      staged one into place (rename is atomic on HDFS/local);
-   *   4. clear marker + staging.
-   * A crash before (2) leaves the live table untouched (orphan staging is
-   * dropped on the next call); a crash after (2) is completed by [[recover]]
-   * — day renames are idempotent, so any replay converges.
+   * O(changed days), not O(table); the merge input is read through the
+   * manifest (no listing, no schema-inference job). Crash-atomic: a reader
+   * sees the whole batch or none of it ([[commit]]).
    */
   def upsertBatch(batch: DataFrame, tableDir: String): Unit = {
-    val spark = batch.sparkSession
     val cols = (cellSchema ++ daySchema).map(f => col(f.name))
     val changed = batch.select(cols: _*).cache()
     try {
-      val days = changed.select(col("window_day")).distinct().collect()
-        .map(_.getDate(0)).sortBy(_.toString)
-      if (days.nonEmpty) {
-        val hfs = fileSystem(spark, tableDir)
-        recover(spark, tableDir) // finish any interrupted swap first
-        val staging = stagingPath(tableDir)
-        if (hfs.exists(staging)) hfs.delete(staging, true)
-        val existing =
-          try {
-            val t = spark.read.parquet(tableDir)
-            // anti-join on the upsert key: survivors in the touched partitions
-            t.filter(col("window_day").isin(days.toIndexedSeq: _*))
-              .join(changed.select(col("key").as("k2"), col("window_start").as("w2")),
-                col("key") === col("k2") && col("window_start") === col("w2"),
-                "left_anti")
-              .select(cols: _*)
-          } catch {
-            case _: org.apache.spark.sql.AnalysisException => // first batch: no table yet
-              changed.limit(0)
-          }
+      val days = changed.select(col("window_day").cast("string")).distinct().collect()
+        .map(_.getString(0)).toSeq
+      if (days.nonEmpty) commit(batch.sparkSession, tableDir) { (live, cellsOf, dir) =>
+        // anti-join on the upsert key: survivors in the touched partitions
+        // (none when no touched day is live yet, as in a first batch)
+        val merged =
+          if (!live.exists(e => days.contains(e._2))) changed
+          else cellsOf(days)
+            .join(changed.select(col("key").as("k2"), col("window_start").as("w2")),
+              col("key") === col("k2") && col("window_start") === col("w2"),
+              "left_anti")
+            .select(cols: _*).union(changed)
         // one writer partition per touched day: without pinning, every
         // shuffle task holding a day's rows writes its own file into the
         // day dir — up to spark.sql.shuffle.partitions files PER DAY PER
         // TRIGGER, the small-file swarm [[compact]] exists to clean up.
         // One task per day is safe because the rows are AGGREGATED CELLS
         // (bounded by |keys|·24 per day, not raw event volume)
-        existing.union(changed).repartition(col("window_day"))
-          .write.mode("overwrite").partitionBy("window_day").parquet(staging.toString)
-        writeIntent(hfs, tableDir, days.map(_.toString).toIndexedSeq)
-        swapDays(hfs, tableDir, days.map(_.toString).toIndexedSeq)
-        hfs.delete(intentPath(tableDir), false)
-        hfs.delete(staging, true)
+        merged.repartition(col("window_day"))
+          .write.mode("overwrite").partitionBy("window_day").parquet(dir)
+        days
       }
     } finally changed.unpersist()
   }
 
-  /**
-   * Complete an interrupted stage→swap commit. If the intent marker exists,
-   * re-apply every pending day rename from staging (idempotent — already-
-   * swapped days have no staged dir left and are skipped), then clear the
-   * marker. Without a marker, any orphan staging dir predates the commit
-   * point and is simply dropped. Safe to call at any time; [[upsertBatch]]
-   * calls it before each merge.
-   */
+  /** Sweep the serving table: delete a crashed commit's leftovers (`.tmp`
+    * manifests, commit dirs above the newest manifest), then drop each
+    * superseded manifest whose successor is older than [[RetiredGraceMs]],
+    * with the dirs that successor retired. It reads only the manifests of
+    * the commits it drops, so its cost does not grow with the commits
+    * inside the grace. Idempotent; every writer verb runs it first, and
+    * only the table's single writer may call it. */
   def recover(spark: SparkSession, tableDir: String): Unit = {
-    val hfs = fileSystem(spark, tableDir)
-    val ip = intentPath(tableDir)
-    if (hfs.exists(ip)) {
-      val in = hfs.open(ip)
-      val days =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty).toList
-        finally in.close()
-      swapDays(hfs, tableDir, days)
-      hfs.delete(ip, false)
-      hfs.delete(stagingPath(tableDir), true)
-    } else if (hfs.exists(stagingPath(tableDir))) {
-      hfs.delete(stagingPath(tableDir), true)
-    }
-  }
-
-  private def swapDays(hfs: org.apache.hadoop.fs.FileSystem, tableDir: String,
-                       days: Seq[String]): Unit =
-    days.foreach { d =>
-      val src = new org.apache.hadoop.fs.Path(stagingPath(tableDir), s"window_day=$d")
-      val dst = new org.apache.hadoop.fs.Path(tableDir, s"window_day=$d")
-      if (hfs.exists(src)) {
-        if (hfs.exists(dst)) hfs.delete(dst, true)
-        if (!hfs.rename(src, dst))
-          throw new java.io.IOException(s"rename $src -> $dst failed")
-      } // src absent → day already swapped by a previous attempt
-    }
-
-  /** Atomically publish the intent marker (tmp file + rename). */
-  private def writeIntent(hfs: org.apache.hadoop.fs.FileSystem, tableDir: String,
-                          days: Seq[String]): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(tableDir, "_upsert_intent.tmp")
-    val out = hfs.create(tmp, true)
-    try out.write((days.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    val ip = intentPath(tableDir)
-    if (hfs.exists(ip)) hfs.delete(ip, false)
-    if (!hfs.rename(tmp, ip))
-      throw new java.io.IOException(s"publishing $ip failed")
+    val hfs = SeqFiles.fs(spark, tableDir)
+    val listing = SeqFiles.listAll(hfs, manifestDir(tableDir))
+    val manifests = SeqFiles.numbered(listing, "m")
+    SeqFiles.stages(listing).foreach(hfs.delete(_, false))
+    SeqFiles.numbered(SeqFiles.listAll(hfs, new Path(tableDir)), "c")
+      .filter(_._1 > manifests.lastOption.fold(0L)(_._1))
+      .foreach { case (_, d) => hfs.delete(d.getPath, true) }
+    val cutoff = System.currentTimeMillis() - RetiredGraceMs
+    manifests.zip(manifests.drop(1))
+      .takeWhile { case (_, (_, next)) => next.getModificationTime < cutoff }
+      .foreach { case ((_, old), (nextSeq, _)) =>
+        readManifest(hfs, tableDir, nextSeq).retired
+          .foreach(rel => hfs.delete(new Path(tableDir, rel), true))
+        hfs.delete(old.getPath, false)
+      }
   }
 
   /** The cell columns [[upsertBatch]] writes into each day file. */
@@ -279,142 +295,92 @@ object StreamingPipeline {
   /** Load the serving table for querying (the batch view the reference's
     * REST layer reads; feeds [[graft.operators.QueryBuilders]]).
     *
-    * The schema is fixed ([[upsertBatch]]'s columns plus `window_day`), so
-    * resolving the view lists the day directories and launches no Spark
-    * job; the listing is private to the returned frame and never enters
-    * the session-shared file-status cache, so a server that resolves the
-    * view per request holds no listing beyond the requests in flight.
+    * One listing of `_manifest` and one manifest read pin the view to the
+    * newest commit: it reads exactly the files named there, with the fixed
+    * schema ([[upsertBatch]]'s columns plus `window_day`). No other
+    * filesystem call, no Spark job, and a later commit does not change it.
     *
-    * A missing table dir, or one whose every day partition was expired by
-    * [[retainFrom]], has no cells to serve — fail with that cause instead
-    * of serving an empty table. */
+    * A table never committed to, or one whose every day partition was
+    * expired by [[retainFrom]], has no cells to serve — fail with that
+    * cause instead of serving an empty table. */
   def servingView(spark: SparkSession, tableDir: String): DataFrame = {
-    val hfs = fileSystem(spark, tableDir)
-    val p = new org.apache.hadoop.fs.Path(tableDir)
-    if (!hfs.exists(p))
-      throw new IllegalStateException(s"servingView: no serving table at $tableDir")
-    if (!hfs.listStatus(p).exists(_.getPath.getName.startsWith("window_day=")))
+    val hfs = SeqFiles.fs(spark, tableDir)
+    val m = latest(hfs, tableDir).getOrElse(
+      throw new IllegalStateException(s"servingView: no serving table at $tableDir"))
+    if (m.live.isEmpty)
       throw new IllegalStateException(
         s"servingView: $tableDir has no day partitions — every window_day " +
           "was expired by retainFrom (or nothing was ever upserted); " +
           "re-ingest or widen retention before serving")
-    org.apache.spark.sql.graftshim.GraftPlanBridge.parquetTable(
-      spark, tableDir, cellSchema, daySchema)
+    cells(spark, hfs, tableDir, m.live)
   }
 
   /**
-   * Compact the serving table's day partitions: rewrite each listed day (or
-   * every day) into `filesPerDay` files through the SAME stage → intent →
-   * atomic-rename protocol as [[upsertBatch]], so a crash mid-compaction
-   * never loses a row ([[recover]] completes it). Small-file pressure is the
-   * chronic failure mode of any micro-batch-maintained table — every
-   * trigger's writer task count becomes a file count; at 100 TB the reader's
-   * footer-open cost dominates scans unless something re-coalesces. Run this
-   * out-of-band (it contends only for the days it swaps, and the swap is the
-   * same atomic rename readers already tolerate).
+   * Compact the serving table's day partitions: rewrite each listed live
+   * day (or every day) into `filesPerDay` files, committed like an upsert.
+   * Small-file pressure is the chronic failure mode of any
+   * micro-batch-maintained table — every trigger's writer task count
+   * becomes a file count, and the reader's footer-open cost dominates
+   * scans unless something re-coalesces. Run this out-of-band.
    *
    * `sortByKey = true` additionally lays each day's rows out in
    * `(key, window_start)` range order — range-partitioned across the
-   * day's `filesPerDay` files and sorted within each — so the reference's
-   * primary read path (key-prefix ranges + time windows, the F1/F2
-   * predicates [[graft.operators.QueryBuilders]] pushes down) prunes at
-   * BOTH granularities: whole files by disjoint parquet min/max key
-   * spans, then row groups within the survivor. A micro-batch-maintained
-   * table can never keep this invariant online (each trigger appends its
-   * own key range); restoring it IS a compaction concern, at the moment
-   * the files are rewritten anyway — the same pairing as Delta's
-   * OPTIMIZE ... ZORDER, but 1-D here because key-prefix is the
-   * dominant predicate. Hash layout stays the default: it spreads
+   * day's `filesPerDay` files and sorted within each — so the key-prefix
+   * predicates [[graft.operators.QueryBuilders]] pushes down prune whole
+   * files by disjoint parquet min/max key spans, then row groups (Delta's
+   * OPTIMIZE ... ZORDER, 1-D). Hash layout stays the default: it spreads
    * hot-key upsert traffic, and not every table has a range read path.
    */
   def compact(spark: SparkSession, tableDir: String,
               days: Seq[String] = Nil, filesPerDay: Int = 1,
-              sortByKey: Boolean = false): Unit = {
-    val hfs = fileSystem(spark, tableDir)
-    recover(spark, tableDir)
-    val targetDays =
-      if (days.nonEmpty) days.sorted
-      else hfs.listStatus(new org.apache.hadoop.fs.Path(tableDir))
-        .map(_.getPath.getName).filter(_.startsWith("window_day="))
-        .map(_.stripPrefix("window_day=")).sorted.toIndexedSeq
-    if (targetDays.nonEmpty) {
-      val staging = stagingPath(tableDir)
-      if (hfs.exists(staging)) hfs.delete(staging, true)
-      val live = spark.read.parquet(tableDir)
-        .filter(col("window_day").isin(targetDays: _*))
+              sortByKey: Boolean = false): Unit =
+    commit(spark, tableDir) { (live, cellsOf, dir) =>
+      val targetDays = live.map(_._2).distinct.filter(d => days.isEmpty || days.contains(d)).sorted
+      val cur = cellsOf(targetDays)
       if (sortByKey) {
         // one range-partitioned write PER DAY: a global range over
         // (day, key) would sample boundaries by row VOLUME, so a skewed
         // day could absorb every boundary and starve its neighbors of
         // the filesPerDay contract. Per-day jobs keep the guarantee
-        // exact; the day loop is bounded by retention (the same
-        // O(days) the swap already walks), and compaction is the
-        // out-of-band path where a job per day is the normal shape.
+        // exact; the day loop is bounded by retention, and compaction
+        // is the out-of-band path where a job per day is the normal shape.
         targetDays.foreach { d =>
-          live.filter(col("window_day") === lit(d))
+          cur.filter(col("window_day") === lit(d))
             .drop("window_day") // implied by the directory, as partitionBy writes it
             .repartitionByRange(filesPerDay, col("key"), col("window_start"))
             .sortWithinPartitions(col("key"), col("window_start"))
             .write.mode("overwrite")
-            .parquet(new org.apache.hadoop.fs.Path(staging, s"window_day=$d").toString)
+            .parquet(new Path(dir, s"window_day=$d").toString)
         }
-      } else {
+      } else if (targetDays.nonEmpty) {
         // deterministic salt (no rand(): retry-safe) spreads each day
         // across exactly filesPerDay writer partitions
-        live.withColumn("_salt",
+        cur.withColumn("_salt",
             pmod(hash(col("key"), col("window_start")), lit(filesPerDay)))
           .repartition(targetDays.length * filesPerDay, col("window_day"), col("_salt"))
           .drop("_salt")
-          .write.mode("overwrite").partitionBy("window_day").parquet(staging.toString)
+          .write.mode("overwrite").partitionBy("window_day").parquet(dir)
       }
-      writeIntent(hfs, tableDir, targetDays)
-      swapDays(hfs, tableDir, targetDays)
-      hfs.delete(intentPath(tableDir), false)
-      hfs.delete(staging, true)
+      targetDays
     }
-  }
 
   /**
    * Retention sweep: drop every `window_day=D` partition with `D < minDay`
    * (ISO `yyyy-MM-dd`; lexicographic order IS date order for that format).
    * Completes the serving-table lifecycle — [[upsertBatch]] grows it,
-   * [[compact]] re-coalesces it, this bounds it: the reference keeps
-   * durable full history (the declared W5 divergence,
-   * `kafka-streams-pipeline` retains whatever the store holds), but at
-   * 100 TB an append-forever view store IS the storage bill, and day
-   * partitions are the natural expiry unit the layout already provides.
+   * [[compact]] re-coalesces it, this bounds it (the reference keeps full
+   * history, the declared W5 divergence).
    *
-   * Crash safety needs NO intent marker here, unlike the upsert's rename
-   * set: deletion converges by idempotence. Each day dir vanishes
-   * atomically from a reader's listing (the same per-day visibility
-   * contract as upsert's rename swap); an interrupted sweep leaves a
-   * subset of expired days that the next sweep removes. [[recover]] runs
-   * first so a pending upsert commit lands before expiry is evaluated —
-   * otherwise a staged-but-unswapped day could be resurrected by replay
-   * after this sweep deleted its live twin.
-   *
-   * O(expired days) filesystem calls, zero data reads, zero Spark jobs —
-   * the sweep never scans the table. Returns the removed day strings
-   * (sorted) so an operator log can audit what expired.
-   *
-   * A sweep may legitimately expire EVERY remaining day (a paused
-   * ingest older than the retention horizon); the table dir then holds
-   * no parquet files and [[servingView]] fails with an explicit
-   * no-day-partitions error (not a schema-inference one) until the next
-   * upsert repopulates it. Callers that must keep serving an empty
-   * window should check the returned list against the pre-sweep day set.
+   * It publishes a manifest without the expired days and deletes nothing
+   * itself ([[recover]] does, after the grace). Zero data reads, zero
+   * Spark jobs. Returns the removed days (sorted); a replay removes none.
+   * Expiring EVERY day is legitimate (a paused ingest); [[servingView]]
+   * then fails with an explicit no-day-partitions error until the next
+   * upsert repopulates the table.
    */
   def retainFrom(spark: SparkSession, tableDir: String, minDay: String): Seq[String] = {
     require(minDay.matches("\\d{4}-\\d{2}-\\d{2}"),
       s"retainFrom: minDay must be yyyy-MM-dd, got '$minDay'")
-    val hfs = fileSystem(spark, tableDir)
-    recover(spark, tableDir)
-    val expired = hfs.listStatus(new org.apache.hadoop.fs.Path(tableDir))
-      .map(_.getPath.getName).filter(_.startsWith("window_day="))
-      .map(_.stripPrefix("window_day=")).filter(_ < minDay).sorted.toIndexedSeq
-    expired.foreach { d =>
-      hfs.delete(new org.apache.hadoop.fs.Path(tableDir, s"window_day=$d"), true)
-    }
-    expired
+    commit(spark, tableDir)((live, _, _) => live.map(_._2).filter(_ < minDay))
   }
 }

@@ -1,0 +1,133 @@
+package graft
+
+import java.net.URI
+import java.util.EnumSet
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.hadoop.fs.{CreateFlag, FSDataInputStream, FSDataOutputStream, FileStatus,
+  FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+import org.apache.spark.sql.SparkSession
+
+/**
+ * The local filesystem under the `faultfs` scheme, for tests. Armed with
+ * N, it fails the Nth `create`, `rename`, `delete` or `mkdirs` and every
+ * one after it, as a process killed at that step would never issue them;
+ * a crash-point sweep runs a verb with N = 1, 2, ... until it completes.
+ * It can also log the reads (`listStatus`, `open`, `getFileStatus`), so a
+ * test can count what a reader touches. Instances are not cached (every
+ * `getFileSystem` makes a new one), so the state lives in the companion.
+ */
+class FaultFs extends FilterFileSystem(new FaultFs.Local) {
+  import FaultFs._
+
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+                      bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    write("create", f)
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
+  override def create(f: Path, permission: FsPermission, flags: EnumSet[CreateFlag],
+                      bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: Progressable,
+                      checksumOpt: org.apache.hadoop.fs.Options.ChecksumOpt): FSDataOutputStream = {
+    write("create", f)
+    super.create(f, permission, flags, bufferSize, replication, blockSize, progress, checksumOpt)
+  }
+
+  override def createNonRecursive(f: Path, permission: FsPermission,
+                                  flags: EnumSet[CreateFlag], bufferSize: Int,
+                                  replication: Short, blockSize: Long,
+                                  progress: Progressable): FSDataOutputStream = {
+    write("create", f)
+    super.createNonRecursive(f, permission, flags, bufferSize, replication, blockSize, progress)
+  }
+
+  override def rename(src: Path, dst: Path): Boolean = {
+    write("rename", src); super.rename(src, dst)
+  }
+
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    write("delete", f); super.delete(f, recursive)
+  }
+
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
+    write("mkdirs", f); super.mkdirs(f, permission)
+  }
+
+  override def mkdirs(f: Path): Boolean = {
+    write("mkdirs", f); super.mkdirs(f)
+  }
+
+  override def listStatus(f: Path): Array[FileStatus] = {
+    read("listStatus", f); super.listStatus(f)
+  }
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    read("open", f); super.open(f, bufferSize)
+  }
+
+  override def getFileStatus(f: Path): FileStatus = {
+    read("getFileStatus", f); super.getFileStatus(f)
+  }
+}
+
+object FaultFs {
+  val Scheme = "faultfs"
+
+  /** The raw local filesystem, answering to [[Scheme]]. */
+  class Local extends RawLocalFileSystem {
+    override def getUri: URI = URI.create(s"$Scheme:///")
+  }
+
+  private val writes = new AtomicInteger
+  @volatile private var failAt = Int.MaxValue
+  @volatile private var log: java.util.Queue[String] = _
+
+  private def write(op: String, p: Path): Unit =
+    if (writes.incrementAndGet() >= failAt)
+      throw new java.io.IOException(s"injected crash at $op $p")
+
+  private def read(op: String, p: Path): Unit = {
+    val l = log
+    if (l != null) l.add(s"$op ${p.getName}")
+  }
+
+  /** Register the scheme on the session's Hadoop configuration. */
+  def install(spark: SparkSession): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set(s"fs.$Scheme.impl", classOf[FaultFs].getName)
+    conf.set(s"fs.$Scheme.impl.disable.cache", "true")
+  }
+
+  /** `dir` (a local path) under the fault scheme. */
+  def uri(dir: String): String = s"$Scheme://${new java.io.File(dir).getAbsolutePath}"
+
+  /** Run `f` with the Nth write step failing; returns whether `f` completed.
+    * A failure before the Nth step is rethrown: it is not the injected
+    * crash. Waits for every running task to stop before disarming, so no
+    * task of a failed job writes after the crash. */
+  def crashAt(spark: SparkSession, n: Int)(f: => Unit): Boolean = {
+    writes.set(0)
+    failAt = n
+    try { f; true }
+    catch { case _: Exception if writes.get >= n => false }
+    finally {
+      val sc = spark.sparkContext
+      val deadline = System.nanoTime() + 60000000000L
+      while (sc.statusTracker.getExecutorInfos.exists(_.numRunningTasks > 0) &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+      failAt = Int.MaxValue
+    }
+  }
+
+  /** The reads `f` makes through this scheme, as "op name" lines. */
+  def reads[A](f: => A): (A, Seq[String]) = {
+    val l = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    log = l
+    val a = try f finally log = null
+    (a, l.toArray(Array.empty[String]).toSeq)
+  }
+}
