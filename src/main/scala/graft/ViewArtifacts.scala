@@ -32,7 +32,7 @@ private[graft] object ViewArtifacts {
       StreamingPipeline.upsertBatch(
         AggCore.hourlyView(Tables.readings(s, dir))
           .withColumn("window_day", to_date(col("window_start"))), p)
-      StreamingPipeline.compact(s, p, filesPerDay = 2, sortByKey = true)
+      StreamingPipeline.compact(s, p, filesPerDay = 2)
       p
     })
   }

@@ -18,9 +18,8 @@ package graft.operators
  * and share the one materialized cache of the slice.
  *
  * Contract for callers: fan out ONLY order-free writes. A component with a
- * WRITE-ORDER contract (a stats row doubling as the segment's commit
- * record, e.g. [[TextAnalysis]] lexical segments) stays OUTSIDE the
- * fan-out, written after the fan-out returns. Inputs shared by several
+ * WRITE-ORDER contract (a record that must land after the data it
+ * describes) stays OUTSIDE the fan-out, written after the fan-out returns. Inputs shared by several
  * thunks must be persisted AND materialized before the call — concurrent
  * first-actions on an unmaterialized cache would compute it repeatedly.
  *

@@ -229,7 +229,7 @@ object JoinPlanner {
    */
   def saveTableProfile(df: DataFrame, key: String, path: String,
                        p: ProfileParams = ProfileParams()): Unit = {
-    val hfs = bundleFs(df.sparkSession, path)
+    val hfs = SeqFiles.fs(df.sparkSession, path)
     hfs.delete(new org.apache.hadoop.fs.Path(path, "slices"), true)
     hfs.delete(new org.apache.hadoop.fs.Path(path, "_staging"), true)
     writeSlice(df, key, path, p, "base")
@@ -249,14 +249,10 @@ object JoinPlanner {
     writeSlice(df, key, path, p, id)
   }
 
-  private def bundleFs(spark: org.apache.spark.sql.SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Committed slice dirs of a bundle (staging is invisible by layout). */
   private def sliceDirs(spark: org.apache.spark.sql.SparkSession,
                         path: String): Seq[String] = {
-    val hfs = bundleFs(spark, path)
+    val hfs = SeqFiles.fs(spark, path)
     val slices = new org.apache.hadoop.fs.Path(path, "slices")
     if (!hfs.exists(slices)) Seq.empty
     else hfs.listStatus(slices).toIndexedSeq
@@ -305,7 +301,7 @@ object JoinPlanner {
         s"got '$sliceId' — a dot- or underscore-prefixed name would commit " +
         "but never be loaded")
     val spark = df.sparkSession
-    val hfs = bundleFs(spark, path)
+    val hfs = SeqFiles.fs(spark, path)
     val target = new org.apache.hadoop.fs.Path(path, s"slices/$sliceId")
     if (hfs.exists(target)) return false // committed by a previous attempt
     val stage = new org.apache.hadoop.fs.Path(path, s"_staging/$sliceId")
@@ -400,7 +396,7 @@ object JoinPlanner {
     // must fail HERE with the migration instruction, not deep inside the
     // parquet reader with an opaque path error. Bounded: one fs.exists per
     // committed slice, driver-side metadata only.
-    val hfs = bundleFs(spark, path)
+    val hfs = SeqFiles.fs(spark, path)
     val legacy = dirs.filterNot(d =>
       hfs.exists(new org.apache.hadoop.fs.Path(d, "data")))
     require(legacy.isEmpty,
@@ -481,7 +477,7 @@ object JoinPlanner {
                           src: String, dst: String): Unit = {
     require(src != dst, "compactTableProfile: dst must be a fresh path")
     val prof = loadTableProfile(spark, src) // validates shape, one stats read
-    val hfs = bundleFs(spark, dst)
+    val hfs = SeqFiles.fs(spark, dst)
     val target = new org.apache.hadoop.fs.Path(dst, "slices/base")
     require(!hfs.exists(target),
       s"compactTableProfile: $dst already holds a committed base slice — " +

@@ -5,8 +5,7 @@ import org.apache.spark.sql.SparkSession
 
 /** A directory of numbered files, `prefix-%08d`, whose highest number is
   * the committed state: the commit step shared by the [[Generations]]
-  * pointer and the serving table's manifest
-  * ([[graft.streaming.StreamingPipeline]]). [[publish]] writes
+  * pointer and the [[SegmentStore]] manifest. [[publish]] writes
   * `.prefix-S.tmp` and renames it to `prefix-S`, the commit point (atomic
   * on HDFS and local disks): a reader lists the old highest file or the
   * new one, and a crash leaves only a `.tmp` stage no reader picks. One

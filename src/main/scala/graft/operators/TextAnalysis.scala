@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.functions.TextFunctions
 
@@ -472,18 +473,12 @@ object TextAnalysis {
    * after from a partition-pruned postings scan that never touches the
    * corpus text again.
    *
-   * Layout under `path` — every table is APPEND-ONLY (the segment model;
-   * [[appendLexicalIndex]] adds new documents without rewriting a byte of
-   * existing data, mirroring the stored band-index contract of
-   * [[Dedup.buildBandIndex]]/[[Dedup.nearDupsAgainstIndex]]). Since the
-   * round-20 format revision the three logical tables live as disjoint
-   * row groups of ONE parquet table, `index/`, partitioned by
-   * (`component`, `bucket`) — the [[JoinPlanner]] unified-slice
-   * discipline: one write job and ONE output commit per segment where
-   * the previous layout paid three (optimization guide §1.2/§2.4 — the
-   * write latency of a KB-per-bucket artifact is job-scheduling + commit
-   * protocol, so jobs × latency is the whole cost), and a serve scan
-   * opens one relation per index. Columns not owned by a row's
+   * The index at `path` is a [[SegmentStore]] partitioned by
+   * (`component`, `bucket`). Every save, append and compaction writes ONE
+   * segment — the three logical tables as disjoint row groups of one
+   * parquet write, one job (the [[JoinPlanner]] unified-slice discipline:
+   * the write latency of a KB-per-bucket artifact is job scheduling, so
+   * jobs × latency is the whole cost). Columns not owned by a row's
    * component are null. The components:
    *  - `component=post` — (token, doc_id, tf, dl), bucket =
    *    `pmod(xxhash64(token), nBuckets)`. `dl` is a per-doc property, so
@@ -498,20 +493,19 @@ object TextAnalysis {
    *    n_terms, n_buckets) DELTA rows, one per segment; serving sums
    *    them. `sum_dl` is an exact integer so avgdl = Σsum_dl / Σn_docs
    *    reproduces [[bm25TopK]] bit-for-bit no matter how the corpus was
-   *    split across appends. The stats row is the segment's COMMIT
-   *    RECORD: it lands in the SAME output commit as the segment's data
-   *    rows (the unified write), carrying the row counts that segment
-   *    produced — a crash that tears the commit leaves counts and rows
-   *    disagreeing in one direction or the other, which
-   *    [[validateLexicalIndex]] flags either way.
+   *    split across appends. `n_postings`/`n_terms` are the row counts
+   *    the segment wrote, which [[validateLexicalIndex]] audits.
    *
-   * READ COMPATIBILITY: every reader goes through layout-agnostic
-   * accessors that union the unified table with the legacy three-dir
-   * layout (`postings/`, `termstats/`, `stats/`) when present — an
-   * artifact written by a pre-revision build, or a mixed pile from
-   * appending onto one, still serves row-identically (spec-pinned); a
-   * fresh [[compactLexicalIndex]] fold migrates it to the unified
-   * layout.
+   * Crash story: a segment's files become visible only when the manifest
+   * naming them is published (one rename), so a reader sees every
+   * component of a segment or none, and a crash before the rename leaves
+   * files no manifest names, which the next writer's sweep deletes.
+   * Readers resolve the newest manifest once per call and read stats, dfq
+   * and postings from it: no directory listing, no listing job at any
+   * bucket count. A save replaces the whole index in one commit; readers
+   * resolved before it keep reading the old files, which the store keeps
+   * for its grace. Indexes written in the earlier directory layouts (no
+   * `_manifest`) are not readable: rebuild them.
    *
    * At 100 TB the build is two token-keyed shuffles (tf, dfq) plus one
    * doc-keyed one (dl) — each a plain partial/final hash aggregate; serving
@@ -520,134 +514,106 @@ object TextAnalysis {
   def saveLexicalIndex(docs: DataFrame, path: String, nBuckets: Int = 64,
                        idCol: String = "doc_id", textCol: String = "text"): Unit = {
     require(nBuckets > 0, "saveLexicalIndex: nBuckets must be positive")
-    // a rebuild over a path holding a LEGACY-layout artifact must not
-    // leave its three dirs behind next to the fresh unified table — the
-    // layout-agnostic readers would union old and new rows (double
-    // counting); the unified write's own overwrite only clears index/
-    val hfs = lexFs(docs.sparkSession, path)
-    Seq("postings", "termstats", "stats").foreach(d =>
-      hfs.delete(new org.apache.hadoop.fs.Path(s"$path/$d"), true))
-    writeLexicalSegment(docs, path, nBuckets, "overwrite", idCol, textCol)
+    SegmentStore.commit(docs.sparkSession, path, LexPartitions) { (live, dir) =>
+      writeLexicalSegment(docs, dir, nBuckets, idCol, textCol)
+      live
+    }
   }
 
   /**
    * Append a batch of NEW documents to a [[saveLexicalIndex]] artifact
-   * without rewriting existing segments: postings/termstats/stats each gain
-   * the batch's delta rows (same bucketing — nBuckets is read back from the
-   * stats table, not trusted from the caller). Contract: the batch's
-   * `idCol` values must not already be indexed (the standard segment-append
-   * contract — a re-indexed doc would double-count; use a fresh
-   * [[saveLexicalIndex]] to rebuild). Serve paths are segment-agnostic:
-   * append + serve ≡ full rebuild + serve, row for row (gate-pinned).
+   * without rewriting existing segments: one commit that adds the batch's
+   * segment (same bucketing — nBuckets is read back from the stats, not
+   * trusted from the caller). Contract: the batch's `idCol` values must
+   * not already be indexed (the standard segment-append contract — a
+   * re-indexed doc would double-count; use a fresh [[saveLexicalIndex]] to
+   * rebuild). Serve paths are segment-agnostic: append + serve ≡ full
+   * rebuild + serve, row for row (gate-pinned).
    */
   def appendLexicalIndex(docs: DataFrame, path: String,
                          idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    // refuse to append onto a pre-audit-schema artifact: the new segment's
-    // stats row would sit next to rows missing the audit columns, and the
-    // mixed-schema sums would falsely flag the index as torn forever —
-    // compaction migrates it first (one rewrite, serving unchanged). A
-    // pure-unified pile is auditable by construction (see
-    // [[lexicalAuditability]]) — skip the null-probe job there.
-    val stats = statsOf(docs.sparkSession, path)
-    if (!isPureUnified(docs.sparkSession, path))
-      auditabilityOf(stats, path).foreach(reason =>
-        throw new IllegalStateException(s"appendLexicalIndex: $reason"))
-    val nBuckets = stats.select(col("n_buckets")).head().getInt(0)
-    writeLexicalSegment(docs, path, nBuckets, "append", idCol, textCol)
+    val spark = docs.sparkSession
+    SegmentStore.commit(spark, path, LexPartitions) { (live, dir) =>
+      val nBuckets = lexTable(spark, path, live, "stat").select(col("n_buckets"))
+        .head(1).headOption.getOrElse(throw noIndex(path)).getInt(0)
+      writeLexicalSegment(docs, dir, nBuckets, idCol, textCol)
+      Nil
+    }
   }
 
-  /** The unified index-table schema: data columns of all three
-    * components; `component`/`bucket` ride as partition columns. */
-  private val UnifiedLexTypes: Seq[(String, String)] = Seq(
-    "token" -> "string", "doc_id" -> "long", "tf" -> "long", "dl" -> "long",
-    "dfq" -> "long", "n_docs" -> "long", "sum_dl" -> "long",
-    "n_postings" -> "long", "n_terms" -> "long", "n_buckets" -> "int")
+  /** The index's data columns: those of all three components. */
+  private[graft] val LexSchema = StructType(Seq(
+    StructField("token", StringType), StructField("doc_id", LongType),
+    StructField("tf", LongType), StructField("dl", LongType),
+    StructField("dfq", LongType), StructField("n_docs", LongType),
+    StructField("sum_dl", LongType), StructField("n_postings", LongType),
+    StructField("n_terms", LongType), StructField("n_buckets", IntegerType)))
 
-  /** Project `df` onto the unified schema under `component = tag`: owned
-    * columns cast to the unified type, the rest typed nulls; `bucketCol`
+  /** The partition columns: one `component=C/bucket=B` dir per bucket. */
+  private[graft] val LexPartitions = StructType(Seq(
+    StructField("component", StringType), StructField("bucket", IntegerType)))
+
+  /** Project `df` onto [[LexSchema]] under `component = tag`: owned
+    * columns cast to the index type, the rest typed nulls; `bucketCol`
     * becomes the bucket partition value. */
   private def lexComponent(tag: String, bucketCol: Column,
                            df: DataFrame): DataFrame = {
     val present = df.columns.toSet
-    df.select(UnifiedLexTypes.map { case (c, t) =>
-      (if (present(c)) col(c).cast(t) else lit(null).cast(t)).as(c)
+    df.select(LexSchema.map { f =>
+      (if (present(f.name)) col(f.name).cast(f.dataType) else lit(null).cast(f.dataType))
+        .as(f.name)
     } ++ Seq(lit(tag).as("component"), bucketCol.cast("int").as("bucket")): _*)
   }
 
-  /** Columns owned by each component of the unified table. */
+  /** Columns owned by each component of the index. */
   private def lexOwned(comp: String): Seq[String] = comp match {
     case "post" => Seq("token", "doc_id", "tf", "dl", "bucket")
     case "term" => Seq("token", "dfq", "bucket")
     case "stat" => Seq("n_docs", "sum_dl", "n_postings", "n_terms", "n_buckets")
   }
 
-  private def lexFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+  private def noIndex(path: String) =
+    new IllegalStateException(s"no lexical index at $path — saveLexicalIndex first")
 
-  /** Layout-agnostic component reader: the unified `index/` slice when
-    * present, unioned with the legacy three-dir table when THAT is
-    * present (a pre-revision artifact, or a mixed pile from appending
-    * onto one). Column pruning and partition pruning work identically on
-    * both sides — predicates on `bucket`/`token` push through the union
-    * into each parquet relation. */
-  private def lexTable(spark: SparkSession, path: String, comp: String,
-                       legacyDir: String): DataFrame = {
-    val hfs = lexFs(spark, path)
-    val uni = new org.apache.hadoop.fs.Path(s"$path/index")
-    val leg = new org.apache.hadoop.fs.Path(s"$path/$legacyDir")
-    val owned = lexOwned(comp)
-    val u = if (hfs.exists(uni))
-      Some(spark.read.parquet(uni.toString)
-        .filter(col("component") === comp).select(owned.map(col): _*))
-    else None
-    val l = if (hfs.exists(leg))
-      // legacy stats may predate the audit schema — surface whatever
-      // columns the table has; auditabilityOf inspects them
-      Some(if (comp == "stat") spark.read.parquet(leg.toString)
-           else spark.read.parquet(leg.toString).select(owned.map(col): _*))
-    else None
-    (u, l) match {
-      case (Some(a), Some(b)) => a.unionByName(b, allowMissingColumns = true)
-      case (Some(a), None)    => a
-      case (None, Some(b))    => b
-      case (None, None)       => throw new IllegalStateException(
-        s"no lexical index at $path — neither the unified index/ table " +
-          s"nor a legacy $legacyDir/ directory exists; saveLexicalIndex first")
-    }
-  }
+  /** The newest published state of the index at `path`: one listing of
+    * its `_manifest` dir and one manifest read. */
+  private def lexManifest(spark: SparkSession, path: String): SegmentStore.Manifest =
+    SegmentStore.latest(SeqFiles.fs(spark, path), path).getOrElse(throw noIndex(path))
 
-  private def postingsOf(spark: SparkSession, path: String): DataFrame =
-    lexTable(spark, path, "post", "postings")
+  /** Every file of `entries` as one frame, `component`/`bucket` included. */
+  private def lexIndex(spark: SparkSession, path: String,
+                       entries: Seq[SegmentStore.Entry]): DataFrame =
+    SegmentStore.frame(spark, path, entries, LexSchema, LexPartitions)
 
-  private def termstatsOf(spark: SparkSession, path: String): DataFrame =
-    lexTable(spark, path, "term", "termstats")
+  /** Component `comp` of `entries` with its owned columns; the component
+    * predicate prunes the other components' files at planning. */
+  private def lexTable(spark: SparkSession, path: String,
+                       entries: Seq[SegmentStore.Entry], comp: String): DataFrame =
+    lexIndex(spark, path, entries).filter(col("component") === comp)
+      .select(lexOwned(comp).map(col): _*)
 
-  private def statsOf(spark: SparkSession, path: String): DataFrame =
-    lexTable(spark, path, "stat", "stats")
+  /** Write [[lexComponent]] rows as one segment into the commit dir
+    * `dir`. Repartition on the partition columns first (else every task
+    * writes a file per bucket: tasks × nBuckets small files at scale),
+    * then sort partition-col-then-token within tasks so the writer needs
+    * no extra sort and files stay token-sorted for tight parquet
+    * row-group min/max stats. */
+  private def writeSegment(rows: DataFrame, dir: String): Unit =
+    rows.repartition(col("component"), col("bucket"))
+      .sortWithinPartitions(col("component"), col("bucket"), col("token"))
+      .write.mode("overwrite").partitionBy("component", "bucket")
+      .parquet(dir)
 
-  /** One index segment: the shared write path of save (overwrite) and
-    * append (append). The three components union into ONE write of the
-    * unified table — one job, one output commit, where the previous
-    * layout paid a two-write fan-out plus an ordered stats commit
-    * (guide §1.2/§2.4). Clustering discipline unchanged: repartition on
-    * the partition columns first (else every task writes a file per
-    * bucket: tasks × nBuckets small files at scale), partition-col-then-
-    * token sort within tasks so the writer needs no extra sort and files
-    * stay token-sorted for tight parquet row-group min/max stats.
+  /** One index segment, the shared write of save and append: the three
+    * components union into ONE [[writeSegment]] — one job, where a
+    * per-table layout paid a write per table (guide §1.2/§2.4).
     *
     * `tf`/`dl` are persisted across the three component derivations —
     * without the cache each subtree re-ran the tokenize→aggregate
     * pipeline, tripling the build's shuffle cost (same discipline as
-    * Dedup's `sigd`).
-    *
-    * Crash story: the stats COMMIT RECORD lands in the same output
-    * commit as the segment's data rows, carrying the row counts those
-    * rows must sum to — a torn commit (crash mid-job-commit) leaves
-    * counts and rows disagreeing in one direction or the other, and
-    * [[validateLexicalIndex]] checks equality in BOTH directions. */
-  private def writeLexicalSegment(docs: DataFrame, path: String, nBuckets: Int,
-                                  mode: String, idCol: String, textCol: String): Unit = {
+    * Dedup's `sigd`). */
+  private def writeLexicalSegment(docs: DataFrame, dir: String, nBuckets: Int,
+                                  idCol: String, textCol: String): Unit = {
     val toks = docs
       .select(col(idCol).as("doc_id"), explode(TextFunctions.tokens(col(textCol))).as("token"))
       .filter(col("token") =!= "")
@@ -664,7 +630,7 @@ object TextAnalysis {
         // scans tf) so the unified write's concurrent AQE stages are pure
         // cache readers — racing first-stages would tokenize twice
         dl.count()
-        lexComponent("post",
+        writeSegment(lexComponent("post",
             bucket,
             tf.join(dl.select(col("doc_id"), col("dl")), "doc_id"))
           .unionByName(lexComponent("term", bucket, dfq))
@@ -672,300 +638,177 @@ object TextAnalysis {
             dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"),
                 sum(col("n_post")).as("n_postings"))
               .crossJoin(broadcast(dfq.agg(count(lit(1)).as("n_terms"))))
-              .withColumn("n_buckets", lit(nBuckets))))
-          .repartition(col("component"), col("bucket"))
-          .sortWithinPartitions(col("component"), col("bucket"), col("token"))
-          .write.mode(mode).partitionBy("component", "bucket")
-          .parquet(s"$path/index")
+              .withColumn("n_buckets", lit(nBuckets)))), dir)
       } finally dl.unpersist()
     } finally tf.unpersist()
   }
 
   /**
-   * Whether the index at `path` carries the audit columns
-   * ([[validateLexicalIndex]] needs per-segment `n_postings`/`n_terms` in
-   * its stats commit records): `None` when auditable, `Some(reason)` for a
-   * pre-audit-schema (round-8) artifact — missing columns, or null counts
-   * from a segment written before the columns existed. Such an artifact
-   * still SERVES correctly (the serve paths consume only the
-   * `n_docs`/`sum_dl`/`n_buckets` sums) but cannot be audited or appended
-   * to until [[compactLexicalIndex]] migrates it (compaction derives the
-   * counts from the rewritten tables themselves).
+   * Audit a lexical index: every segment's stat row carries the
+   * postings/termstats row counts that segment wrote, so table counts
+   * disagreeing with the committed sums in EITHER direction mean the
+   * published files are not whole segments — data rows whose stats delta
+   * (and therefore dfq/avgdl contribution) is missing, or vice versa, as
+   * when a file is lost or a manifest names a segment's data without its
+   * stat file. One row: expected vs actual counts plus the consistency
+   * booleans. Cost is one column-pruned scan of the newest manifest's
+   * files — a deployment check (stream construction, compaction), not a
+   * per-query path.
    */
-  def lexicalAuditability(spark: SparkSession, path: String): Option[String] =
-    // a PURE-unified index is auditable by construction — every unified
-    // stat row carries the audit counts (the write fills all columns) —
-    // so the answer needs two driver FS probes, no relation discovery and
-    // no null-probe job; only legacy/mixed piles read the stats frame
-    if (isPureUnified(spark, path)) None
-    else auditabilityOf(statsOf(spark, path), path)
+  def validateLexicalIndex(spark: SparkSession, path: String): DataFrame =
+    lexAudit(spark, path, lexManifest(spark, path).live)
 
-  /** Whether `path` holds ONLY the unified layout (index/ present, no
-    * legacy stats/ dir) — two driver-side FS probes. */
-  private def isPureUnified(spark: SparkSession, path: String): Boolean = {
-    val hfs = lexFs(spark, path)
-    hfs.exists(new org.apache.hadoop.fs.Path(s"$path/index")) &&
-      !hfs.exists(new org.apache.hadoop.fs.Path(s"$path/stats"))
-  }
-
-  /** [[lexicalAuditability]] over an already-loaded stats frame — callers
-    * that need the frame anyway (validate, append) avoid a second listing. */
-  private def auditabilityOf(stats: DataFrame, path: String): Option[String] = {
-    val cols = stats.columns.toSet
-    if (!cols.contains("n_postings") || !cols.contains("n_terms"))
-      Some(s"stats at $path/stats predate the audit schema (no " +
-        "n_postings/n_terms commit counts) — compact the index to migrate")
-    else if (stats.filter(col("n_postings").isNull || col("n_terms").isNull)
-        .limit(1).count() > 0)
-      Some(s"stats at $path/stats contain segments without audit counts " +
-        "(append onto a pre-audit artifact) — compact the index to migrate")
-    else None
+  private def lexAudit(spark: SparkSession, path: String,
+                       entries: Seq[SegmentStore.Entry]): DataFrame = {
+    val isC = (c: String) => col("component") === c
+    // coalesce(…, 0): an index with data rows and no stat row must AUDIT
+    // as inconsistent, not NPE on a null sum
+    def rows(c: String) = coalesce(sum(when(isC(c), lit(1L)).otherwise(lit(0L))), lit(0L))
+    def committed(c: String) = coalesce(sum(when(isC("stat"), col(c))), lit(0L))
+    lexIndex(spark, path, entries)
+      .agg(rows("stat").as("n_segments"),
+        committed("n_postings").as("n_postings_expected"), rows("post").as("n_postings_actual"),
+        committed("n_terms").as("n_terms_expected"), rows("term").as("n_terms_actual"))
+      .withColumn("postings_consistent", col("n_postings_expected") === col("n_postings_actual"))
+      .withColumn("terms_consistent", col("n_terms_expected") === col("n_terms_actual"))
   }
 
   /**
-   * Audit a lexical index for torn segments: every segment's stats commit
-   * record carries the postings/termstats row counts that segment
-   * produced (landing in the same output commit as its data rows in the
-   * unified layout; written last in the legacy layout) — so actual table
-   * counts disagreeing with the committed sums in EITHER direction mean
-   * a crash tore a segment (data rows whose stats delta — and therefore
-   * dfq/avgdl contribution — is missing, or vice versa). One row:
-   * expected vs actual counts plus the consistency booleans. Cost is one
-   * column-pruned scan of the unified table (legacy/mixed piles pay a
-   * three-read fan-out) — a deployment check (stream construction,
-   * post-append audit), not a per-query path.
-   *
-   * A pre-audit-schema artifact (see [[lexicalAuditability]]) throws with
-   * the migration instruction rather than summing nulls and reporting a
-   * healthy index as torn.
-   */
-  def validateLexicalIndex(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val (nSeg, pExp, tExp, pAct, tAct) =
-      if (isPureUnified(spark, path)) {
-        // auditable by construction (see [[lexicalAuditability]]): no
-        // stats pre-read, no null-probe job — ONE relation discovery,
-        // ONE job
-        // ONE column-pruned scan of the unified table answers all five
-        // audit numbers (guide §1.2 step 1 — one job instead of a
-        // three-read fan-out): component rows count themselves, the stat
-        // rows carry the committed sums
-        val isC = (c: String) => col("component") === c
-        // coalesce(…, 0): a torn-at-birth index (data rows, zero stat
-        // rows) must AUDIT as inconsistent, not NPE on a null sum
-        val r = spark.read.parquet(s"$path/index").agg(
-          coalesce(sum(when(isC("stat"), lit(1L)).otherwise(lit(0L))), lit(0L))
-            .as("n_segments"),
-          coalesce(sum(when(isC("stat"), col("n_postings"))), lit(0L)).as("p_exp"),
-          coalesce(sum(when(isC("stat"), col("n_terms"))), lit(0L)).as("t_exp"),
-          coalesce(sum(when(isC("post"), lit(1L)).otherwise(lit(0L))), lit(0L))
-            .as("p_act"),
-          coalesce(sum(when(isC("term"), lit(1L)).otherwise(lit(0L))), lit(0L))
-            .as("t_act"))
-          .collect()(0)
-        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-      } else {
-        // legacy or mixed pile: the pre-audit-schema refusal applies, then
-        // three INDEPENDENT bounded reads (stats sums + two table counts)
-        // — fanned out (guide §2.6) instead of paying three serial job
-        // latencies per audit
-        val stats = statsOf(spark, path)
-        auditabilityOf(stats, path).foreach(reason =>
-          throw new IllegalStateException(s"validateLexicalIndex: $reason"))
-        var st: Row = null
-        var pA = 0L
-        var tA = 0L
-        Jobs.concurrently(
-          () => st = stats
-            .agg(count(lit(1)).as("n_segments"), sum(col("n_postings")).as("p_exp"),
-              sum(col("n_terms")).as("t_exp"))
-            .collect()(0),
-          () => pA = postingsOf(spark, path).count(),
-          () => tA = termstatsOf(spark, path).count())
-        (st.getLong(0), st.getLong(1), st.getLong(2), pA, tA)
-      }
-    Seq((nSeg, pExp, pAct, tExp, tAct, pExp == pAct, tExp == tAct))
-      .toDF("n_segments", "n_postings_expected", "n_postings_actual",
-        "n_terms_expected", "n_terms_actual", "postings_consistent", "terms_consistent")
-  }
-
-  /**
-   * Compact a lexical index into a single-segment copy at `dst`: termstats
-   * delta rows are summed per term, stats delta rows into one row, and
-   * postings rewritten with the standard clustering (they carry no deltas —
-   * compaction just coalesces the small files appends accumulate). Serving
-   * from `dst` is row-identical to serving from `src` by construction
-   * (the serve paths only ever consume the SUMS — gate-pinned). Production
-   * shape: compaction writes a fresh generation and the serving pointer
-   * flips to it crash-atomically via [[Generations.advance]]
+   * Compact a lexical index into a single-segment copy at `dst`, written
+   * as the first commit of the `dst` store: termstats delta rows are
+   * summed per term, stats delta rows into one row, and postings
+   * rewritten with the standard clustering (they carry no deltas —
+   * compaction just coalesces the small files appends accumulate).
+   * Serving from `dst` is row-identical to serving from `src` by
+   * construction (the serve paths only ever consume the SUMS —
+   * gate-pinned). Production shape: compaction writes a fresh generation
+   * and the serving pointer flips to it crash-atomically via
+   * [[Generations.advance]]
    * (`advance(s, root)(dst => compactLexicalIndex(s, src, dst))`); the
    * serve paths resolve the pointer per request / per micro-batch.
    */
   def compactLexicalIndex(spark: SparkSession, src: String, dst: String): Unit = {
     require(src != dst, "compactLexicalIndex: dst must be a fresh path")
-    // an AUDITABLE source must pass its audit first: the compacted commit
-    // record is derived from the rewritten tables, so compacting a TORN
-    // index would otherwise launder orphan postings rows (data landed,
-    // commit record missing) into a green-auditing artifact whose
-    // idf/avgdl stay silently skewed. Pre-audit-schema sources carry no
-    // counts to check — for them compaction IS the migration path.
-    if (lexicalAuditability(spark, src).isEmpty) {
-      val audit = validateLexicalIndex(spark, src).collect()(0)
-      require(audit.getAs[Boolean]("postings_consistent") &&
-        audit.getAs[Boolean]("terms_consistent"),
-        s"compactLexicalIndex: source index at $src is torn (postings " +
-          s"${audit.getAs[Long]("n_postings_actual")} vs committed " +
-          s"${audit.getAs[Long]("n_postings_expected")}, termstats " +
-          s"${audit.getAs[Long]("n_terms_actual")} vs committed " +
-          s"${audit.getAs[Long]("n_terms_expected")}) — compacting would " +
-          "hide the tear; rebuild from the corpus or drop the orphan " +
-          "segment files first")
-    }
-    val srcStats = statsOf(spark, src)
+    val live = lexManifest(spark, src).live
+    // the source must pass its audit first: the compacted stat row is
+    // derived from the rewritten tables, so compacting a TORN index would
+    // otherwise launder data rows without their stat row into a
+    // green-auditing artifact whose idf/avgdl stay silently skewed
+    val audit = lexAudit(spark, src, live).collect()(0)
+    require(audit.getAs[Boolean]("postings_consistent") &&
+      audit.getAs[Boolean]("terms_consistent"),
+      s"compactLexicalIndex: source index at $src is torn (postings " +
+        s"${audit.getAs[Long]("n_postings_actual")} vs committed " +
+        s"${audit.getAs[Long]("n_postings_expected")}, termstats " +
+        s"${audit.getAs[Long]("n_terms_actual")} vs committed " +
+        s"${audit.getAs[Long]("n_terms_expected")}) — compacting would " +
+        "hide the tear; rebuild from the corpus")
+    val srcStats = lexTable(spark, src, live, "stat")
     val nBuckets = srcStats.agg(max(col("n_buckets"))).head().getInt(0)
-    // the whole fold is ONE unified write — one job, one output commit,
-    // where the previous layout paid two fanned rewrites + two fanned
-    // counts + an ordered stats write (guide §1.2/§2.4). The compacted
-    // commit record's audit counts are computed IN-PLAN from the same
-    // expressions that produce the written rows (postings preserved
-    // verbatim — their count is the source's; termstats merge per term —
-    // their count is the merged group count), so the record matches what
-    // lands by construction — and compaction doubles as the MIGRATION
-    // path to the unified layout for legacy and pre-audit-schema
-    // artifacts (see [[lexicalAuditability]]), whose stats carry no
-    // counts to sum
-    val posts = postingsOf(spark, src)
-    val terms = termstatsOf(spark, src)
+    // the whole fold is ONE segment write. Its stat row's audit counts
+    // are computed IN-PLAN from the same expressions that produce the
+    // written rows (postings preserved verbatim — their count is the
+    // source's; termstats merge per term — their count is the merged
+    // group count), so the record matches what lands by construction
+    val posts = lexTable(spark, src, live, "post")
+    val terms = lexTable(spark, src, live, "term")
       .groupBy(col("bucket"), col("token")).agg(sum(col("dfq")).as("dfq"))
     val stat = srcStats
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
       .crossJoin(broadcast(posts.agg(count(lit(1)).as("n_postings"))))
       .crossJoin(broadcast(terms.agg(count(lit(1)).as("n_terms"))))
       .withColumn("n_buckets", lit(nBuckets))
-    lexComponent("post", col("bucket"), posts)
-      .unionByName(lexComponent("term", col("bucket"), terms))
-      .unionByName(lexComponent("stat", lit(0), stat))
-      .repartition(col("component"), col("bucket"))
-      .sortWithinPartitions(col("component"), col("bucket"), col("token"))
-      .write.mode("overwrite").partitionBy("component", "bucket")
-      .parquet(s"$dst/index")
+    SegmentStore.commit(spark, dst, LexPartitions) { (dstLive, dir) =>
+      writeSegment(lexComponent("post", col("bucket"), posts)
+        .unionByName(lexComponent("term", col("bucket"), terms))
+        .unionByName(lexComponent("stat", lit(0), stat)), dir)
+      dstLive
+    }
   }
 
   /** Per-JVM memo of collected index scalars, keyed by index path and
-    * invalidated by the stats directory's file listing — see
-    * [[lexicalStats]]. Bounded (keys are deployment paths, but a long-lived
-    * serving JVM cycling through many ephemeral index paths must not grow
-    * it without limit): at [[StatsMemoCap]] entries the map is cleared —
-    * the entries are cheap to recompute and a serving loop touches O(1)
-    * live paths, so wholesale reset beats LRU bookkeeping here. */
+    * invalidated by the manifest [[version]] — see [[lexicalStats]].
+    * Bounded (keys are deployment paths, but a long-lived serving JVM
+    * cycling through many ephemeral index paths must not grow it without
+    * limit): at [[StatsMemoCap]] entries the map is cleared — the entries
+    * are cheap to recompute and a serving loop touches O(1) live paths,
+    * so wholesale reset beats LRU bookkeeping here. */
   private val statsMemo =
-    scala.collection.mutable.Map[String, (String, (Long, Double, Int))]()
+    scala.collection.mutable.Map[String, ((Long, Long), (Long, Double, Int))]()
   private final val StatsMemoCap = 256
 
-  /** Fingerprint of the stats COMMIT-RECORD files' listing (name, length,
-    * mtime per file) — driver filesystem listings, no Spark job. Covers
-    * both layouts: the unified table's `index/component=stat/bucket=0`
-    * dir and the legacy `stats/` dir. Every segment write lands a stat
-    * delta file and compaction rewrites the directory, so any index
-    * mutation changes the fingerprint. */
-  private def statsFingerprint(spark: SparkSession, path: String): String = {
-    val fs = lexFs(spark, path)
-    def listing(dir: String): Option[String] =
-      try Some(fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-        .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-        .sorted.mkString("|"))
-      catch { case _: java.io.FileNotFoundException => None }
-    try {
-      val uni = listing(s"$path/index/component=stat/bucket=0")
-      val leg = listing(s"$path/stats")
-      if (uni.isEmpty && leg.isEmpty)
-        throw new java.io.FileNotFoundException(
-          s"no lexical index stats at $path (neither index/component=stat " +
-            "nor legacy stats/)")
-      s"u:${uni.getOrElse("")}#l:${leg.getOrElse("")}"
-    } catch {
-      case e: java.io.IOException =>
-        // a deleted/unreadable index must not leave a stale memo entry
-        // behind (the cached scalars would outlive the artifact); evict,
-        // then surface the real failure to the caller
-        statsMemo.synchronized { statsMemo.remove(path) }
-        dfqMemo.synchronized { dfqMemo.clear() }
-        throw e
-    }
-  }
+  /** What the memos key on: the manifest's sequence number names the
+    * commit, and every save, append and compaction publishes a new one;
+    * the manifest file's mtime tells apart two indexes that reused one
+    * path (deleted and rebuilt). Read from the listing the resolve makes
+    * anyway — no extra filesystem call. */
+  private def version(m: SegmentStore.Manifest): (Long, Long) = (m.seq, m.mtime)
 
   /** Collected corpus scalars of a lexical index: (nDocs, avgdl, nBuckets),
     * summed across segments — exact integer sums, one double division, so
     * any segmentation of the same corpus yields the same scalars.
     *
-    * Memoized per (path, stats-listing fingerprint): a streaming serving
-    * loop calls this every micro-batch, and without the memo each call is a
-    * full Spark action (plan + scan + collect) for a value that only
-    * changes when a segment lands. The fingerprint is the stats directory's
-    * file listing, so an [[appendLexicalIndex]] or [[compactLexicalIndex]]
-    * invalidates on the very next call — the growing-index contract is
-    * preserved (spec-pinned), only the redundant recomputation goes. */
-  private def lexicalStats(spark: SparkSession, path: String): (Long, Double, Int) =
-    lexicalStatsWith(spark, path, statsFingerprint(spark, path))
-
-  /** [[lexicalStats]] against an already-computed listing fingerprint —
-    * the serve paths compute the fingerprint once per call and share it
-    * between this memo and [[memoDfq]]. */
-  private def lexicalStatsWith(spark: SparkSession, path: String,
-                               fp: String): (Long, Double, Int) =
+    * Memoized per (path, manifest version): a streaming serving loop calls
+    * this every micro-batch, and without the memo each call is a full
+    * Spark action (plan + scan + collect) for a value that only changes
+    * when a segment lands. An [[appendLexicalIndex]] or a rebuild
+    * publishes a new manifest, so it invalidates on the very next call —
+    * the growing-index contract is preserved (spec-pinned), only the
+    * redundant recomputation goes. */
+  private def lexicalStats(spark: SparkSession, path: String,
+                           m: SegmentStore.Manifest): (Long, Double, Int) =
     statsMemo.synchronized { statsMemo.get(path) } match {
-      case Some((`fp`, v)) => v
+      case Some((v, scalars)) if v == version(m) => scalars
       case _ =>
-        val st = statsOf(spark, path)
+        val st = lexTable(spark, path, m.live, "stat")
           .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"),
             max(col("n_buckets")).as("n_buckets"))
           .collect()(0)
         val nDocs = st.getAs[Long]("n_docs")
         val sumDl = st.getAs[Long]("sum_dl")
         val avgdl = if (nDocs == 0L) 1.0 else sumDl.toDouble / nDocs
-        val v = (nDocs, avgdl, st.getAs[Int]("n_buckets"))
+        val scalars = (nDocs, avgdl, st.getAs[Int]("n_buckets"))
         statsMemo.synchronized {
           if (statsMemo.size >= StatsMemoCap) statsMemo.clear()
-          statsMemo(path) = (fp, v)
+          statsMemo(path) = (version(m), scalars)
         }
-        v
+        scalars
     }
 
   /** Pruned (token, dfq) for `terms`: termstats delta rows restricted to the
     * terms' buckets, summed per term — broadcast-sized by construction. */
-  private def prunedDfq(spark: SparkSession, path: String, terms: Seq[String],
-                        bucketIds: Seq[Int]): DataFrame =
-    termstatsOf(spark, path)
+  private def prunedDfq(spark: SparkSession, path: String, m: SegmentStore.Manifest,
+                        terms: Seq[String], bucketIds: Seq[Int]): DataFrame =
+    lexTable(spark, path, m.live, "term")
       .where(col("bucket").isin(bucketIds: _*) && col("token").isin(terms: _*))
       .groupBy(col("token")).agg(sum(col("dfq")).as("dfq"))
 
   /** Per-JVM memo of the COLLECTED pruned-dfq slice, keyed by (path, term
-    * set) and invalidated by the same stats-listing fingerprint as
+    * set) and invalidated by the same manifest [[version]] as
     * [[lexicalStats]] — a serving loop re-asking the same terms (REST
     * asks, per-epoch query batches) pays the termstats scan ONCE per
-    * index mutation instead of once per ask, while an append between asks
-    * still changes the answer on the very next call (the segment's stats
-    * delta file moves the fingerprint — the growing-index freshness
-    * contract, spec-pinned). Entries are query-term-sized; the map is
-    * cleared wholesale at [[StatsMemoCap]] like [[statsMemo]]. */
+    * index commit instead of once per ask, while an append between asks
+    * still changes the answer on the very next call (the growing-index
+    * freshness contract, spec-pinned). Entries are query-term-sized; the
+    * map is cleared wholesale at [[StatsMemoCap]] like [[statsMemo]]. */
   private val dfqMemo = scala.collection.mutable.Map[
-    (String, Seq[String]), (String, Array[(String, Long)])]()
+    (String, Seq[String]), ((Long, Long), Array[(String, Long)])]()
 
   /** The pruned-dfq side of a scoring join, memoized: a LocalRelation of
     * the collected (token, dfq) rows — row-identical to [[prunedDfq]] by
-    * construction (same aggregation, collected once per fingerprint). */
-  private def memoDfq(spark: SparkSession, path: String, terms: Seq[String],
-                      bucketIds: Seq[Int], fp: String): DataFrame = {
+    * construction (same aggregation, collected once per version). */
+  private def memoDfq(spark: SparkSession, path: String, m: SegmentStore.Manifest,
+                      terms: Seq[String], bucketIds: Seq[Int]): DataFrame = {
     import spark.implicits._
     val key = (path, terms.sorted)
     val hit = dfqMemo.synchronized { dfqMemo.get(key) }
-      .collect { case (`fp`, rows) => rows }
+      .collect { case (v, rows) if v == version(m) => rows }
     val rows = hit.getOrElse {
-      val got = prunedDfq(spark, path, terms, bucketIds)
+      val got = prunedDfq(spark, path, m, terms, bucketIds)
         .collect().map(r => (r.getString(0), r.getLong(1)))
       dfqMemo.synchronized {
         if (dfqMemo.size >= StatsMemoCap) dfqMemo.clear()
-        dfqMemo(key) = (fp, got)
+        dfqMemo(key) = (version(m), got)
       }
       got
     }
@@ -1003,15 +846,15 @@ object TextAnalysis {
     require(queryTerms.nonEmpty, "bm25QueryIndex: queryTerms must be non-empty")
     require(k > 0, "bm25QueryIndex: k must be positive")
     val terms = queryTerms.map(_.trim.toLowerCase).distinct
-    val fp = statsFingerprint(spark, path)
-    val (nDocs, avgdl, nBuckets) = lexicalStatsWith(spark, path, fp)
+    val m = lexManifest(spark, path)
+    val (nDocs, avgdl, nBuckets) = lexicalStats(spark, path, m)
     val bucketIds = termBuckets(terms, nBuckets)
-    val postings = postingsOf(spark, path)
+    val postings = lexTable(spark, path, m.live, "post")
       .where(col("bucket").isin(bucketIds: _*) && col("token").isin(terms: _*))
     val num = col("tf") * lit(k1 + 1.0)
     val den = col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl))
     val idf = log((lit(nDocs) - col("dfq") + lit(0.5)) / (col("dfq") + lit(0.5)) + lit(1.0))
-    postings.join(broadcast(memoDfq(spark, path, terms, bucketIds, fp)), "token")
+    postings.join(broadcast(memoDfq(spark, path, m, terms, bucketIds)), "token")
       .select(col("doc_id"), (idf * num / den).as("s"))
       .groupBy(col("doc_id"))
       .agg(round(sum(col("s")), 6).as("score"))
@@ -1086,17 +929,17 @@ object TextAnalysis {
   private def scoreBatch(spark: SparkSession, path: String, qt: DataFrame,
                          terms: Seq[String], k: Int, k1: Double, b: Double): DataFrame = {
     require(terms.nonEmpty, "bm25QueryIndexBatch: no non-empty query terms")
-    val fp = statsFingerprint(spark, path)
-    val (nDocs, avgdl, nBuckets) = lexicalStatsWith(spark, path, fp)
+    val m = lexManifest(spark, path)
+    val (nDocs, avgdl, nBuckets) = lexicalStats(spark, path, m)
     val bucketIds = termBuckets(terms, nBuckets)
-    val postings = postingsOf(spark, path)
+    val postings = lexTable(spark, path, m.live, "post")
       .where(col("bucket").isin(bucketIds: _*) && col("token").isin(terms: _*))
     val num = col("tf") * lit(k1 + 1.0)
     val den = col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl))
     val idf = log((lit(nDocs) - col("dfq") + lit(0.5)) / (col("dfq") + lit(0.5)) + lit(1.0))
     val scored = postings
       .join(broadcast(qt), "token") // fan each posting out to its queries
-      .join(broadcast(memoDfq(spark, path, terms, bucketIds, fp)), "token")
+      .join(broadcast(memoDfq(spark, path, m, terms, bucketIds)), "token")
       .select(col("query_id"), col("doc_id"), (idf * num / den).as("s"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(round(sum(col("s")), 6).as("score"))

@@ -26,13 +26,13 @@ import graft.operators.TextAnalysis
  *
  * Epoch cost discipline: the micro-batch is collected once (serving
  * batches are driver-small by contract) and the serve prelude — term
- * normalization, corpus stats (memoized on the stats-file listing), bucket
- * pruning ids (driver-side xxhash64) — runs without Spark jobs, so each
- * epoch spends its wall-clock on the one pruned scoring scan.
+ * normalization, corpus stats (memoized on the index's manifest version),
+ * bucket pruning ids (driver-side xxhash64) — runs without Spark jobs, so
+ * each epoch spends its wall-clock on the one pruned scoring scan.
  *
- * GROWING-INDEX semantics: the batch operator reads postings / termstats /
- * stats BY PATH inside each call, so every micro-batch sees a fresh file
- * listing — segments added by [[TextAnalysis.appendLexicalIndex]] become
+ * GROWING-INDEX semantics: the batch operator resolves the index's newest
+ * manifest BY PATH inside each call, so every micro-batch reads the newest
+ * commit — segments added by [[TextAnalysis.appendLexicalIndex]] become
  * searchable on the next epoch without restarting the stream (gate-pinned
  * with a term unique to the appended documents). This matters because a
  * captured DataFrame would snapshot its leaf files at stream construction
@@ -42,7 +42,7 @@ import graft.operators.TextAnalysis
  * flips are served without a restart (gate-pinned by
  * `streaming_bm25_generation_flip`).
  */
-object StreamingLexicalServing extends org.apache.spark.internal.Logging {
+object StreamingLexicalServing {
 
   /**
    * Serve BM25 top-k answers for a stream of (query_id, terms) rows from
@@ -98,31 +98,20 @@ object StreamingLexicalServing extends org.apache.spark.internal.Logging {
       "serveBm25FromPath: maxBatchQueries must be positive")
     val indexPath = resolvePath()
     // fail FAST at stream construction on a missing, corrupt or TORN
-    // artifact (a crash mid-append leaves postings rows whose stats commit
-    // record never landed — silently skewed idf/avgdl) instead of letting
-    // the deployment look healthy until epoch 0 serves wrong scores. One
-    // full count of postings/termstats — a construction-time audit, never
-    // a per-epoch cost.
-    val spark0 = queryStream.sparkSession
-    // a pre-audit-schema artifact can't be audited but SERVES correctly
-    // (serve paths read only the stats sums) — skip the torn-segment check
-    // with an explicit notice instead of refusing to start; compaction
-    // migrates it to auditable form
-    TextAnalysis.lexicalAuditability(spark0, indexPath) match {
-      case Some(reason) =>
-        logWarning(s"serveBm25FromPath: skipping construction-time " +
-          s"torn-segment audit — $reason")
-      case None =>
-        val audit = TextAnalysis.validateLexicalIndex(spark0, indexPath).collect()(0)
-        require(audit.getAs[Boolean]("postings_consistent") &&
-          audit.getAs[Boolean]("terms_consistent"),
-          s"lexical index at $indexPath is torn: postings " +
-            s"${audit.getAs[Long]("n_postings_actual")} vs committed " +
-            s"${audit.getAs[Long]("n_postings_expected")}, termstats " +
-            s"${audit.getAs[Long]("n_terms_actual")} vs committed " +
-            s"${audit.getAs[Long]("n_terms_expected")} — recover by rebuilding " +
-            "from the corpus, or remove the orphan segment files and compact")
-    }
+    // artifact (data files published without their stats commit record —
+    // silently skewed idf/avgdl) instead of letting the deployment look
+    // healthy until epoch 0 serves wrong scores. One scan of the index —
+    // a construction-time audit, never a per-epoch cost.
+    val audit = TextAnalysis.validateLexicalIndex(queryStream.sparkSession, indexPath)
+      .collect()(0)
+    require(audit.getAs[Boolean]("postings_consistent") &&
+      audit.getAs[Boolean]("terms_consistent"),
+      s"lexical index at $indexPath is torn: postings " +
+        s"${audit.getAs[Long]("n_postings_actual")} vs committed " +
+        s"${audit.getAs[Long]("n_postings_expected")}, termstats " +
+        s"${audit.getAs[Long]("n_terms_actual")} vs committed " +
+        s"${audit.getAs[Long]("n_terms_expected")} — recover by rebuilding " +
+        "from the corpus")
     queryStream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], epochId: Long) =>

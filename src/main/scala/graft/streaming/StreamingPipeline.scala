@@ -1,13 +1,12 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graftshim.GraftPlanBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.operators.{AggCore, SeqFiles}
+import graft.operators.{AggCore, SegmentStore, SeqFiles}
 
 /**
  * The reference's continuous ingestion topology (SURVEY.md §3.1), as
@@ -32,8 +31,10 @@ import graft.operators.{AggCore, SeqFiles}
  *  - 10 s commit interval (W4) :120 → `Trigger.ProcessingTime("10 seconds")`
  *  - RocksDB store + changelog (K1) :103-104 → parquet serving table partitioned
  *    by `window_day` + checkpointing; upsert = rewrite of the touched day
- *    partitions into new files, published by one manifest rename,
- *    idempotent across micro-batch replays.
+ *    partitions into new files, published by one manifest rename
+ *    ([[graft.operators.SegmentStore]], which every writer verb here
+ *    commits through and [[servingView]] resolves), idempotent across
+ *    micro-batch replays.
  *
  * At scale: state is keyed by (gh-prefix, hour) — cardinality bounded by
  * 32^p × retained hours, independent of input volume; the serving table is
@@ -138,85 +139,13 @@ object StreamingPipeline {
     upsertBatch(hourlyAgg(keyed(valid, precision)), tableDir)
   }
 
-  /*
-   * Layout: never overwritten in place. Commit S writes new files under
-   * `tableDir/c-S/window_day=D/` and publishes `tableDir/_manifest/m-S`
-   * ([[graft.operators.SeqFiles.publish]]); that rename is the only commit
-   * point. A manifest line is `F<TAB>day<TAB>bytes<TAB>path` for a live
-   * file, or `R<TAB>path` for a dir the commit retired (a
-   * `c-N/window_day=D`, or a whole `c-N` with no live day left); paths are
-   * relative to `tableDir`. Every verb replaces whole days, so a day's
-   * files always sit in one commit dir.
-   */
-
-  private type Entry = (String, String, Long) // (relative path, day, bytes)
-
-  private final case class Manifest(seq: Long, live: Seq[Entry], retired: Seq[String])
-
-  /** How long the files a commit retired stay on disk after it: a view
-    * resolved just before the commit still reads them. A serving request
-    * takes about 0.4 s at the median (perfbench `serve`) and seconds in
-    * its tail; ten minutes is over a thousand medians, and holds at most
-    * 60 commits of superseded day files at the reference's 10 s trigger. */
-  private val RetiredGraceMs = 10 * 60 * 1000L
-
-  private def manifestDir(tableDir: String) = new Path(tableDir, "_manifest")
-
-  private def readManifest(hfs: FileSystem, tableDir: String, seq: Long): Manifest = {
-    val rows = SeqFiles.read(hfs, new Path(manifestDir(tableDir), SeqFiles.name("m", seq)))
-      .map(_.split('\t'))
-    Manifest(seq, rows.collect { case Array("F", day, bytes, rel) => (rel, day, bytes.toLong) },
-      rows.collect { case Array("R", rel) => rel })
-  }
-
-  /** The newest manifest: one listing of `_manifest` and one read. */
-  private def latest(hfs: FileSystem, tableDir: String): Option[Manifest] =
-    SeqFiles.numbered(SeqFiles.listAll(hfs, manifestDir(tableDir)), "m").lastOption
-      .map { case (seq, _) => readManifest(hfs, tableDir, seq) }
+  /** A serving-table file's day. */
+  private def day(e: SegmentStore.Entry): String = e.values.head
 
   /** The cells of `entries` as a frame over exactly those files. */
-  private def cells(spark: SparkSession, hfs: FileSystem, tableDir: String,
-                    entries: Seq[Entry]): DataFrame = {
-    val root = hfs.makeQualified(new Path(tableDir))
-    GraftPlanBridge.listedTable(spark, root.toString,
-      entries.map { case (rel, day, bytes) => (new Path(root, rel).toString, Seq(day), bytes) },
-      cellSchema, daySchema)
-  }
-
-  /** The commit of every writer verb: sweep ([[recover]]), read the newest
-    * manifest, let `rewrite(live, cellsOf, commitDir)` write the new day
-    * partitions and return the days it replaces or drops, then publish the
-    * next manifest (unless no day changed). Returns those days, sorted. */
-  private def commit(spark: SparkSession, tableDir: String)
-                    (rewrite: (Seq[Entry], Seq[String] => DataFrame, String) => Seq[String])
-      : Seq[String] = {
-    val hfs = SeqFiles.fs(spark, tableDir)
-    recover(spark, tableDir)
-    val cur = latest(hfs, tableDir)
-    val live = cur.fold(Seq.empty[Entry])(_.live)
-    val seq = cur.fold(0L)(_.seq) + 1
-    val dir = new Path(tableDir, SeqFiles.name("c", seq))
-    val replaced = rewrite(live,
-      days => cells(spark, hfs, tableDir, live.filter(e => days.contains(e._2))),
-      dir.toString).distinct.sorted
-    if (replaced.nonEmpty) {
-      val written = for {
-        day <- SeqFiles.listAll(hfs, dir).map(_.getPath).filter(_.getName.startsWith("window_day="))
-        f <- SeqFiles.listAll(hfs, day) if f.getPath.getName.endsWith(".parquet")
-      } yield (s"${dir.getName}/${day.getName}/${f.getPath.getName}",
-        day.getName.stripPrefix("window_day="), f.getLen)
-      val next = live.filterNot(e => replaced.contains(e._2)) ++ written
-      def unit(rel: String) = rel.substring(0, rel.lastIndexOf('/'))
-      def commitOf(rel: String) = rel.takeWhile(_ != '/')
-      val keptCommits = next.map(e => commitOf(e._1)).toSet
-      val retired = live.map(e => unit(e._1)).distinct.filterNot(next.map(e => unit(e._1)).toSet)
-        .map(u => if (keptCommits(commitOf(u))) u else commitOf(u)).distinct
-      SeqFiles.publish(hfs, manifestDir(tableDir), "m", seq,
-        next.map { case (rel, day, bytes) => s"F\t$day\t$bytes\t$rel" } ++
-          retired.map("R\t" + _))
-    }
-    replaced
-  }
+  private def cells(spark: SparkSession, tableDir: String,
+                    entries: Seq[SegmentStore.Entry]): DataFrame =
+    SegmentStore.frame(spark, tableDir, entries, cellSchema, daySchema)
 
   /**
    * Merge a micro-batch of changed cells into the serving table — keep every
@@ -224,7 +153,7 @@ object StreamingPipeline {
    * batch, replace only the touched day partitions. Cost per trigger is
    * O(changed days), not O(table); the merge input is read through the
    * manifest (no listing, no schema-inference job). Crash-atomic: a reader
-   * sees the whole batch or none of it ([[commit]]).
+   * sees the whole batch or none of it ([[SegmentStore.commit]]).
    */
   def upsertBatch(batch: DataFrame, tableDir: String): Unit = {
     val cols = (cellSchema ++ daySchema).map(f => col(f.name))
@@ -232,12 +161,14 @@ object StreamingPipeline {
     try {
       val days = changed.select(col("window_day").cast("string")).distinct().collect()
         .map(_.getString(0)).toSeq
-      if (days.nonEmpty) commit(batch.sparkSession, tableDir) { (live, cellsOf, dir) =>
+      val spark = batch.sparkSession
+      if (days.nonEmpty) SegmentStore.commit(spark, tableDir, daySchema) { (live, dir) =>
+        val touched = live.filter(e => days.contains(day(e)))
         // anti-join on the upsert key: survivors in the touched partitions
         // (none when no touched day is live yet, as in a first batch)
         val merged =
-          if (!live.exists(e => days.contains(e._2))) changed
-          else cellsOf(days)
+          if (touched.isEmpty) changed
+          else cells(spark, tableDir, touched)
             .join(changed.select(col("key").as("k2"), col("window_start").as("w2")),
               col("key") === col("k2") && col("window_start") === col("w2"),
               "left_anti")
@@ -250,35 +181,17 @@ object StreamingPipeline {
         // (bounded by |keys|·24 per day, not raw event volume)
         merged.repartition(col("window_day"))
           .write.mode("overwrite").partitionBy("window_day").parquet(dir)
-        days
+        touched
       }
     } finally changed.unpersist()
   }
 
-  /** Sweep the serving table: delete a crashed commit's leftovers (`.tmp`
-    * manifests, commit dirs above the newest manifest), then drop each
-    * superseded manifest whose successor is older than [[RetiredGraceMs]],
-    * with the dirs that successor retired. It reads only the manifests of
-    * the commits it drops, so its cost does not grow with the commits
-    * inside the grace. Idempotent; every writer verb runs it first, and
-    * only the table's single writer may call it. */
-  def recover(spark: SparkSession, tableDir: String): Unit = {
-    val hfs = SeqFiles.fs(spark, tableDir)
-    val listing = SeqFiles.listAll(hfs, manifestDir(tableDir))
-    val manifests = SeqFiles.numbered(listing, "m")
-    SeqFiles.stages(listing).foreach(hfs.delete(_, false))
-    SeqFiles.numbered(SeqFiles.listAll(hfs, new Path(tableDir)), "c")
-      .filter(_._1 > manifests.lastOption.fold(0L)(_._1))
-      .foreach { case (_, d) => hfs.delete(d.getPath, true) }
-    val cutoff = System.currentTimeMillis() - RetiredGraceMs
-    manifests.zip(manifests.drop(1))
-      .takeWhile { case (_, (_, next)) => next.getModificationTime < cutoff }
-      .foreach { case ((_, old), (nextSeq, _)) =>
-        readManifest(hfs, tableDir, nextSeq).retired
-          .foreach(rel => hfs.delete(new Path(tableDir, rel), true))
-        hfs.delete(old.getPath, false)
-      }
-  }
+  /** Sweep the serving table ([[SegmentStore.recover]]): crash leftovers,
+    * then the files retired longer ago than the grace. Idempotent; every
+    * writer verb runs it first, and only the table's single writer may
+    * call it. */
+  def recover(spark: SparkSession, tableDir: String): Unit =
+    SegmentStore.recover(spark, tableDir)
 
   /** The cell columns [[upsertBatch]] writes into each day file. */
   private val cellSchema: StructType = StructType(Seq(
@@ -304,15 +217,14 @@ object StreamingPipeline {
     * expired by [[retainFrom]], has no cells to serve — fail with that
     * cause instead of serving an empty table. */
   def servingView(spark: SparkSession, tableDir: String): DataFrame = {
-    val hfs = SeqFiles.fs(spark, tableDir)
-    val m = latest(hfs, tableDir).getOrElse(
+    val m = SegmentStore.latest(SeqFiles.fs(spark, tableDir), tableDir).getOrElse(
       throw new IllegalStateException(s"servingView: no serving table at $tableDir"))
     if (m.live.isEmpty)
       throw new IllegalStateException(
         s"servingView: $tableDir has no day partitions — every window_day " +
           "was expired by retainFrom (or nothing was ever upserted); " +
           "re-ingest or widen retention before serving")
-    cells(spark, hfs, tableDir, m.live)
+    cells(spark, tableDir, m.live)
   }
 
   /**
@@ -323,45 +235,34 @@ object StreamingPipeline {
    * becomes a file count, and the reader's footer-open cost dominates
    * scans unless something re-coalesces. Run this out-of-band.
    *
-   * `sortByKey = true` additionally lays each day's rows out in
-   * `(key, window_start)` range order — range-partitioned across the
-   * day's `filesPerDay` files and sorted within each — so the key-prefix
-   * predicates [[graft.operators.QueryBuilders]] pushes down prune whole
-   * files by disjoint parquet min/max key spans, then row groups (Delta's
-   * OPTIMIZE ... ZORDER, 1-D). Hash layout stays the default: it spreads
-   * hot-key upsert traffic, and not every table has a range read path.
+   * Each day's rows are laid out in `(key, window_start)` range order —
+   * range-partitioned across the day's `filesPerDay` files and sorted
+   * within each — so the key-prefix predicates
+   * [[graft.operators.QueryBuilders]] pushes down prune whole files by
+   * disjoint parquet min/max key spans, then row groups (Delta's
+   * OPTIMIZE ... ZORDER, 1-D). A day with fewer cells than `filesPerDay`
+   * gets fewer files.
    */
   def compact(spark: SparkSession, tableDir: String,
-              days: Seq[String] = Nil, filesPerDay: Int = 1,
-              sortByKey: Boolean = false): Unit =
-    commit(spark, tableDir) { (live, cellsOf, dir) =>
-      val targetDays = live.map(_._2).distinct.filter(d => days.isEmpty || days.contains(d)).sorted
-      val cur = cellsOf(targetDays)
-      if (sortByKey) {
-        // one range-partitioned write PER DAY: a global range over
-        // (day, key) would sample boundaries by row VOLUME, so a skewed
-        // day could absorb every boundary and starve its neighbors of
-        // the filesPerDay contract. Per-day jobs keep the guarantee
-        // exact; the day loop is bounded by retention, and compaction
-        // is the out-of-band path where a job per day is the normal shape.
-        targetDays.foreach { d =>
-          cur.filter(col("window_day") === lit(d))
-            .drop("window_day") // implied by the directory, as partitionBy writes it
-            .repartitionByRange(filesPerDay, col("key"), col("window_start"))
-            .sortWithinPartitions(col("key"), col("window_start"))
-            .write.mode("overwrite")
-            .parquet(new Path(dir, s"window_day=$d").toString)
-        }
-      } else if (targetDays.nonEmpty) {
-        // deterministic salt (no rand(): retry-safe) spreads each day
-        // across exactly filesPerDay writer partitions
-        cur.withColumn("_salt",
-            pmod(hash(col("key"), col("window_start")), lit(filesPerDay)))
-          .repartition(targetDays.length * filesPerDay, col("window_day"), col("_salt"))
-          .drop("_salt")
-          .write.mode("overwrite").partitionBy("window_day").parquet(dir)
+              days: Seq[String] = Nil, filesPerDay: Int = 1): Unit =
+    SegmentStore.commit(spark, tableDir, daySchema) { (live, dir) =>
+      val target = live.filter(e => days.isEmpty || days.contains(day(e)))
+      val cur = cells(spark, tableDir, target)
+      // one range-partitioned write PER DAY: a global range over
+      // (day, key) would sample boundaries by row VOLUME, so a skewed
+      // day could absorb every boundary and starve its neighbors of
+      // the filesPerDay contract. The day loop is bounded by retention,
+      // and compaction is the out-of-band path where a job per day is
+      // the normal shape.
+      target.map(day).distinct.sorted.foreach { d =>
+        cur.filter(col("window_day") === lit(d))
+          .drop("window_day") // implied by the directory, as partitionBy writes it
+          .repartitionByRange(filesPerDay, col("key"), col("window_start"))
+          .sortWithinPartitions(col("key"), col("window_start"))
+          .write.mode("overwrite")
+          .parquet(new Path(dir, s"window_day=$d").toString)
       }
-      targetDays
+      target
     }
 
   /**
@@ -381,6 +282,7 @@ object StreamingPipeline {
   def retainFrom(spark: SparkSession, tableDir: String, minDay: String): Seq[String] = {
     require(minDay.matches("\\d{4}-\\d{2}-\\d{2}"),
       s"retainFrom: minDay must be yyyy-MM-dd, got '$minDay'")
-    commit(spark, tableDir)((live, _, _) => live.map(_._2).filter(_ < minDay))
+    SegmentStore.commit(spark, tableDir, daySchema)((live, _) => live.filter(day(_) < minDay))
+      .map(day).distinct.sorted
   }
 }

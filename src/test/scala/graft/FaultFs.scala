@@ -123,6 +123,52 @@ object FaultFs {
     }
   }
 
+  /** A fresh temp copy of the local directory `dir`. */
+  def copyOf(dir: String): String = {
+    val d = java.nio.file.Files.createTempDirectory("faultfs_copy").toFile
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(dir), d)
+    d.getAbsolutePath
+  }
+
+  /**
+   * Crash `verb` at each of its filesystem write steps in turn (the Nth
+   * create/rename/delete/mkdirs fails, and every later one), each time on
+   * a fresh copy of the local directory `template` under this scheme.
+   * `open(dir)` resolves a reader over `dir` and returns what collecting
+   * it reads. After each crash, a reader resolved before the verb still
+   * reads the old state, a fresh reader reads exactly the old or the new
+   * state, and `recover` plus a rerun reads exactly the new state.
+   * Returns the number of crash points swept.
+   */
+  def crashSweep(spark: SparkSession, template: String, open: String => () => Seq[String],
+                 recover: String => Unit)(verb: String => Unit): Int = {
+    install(spark)
+    val before = open(template)()
+    val after = {
+      val d = copyOf(template)
+      try { verb(d); open(d)() } finally Gates.deleteTree(d)
+    }
+    var n = 0
+    var completed = false
+    while (!completed) {
+      n += 1
+      val local = copyOf(template)
+      val dir = uri(local)
+      val pinned = open(dir)
+      completed = crashAt(spark, n)(verb(dir))
+      assert(pinned() == before, s"step $n: a reader resolved before the verb changed")
+      val fresh = open(dir)()
+      assert(fresh == before || fresh == after, s"step $n: a fresh reader reads $fresh")
+      if (!completed) {
+        recover(dir)
+        verb(dir)
+      }
+      assert(open(dir)() == after, s"step $n: recover and a rerun did not converge")
+      Gates.deleteTree(local)
+    }
+    n - 1
+  }
+
   /** The reads `f` makes through this scheme, as "op name" lines. */
   def reads[A](f: => A): (A, Seq[String]) = {
     val l = new java.util.concurrent.ConcurrentLinkedQueue[String]

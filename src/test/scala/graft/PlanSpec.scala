@@ -289,11 +289,11 @@ class PlanSpec extends SparkSpec {
         .toDF("query_id", "terms")
       val served = TextAnalysis.bm25QueryIndexBatch(spark, dir, qs, k = 5)
       val plan = explainFormatted(served)
-      // the whole batch reads the unified index table exactly once — the
+      // the whole batch reads the index store exactly once — the
       // postings scan; the pruned-dfq side rides the per-JVM memo as a
       // local relation, so no second parquet location appears at all
       val indexScans = plan.linesIterator
-        .count(l => l.contains("Location") && l.contains("/index"))
+        .count(l => l.contains("Location") && l.contains(dir))
       assert(indexScans == 1, s"expected 1 index scan, got $indexScans:\n$plan")
       // ...with static bucket pruning (≤ |union terms| of the 16 buckets)
       val partFilter = plan.linesIterator.filter(_.contains("PartitionFilters"))

@@ -1,8 +1,12 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.operators.TextAnalysis
+import graft.operators.{SegmentStore, SeqFiles, TextAnalysis}
 import graft.streaming.StreamingLexicalServing
 
 case class LexQuery(query_id: Long, terms: Seq[String])
@@ -150,12 +154,15 @@ class StreamingLexicalSpec extends SparkSpec {
       assert(ok.getAs[Long]("n_segments") == 2L)
       assert(ok.getAs[Boolean]("postings_consistent") && ok.getAs[Boolean]("terms_consistent"))
 
-      // simulate the crash window: an append's postings landed but its
-      // stats commit record did not — drop one stat part file from the
-      // unified table's commit-record partition
-      val statsDir = new java.io.File(s"$dir/index/component=stat/bucket=0")
-      val part = statsDir.listFiles().filter(_.getName.endsWith(".parquet")).head
-      assert(part.delete())
+      // the tear: a published manifest naming a segment's postings and
+      // termstats but not its stat file
+      val hfs = SeqFiles.fs(spark, dir)
+      val manifests = new Path(dir, "_manifest")
+      val m = SegmentStore.latest(hfs, dir).get
+      val stat = m.live.filter(_.values.head == "stat").last
+      SeqFiles.publish(hfs, manifests, "m", m.seq + 1,
+        SeqFiles.read(hfs, new Path(manifests, SeqFiles.name("m", m.seq)))
+          .filterNot(_.endsWith(stat.path)))
       val torn = TextAnalysis.validateLexicalIndex(spark, dir).collect()(0)
       assert(!(torn.getAs[Boolean]("postings_consistent") &&
         torn.getAs[Boolean]("terms_consistent")))
@@ -184,80 +191,6 @@ class StreamingLexicalSpec extends SparkSpec {
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(dir)).deleteRecursively()
-    }
-  }
-
-  test("pre-audit-schema artifact: validate/append refuse with the migration " +
-      "instruction, serving skips the audit, compaction migrates") {
-    val docs = Seq(
-      (1L, "spark scan spark merge"), (2L, "scan filter join"),
-      (3L, "merge merge merge scan"), (4L, "filter value row")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_lex_legacy").toString
-    val dst = java.nio.file.Files.createTempDirectory("graft_lex_migrated").toString + "/c"
-    try {
-      TextAnalysis.saveLexicalIndex(docs, dir, nBuckets = 8)
-      // convert the artifact to the FULL round-8 shape a pre-revision
-      // deployment carries: the legacy three-dir layout with a pre-audit
-      // stats table (no audit columns) — this also exercises the
-      // layout-agnostic legacy read path end to end
-      val uni = spark.read.parquet(s"$dir/index")
-      uni.filter($"component" === "post")
-        .select($"token", $"doc_id", $"tf", $"dl", $"bucket")
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/postings")
-      uni.filter($"component" === "term")
-        .select($"token", $"dfq", $"bucket")
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/termstats")
-      val legacyRows = uni.filter($"component" === "stat")
-        .select($"n_docs", $"sum_dl", $"n_buckets").collect().toSeq
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-      legacyRows.toDF("n_docs", "sum_dl", "n_buckets")
-        .write.mode("overwrite").parquet(s"$dir/stats")
-      import scala.reflect.io.Directory
-      assert(new Directory(new java.io.File(s"$dir/index")).deleteRecursively())
-
-      // audit and append both refuse LOUDLY, naming the migration path
-      val e1 = intercept[IllegalStateException] {
-        TextAnalysis.validateLexicalIndex(spark, dir)
-      }
-      assert(e1.getMessage.contains("compact"))
-      val e2 = intercept[IllegalStateException] {
-        TextAnalysis.appendLexicalIndex(docs.filter($"doc_id" > 4), dir)
-      }
-      assert(e2.getMessage.contains("compact"))
-
-      // serving still works (serve paths read only the stats sums):
-      // batch serve answers, and stream construction skips the audit
-      // instead of throwing
-      val served = TextAnalysis.bm25QueryIndex(spark, dir, Seq("spark", "merge"), k = 3)
-      assert(served.count() > 0)
-      implicit val sqlCtx = spark.sqlContext
-      val stream = MemoryStream[LexQuery]
-      var epochs = List.empty[Array[org.apache.spark.sql.Row]]
-      val q = StreamingLexicalServing.serveBm25FromPath(stream.toDF(), dir, k = 3) {
-        (df, _) => epochs = epochs :+ df.collect()
-      }
-      try {
-        stream.addData(LexQuery(1L, Seq("spark")))
-        q.processAllAvailable()
-        assert(epochs.size == 1 && epochs.head.nonEmpty)
-      } finally q.stop()
-
-      // compaction migrates: the compacted copy is auditable and green
-      TextAnalysis.compactLexicalIndex(spark, dir, dst)
-      assert(TextAnalysis.lexicalAuditability(spark, dst).isEmpty)
-      val ok = TextAnalysis.validateLexicalIndex(spark, dst).collect()(0)
-      assert(ok.getAs[Boolean]("postings_consistent") &&
-        ok.getAs[Boolean]("terms_consistent"))
-      // and serves row-identically to the legacy original
-      val before = TextAnalysis.bm25QueryIndex(spark, dir, Seq("spark", "merge"), k = 10)
-        .collect().toSeq
-      val after = TextAnalysis.bm25QueryIndex(spark, dst, Seq("spark", "merge"), k = 10)
-        .collect().toSeq
-      assert(after == before && before.nonEmpty)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(dir)).deleteRecursively()
-      new Directory(new java.io.File(new java.io.File(dst).getParent)).deleteRecursively()
     }
   }
 
@@ -300,7 +233,10 @@ class StreamingLexicalSpec extends SparkSpec {
       val after = TextAnalysis.bm25QueryIndex(spark, dst, terms, k = 10).collect().toSeq
       assert(after == before && before.nonEmpty)
       // compaction really merged the termstats deltas: one row per term
-      val all = spark.read.parquet(s"$dst/index")
+      val m = SegmentStore.latest(SeqFiles.fs(spark, dst), dst).get
+      assert(m.seq == 1L)
+      val all = SegmentStore.frame(spark, dst, m.live,
+        TextAnalysis.LexSchema, TextAnalysis.LexPartitions)
       val ts = all.filter($"component" === "term")
       assert(ts.count() == ts.select("token").distinct().count())
       // and the commit record is a single stat row
@@ -308,65 +244,6 @@ class StreamingLexicalSpec extends SparkSpec {
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(src)).deleteRecursively()
-      new Directory(new java.io.File(new java.io.File(dst).getParent)).deleteRecursively()
-    }
-  }
-
-  test("legacy three-dir layout serves row-identically; a unified append " +
-      "onto it (mixed pile) ≡ full rebuild; compaction migrates the pile") {
-    val base = Seq(
-      (1L, "spark scan spark merge"), (2L, "scan filter join"),
-      (3L, "merge merge merge scan")).toDF("doc_id", "text")
-    val extra = Seq((4L, "filter value row"), (5L, "zebra spark")).toDF("doc_id", "text")
-    val all = base.union(extra)
-    val legacy = java.nio.file.Files.createTempDirectory("graft_lex_leg").toString
-    val fresh = java.nio.file.Files.createTempDirectory("graft_lex_frs").toString
-    val dst = java.nio.file.Files.createTempDirectory("graft_lex_mig").toString + "/c"
-    try {
-      // build the legacy artifact by converting a unified build — WITH the
-      // audit columns (an auditable post-round-8, pre-unified-layout build)
-      TextAnalysis.saveLexicalIndex(base, legacy, nBuckets = 8)
-      val uni = spark.read.parquet(s"$legacy/index")
-      uni.filter($"component" === "post")
-        .select($"token", $"doc_id", $"tf", $"dl", $"bucket")
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$legacy/postings")
-      uni.filter($"component" === "term")
-        .select($"token", $"dfq", $"bucket")
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$legacy/termstats")
-      uni.filter($"component" === "stat")
-        .select($"n_docs", $"sum_dl", $"n_postings", $"n_terms", $"n_buckets")
-        .write.mode("overwrite").parquet(s"$legacy/stats")
-      import scala.reflect.io.Directory
-      assert(new Directory(new java.io.File(s"$legacy/index")).deleteRecursively())
-      val terms = Seq("spark", "merge", "filter", "zebra")
-      // legacy artifact: audit green, serves identically to a fresh build
-      val okL = TextAnalysis.validateLexicalIndex(spark, legacy).collect()(0)
-      assert(okL.getAs[Boolean]("postings_consistent") &&
-        okL.getAs[Boolean]("terms_consistent"))
-      TextAnalysis.saveLexicalIndex(base, fresh, nBuckets = 8)
-      assert(TextAnalysis.bm25QueryIndex(spark, legacy, terms, k = 10).collect().toSeq ==
-        TextAnalysis.bm25QueryIndex(spark, fresh, terms, k = 10).collect().toSeq)
-      // unified append ONTO the legacy artifact → mixed pile must serve
-      // exactly like a full rebuild over the union
-      TextAnalysis.appendLexicalIndex(extra, legacy)
-      TextAnalysis.saveLexicalIndex(all, fresh, nBuckets = 8)
-      val mixed = TextAnalysis.bm25QueryIndex(spark, legacy, terms, k = 10).collect().toSeq
-      val rebuilt = TextAnalysis.bm25QueryIndex(spark, fresh, terms, k = 10).collect().toSeq
-      assert(mixed == rebuilt && rebuilt.nonEmpty)
-      val okM = TextAnalysis.validateLexicalIndex(spark, legacy).collect()(0)
-      assert(okM.getAs[Long]("n_segments") == 2L &&
-        okM.getAs[Boolean]("postings_consistent") &&
-        okM.getAs[Boolean]("terms_consistent"))
-      // compaction folds the mixed pile into one unified generation
-      TextAnalysis.compactLexicalIndex(spark, legacy, dst)
-      assert(TextAnalysis.bm25QueryIndex(spark, dst, terms, k = 10)
-        .collect().toSeq == rebuilt)
-      assert(!new java.io.File(s"$dst/postings").exists() &&
-        new java.io.File(s"$dst/index").exists())
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(legacy)).deleteRecursively()
-      new Directory(new java.io.File(fresh)).deleteRecursively()
       new Directory(new java.io.File(new java.io.File(dst).getParent)).deleteRecursively()
     }
   }
@@ -394,6 +271,92 @@ class StreamingLexicalSpec extends SparkSpec {
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(dir)).deleteRecursively()
+    }
+  }
+
+  test("crash-atomic appendLexicalIndex and saveLexicalIndex over an index: " +
+      "every crash point serves the old or the new answer, audits " +
+      "consistent, and recover plus a rerun converges") {
+    val docs = Seq(
+      (1L, "spark scan spark merge"), (2L, "scan filter join"),
+      (3L, "merge merge merge scan")).toDF("doc_id", "text")
+    val template = Files.createTempDirectory("graft_lex_sweep").toString
+    try {
+      TextAnalysis.saveLexicalIndex(docs.filter($"doc_id" <= 2), template, nBuckets = 2)
+      val terms = Seq("spark", "merge", "scan")
+      // the audit runs on every reader the sweep resolves: before the
+      // verb, after each crash, and after recover plus the rerun
+      def open(dir: String): () => Seq[String] = {
+        val audit = TextAnalysis.validateLexicalIndex(spark, dir).collect()(0)
+        assert(audit.getAs[Boolean]("postings_consistent") &&
+          audit.getAs[Boolean]("terms_consistent"), s"$dir audits torn: $audit")
+        val answer = TextAnalysis.bm25QueryIndex(spark, dir, terms, k = 10)
+        () => answer.collect().map(_.toString).toSeq
+      }
+      val recover = (dir: String) => SegmentStore.recover(spark, dir)
+      val t0 = System.nanoTime()
+      val appendSteps = FaultFs.crashSweep(spark, template, open, recover) { dir =>
+        TextAnalysis.appendLexicalIndex(docs.filter($"doc_id" === 3L), dir)
+      }
+      val t1 = System.nanoTime()
+      val saveSteps = FaultFs.crashSweep(spark, template, open, recover) { dir =>
+        TextAnalysis.saveLexicalIndex(docs, dir, nBuckets = 2)
+      }
+      info(f"append: $appendSteps steps in ${(t1 - t0) / 1e9}%.1f s; " +
+        f"save: $saveSteps steps in ${(System.nanoTime() - t1) / 1e9}%.1f s")
+      assert(appendSteps >= 6 && saveSteps >= 6, s"$appendSteps, $saveSteps")
+    } finally Gates.deleteTree(template)
+  }
+
+  test("a BM25 read at 64 buckets lists only _manifest and starts no " +
+      "file-listing job: the memo collects and the scoring scan are its jobs") {
+    val docs = (1 to 300).map(i => (i.toLong, s"spark w${i % 97} v${i % 13}"))
+      .toDF("doc_id", "text")
+    val dir = Files.createTempDirectory("graft_lex_zero").toString
+    val sc = spark.sparkContext
+    // (SQL execution id, description) of every job started
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add((
+        String.valueOf(e.properties.getProperty("spark.sql.execution.id")),
+        String.valueOf(e.properties.getProperty("spark.job.description"))))
+    }
+    try {
+      // 64 buckets × 2 components + 1 stat dir: over the 32-path threshold
+      // above which a listing index would launch a listing job
+      TextAnalysis.saveLexicalIndex(docs, dir, nBuckets = 64)
+      FaultFs.install(spark)
+      sc.addSparkListener(listener)
+      def read(): (Seq[org.apache.spark.sql.Row], Seq[String], Seq[(String, String)]) = {
+        jobs.clear()
+        val (rows, reads) = FaultFs.reads(TextAnalysis.bm25QueryIndex(spark,
+          FaultFs.uri(dir), Seq("spark", "w7", "v3"), k = 5).collect().toSeq)
+        // marker: listener events arrive in order, so once the marker's
+        // start is seen, every job the read started is too
+        val marker = s"marker-${System.nanoTime()}"
+        sc.setJobDescription(marker)
+        try sc.parallelize(Seq(1)).count() finally sc.setJobDescription(null)
+        def seen = jobs.toArray(Array.empty[(String, String)]).toSeq
+        val deadline = System.nanoTime() + 30000000000L
+        while (!seen.exists(_._2 == marker) && System.nanoTime() < deadline) Thread.sleep(20)
+        (rows, reads, seen.filter(_._2 != marker))
+      }
+      val (cold, coldReads, coldJobs) = read()
+      val (warm, warmReads, warmJobs) = read()
+      assert(cold.nonEmpty && warm == cold)
+      Seq(coldReads, warmReads).foreach { reads =>
+        assert(reads.filter(_.startsWith("listStatus")) == Seq("listStatus _manifest"), reads)
+      }
+      Seq(coldJobs, warmJobs).foreach { js =>
+        assert(js.nonEmpty && js.forall(j => j._1 != "null" && !j._2.contains("Listing")), js)
+      }
+      // cold: the stats memo collect, the dfq memo collect and the scoring
+      // scan; warm (both memos hit on the same manifest): the scan alone
+      assert(coldJobs.map(_._1).distinct.length == 3, coldJobs)
+      assert(warmJobs.map(_._1).distinct.length == 1, warmJobs)
+    } finally {
+      sc.removeSparkListener(listener)
+      Gates.deleteTree(dir)
     }
   }
 }

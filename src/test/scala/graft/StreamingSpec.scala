@@ -156,12 +156,6 @@ class StreamingSpec extends SparkSpec {
   private def rowsOf(view: org.apache.spark.sql.DataFrame): Seq[String] =
     view.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
-  private def copyOf(dir: String): String = {
-    val d = Files.createTempDirectory("serve_crash").toFile
-    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(dir), d)
-    d.getAbsolutePath
-  }
-
   /** The files the current view reads, per day. */
   private def viewFiles(dir: String): Map[String, Seq[String]] =
     StreamingPipeline.servingView(spark, dir).inputFiles.toSeq
@@ -176,43 +170,12 @@ class StreamingSpec extends SparkSpec {
     dir
   }
 
-  /**
-   * Crash `verb` at each of its filesystem write steps in turn (the Nth
-   * create/rename/delete/mkdirs fails, and every later one), each time on
-   * a fresh copy of `template`. After each crash, a view resolved before
-   * the verb still reads the old cells, a fresh view reads exactly the old
-   * or the new cells, and recover() plus a rerun reads exactly the new
-   * cells. Returns the number of crash points swept.
-   */
-  private def crashSweep(template: String)(verb: String => Unit): Int = {
-    FaultFs.install(spark)
-    val before = rowsOf(StreamingPipeline.servingView(spark, template))
-    val after = {
-      val d = copyOf(template)
-      verb(d)
-      rowsOf(StreamingPipeline.servingView(spark, d))
-    }
-    var n = 0
-    var completed = false
-    while (!completed) {
-      n += 1
-      val local = copyOf(template)
-      val dir = FaultFs.uri(local)
-      val pinned = StreamingPipeline.servingView(spark, dir)
-      completed = FaultFs.crashAt(spark, n)(verb(dir))
-      assert(rowsOf(pinned) == before, s"step $n: a view resolved before the verb changed")
-      val fresh = rowsOf(StreamingPipeline.servingView(spark, dir))
-      assert(fresh == before || fresh == after, s"step $n: a fresh view reads $fresh")
-      if (!completed) {
-        StreamingPipeline.recover(spark, dir)
-        verb(dir)
-      }
-      assert(rowsOf(StreamingPipeline.servingView(spark, dir)) == after,
-        s"step $n: recover() and a rerun did not converge")
-      Gates.deleteTree(local)
-    }
-    n - 1
-  }
+  /** [[FaultFs.crashSweep]] over the serving table's views. */
+  private def crashSweep(template: String)(verb: String => Unit): Int =
+    FaultFs.crashSweep(spark, template, dir => {
+      val view = StreamingPipeline.servingView(spark, dir)
+      () => rowsOf(view)
+    }, StreamingPipeline.recover(spark, _))(verb)
 
   test("crash-atomic upsert: a writer killed at ANY point of the commit " +
     "protocol leaves (or recovers to) a consistent table") {
@@ -230,7 +193,7 @@ class StreamingSpec extends SparkSpec {
     "leaves the old or the new table, and recover() converges") {
     val template = crashTemplate()
     val compactSteps = crashSweep(template) { dir =>
-      StreamingPipeline.compact(spark, dir, filesPerDay = 2, sortByKey = true)
+      StreamingPipeline.compact(spark, dir, filesPerDay = 2)
     }
     val retainSteps = crashSweep(template) { dir =>
       assert(StreamingPipeline.retainFrom(spark, dir, "2024-01-02") == Seq("2024-01-01"))
@@ -274,7 +237,7 @@ class StreamingSpec extends SparkSpec {
     val before = StreamingPipeline.servingView(spark, dir)
       .orderBy($"key", $"window_start").collect().toSeq
 
-    StreamingPipeline.compact(spark, dir, filesPerDay = 3, sortByKey = true)
+    StreamingPipeline.compact(spark, dir, filesPerDay = 3)
     val after = StreamingPipeline.servingView(spark, dir)
       .orderBy($"key", $"window_start").collect().toSeq
     assert(after == before, "keyed compaction must be content-neutral")
@@ -308,7 +271,7 @@ class StreamingSpec extends SparkSpec {
       StreamingPipeline.upsertBatch(
         cell(k, "2024-02-02 00:00:00", 1L, 1.0), skewDir)
     }
-    StreamingPipeline.compact(spark, skewDir, filesPerDay = 2, sortByKey = true)
+    StreamingPipeline.compact(spark, skewDir, filesPerDay = 2)
     Seq("2024-02-01", "2024-02-02").foreach { day =>
       val n = viewFiles(skewDir)(day).length
       assert(n == 2, s"day $day must hold exactly filesPerDay files, got $n")
@@ -396,7 +359,7 @@ class StreamingSpec extends SparkSpec {
     }
     // more files than spark.sql.sources.parallelPartitionDiscovery.threshold
     // (32), where a listing index would launch a listing job
-    StreamingPipeline.compact(spark, dir, filesPerDay = 20, sortByKey = true)
+    StreamingPipeline.compact(spark, dir, filesPerDay = 20)
     FaultFs.install(spark)
     val sc = spark.sparkContext
     val group = s"serving-view-${System.nanoTime()}"
@@ -594,7 +557,7 @@ class StreamingSpec extends SparkSpec {
     var completed = false
     while (!completed) {
       n += 1
-      val local = copyOf(dir)
+      val local = FaultFs.copyOf(dir)
       val manifests = new java.io.File(local, "_manifest")
       manifests.listFiles().foreach(_.setLastModified(System.currentTimeMillis() - 3600000L))
       completed = FaultFs.crashAt(spark, n)(StreamingPipeline.recover(spark, FaultFs.uri(local)))
