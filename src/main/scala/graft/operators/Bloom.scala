@@ -204,63 +204,41 @@ object Bloom {
     * of an ingest pipeline ("have we seen this key"), the
     * winnow/BM25/moments lifecycle discipline applied to membership. */
   def saveWords(filter: DataFrame, path: String): Unit =
-    filter.select(col("w"), col("bits"))
-      .coalesce(1).sortWithinPartitions(col("w"))
-      .write.mode("overwrite").parquet(path)
+    SegmentStore.write(wordsLayout(filter), path, replace = true)
 
-  /** Append a new slice's words as delta files (no rewrite of the base);
-    * [[loadWords]] folds duplicates by word-wise OR. */
+  /** Append a new slice's words as a [[SegmentStore]] append commit (no
+    * rewrite of the base); [[loadWords]] folds duplicates by word-wise OR. */
   def appendWords(filter: DataFrame, path: String): Unit =
-    filter.select(col("w"), col("bits"))
-      .coalesce(1).sortWithinPartitions(col("w"))
-      .write.mode("append").parquet(path)
+    SegmentStore.write(wordsLayout(filter), path, replace = false)
 
-  /** Load base + deltas back into ONE merged filter: bit-OR per word —
+  private def wordsLayout(filter: DataFrame): DataFrame =
+    filter.select(col("w"), col("bits")).coalesce(1).sortWithinPartitions(col("w"))
+
+  /** Load base + appends back into ONE merged filter: bit-OR per word —
     * exactly the filter a single build over the union would produce
     * ([[bloomMerge]]'s law, applied at the storage boundary). */
   def loadWords(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-      .groupBy(col("w"))
-      .agg(call_function("bit_or", col("bits")).as("bits"))
+    orWords(SegmentStore.load(spark, path, "bloom words"))
+
+  private def orWords(words: DataFrame): DataFrame =
+    words.groupBy(col("w")).agg(call_function("bit_or", col("bits")).as("bits"))
 
   /**
-   * Compact a words artifact: fold the base [[saveWords]] plus accumulated
-   * [[appendWords]] delta files into ONE merged generation at `dst` —
-   * the fold IS the merge semantics (word-wise bit-OR, [[loadWords]]'s
-   * law), so the compacted artifact holds ≤ m/62 rows forever after no
-   * matter how many slices were appended. Under per-trigger membership
-   * maintenance the pile otherwise grows one file set per batch for an
-   * artifact whose information content is fixed-size (the
-   * [[JoinPlanner.compactTableProfile]] shape). Audited: the merged word
-   * set of `dst` must checksum-match the merged pile (xor of per-row
-   * hashes — order-free, overflow-free under ANSI), so a source changing
-   * mid-compaction fails loudly. Production shape: fresh path +
-   * [[Generations]] pointer flip; the old generation stays readable.
+   * Compact a words artifact: fold the base [[saveWords]] plus its
+   * [[appendWords]] commits into ONE merged commit at `dst` — the fold IS
+   * the merge semantics (word-wise bit-OR, [[loadWords]]'s law), so the
+   * compacted artifact holds ≤ m/62 rows forever after no matter how many
+   * slices were appended. Under per-trigger membership maintenance the
+   * pile otherwise grows one file set per batch for an artifact whose
+   * information content is fixed-size (the
+   * [[JoinPlanner.compactTableProfile]] shape). Audited on the merged
+   * word set by [[SegmentStore.foldCompact]]. Production shape: fresh
+   * path + [[Generations]] pointer flip; the old generation stays readable.
    */
   def compactWords(spark: org.apache.spark.sql.SparkSession,
-                   src: String, dst: String): Unit = {
-    require(src != dst, "compactWords: dst must be a fresh path")
-    def chk(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)).as("n"),
-        coalesce(call_function("bit_xor", xxhash64(col("w"), col("bits"))),
-          lit(0L)).as("x")).collect()(0)
-      (r.getLong(0), r.getLong(1))
-    }
-    loadWords(spark, src)
-      .coalesce(1).sortWithinPartitions(col("w"))
-      .write.mode("overwrite").parquet(dst)
-    // both audits AFTER the write (src re-read detects a mid-compaction
-    // append — the compactBandIndex contract), fanned out against each
-    // other (guide §2.6)
-    var pre: (Long, Long) = null
-    var post: (Long, Long) = null
-    Jobs.concurrently(
-      () => pre = chk(loadWords(spark, src)),
-      () => post = chk(spark.read.parquet(dst)))
-    require(pre == post,
-      s"compactWords: merged word set changed ($pre -> $post) — the source " +
-        "changed mid-compaction; re-run")
-  }
+                   src: String, dst: String): Unit =
+    SegmentStore.foldCompact(spark, src, dst, "bloom words", Nil, orWords)(
+      pile => wordsLayout(orWords(pile)))
 
   /**
    * Bloom-pruned equi-join: filter the FACT side down to bloom hits with

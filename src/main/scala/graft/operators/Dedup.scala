@@ -201,16 +201,19 @@ object Dedup {
    * row groups. Written sorted by `bh` within each band for that reason.
    */
   def saveBandIndex(index: DataFrame, path: String): Unit =
+    SegmentStore.write(bandLayout(index), path, replace = true, "band")
+
+  private def bandLayout(index: DataFrame): DataFrame =
     index.repartition(col("band")).sortWithinPartitions(col("bh"))
-      .write.mode("overwrite").partitionBy("band").parquet(path)
 
   /** Read a stored band index back; schema (id, bh, band). */
   def loadBandIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    SegmentStore.load(spark, path, "band index")
 
   /**
-   * Append an ingest batch's band rows as delta files under the same
-   * `band=` partition layout (no base rewrite — the segment-append
+   * Append an ingest batch's band rows as a [[SegmentStore]] append
+   * commit under the same `band=` partition layout (no base rewrite — the
+   * segment-append
    * discipline shared with [[graft.operators.Retrieval.appendTrigramIndex]]
    * and [[graft.streaming.StreamingWinnow.appendFingerprints]]): admitted
    * batches join the index they were just probed against, so
@@ -223,43 +226,24 @@ object Dedup {
    * silently probes nothing.
    */
   def appendBandIndex(index: DataFrame, path: String): Unit =
-    index.repartition(col("band")).sortWithinPartitions(col("bh"))
-      .write.mode("append").partitionBy("band").parquet(path)
+    SegmentStore.write(bandLayout(index), path, replace = false, "band")
 
   /**
-   * Compact a band index: fold the base save plus accumulated delta
-   * files into a fresh one-generation layout at `dst` — per band
-   * partition, `bh`-sorted files whose parquet min/max stats prune probe
-   * row groups again (each append lands unsorted RELATIVE to the base's
-   * runs, so under continuous ingest probes pay a growing file listing
-   * and overlapping stat ranges until a fold restores the layout). Rows
-   * are preserved VERBATIM (batches are id-distinct by construction —
-   * compaction is file-layout work, no dedup), audited by an exact
-   * row-count match; probing `dst` is row-identical to probing the pile.
-   * Production shape: a fresh generation published by the crash-atomic
-   * [[Generations.advance]] pointer flip (the ingest_lifecycle_capstone
-   * gate composes exactly that arc).
+   * Compact a band index: fold the base save plus its append commits into
+   * a fresh one-commit layout at `dst` — per band partition, `bh`-sorted
+   * files whose parquet min/max stats prune probe row groups again (each
+   * append lands unsorted RELATIVE to the base's runs, so under
+   * continuous ingest probes pay more files and overlapping stat ranges
+   * until a fold restores the layout). Rows are preserved VERBATIM
+   * (batches are id-distinct by construction — compaction is file-layout
+   * work, no dedup), audited by [[SegmentStore.foldCompact]]; probing
+   * `dst` is row-identical to probing the pile. Production shape: a fresh
+   * generation published by the crash-atomic [[Generations.advance]]
+   * pointer flip (the ingest_lifecycle_capstone gate composes that arc).
    */
   def compactBandIndex(spark: org.apache.spark.sql.SparkSession,
-                       src: String, dst: String): Unit = {
-    require(src != dst, "compactBandIndex: dst must be a fresh path")
-    val pile = spark.read.parquet(src)
-    pile.repartition(col("band")).sortWithinPartitions(col("bh"))
-      .write.mode("overwrite").partitionBy("band").parquet(dst)
-    // the source count is DELIBERATELY taken AFTER the dst write (not
-    // reused from the rewrite): re-listing src here is what detects an
-    // append landing mid-compaction — a pre-write count would compare
-    // the rewrite against its own input and always pass. The two counts
-    // are independent of each other — fanned out (guide §2.6)
-    var nSrc = 0L
-    var nDst = 0L
-    Jobs.concurrently(
-      () => nSrc = pile.count(),
-      () => nDst = spark.read.parquet(dst).count())
-    require(nSrc == nDst,
-      s"compactBandIndex: layout-only rewrite changed row count " +
-        s"($nSrc -> $nDst) — the source changed mid-compaction; re-run")
-  }
+                       src: String, dst: String): Unit =
+    SegmentStore.foldCompact(spark, src, dst, "band index", Seq("band"), identity)(bandLayout)
 
   /**
    * Near-dup pairs (new_id, corpus_id, jaccard) between a NEW batch and an

@@ -12,6 +12,11 @@ import org.apache.spark.sql.SparkSession
  * generation and the serving pointer flips to it. Without an engine
  * mechanism the flip is a manual path swap — racy against readers and
  * lost on a crash. This object makes it a crash-atomic engine operation.
+ * Within a generation, the lexical index and the eight append-grown
+ * families (band, trigram, winnow, benchmark, bloom, moments, sketch,
+ * entity) commit through [[SegmentStore]]: a generation dir is a store
+ * root, and a compaction into it is that store's first commit
+ * ([[SegmentStore.foldCompact]]).
  *
  * Layout under one artifact ROOT:
  * {{{

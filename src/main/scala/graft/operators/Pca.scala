@@ -307,63 +307,43 @@ object Pca {
   /** Persist a raw moment table ((d²+d+1) rows — KB-sized at any corpus
     * scale), sorted by (i, j) for deterministic files. */
   def saveMoments(table: DataFrame, path: String): Unit =
-    table.select(col("i"), col("j"), col("s"))
-      .coalesce(1).sortWithinPartitions(col("i"), col("j"))
-      .write.mode("overwrite").parquet(path)
+    SegmentStore.write(momentsLayout(table), path, replace = true)
 
-  /** Append a new slice's moment table as delta files (no rewrite);
-    * [[loadMoments]] merges duplicates by exact integer sum. */
+  /** Append a new slice's moment table as a [[SegmentStore]] append
+    * commit (no rewrite); [[loadMoments]] merges duplicates by exact
+    * integer sum. */
   def appendMoments(table: DataFrame, path: String): Unit =
+    SegmentStore.write(momentsLayout(table), path, replace = false)
+
+  private def momentsLayout(table: DataFrame): DataFrame =
     table.select(col("i"), col("j"), col("s"))
       .coalesce(1).sortWithinPartitions(col("i"), col("j"))
-      .write.mode("append").parquet(path)
 
-  /** Load base + deltas back into ONE merged moment table: the cell-wise
+  /** Load base + appends back into ONE merged moment table: the cell-wise
     * integer sum — [[moments]] over the union, exactly. */
   def loadMoments(spark: org.apache.spark.sql.SparkSession,
                   path: String): DataFrame =
-    spark.read.parquet(path)
-      .groupBy(col("i"), col("j")).agg(sum(col("s")).as("s"))
+    sumCells(SegmentStore.load(spark, path, "moment table"))
+
+  private def sumCells(table: DataFrame): DataFrame =
+    table.groupBy(col("i"), col("j")).agg(sum(col("s")).as("s"))
 
   /**
-   * Compact a moments artifact: fold the base [[saveMoments]] plus
-   * accumulated [[appendMoments]] delta files into ONE merged generation
-   * at `dst` — the fold IS the merge semantics (cell-wise exact integer
-   * sum, [[loadMoments]]'s law), so the compacted artifact holds
-   * (d²+d+1) rows forever after no matter how many slices were appended
-   * (under per-trigger incremental-PCA maintenance the pile otherwise
-   * grows one file set per batch). [[momentsFromTable]] over `dst` is
-   * byte-identical to the pile's by construction. Audited: the merged
-   * cell set of `dst` must checksum-match the merged pile (xor of
-   * per-row hashes over the exact decimal cells — order-free), so a
-   * source changing mid-compaction fails loudly. Production shape:
-   * fresh path + [[Generations]] pointer flip.
+   * Compact a moments artifact: fold the base [[saveMoments]] plus its
+   * [[appendMoments]] commits into ONE merged commit at `dst` — the fold
+   * IS the merge semantics (cell-wise exact integer sum, [[loadMoments]]'s
+   * law), so the compacted artifact holds (d²+d+1) rows forever after no
+   * matter how many slices were appended (under per-trigger
+   * incremental-PCA maintenance the pile otherwise grows one file set per
+   * batch). [[momentsFromTable]] over `dst` is byte-identical to the
+   * pile's by construction. Audited on the merged cell set by
+   * [[SegmentStore.foldCompact]]. Production shape: fresh path +
+   * [[Generations]] pointer flip.
    */
   def compactMoments(spark: org.apache.spark.sql.SparkSession,
-                     src: String, dst: String): Unit = {
-    require(src != dst, "compactMoments: dst must be a fresh path")
-    def chk(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)).as("n"),
-        coalesce(call_function("bit_xor",
-          xxhash64(col("i"), col("j"), col("s").cast("string"))), lit(0L)).as("x"))
-        .collect()(0)
-      (r.getLong(0), r.getLong(1))
-    }
-    loadMoments(spark, src)
-      .coalesce(1).sortWithinPartitions(col("i"), col("j"))
-      .write.mode("overwrite").parquet(dst)
-    // both audits AFTER the write (src re-read detects a mid-compaction
-    // append — the compactBandIndex contract), fanned out against each
-    // other (guide §2.6)
-    var pre: (Long, Long) = null
-    var post: (Long, Long) = null
-    Jobs.concurrently(
-      () => pre = chk(loadMoments(spark, src)),
-      () => post = chk(spark.read.parquet(dst)))
-    require(pre == post,
-      s"compactMoments: merged cell set changed ($pre -> $post) — the " +
-        "source changed mid-compaction; re-run")
-  }
+                     src: String, dst: String): Unit =
+    SegmentStore.foldCompact(spark, src, dst, "moment table", Nil, sumCells)(
+      pile => momentsLayout(sumCells(pile)))
 
   /**
    * Derive (n, mean, cov) from a (merged) moment table — the same

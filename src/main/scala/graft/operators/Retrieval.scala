@@ -132,30 +132,30 @@ object Retrieval {
     * substring search. */
   def saveTrigramIndex(postings: DataFrame, path: String,
                        partitions: Int = 8): Unit =
-    postings.repartitionByRange(partitions, col("gram"))
-      .sortWithinPartitions(col("gram"))
-      .write.mode("overwrite").parquet(path)
+    SegmentStore.write(gramLayout(postings, partitions), path, replace = true)
 
-  /** Append a new document slice's postings as delta files (no base
-    * rewrite) — (id, gram) pairs across slices are distinct as long as
-    * the slices are, so the loaded union needs no dedup. */
+  /** Append a new document slice's postings as a [[SegmentStore]] append
+    * commit (no base rewrite) — (id, gram) pairs across slices are
+    * distinct as long as the slices are, so the loaded union needs no
+    * dedup. */
   def appendTrigramIndex(postings: DataFrame, path: String,
                          partitions: Int = 2): Unit =
-    postings.repartitionByRange(partitions, col("gram"))
-      .sortWithinPartitions(col("gram"))
-      .write.mode("append").parquet(path)
+    SegmentStore.write(gramLayout(postings, partitions), path, replace = false)
+
+  private def gramLayout(postings: DataFrame, partitions: Int): DataFrame =
+    postings.repartitionByRange(partitions, col("gram")).sortWithinPartitions(col("gram"))
 
   /**
-   * Compact a trigram index: fold the base save plus accumulated
-   * delta-append files into a fresh gram-range-partitioned, gram-sorted
-   * GENERATION at `dst` — the [[graft.operators.TextAnalysis.compactLexicalIndex]]
-   * discipline applied to the substring index. Every [[appendTrigramIndex]]
-   * adds small files whose gram ranges overlap the base layout, so under
-   * continuous ingest each search pays a growing file listing and
-   * un-pruned row groups until compaction restores the one-generation
-   * range-partitioned layout. Posting rows are preserved VERBATIM
-   * (slices are distinct by construction — compaction is pure file-layout
-   * work, no dedup, no regroup), audited by an exact row-count match, so
+   * Compact a trigram index: fold the base save plus its append commits
+   * into a fresh gram-range-partitioned, gram-sorted GENERATION at `dst`
+   * — the [[graft.operators.TextAnalysis.compactLexicalIndex]] discipline
+   * applied to the substring index. Every [[appendTrigramIndex]] adds
+   * small files whose gram ranges overlap the base layout, so under
+   * continuous ingest each search pays more files and un-pruned row
+   * groups until compaction restores the one-commit range-partitioned
+   * layout. Posting rows are preserved VERBATIM (slices are distinct by
+   * construction — compaction is pure file-layout work, no dedup, no
+   * regroup), audited by [[SegmentStore.foldCompact]], so
    * [[searchTrigramIndex]] against `dst` is row-identical to `src` by
    * construction. Production shape: the rewrite lands at a fresh path and
    * the serving pointer flips — crash-safe, the old generation stays
@@ -163,23 +163,9 @@ object Retrieval {
    */
   def compactTrigramIndex(spark: org.apache.spark.sql.SparkSession,
                           src: String, dst: String,
-                          partitions: Int = 8): Unit = {
-    require(src != dst, "compactTrigramIndex: dst must be a fresh path")
-    spark.read.parquet(src)
-      .repartitionByRange(partitions, col("gram"))
-      .sortWithinPartitions(col("gram"))
-      .write.mode("overwrite").parquet(dst)
-    // both counts AFTER the write (src re-list detects a mid-compaction
-    // append — the compactBandIndex contract), fanned out (guide §2.6)
-    var nSrc = 0L
-    var nDst = 0L
-    Jobs.concurrently(
-      () => nSrc = spark.read.parquet(src).count(),
-      () => nDst = spark.read.parquet(dst).count())
-    require(nSrc == nDst,
-      s"compactTrigramIndex: layout-only rewrite changed row count " +
-        s"($nSrc -> $nDst) — the source changed mid-compaction; re-run")
-  }
+                          partitions: Int = 8): Unit =
+    SegmentStore.foldCompact(spark, src, dst, "trigram index", Nil, identity)(
+      gramLayout(_, partitions))
 
   /**
    * Substring search FROM the persisted index: candidate generation
@@ -193,6 +179,6 @@ object Retrieval {
                          idCol: String = "doc_id",
                          textCol: String = "text"): DataFrame =
     verifyCandidates(docs,
-      candidatesFromPostings(spark.read.parquet(path), needle, idCol),
+      candidatesFromPostings(SegmentStore.load(spark, path, "trigram index"), needle, idCol),
       needle, idCol, textCol)
 }

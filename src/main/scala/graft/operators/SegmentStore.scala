@@ -3,13 +3,23 @@ package graft.operators
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.functions.{call_function, coalesce, col, count, lit, xxhash64}
 import org.apache.spark.sql.graftshim.GraftPlanBridge
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /**
  * A partitioned parquet table that is never overwritten in place: the
- * commit step of the serving table ([[graft.streaming.StreamingPipeline]])
- * and of the lexical index ([[TextAnalysis.saveLexicalIndex]]).
+ * commit step of every persisted artifact family that grows by appends.
+ * Its clients are the serving table ([[graft.streaming.StreamingPipeline]]),
+ * the lexical index ([[TextAnalysis.saveLexicalIndex]]), and, through
+ * [[write]], [[load]] and [[foldCompact]], the band index
+ * ([[Dedup.saveBandIndex]]), the trigram index
+ * ([[Retrieval.saveTrigramIndex]]), winnow fingerprints
+ * ([[graft.streaming.StreamingWinnow.saveFingerprints]]), the entity
+ * dictionary ([[graft.streaming.StreamingEntity.saveDictionary]]), bloom
+ * words ([[Bloom.saveWords]]), PCA moments ([[Pca.saveMoments]]), the HLL
+ * sketch table ([[Sketches.saveSketchTable]]) and the benchmark index
+ * ([[TextAnalysis.saveBenchmarkIndex]]).
  *
  * Commit S writes new files under `root/c-S/`, one directory level per
  * partition column as `partitionBy` writes them
@@ -25,7 +35,13 @@ import org.apache.spark.sql.types.StructType
  *                              its directory names spell them), its length
  *   R  path                    a dir the commit retired: a partition dir
  *                              left with no live file, or a whole `c-N`
+ *   S  k  json                 the table's schema (Spark's JSON form):
+ *                              the data columns, then the k partition
+ *                              columns; written by [[write]], carried by
+ *                              every later commit
  * }}}
+ * A manifest without an `S` line (the serving table's, the lexical
+ * index's) is read with the schema its client passes to [[frame]].
  * Retired dirs stay on disk for [[RetiredGraceMs]] after the commit that
  * retired them, then [[recover]] deletes them. One writer per store.
  */
@@ -35,8 +51,10 @@ private[graft] object SegmentStore {
   final case class Entry(path: String, values: Seq[String], bytes: Long)
 
   /** A published commit. `mtime` is the manifest file's modification time:
-    * with `seq` it tells two stores apart that reused one path. */
-  final case class Manifest(seq: Long, mtime: Long, live: Seq[Entry], retired: Seq[String])
+    * with `seq` it tells two stores apart that reused one path. `schema`
+    * is the (data, partition) schema of its `S` line. */
+  final case class Manifest(seq: Long, mtime: Long, live: Seq[Entry], retired: Seq[String],
+                            schema: Option[(StructType, StructType)])
 
   /** How long the files a commit retired stay on disk after it: a reader
     * resolved just before the commit still reads them. A serving request
@@ -47,19 +65,25 @@ private[graft] object SegmentStore {
 
   private def manifestDir(root: String) = new Path(root, "_manifest")
 
-  private def read(hfs: FileSystem, seq: Long, file: FileStatus): Manifest = {
+  private def parse(hfs: FileSystem, seq: Long, file: FileStatus): Manifest = {
     val rows = SeqFiles.read(hfs, file.getPath).map(_.split('\t').toSeq)
     Manifest(seq, file.getModificationTime,
       rows.collect { case "F" +: rest if rest.length >= 2 =>
         Entry(rest.last, rest.dropRight(2), rest(rest.length - 2).toLong)
       },
-      rows.collect { case Seq("R", rel) => rel })
+      rows.collect { case Seq("R", rel) => rel },
+      rows.collectFirst { case Seq("S", k, json) =>
+        val all = DataType.fromJson(json).asInstanceOf[StructType]
+        (StructType(all.dropRight(k.toInt)), StructType(all.takeRight(k.toInt)))
+      })
   }
+
+  private def newest(hfs: FileSystem, root: String): Option[(Long, FileStatus)] =
+    SeqFiles.numbered(SeqFiles.listAll(hfs, manifestDir(root)), "m").lastOption
 
   /** The newest manifest: one listing of `_manifest` and one read. */
   def latest(hfs: FileSystem, root: String): Option[Manifest] =
-    SeqFiles.numbered(SeqFiles.listAll(hfs, manifestDir(root)), "m").lastOption
-      .map { case (seq, st) => read(hfs, seq, st) }
+    newest(hfs, root).map { case (seq, st) => parse(hfs, seq, st) }
 
   /** A frame over exactly the files of `entries`, with a fixed schema. No
     * filesystem call, no Spark job. */
@@ -69,6 +93,23 @@ private[graft] object SegmentStore {
     GraftPlanBridge.listedTable(spark, qualified.toString,
       entries.map(e => (new Path(qualified, e.path).toString, e.values, e.bytes)),
       dataSchema, partitionSchema)
+  }
+
+  /** The newest commit of the store at `root` as a frame over exactly its
+    * files, in the schema [[write]] recorded; None when nothing was
+    * committed. One listing of `_manifest`, one read, no Spark job. */
+  def read(spark: SparkSession, root: String): Option[DataFrame] =
+    latest(SeqFiles.fs(spark, root), root).map(m => pinned(spark, root, m))
+
+  /** [[read]], failing loudly when nothing was committed. */
+  def load(spark: SparkSession, root: String, artifact: String): DataFrame =
+    read(spark, root).getOrElse(
+      throw new IllegalStateException(s"no $artifact at $root — save first"))
+
+  private def pinned(spark: SparkSession, root: String, m: Manifest): DataFrame = {
+    val (data, part) = m.schema.getOrElse(
+      throw new IllegalStateException(s"the manifest of $root records no schema"))
+    frame(spark, root, m.live, data, part)
   }
 
   /** The parquet files under `dir`, whose partition dirs are `names`. */
@@ -90,16 +131,28 @@ private[graft] object SegmentStore {
     * entries minus those, plus the new files. Publishes nothing when
     * nothing was superseded or written. Returns the superseded entries. */
   def commit(spark: SparkSession, root: String, partitionSchema: StructType)
-            (rewrite: (Seq[Entry], String) => Seq[Entry]): Seq[Entry] = {
+            (rewrite: (Seq[Entry], String) => Seq[Entry]): Seq[Entry] =
+    commitWith(spark, root, partitionSchema, None)(
+      (cur, dir) => rewrite(cur.fold(Seq.empty[Entry])(_.live), dir))(_ => ())
+
+  /** [[commit]] with the manifest `rewrite` starts from, a `schema` for
+    * the `S` line (else the current one is carried), and a `check` of the
+    * new files that runs before the publish. With a schema it always
+    * publishes. */
+  private def commitWith(spark: SparkSession, root: String, partitionSchema: StructType,
+                         schema: Option[(StructType, StructType)])
+                        (rewrite: (Option[Manifest], String) => Seq[Entry])
+                        (check: Seq[Entry] => Unit): Seq[Entry] = {
     val hfs = SeqFiles.fs(spark, root)
     recover(spark, root)
     val cur = latest(hfs, root)
     val live = cur.fold(Seq.empty[Entry])(_.live)
     val seq = cur.fold(0L)(_.seq) + 1
     val dir = new Path(root, SeqFiles.name("c", seq))
-    val dropped = rewrite(live, dir.toString)
+    val dropped = rewrite(cur, dir.toString)
     val added = written(hfs, dir, dir.getName, partitionSchema.fieldNames.toSeq, Nil)
-    if (dropped.nonEmpty || added.nonEmpty) {
+    if (schema.nonEmpty || dropped.nonEmpty || added.nonEmpty) {
+      check(added)
       val next = live.filterNot(dropped.toSet) ++ added
       def unit(rel: String) = rel.substring(0, rel.lastIndexOf('/'))
       def commitOf(rel: String) = rel.takeWhile(_ != '/')
@@ -107,11 +160,70 @@ private[graft] object SegmentStore {
       val retired = live.map(e => unit(e.path)).distinct
         .filterNot(next.map(e => unit(e.path)).toSet)
         .map(u => if (keptCommits(commitOf(u))) u else commitOf(u)).distinct
+      val schemaLine = schema.orElse(cur.flatMap(_.schema)).map { case (data, part) =>
+        s"S\t${part.length}\t${StructType(data ++ part).json}"
+      }
       SeqFiles.publish(hfs, manifestDir(root), "m", seq,
         next.map(e => ("F" +: e.values :+ e.bytes.toString :+ e.path).mkString("\t")) ++
-          retired.map("R\t" + _))
+          retired.map("R\t" + _) ++ schemaLine)
     }
     dropped
+  }
+
+  /** Commit the laid-out frame `df` as the next commit of `root`,
+    * partitioned by `partitionBy`: a save (`replace`) supersedes every
+    * live file, an append adds its files to them. It always publishes, so
+    * a save of an empty frame loads empty. An append must match the
+    * stored column names and types. */
+  def write(df: DataFrame, root: String, replace: Boolean, partitionBy: String*): Unit =
+    commitFrame(df, root, replace, partitionBy)(_ => ())
+
+  /** [[write]], running `check` on a frame over the new files before the
+    * publish. */
+  private def commitFrame(df: DataFrame, root: String, replace: Boolean,
+                          partitionBy: Seq[String])(check: DataFrame => Unit): Unit = {
+    val part = StructType(partitionBy.map(df.schema(_)))
+    val data = StructType(df.schema.filterNot(f => partitionBy.contains(f.name)))
+    def shape(s: StructType) = s.map(f => (f.name, f.dataType.catalogString))
+    commitWith(df.sparkSession, root, part, Some((data, part))) { (cur, dir) =>
+      cur.flatMap(_.schema).filterNot(_ => replace).foreach { case (d, p) =>
+        require(shape(d) ++ shape(p) == shape(data) ++ shape(part),
+          s"appending ${data ++ part} to the store at $root of ${d ++ p}")
+      }
+      df.write.mode("overwrite").partitionBy(partitionBy: _*).parquet(dir)
+      cur.filter(_ => replace).fold(Seq.empty[Entry])(_.live)
+    }(added => check(frame(df.sparkSession, root, added, data, part)))
+  }
+
+  /**
+   * Compact `src` into `dst`: pin the newest manifest of `src`, write
+   * `fold(frame)` (laid out, partitioned by `partitionBy`) as a save of
+   * `dst`, and publish it only if (1) the written files checksum-match
+   * the fold of the pinned source under `view` (the family's load-time
+   * merge onto its audit columns: row count plus the xor of per-row
+   * hashes, order-free) and (2) the newest manifest of `src` is still the
+   * pinned one, one listing and no Spark job: an append that landed while
+   * the fold ran fails the compaction, and `dst` keeps no manifest.
+   */
+  def foldCompact(spark: SparkSession, src: String, dst: String, artifact: String,
+                  partitionBy: Seq[String], view: DataFrame => DataFrame)
+                 (fold: DataFrame => DataFrame): Unit = {
+    require(src != dst, s"compacting a $artifact: dst must be a fresh path")
+    val hfs = SeqFiles.fs(spark, src)
+    val source = latest(hfs, src).getOrElse(
+      throw new IllegalStateException(s"no $artifact at $src — save first"))
+    val pile = pinned(spark, src, source)
+    commitFrame(fold(pile), dst, replace = true, partitionBy) { done =>
+      def sums(df: DataFrame) = df.select(xxhash64(df.columns.map(df(_)): _*).as("h"))
+        .agg(count(lit(1)), coalesce(call_function("bit_xor", col("h")), lit(0L)))
+      val r = sums(view(pile)).crossJoin(sums(view(done))).head()
+      require(r.getLong(0) == r.getLong(2) && r.getLong(1) == r.getLong(3),
+        s"compacting a $artifact: $dst holds (${r.getLong(2)} rows, ${r.getLong(3)}), " +
+          s"the fold of $src (${r.getLong(0)} rows, ${r.getLong(1)}) — re-run")
+      require(newest(hfs, src).map { case (s, st) => (s, st.getModificationTime) } ==
+        Some((source.seq, source.mtime)),
+        s"compacting a $artifact: the source changed mid-compaction; re-run")
+    }
   }
 
   /** Sweep the store: delete a crashed commit's leftovers (`.tmp`
@@ -133,7 +245,7 @@ private[graft] object SegmentStore {
     manifests.zip(manifests.drop(1))
       .takeWhile { case (_, (_, next)) => next.getModificationTime < cutoff }
       .foreach { case ((_, old), (nextSeq, next)) =>
-        read(hfs, nextSeq, next).retired.foreach(rel => hfs.delete(new Path(root, rel), true))
+        parse(hfs, nextSeq, next).retired.foreach(rel => hfs.delete(new Path(root, rel), true))
         hfs.delete(old.getPath, false)
       }
   }

@@ -53,12 +53,12 @@ object Sketches {
    */
   def saveSketchTable(table: DataFrame, path: String,
                       groupCols: Seq[String]): Unit =
-    writeSketchTable(table, path, groupCols, "overwrite")
+    SegmentStore.write(sketchLayout(table, groupCols), path, replace = true)
 
-  /** Append an ingest slice's per-group sketches as delta rows (no base
-    * rewrite); [[loadSketchTable]] folds duplicates by register union —
-    * the HLL merge law, applied at the storage boundary. The slice must be
-    * sketched at the SAME lgConfigK: the loader unions with
+  /** Append an ingest slice's per-group sketches as a [[SegmentStore]]
+    * append commit (no base rewrite); [[loadSketchTable]] folds duplicates by register union
+    * — the HLL merge law, applied at the storage boundary. The slice must
+    * be sketched at the SAME lgConfigK: the loader unions with
     * `allowDifferentLgConfigK = false`, so a shape mix fails EVERY
     * subsequent load loudly — and to keep one bad write from poisoning
     * the artifact until then, the append itself validates the slice's
@@ -66,112 +66,81 @@ object Sketches {
     * boundary (inline with the write — no extra pass, the same
     * shape-per-slice discipline as the profile bundle's depth/width). */
   def appendSketchTable(table: DataFrame, path: String,
-                        groupCols: Seq[String]): Unit =
-    writeSketchTable(table, path, groupCols, "append")
-
-  /** lgConfigK of one stored sketch row (byte 3 of the DataSketches HLL
-    * preamble — spec-pinned against sketches built at known k), or None
-    * when the artifact doesn't exist / holds no rows yet. */
-  private def storedLgK(spark: org.apache.spark.sql.SparkSession,
-                        path: String): Option[Byte] = {
-    // ONLY a missing/empty artifact maps to None (the first append
-    // creates it) — checked via the filesystem, not by classifying read
-    // exceptions, so a corrupt footer / permission failure still
-    // propagates instead of silently disabling the shape guard, and the
-    // bootstrap path doesn't depend on Spark's error-condition strings
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val hfs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!hfs.exists(hp) ||
-        !hfs.listStatus(hp).exists(s => s.isFile && s.getLen > 0)) None
-    else
-      // first NON-NULL sketch (a null-sketch row must not disable the
-      // check); one k per artifact is the documented contract — an
-      // already-mixed pile still fails loudly at load
-      spark.read.parquet(path).select(col("sketch"))
-        .filter(col("sketch").isNotNull).limit(1).collect()
-        .headOption.map(_.getAs[Array[Byte]](0)(3))
-  }
-
-  private def writeSketchTable(table: DataFrame, path: String,
-                               groupCols: Seq[String], mode: String): Unit = {
-    require(groupCols.nonEmpty, "sketch table: need at least one group column")
-    val out = table.select((groupCols.map(col) :+ col("sketch")): _*)
+                        groupCols: Seq[String]): Unit = {
+    val out = sketchLayout(table, groupCols)
     // append-boundary shape check: every written sketch must carry the
     // artifact's lgConfigK (preamble byte 3) — checked inline with the
     // write so a wrong-k slice aborts THIS append instead of failing
     // every future load of an already-poisoned artifact
-    val checked = if (mode != "append") out else
-      storedLgK(out.sparkSession, path).fold(out) { k =>
-        out.withColumn("sketch",
-          // null first: substring(NULL) === ... is NULL, which would fall
-          // into the mismatch branch with a nonsense 0x<null> message
-          when(col("sketch").isNull, raise_error(lit(
-              s"appendSketchTable: NULL sketch in the appended slice at " +
-                s"$path — every row must carry a sketch")).cast("binary"))
-            .when(substring(col("sketch"), 4, 1) === lit(Array(k)), col("sketch"))
-            .otherwise(raise_error(concat(
-              lit(s"appendSketchTable: slice sketched at lgConfigK 0x"),
-              hex(substring(col("sketch"), 4, 1)),
-              lit(f" but the artifact at $path holds lgConfigK 0x$k%02X — " +
-                "rebuild the slice at the artifact's k (one k per artifact)")))
-              .cast("binary")))
-      }
-    checked
-      .repartitionByRange(groupCols.map(col): _*)
-      .sortWithinPartitions(groupCols.map(col): _*)
-      .write.mode(mode).parquet(path)
+    val checked = storedLgK(out.sparkSession, path).fold(out) { k =>
+      out.withColumn("sketch",
+        // null first: substring(NULL) === ... is NULL, which would fall
+        // into the mismatch branch with a nonsense 0x<null> message
+        when(col("sketch").isNull, raise_error(lit(
+            s"appendSketchTable: NULL sketch in the appended slice at " +
+              s"$path — every row must carry a sketch")).cast("binary"))
+          .when(substring(col("sketch"), 4, 1) === lit(Array(k)), col("sketch"))
+          .otherwise(raise_error(concat(
+            lit(s"appendSketchTable: slice sketched at lgConfigK 0x"),
+            hex(substring(col("sketch"), 4, 1)),
+            lit(f" but the artifact at $path holds lgConfigK 0x$k%02X — " +
+              "rebuild the slice at the artifact's k (one k per artifact)")))
+            .cast("binary")))
+    }
+    SegmentStore.write(checked, path, replace = false)
   }
 
-  /** Load base + deltas back into ONE sketch row per group: register
+  /** lgConfigK of one stored sketch row (byte 3 of the DataSketches HLL
+    * preamble — spec-pinned against sketches built at known k), read from
+    * the newest commit, or None when nothing was committed or it holds no
+    * sketch yet (the first append creates the artifact). */
+  private def storedLgK(spark: org.apache.spark.sql.SparkSession,
+                        path: String): Option[Byte] =
+    // first NON-NULL sketch (a null-sketch row must not disable the
+    // check); one k per artifact is the documented contract — an
+    // already-mixed pile still fails loudly at load
+    SegmentStore.read(spark, path).flatMap(_.select(col("sketch"))
+      .filter(col("sketch").isNotNull).limit(1).collect()
+      .headOption.map(_.getAs[Array[Byte]](0)(3)))
+
+  private def sketchLayout(table: DataFrame, groupCols: Seq[String]): DataFrame = {
+    require(groupCols.nonEmpty, "sketch table: need at least one group column")
+    table.select((groupCols.map(col) :+ col("sketch")): _*)
+      .repartitionByRange(groupCols.map(col): _*)
+      .sortWithinPartitions(groupCols.map(col): _*)
+  }
+
+  /** Load base + appends back into ONE sketch row per group: register
     * union per group (`hll_union_agg` — exactly the sketch a one-shot
     * build over the union of the slices produces), estimate re-derived
     * from the merged registers. */
   def loadSketchTable(spark: org.apache.spark.sql.SparkSession, path: String,
                       groupCols: Seq[String]): DataFrame =
-    spark.read.parquet(path)
-      .groupBy(groupCols.map(col): _*)
+    unionSketches(SegmentStore.load(spark, path, "sketch table"), groupCols)
+
+  private def unionSketches(table: DataFrame, groupCols: Seq[String]): DataFrame =
+    table.groupBy(groupCols.map(col): _*)
       .agg(hll_union_agg(col("sketch"), lit(false)).as("sketch"))
       .withColumn("estimate", hll_sketch_estimate(col("sketch")))
 
   /**
-   * Compact a sketch-table artifact: fold the base + delta pile into ONE
-   * row per group at `dst` — the fold IS the register union
+   * Compact a sketch-table artifact: fold the base + append commits into
+   * ONE row per group at `dst` — the fold IS the register union
    * [[loadSketchTable]] performs, so the compacted artifact holds |groups|
    * rows forever after no matter how many slices were appended (under
    * per-trigger maintenance the pile otherwise grows one file set per
-   * batch). Audited: the per-group ESTIMATES of `dst` must checksum-match
-   * the merged pile's (register unions are associative/idempotent, so the
-   * folded sketch estimates identically; comparing estimates rather than
-   * sketch bytes tolerates representation differences the estimate cannot
-   * see). Production shape: fresh path + [[Generations]] pointer flip.
+   * batch). Audited on the per-group ESTIMATES by
+   * [[SegmentStore.foldCompact]] (register unions are
+   * associative/idempotent, so the folded sketch estimates identically;
+   * estimates tolerate representation differences sketch bytes would
+   * not). Production shape: fresh path + [[Generations]] pointer flip.
    */
   def compactSketchTable(spark: org.apache.spark.sql.SparkSession,
                          src: String, dst: String,
-                         groupCols: Seq[String]): Unit = {
-    require(src != dst, "compactSketchTable: dst must be a fresh path")
-    def chk(df: DataFrame): (Long, Long) = {
-      val cs = groupCols.map(c => col(c).cast("string")) :+
-        col("estimate").cast("string")
-      val r = df.agg(count(lit(1)).as("n"),
-        coalesce(call_function("bit_xor", xxhash64(cs: _*)), lit(0L)).as("x"))
-        .collect()(0)
-      (r.getLong(0), r.getLong(1))
-    }
-    writeSketchTable(loadSketchTable(spark, src, groupCols), dst,
-      groupCols, "overwrite")
-    // both audit reads run AFTER the write (the src re-list is what
-    // detects an append landing mid-compaction — the [[Dedup
-    // .compactBandIndex]] contract) but are independent of EACH OTHER:
-    // fan them out (guide §2.6)
-    var pre: (Long, Long) = null
-    var post: (Long, Long) = null
-    Jobs.concurrently(
-      () => pre = chk(loadSketchTable(spark, src, groupCols)),
-      () => post = chk(loadSketchTable(spark, dst, groupCols)))
-    require(pre == post,
-      s"compactSketchTable: merged estimates changed ($pre -> $post) — the " +
-        "source changed mid-compaction; re-run")
-  }
+                         groupCols: Seq[String]): Unit =
+    SegmentStore.foldCompact(spark, src, dst, "sketch table", Nil,
+      unionSketches(_, groupCols).select((groupCols :+ "estimate").map(col): _*))(
+      pile => sketchLayout(unionSketches(pile, groupCols), groupCols))
 
   /** Count-min row-hash multipliers/offsets: small fixed primes, so
     * `(key % CmsMod) * a + b` stays far below 2^63 (exact int64 in any

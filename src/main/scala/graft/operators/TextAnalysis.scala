@@ -1382,7 +1382,7 @@ object TextAnalysis {
    * Persisted benchmark-contamination index — the deployment shape of
    * [[decontaminate]]: a benchmark suite is fixed and versioned (it
    * changes when a new eval ships, not per corpus batch), so its
-   * distinct shingle set is built ONCE, persisted, delta-appended as
+   * distinct shingle set is built ONCE, persisted, appended to as
    * suites are added, and every training-corpus scan joins against the
    * artifact instead of re-shingling the benchmark texts — the
    * BM25/winnow/bloom index-lifecycle discipline applied to
@@ -1398,17 +1398,20 @@ object TextAnalysis {
    * Layout: distinct `(g, n)` rows range-partitioned and sorted by `g`
    * (sorted runs encode compactly; parquet min/max footers make targeted
    * gram probes sliver reads — the trigram-index discipline).
-   * [[appendBenchmarkIndex]] writes delta files WITHOUT rewriting the
-   * base; the loader's distinct() folds base/delta overlap, so
-   * save → append → load equals the one-shot build over the union (the
-   * merge law at the storage boundary, replayed by the lifecycle gate).
+   * The index is a [[SegmentStore]]: a save is one commit that replaces
+   * every live file, and [[appendBenchmarkIndex]] adds an append commit
+   * WITHOUT rewriting the base; the loader's distinct() folds base/append
+   * overlap, so save → append → load equals the one-shot build over the
+   * union (the merge law at the storage boundary, replayed by the
+   * lifecycle gate).
    */
   def saveBenchmarkIndex(benchmark: DataFrame, shingleN: Int, dir: String,
                          numPartitions: Int = 4,
                          textCol: String = "text"): Unit =
-    writeBenchmarkShingles(benchmark, shingleN, dir, numPartitions, textCol, "overwrite")
+    SegmentStore.write(benchmarkShingles(benchmark, shingleN, numPartitions, textCol),
+      dir, replace = true)
 
-  /** Add a new benchmark suite's shingles as delta files (no base
+  /** Add a new benchmark suite's shingles as an append commit (no base
     * rewrite) — see [[saveBenchmarkIndex]]. The artifact is a distinct
     * GRAM set with no per-doc keying (contamination only asks "is this
     * gram benchmarked", never "by which doc"), which is also why no id
@@ -1416,58 +1419,55 @@ object TextAnalysis {
   def appendBenchmarkIndex(benchmark: DataFrame, shingleN: Int, dir: String,
                            numPartitions: Int = 4,
                            textCol: String = "text"): Unit =
-    writeBenchmarkShingles(benchmark, shingleN, dir, numPartitions, textCol, "append")
+    SegmentStore.write(benchmarkShingles(benchmark, shingleN, numPartitions, textCol),
+      dir, replace = false)
 
-  private def writeBenchmarkShingles(benchmark: DataFrame, shingleN: Int,
-                                     dir: String, numPartitions: Int,
-                                     textCol: String, mode: String): Unit = {
+  private def benchmarkShingles(benchmark: DataFrame, shingleN: Int,
+                                numPartitions: Int, textCol: String): DataFrame = {
     require(shingleN >= 1, s"benchmark index: shingleN must be >= 1, got $shingleN")
-    benchmark
+    gramLayout(benchmark
       .select(explode(array_distinct(TextFunctions.shingles(col(textCol), shingleN))).as("g"))
       .distinct()
-      .withColumn("n", lit(shingleN))
-      .repartitionByRange(numPartitions, col("g"))
-      .sortWithinPartitions(col("g"))
-      .write.mode(mode).parquet(dir)
+      .withColumn("n", lit(shingleN)), numPartitions)
   }
+
+  private def gramLayout(grams: DataFrame, numPartitions: Int): DataFrame =
+    grams.repartitionByRange(numPartitions, col("g")).sortWithinPartitions(col("g"))
+
+  /** The distinct shingle widths of a benchmark index's rows (a bounded
+    * collect: one row per width). */
+  private def widthsOf(idx: DataFrame): Array[Int] =
+    idx.select(col("n")).distinct().collect().map(_.getInt(0))
 
   /**
    * Compact a benchmark index: fold the base [[saveBenchmarkIndex]] plus
-   * accumulated [[appendBenchmarkIndex]] delta files into a fresh
-   * DISTINCT gram-range-partitioned generation at `dst`. Unlike the
-   * verbatim-row compactors (trigram/winnow/band — their slices are
-   * disjoint by construction), benchmark suites OVERLAP in grams (two
-   * suites share boilerplate), and the loader's `distinct()` pays for
-   * that overlap on every probe — the fold dedups once at rewrite time,
-   * so the compacted artifact is smaller than the pile AND the load-time
-   * distinct becomes a no-op pass over already-unique rows. Audited:
-   * `dst`'s row count must equal `src`'s distinct gram count, and the
-   * width mix check aborts exactly as the loader would.
+   * its [[appendBenchmarkIndex]] commits into a fresh DISTINCT
+   * gram-range-partitioned commit at `dst`. Unlike the verbatim-row
+   * compactors (trigram/winnow/band — their slices are disjoint by
+   * construction), benchmark suites OVERLAP in grams (two suites share
+   * boilerplate), and the loader's `distinct()` pays for that overlap on
+   * every probe — the fold dedups once at rewrite time, so the compacted
+   * artifact is smaller than the pile AND the load-time distinct becomes
+   * a no-op pass over already-unique rows. Audited on the distinct
+   * (g, n) rows by [[SegmentStore.foldCompact]]; the width mix check
+   * aborts exactly as the loader would.
    */
   def compactBenchmarkIndex(spark: org.apache.spark.sql.SparkSession,
                             src: String, dst: String,
-                            numPartitions: Int = 4): Unit = {
-    require(src != dst, "compactBenchmarkIndex: dst must be a fresh path")
-    val idx = spark.read.parquet(src)
-    val widths = idx.select(col("n")).distinct().collect().map(_.getInt(0))
-    require(widths.length == 1,
-      s"compactBenchmarkIndex: index at $src holds " +
-        (if (widths.isEmpty) "no grams" else s"mixed widths ${widths.sorted.mkString(",")}") +
-        " — nothing well-formed to fold")
-    idx.select(col("g"), col("n")).distinct()
-      .repartitionByRange(numPartitions, col("g"))
-      .sortWithinPartitions(col("g"))
-      .write.mode("overwrite").parquet(dst)
-    val nSrc = idx.select(col("g")).distinct().count()
-    val nDst = spark.read.parquet(dst).count()
-    require(nSrc == nDst,
-      s"compactBenchmarkIndex: distinct fold changed gram count " +
-        s"($nSrc -> $nDst) — the source changed mid-compaction; re-run")
-  }
+                            numPartitions: Int = 4): Unit =
+    SegmentStore.foldCompact(spark, src, dst, "benchmark index", Nil,
+      _.select(col("g"), col("n")).distinct()) { idx =>
+      val widths = widthsOf(idx)
+      require(widths.length == 1,
+        s"compactBenchmarkIndex: index at $src holds " +
+          (if (widths.isEmpty) "no grams" else s"mixed widths ${widths.sorted.mkString(",")}") +
+          " — nothing well-formed to fold")
+      gramLayout(idx.select(col("g"), col("n")).distinct(), numPartitions)
+    }
 
   /** Load a persisted benchmark index back into its probe shape: the
     * distinct-gram frame (column `g`) plus the artifact's shingle width
-    * (1-row bounded collect); a width mix across base+deltas aborts
+    * (1-row bounded collect); a width mix across base+appends aborts
     * loudly. The gram frame is NOT checkpointed here — batch callers use
     * it once; a streaming caller ([[graft.streaming.StreamingDecon]])
     * should `localCheckpoint` it so the static subplan isn't re-read
@@ -1479,7 +1479,7 @@ object TextAnalysis {
     // a placeholder width — zero grams share nothing at ANY width, so
     // contamination is empty and decontaminate keeps everything
     loadBenchmarkIndexOpt(spark, indexDir).getOrElse(
-      (spark.read.parquet(indexDir).select(col("g")).limit(0), 1))
+      (SegmentStore.load(spark, indexDir, "benchmark index").select(col("g")).limit(0), 1))
 
   /** [[loadBenchmarkIndex]] with emptiness made explicit (None = the
     * artifact holds no grams) so probe paths can skip corpus work for a
@@ -1487,8 +1487,8 @@ object TextAnalysis {
   private[graft] def loadBenchmarkIndexOpt(
       spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Option[(DataFrame, Int)] = {
-    val idx = spark.read.parquet(indexDir)
-    val widths = idx.select(col("n")).distinct().collect().map(_.getInt(0))
+    val idx = SegmentStore.load(spark, indexDir, "benchmark index")
+    val widths = widthsOf(idx)
     require(widths.length <= 1,
       s"benchmark index at $indexDir mixes shingle widths ${widths.sorted.mkString(",")} — " +
         "rebuild the index; a width mix makes contamination tests vacuously false")

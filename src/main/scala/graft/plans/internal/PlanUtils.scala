@@ -53,17 +53,19 @@ object GraftPlanBridge {
     * discovery would parse them. Resolving the table makes no filesystem
     * call and launches no listing job at any file count: the index is
     * exactly the given files, private to the returned frame (nothing
-    * enters the session-shared `FileStatusCache`). `root` only names the
-    * table in plans. */
+    * enters the session-shared `FileStatusCache`). Every column reads as
+    * nullable, as Spark writes and discovers parquet tables. `root` only
+    * names the table in plans. */
   def listedTable(spark: org.apache.spark.sql.SparkSession, root: String,
                   files: Seq[(String, Seq[String], Long)], dataSchema: StructType,
                   partitionSchema: StructType): org.apache.spark.sql.DataFrame = {
     val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    val parts = partitionSchema.asNullable
     val index = new ListedFileIndex(spark, new Path(root), files.map { case (p, values, len) =>
       (new FileStatus(len, false, 0, 0, 0, new Path(p)), InternalRow.fromSeq(
-        partitionSchema.zip(values).map { case (f, v) => Cast(Literal(v), f.dataType, tz).eval() }))
-    }, partitionSchema)
-    val relation = HadoopFsRelation(index, partitionSchema, dataSchema,
+        parts.zip(values).map { case (f, v) => Cast(Literal(v), f.dataType, tz).eval() }))
+    }, parts)
+    val relation = HadoopFsRelation(index, parts, dataSchema.asNullable,
       bucketSpec = None, new ParquetFileFormat, Map.empty)(spark)
     ofRows(spark, LogicalRelation(relation))
   }
@@ -80,6 +82,9 @@ object GraftPlanBridge {
       files.map { case (st, row) => PartitionPath(row, st.getPath.getParent) }.distinct)
     override def partitionSpec(): PartitionSpec = spec
     override def rootPaths: Seq[Path] = Seq(root)
+    // an unpartitioned table's files sit in commit dirs below the root,
+    // where the default root-children lookup would not find them
+    override def allFiles(): Seq[FileStatus] = leafFiles.values.toSeq
     override def refresh(): Unit = ()
   }
 }

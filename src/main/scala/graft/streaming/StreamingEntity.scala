@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.SegmentStore
+
 /**
  * Streaming entity resolution: fuzzy-match incoming (id, name) records
  * against a STORED name dictionary — the serving path of
@@ -36,91 +38,63 @@ object StreamingEntity {
    * again at flag time.
    */
   def saveDictionary(blockedRows: DataFrame, path: String): Unit =
-    blockedRows.select(col("nm"), col("cnt"), col("rep"),
-        col("bk"), col("space"))
-      .repartitionByRange(col("space"), col("bk"))
-      .sortWithinPartitions(col("space"), col("bk"), col("nm"))
-      .write.mode("overwrite").parquet(path)
+    SegmentStore.write(dictLayout(blockedRows), path, replace = true)
 
-  /** Append an ingest batch's blocked dictionary rows as delta files
-    * with the same per-file sort (the BM25 segment-append discipline —
-    * no rewrite of existing files). A name present in both the stored
-    * set and a delta yields duplicate rows on disk; [[loadDictionary]]
+  /** Append an ingest batch's blocked dictionary rows as a
+    * [[SegmentStore]] append commit with the same per-file sort (the BM25
+    * segment-append discipline — no rewrite of existing files). A name
+    * present in both the stored set and an append yields duplicate rows
+    * on disk; [[loadDictionary]]
     * merges them (sum counts, min rep) and applies the block cap over
     * the WHOLE merged set, so appends compose exactly as a rebuild. */
   def appendDictionary(blockedRows: DataFrame, path: String): Unit =
-    blockedRows.select(col("nm"), col("cnt"), col("rep"),
-        col("bk"), col("space"))
+    SegmentStore.write(dictLayout(blockedRows), path, replace = false)
+
+  private def dictLayout(rows: DataFrame): DataFrame =
+    rows.select(col("nm"), col("cnt"), col("rep"), col("bk"), col("space"))
       .repartitionByRange(col("space"), col("bk"))
       .sortWithinPartitions(col("space"), col("bk"), col("nm"))
-      .write.mode("append").parquet(path)
+
+  /** Duplicate (nm, bk, space) rows merged: counts are additive, the
+    * representative is the minimum id — the same aggregation a
+    * from-scratch [[graft.operators.EntityResolution.nameDictionary]]
+    * build performs. */
+  private def merged(rows: DataFrame): DataFrame =
+    rows.groupBy(col("nm"), col("bk"), col("space"))
+      .agg(sum(col("cnt")).as("cnt"), min(col("rep")).as("rep"))
+      .select(col("nm"), col("cnt"), col("rep"), col("bk"), col("space"))
 
   /**
    * Load a stored dictionary back into the [[flagAgainstIndex]] index
-   * shape: merge duplicate (nm, bk, space) rows across base + deltas
-   * (counts are additive; the representative is the minimum id — the
-   * same aggregation a from-scratch
-   * [[graft.operators.EntityResolution.nameDictionary]] build performs),
-   * then the whole-block cap. `localCheckpoint`ed: in a stream-static
-   * join the static subplan re-executes per micro-batch, so without
-   * severing it each batch would re-pay the merge aggregation.
+   * shape: [[merged]] across base + appends, then the whole-block cap.
+   * `localCheckpoint`ed: in a stream-static join the static subplan
+   * re-executes per micro-batch, so without severing it each batch would
+   * re-pay the merge aggregation.
    */
   def loadDictionary(spark: org.apache.spark.sql.SparkSession,
                      path: String, maxBlockSize: Int = 1000): DataFrame =
     graft.operators.EntityResolution.capBlocks(
-        spark.read.parquet(path)
-          .groupBy(col("nm"), col("bk"), col("space"))
-          .agg(sum(col("cnt")).as("cnt"), min(col("rep")).as("rep")),
-        maxBlockSize)
+        merged(SegmentStore.load(spark, path, "dictionary")), maxBlockSize)
       .select(col("nm"), col("cnt"), col("rep"), col("bk"), col("space"))
       .localCheckpoint()
 
   /**
    * Compact a dictionary artifact: fold the base [[saveDictionary]] plus
-   * accumulated [[appendDictionary]] delta files into ONE merged
-   * generation at `dst` — the fold IS the duplicate-(nm, bk, space)
-   * merge [[loadDictionary]] performs (counts sum, representative =
-   * minimum id), written back UNCAPPED with the standard (space, bk)
-   * range layout, so the artifact stays |V|·2 rows forever after no
-   * matter how many ingest batches were appended. The whole-block cap
-   * still applies at load time over the merged set, so an index built
-   * from `dst` equals one built from the pile by construction. Audited:
-   * the merged row set of `dst` must checksum-match the merged pile
-   * (xor of per-row hashes — order-free), failing loudly if the source
-   * changed mid-compaction. Production shape: fresh path +
+   * its [[appendDictionary]] commits into ONE merged commit at `dst` —
+   * the fold IS the duplicate-(nm, bk, space) merge [[loadDictionary]]
+   * performs (counts sum, representative = minimum id), written back
+   * UNCAPPED with the standard (space, bk) range layout, so the artifact
+   * stays |V|·2 rows forever after no matter how many ingest batches were
+   * appended. The whole-block cap still applies at load time over the
+   * merged set, so an index built from `dst` equals one built from the
+   * pile by construction. Audited on the merged row set by
+   * [[SegmentStore.foldCompact]]. Production shape: fresh path +
    * [[graft.operators.Generations]] pointer flip.
    */
   def compactDictionary(spark: org.apache.spark.sql.SparkSession,
-                        src: String, dst: String): Unit = {
-    require(src != dst, "compactDictionary: dst must be a fresh path")
-    def merged(path: String): DataFrame =
-      spark.read.parquet(path)
-        .groupBy(col("nm"), col("bk"), col("space"))
-        .agg(sum(col("cnt")).as("cnt"), min(col("rep")).as("rep"))
-        .select(col("nm"), col("cnt"), col("rep"), col("bk"), col("space"))
-    def chk(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)).as("n"),
-        coalesce(call_function("bit_xor",
-          xxhash64(col("nm"), col("bk"), col("space"), col("cnt"), col("rep"))),
-          lit(0L)).as("x")).collect()(0)
-      (r.getLong(0), r.getLong(1))
-    }
-    merged(src)
-      .repartitionByRange(col("space"), col("bk"))
-      .sortWithinPartitions(col("space"), col("bk"), col("nm"))
-      .write.mode("overwrite").parquet(dst)
-    // both audits AFTER the write (src re-read detects a mid-compaction
-    // append — the compactBandIndex contract), fanned out against each
-    // other (guide §2.6)
-    var pre: (Long, Long) = null
-    var post: (Long, Long) = null
-    graft.operators.Jobs.concurrently(
-      () => pre = chk(merged(src)),
-      () => post = chk(spark.read.parquet(dst)))
-    require(pre == post,
-      s"compactDictionary: merged dictionary changed ($pre -> $post) — the " +
-        "source changed mid-compaction; re-run")
-  }
+                        src: String, dst: String): Unit =
+    SegmentStore.foldCompact(spark, src, dst, "dictionary", Nil, merged)(
+      pile => dictLayout(merged(pile)))
 
   /**
    * Flag a stream of (idCol, nameCol) rows against a blocked dictionary

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.SegmentStore
+
 /**
  * Streaming winnow-fingerprint flagging — the streaming × winnowing cell
  * that completes the streaming dedup matrix ([[StreamingPhashDedup]] for
@@ -76,59 +78,46 @@ object StreamingWinnow {
    * never needed again at flag time.
    */
   def saveFingerprints(fps: DataFrame, path: String): Unit =
-    fps.select(col("id"), col("fp"))
-      .repartitionByRange(col("fp")).sortWithinPartitions(col("fp"))
-      .write.mode("overwrite").parquet(path)
+    SegmentStore.write(fpLayout(fps), path, replace = true)
 
-  /** Append an ingest batch's fingerprints as delta files with the same
-    * per-file sort (the BM25 segment-append discipline — no rewrite of
-    * existing files). The df <= maxDf cut is applied at
-    * [[fingerprintIndex]] build time over the WHOLE loaded set, so
-    * appended docs participate in boilerplate suppression exactly as if
-    * the index had been rebuilt. */
+  /** Append an ingest batch's fingerprints as a [[SegmentStore]] append
+    * commit with the same per-file sort (the BM25 segment-append
+    * discipline — no rewrite of existing files). The df <= maxDf cut is
+    * applied at [[fingerprintIndex]] build time over the WHOLE loaded
+    * set, so appended docs participate in boilerplate suppression exactly
+    * as if the index had been rebuilt. */
   def appendFingerprints(fps: DataFrame, path: String): Unit =
+    SegmentStore.write(fpLayout(fps), path, replace = false)
+
+  private def fpLayout(fps: DataFrame): DataFrame =
     fps.select(col("id"), col("fp"))
       .repartitionByRange(col("fp")).sortWithinPartitions(col("fp"))
-      .write.mode("append").parquet(path)
 
   /** Read a stored fingerprint set back; schema (id, fp). */
   def loadFingerprints(spark: org.apache.spark.sql.SparkSession,
                        path: String): DataFrame =
-    spark.read.parquet(path)
+    SegmentStore.load(spark, path, "fingerprint set")
 
   /**
    * Compact a fingerprint artifact: fold the base [[saveFingerprints]]
-   * plus accumulated [[appendFingerprints]] delta files into a fresh
-   * fp-range-partitioned, fp-sorted generation at `dst` (the
+   * plus its [[appendFingerprints]] commits into a fresh
+   * fp-range-partitioned, fp-sorted commit at `dst` (the
    * [[graft.operators.Retrieval.compactTrigramIndex]] discipline).
    * Every append lands files whose fp ranges overlap the base layout,
-   * so under continuous ingest a flag join's probe pays a growing file
-   * listing and un-pruned row groups until a fold restores the
-   * one-generation range layout. Rows are preserved VERBATIM (the df
-   * cut happens at [[fingerprintIndex]] build, not here — compaction is
-   * pure file-layout work), audited by an exact row-count match, so an
+   * so under continuous ingest a flag join's probe pays more files and
+   * un-pruned row groups until a fold restores the one-commit range
+   * layout. Rows are preserved VERBATIM (the df cut happens at
+   * [[fingerprintIndex]] build, not here — compaction is pure
+   * file-layout work), audited by [[SegmentStore.foldCompact]], so an
    * index built from `dst` is identical to one built from `src` by
-   * construction. Production shape: a fresh generation published by the
-   * crash-atomic [[graft.operators.Generations.advance]] pointer flip;
-   * the old generation stays readable throughout.
+   * construction. Production shape: a fresh
+   * generation published by the crash-atomic
+   * [[graft.operators.Generations.advance]] pointer flip; the old
+   * generation stays readable throughout.
    */
   def compactFingerprints(spark: org.apache.spark.sql.SparkSession,
-                          src: String, dst: String): Unit = {
-    require(src != dst, "compactFingerprints: dst must be a fresh path")
-    spark.read.parquet(src)
-      .repartitionByRange(col("fp")).sortWithinPartitions(col("fp"))
-      .write.mode("overwrite").parquet(dst)
-    // both counts AFTER the write (src re-list detects a mid-compaction
-    // append — the compactBandIndex contract), fanned out (guide §2.6)
-    var nSrc = 0L
-    var nDst = 0L
-    graft.operators.Jobs.concurrently(
-      () => nSrc = spark.read.parquet(src).count(),
-      () => nDst = spark.read.parquet(dst).count())
-    require(nSrc == nDst,
-      s"compactFingerprints: layout-only rewrite changed row count " +
-        s"($nSrc -> $nDst) — the source changed mid-compaction; re-run")
-  }
+                          src: String, dst: String): Unit =
+    SegmentStore.foldCompact(spark, src, dst, "fingerprint set", Nil, identity)(fpLayout)
 
   /**
    * Flag a stream of (idCol, textCol) documents against a prebuilt

@@ -120,11 +120,10 @@ class BloomSpec extends SparkSpec {
       def rows(p: String) = Bloom.loadWords(spark, p)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
       assert(rows(s"$tmp/gen2") === rows(s"$tmp/pile"))
-      def parquets(p: String) = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-        walk(new java.io.File(p)).count(_.getName.endsWith(".parquet"))
-      }
+      // the live files of each store's newest manifest
+      def parquets(p: String) =
+        graft.operators.SegmentStore.latest(graft.operators.SeqFiles.fs(spark, p), p)
+          .get.live.length
       assert(parquets(s"$tmp/gen2") < parquets(s"$tmp/pile"),
         "the fold must shrink the file pile")
       intercept[IllegalArgumentException] {

@@ -367,8 +367,8 @@ class CurationOpsSpec extends SparkSpec {
         TextAnalysis.compactBenchmarkIndex(spark, dir, gen2)
         assert(TextAnalysis.contaminationFromIndex(train, gen2)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == oneShot)
-        val pile = spark.read.parquet(dir)
-        val gen = spark.read.parquet(gen2)
+        val pile = graft.operators.SegmentStore.load(spark, dir, "benchmark index")
+        val gen = graft.operators.SegmentStore.load(spark, gen2, "benchmark index")
         assert(gen.count() == pile.select($"g").distinct().count())
         assert(gen.count() == gen.distinct().count())
       } finally Gates.deleteTree(gen2)

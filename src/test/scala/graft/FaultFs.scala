@@ -8,6 +8,7 @@ import org.apache.hadoop.fs.{CreateFlag, FSDataInputStream, FSDataOutputStream, 
   FilterFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /**
@@ -175,5 +176,31 @@ object FaultFs {
     log = l
     val a = try f finally log = null
     (a, l.toArray(Array.empty[String]).toSeq)
+  }
+
+  /** [[reads]], plus the (SQL execution id, description) of every Spark
+    * job `f` starts. A file-listing or footer-inference job runs outside
+    * any SQL execution (id "null"). */
+  def readsAndJobs[A](spark: SparkSession)(f: => A): (A, Seq[String], Seq[(String, String)]) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add((
+        String.valueOf(e.properties.getProperty("spark.sql.execution.id")),
+        String.valueOf(e.properties.getProperty("spark.job.description"))))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (a, rs) = reads(f)
+      // marker: listener events arrive in order, so once the marker's
+      // start is seen, every job `f` started is too
+      val marker = s"marker-${System.nanoTime()}"
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1)).count() finally sc.setJobDescription(null)
+      def seen = jobs.toArray(Array.empty[(String, String)]).toSeq
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.exists(_._2 == marker) && System.nanoTime() < deadline) Thread.sleep(20)
+      (a, rs, seen.filter(_._2 != marker))
+    } finally sc.removeSparkListener(listener)
   }
 }

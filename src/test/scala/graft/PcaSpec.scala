@@ -168,12 +168,12 @@ class PcaSpec extends SparkSpec {
       assert(meanC.toSeq === meanP.toSeq)
       assert(covC.map(_.toSeq).toSeq === covP.map(_.toSeq).toSeq)
       // the compacted generation is already one cell set — (d²+d+1) rows
-      assert(spark.read.parquet(s"$tmp/gen2").count() === (9 + 3 + 1).toLong)
-      def parquets(p: String) = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-        walk(new java.io.File(p)).count(_.getName.endsWith(".parquet"))
-      }
+      assert(graft.operators.SegmentStore.load(spark, s"$tmp/gen2", "moment table")
+        .count() === (9 + 3 + 1).toLong)
+      // the live files of each store's newest manifest
+      def parquets(p: String) =
+        graft.operators.SegmentStore.latest(graft.operators.SeqFiles.fs(spark, p), p)
+          .get.live.length
       assert(parquets(s"$tmp/gen2") < parquets(s"$tmp/pile"),
         "the fold must shrink the file pile")
       intercept[IllegalArgumentException] {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Retrieval
+import graft.operators.{Retrieval, SegmentStore, SeqFiles}
 
 /** [[Retrieval.rrfFuse]] must implement textbook reciprocal-rank fusion:
   * score(d) = Σ_r 1/(kRrf + rank_r(d)) over the rankings containing d,
@@ -91,12 +91,12 @@ class RetrievalSpec extends SparkSpec {
       Retrieval.appendTrigramIndex(Retrieval.trigramPostings(b.toDF("doc_id", "text")), src)
       Retrieval.appendTrigramIndex(Retrieval.trigramPostings(c.toDF("doc_id", "text")), src)
       Retrieval.compactTrigramIndex(spark, src, dst)
-      def files(p: String) = new java.io.File(p).listFiles()
-        .count(_.getName.endsWith(".parquet"))
+      // the live files of each store's newest manifest
+      def files(p: String) = SegmentStore.latest(SeqFiles.fs(spark, p), p).get.live.length
       assert(files(dst) < files(src),
         s"compaction must shrink the file pile: ${files(src)} -> ${files(dst)}")
       // row multiset preserved verbatim
-      val rows = (p: String) => spark.read.parquet(p).collect()
+      val rows = (p: String) => SegmentStore.load(spark, p, "trigram index").collect()
         .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
       assert(rows(dst) === rows(src))
       // identical search results through the compacted generation

@@ -149,7 +149,7 @@ class SketchesSpec extends SparkSpec {
       assert(ests(Sketches.loadSketchTable(spark, s"$tmp/gen2", Seq("day")))
         === direct, "compacted registers diverged from the pile")
       // the fold holds one row per day on disk
-      assert(spark.read.parquet(s"$tmp/gen2").count() ===
+      assert(graft.operators.SegmentStore.load(spark, s"$tmp/gen2", "sketch table").count() ===
         ev.select(col("day")).distinct().count())
       intercept[IllegalArgumentException] {
         Sketches.compactSketchTable(spark, s"$tmp/pile", s"$tmp/pile", Seq("day"))

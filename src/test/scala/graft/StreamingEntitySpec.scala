@@ -104,7 +104,7 @@ class StreamingEntitySpec extends SparkSpec {
         val e3 = flagEpoch(StreamingEntity.loadDictionary(spark, gen2), "ent_e3")
         assert(e3 === e2, "compacted dictionary diverged from the pile")
         // merged on disk: the duplicate name collapses to one row per space
-        val dupRows = spark.read.parquet(gen2)
+        val dupRows = graft.operators.SegmentStore.load(spark, gen2, "dictionary")
           .filter(col("nm") === "old anvil").collect()
         assert(dupRows.length === 2) // one per block space
         assert(dupRows.forall(_.getAs[Long]("rep") === 2L),

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.{SegmentStore, SeqFiles, TextAnalysis}
@@ -313,34 +312,13 @@ class StreamingLexicalSpec extends SparkSpec {
     val docs = (1 to 300).map(i => (i.toLong, s"spark w${i % 97} v${i % 13}"))
       .toDF("doc_id", "text")
     val dir = Files.createTempDirectory("graft_lex_zero").toString
-    val sc = spark.sparkContext
-    // (SQL execution id, description) of every job started
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add((
-        String.valueOf(e.properties.getProperty("spark.sql.execution.id")),
-        String.valueOf(e.properties.getProperty("spark.job.description"))))
-    }
     try {
       // 64 buckets × 2 components + 1 stat dir: over the 32-path threshold
       // above which a listing index would launch a listing job
       TextAnalysis.saveLexicalIndex(docs, dir, nBuckets = 64)
       FaultFs.install(spark)
-      sc.addSparkListener(listener)
-      def read(): (Seq[org.apache.spark.sql.Row], Seq[String], Seq[(String, String)]) = {
-        jobs.clear()
-        val (rows, reads) = FaultFs.reads(TextAnalysis.bm25QueryIndex(spark,
-          FaultFs.uri(dir), Seq("spark", "w7", "v3"), k = 5).collect().toSeq)
-        // marker: listener events arrive in order, so once the marker's
-        // start is seen, every job the read started is too
-        val marker = s"marker-${System.nanoTime()}"
-        sc.setJobDescription(marker)
-        try sc.parallelize(Seq(1)).count() finally sc.setJobDescription(null)
-        def seen = jobs.toArray(Array.empty[(String, String)]).toSeq
-        val deadline = System.nanoTime() + 30000000000L
-        while (!seen.exists(_._2 == marker) && System.nanoTime() < deadline) Thread.sleep(20)
-        (rows, reads, seen.filter(_._2 != marker))
-      }
+      def read() = FaultFs.readsAndJobs(spark)(TextAnalysis.bm25QueryIndex(spark,
+        FaultFs.uri(dir), Seq("spark", "w7", "v3"), k = 5).collect().toSeq)
       val (cold, coldReads, coldJobs) = read()
       val (warm, warmReads, warmJobs) = read()
       assert(cold.nonEmpty && warm == cold)
@@ -354,9 +332,6 @@ class StreamingLexicalSpec extends SparkSpec {
       // scan; warm (both memos hit on the same manifest): the scan alone
       assert(coldJobs.map(_._1).distinct.length == 3, coldJobs)
       assert(warmJobs.map(_._1).distinct.length == 1, warmJobs)
-    } finally {
-      sc.removeSparkListener(listener)
-      Gates.deleteTree(dir)
-    }
+    } finally Gates.deleteTree(dir)
   }
 }

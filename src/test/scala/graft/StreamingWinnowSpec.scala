@@ -184,7 +184,8 @@ class StreamingWinnowSpec extends SparkSpec {
     assert(bag(gen2) == bag(tmp))
     // and one generation = exactly one fp-sorted file set, fewer files
     def parquets(p: String) =
-      new java.io.File(p).listFiles().count(_.getName.endsWith(".parquet"))
+      graft.operators.SegmentStore.latest(graft.operators.SeqFiles.fs(spark, p), p)
+        .get.live.length
     assert(parquets(gen2) <= parquets(tmp))
     intercept[IllegalArgumentException] {
       StreamingWinnow.compactFingerprints(spark, tmp, tmp)
