@@ -201,7 +201,7 @@ object Dedup {
    * row groups. Written sorted by `bh` within each band for that reason.
    */
   def saveBandIndex(index: DataFrame, path: String): Unit =
-    SegmentStore.write(bandLayout(index), path, replace = true, "band")
+    SegmentStore.write(bandLayout(index), path, replace = true, Seq("band"))
 
   private def bandLayout(index: DataFrame): DataFrame =
     index.repartition(col("band")).sortWithinPartitions(col("bh"))
@@ -226,7 +226,7 @@ object Dedup {
    * silently probes nothing.
    */
   def appendBandIndex(index: DataFrame, path: String): Unit =
-    SegmentStore.write(bandLayout(index), path, replace = false, "band")
+    SegmentStore.write(bandLayout(index), path, replace = false, Seq("band"))
 
   /**
    * Compact a band index: fold the base save plus its append commits into

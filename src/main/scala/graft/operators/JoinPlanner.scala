@@ -188,9 +188,8 @@ object JoinPlanner {
    *    sketch shape, feeding sizing and load-time shape validation.
    *
    * The four components live as disjoint `component`-discriminated row
-   * groups of ONE unified parquet table per slice (`<slice>/data`) —
-   * one write job and one output commit per slice, one relation per
-   * bundle at load.
+   * groups of ONE unified parquet table per slice — one write job and one
+   * [[SegmentStore]] commit per slice, one relation per bundle at load.
    *
    * Every component is MERGEABLE by construction: cells sum cell-wise
    * ([[Sketches.countMinMerge]] — CMS(A ⊎ B) is exactly the one-shot
@@ -199,17 +198,19 @@ object JoinPlanner {
    * [[appendTableProfile]] just adds a delta SLICE — no base rewrite, no
    * read-modify-write — and the loader folds the pile.
    *
-   * ATOMIC SLICE PUBLISH: each slice's four components are written
-   * together under `path/_staging/<sliceId>` and committed by ONE
-   * directory rename to `path/slices/<sliceId>` (write everything, then
-   * commit with one rename). A crash mid-write leaves only staging — the loader
-   * never sees a bundle whose cells include a slice its stats/topk do
-   * not, so decisions can never silently mix slice populations. The
-   * rename also makes appends IDEMPOTENT under a caller-chosen
-   * `sliceId`: re-publishing a committed slice is a no-op, which is the
-   * exactly-once contract a `foreachBatch` maintainer needs under
-   * at-least-once replays (pass `sliceId = s"batch-$id"` — no side
-   * marker files, the commit IS the marker).
+   * ATOMIC SLICE PUBLISH: a save is one [[SegmentStore]] commit that
+   * replaces every live slice, an append one commit that adds a slice,
+   * and the manifest rename is the only commit point. A reader sees all
+   * four components of a slice or none of them, so decisions can never
+   * silently mix slice populations, and a reader resolved before a save
+   * keeps reading the bundle it resolved. An append's `sliceId` is its
+   * commit's tag, and a replay under a tag the newest manifest names
+   * publishes nothing: the exactly-once contract a `foreachBatch`
+   * maintainer needs under at-least-once replays (pass `sliceId =
+   * s"batch-$id"` — no side marker files, the commit IS the marker). The
+   * store writes only `path/c-N/` and `path/_manifest/`, so a
+   * [[Generations]] root or unrelated files at the same path survive a
+   * save.
    *
    * Narrow map-side-combined passes over the ONE materialized slice
    * cache, each shuffling rows bounded by the sketch shape (depth·width
@@ -221,44 +222,25 @@ object JoinPlanner {
    * (`top_covered` — distinct sketch keys ≤ topK): the bundle-recorded
    * form of the [[joinDecisionFromProfiles]] exactness precondition,
    * surfaced there as `top_share_exact`.
-   *
-   * Re-saving resets the bundle by deleting only the bundle's OWN layout
-   * (`slices/` and `_staging/`) — never the whole target path, so a path
-   * mistakenly pointed at a [[Generations]] root or a directory holding
-   * unrelated files cannot be silently wiped by a profile save.
    */
   def saveTableProfile(df: DataFrame, key: String, path: String,
-                       p: ProfileParams = ProfileParams()): Unit = {
-    val hfs = SeqFiles.fs(df.sparkSession, path)
-    hfs.delete(new org.apache.hadoop.fs.Path(path, "slices"), true)
-    hfs.delete(new org.apache.hadoop.fs.Path(path, "_staging"), true)
-    writeSlice(df, key, path, p, "base")
-  }
+                       p: ProfileParams = ProfileParams()): Unit =
+    writeSlice(df, key, path, p, replace = true, tag = "")
 
-  /** Add an ingest slice's profile as an atomically-published slice dir
-    * (no base rewrite) — the bundle must be written with the SAME
-    * depth/width as the base ([[loadTableProfile]] validates; a shape mix
-    * cannot merge). `sliceId` names the commit: a replay under the same
-    * id is a no-op (exactly-once maintenance under at-least-once
-    * delivery); the default fresh id gives plain always-append semantics. */
+  /** Add an ingest slice's profile as one more committed slice (no base
+    * rewrite) — the bundle must be written with the SAME depth/width as
+    * the base ([[loadTableProfile]] validates; a shape mix cannot merge).
+    * A non-empty `sliceId` tags the commit: a replay under the same id is
+    * a no-op (exactly-once maintenance under at-least-once delivery); the
+    * empty default always appends. */
   def appendTableProfile(df: DataFrame, key: String, path: String,
                          p: ProfileParams = ProfileParams(),
                          sliceId: String = ""): Unit = {
-    val id = if (sliceId.isEmpty)
-      java.util.UUID.randomUUID().toString else sliceId
-    writeSlice(df, key, path, p, id)
-  }
-
-  /** Committed slice dirs of a bundle (staging is invisible by layout). */
-  private def sliceDirs(spark: org.apache.spark.sql.SparkSession,
-                        path: String): Seq[String] = {
-    val hfs = SeqFiles.fs(spark, path)
-    val slices = new org.apache.hadoop.fs.Path(path, "slices")
-    if (!hfs.exists(slices)) Seq.empty
-    else hfs.listStatus(slices).toIndexedSeq
-      .filter(s => s.isDirectory && !s.getPath.getName.startsWith(".") &&
-        !s.getPath.getName.startsWith("_"))
-      .map(_.getPath.toString).sorted
+    // the tag is one field of a tab-separated manifest line: a plain id
+    // keeps tabs, line breaks and path-like names out of it
+    require(sliceId.isEmpty || sliceId.matches("[A-Za-z0-9][A-Za-z0-9._-]*"),
+      s"profile sliceId must be a plain id ([A-Za-z0-9][A-Za-z0-9._-]*), got '$sliceId'")
+    writeSlice(df, key, path, p, replace = false, tag = sliceId)
   }
 
   /** The unified slice schema: the four sketch-sized components as
@@ -286,26 +268,30 @@ object JoinPlanner {
     }: _*)
   }
 
-  /** One slice: the four components as one unified write under staging,
-    * one rename to commit. Returns false when the slice id was already
-    * committed (the idempotent-replay no-op). */
+  /** One slice as its unified table: the cell grid, the `p.topK` hottest
+    * of the per-key `counts` (k, cnt), the KMV sketch and the stats row —
+    * the exact `totals` (rows, bytes), the sketch shape and the coverage
+    * bit (`covered` and at most `p.topK` distinct keys in `counts`). A
+    * few KB, so one file: the loader opens one footer per slice. */
+  private def unifiedSlice(cells: DataFrame, counts: DataFrame, kmv: DataFrame,
+                           totals: DataFrame, p: ProfileParams,
+                           covered: Boolean): DataFrame =
+    unifiedComponent("cells", cells)
+      .unionByName(unifiedComponent("topk",
+        counts.orderBy(col("cnt").desc, col("k").asc).limit(p.topK)))
+      .unionByName(unifiedComponent("kmv", kmv))
+      .unionByName(unifiedComponent("stats", totals
+        .crossJoin(counts.agg(count(lit(1)).as("__dk")))
+        .select(col("rows"), col("bytes"), lit(p.depth).as("depth"),
+          lit(p.width).as("width"), lit(p.topK).as("top_k"),
+          lit(p.kmvK).as("kmv_k"),
+          (lit(covered) && col("__dk") <= p.topK).as("top_covered"))))
+      .coalesce(1)
+
+  /** One slice: the four components as one unified write, committed as
+    * a save (`replace`) or an append under `tag`. */
   private def writeSlice(df: DataFrame, key: String, path: String,
-                         p: ProfileParams, sliceId: String): Boolean = {
-    // first char must be alphanumeric: a '.'-prefixed name would COMMIT but
-    // be invisible to sliceDirs (silent population mix — exactly what the
-    // atomic publish exists to prevent), '_' collides with staging, and a
-    // bare '.'/'..' would resolve the target to the bundle root itself
-    require(sliceId.matches("[A-Za-z0-9][A-Za-z0-9._-]*") &&
-        sliceId != "." && sliceId != "..",
-      s"profile sliceId must start alphanumeric ([A-Za-z0-9][A-Za-z0-9._-]*), " +
-        s"got '$sliceId' — a dot- or underscore-prefixed name would commit " +
-        "but never be loaded")
-    val spark = df.sparkSession
-    val hfs = SeqFiles.fs(spark, path)
-    val target = new org.apache.hadoop.fs.Path(path, s"slices/$sliceId")
-    if (hfs.exists(target)) return false // committed by a previous attempt
-    val stage = new org.apache.hadoop.fs.Path(path, s"_staging/$sliceId")
-    if (hfs.exists(stage)) hfs.delete(stage, true) // torn previous attempt
+                         p: ProfileParams, replace: Boolean, tag: String): Unit = {
     // four bundle components, one slice scan, ONE write job: the
     // cells/topk/kmv/stats derivations union into the unified slice
     // table (their internal exchanges run as concurrent AQE stages of
@@ -327,39 +313,15 @@ object JoinPlanner {
         // kmvMerge over slices IS the one-shot sketch — the pinned
         // SketchLawsSpec law; string keys ride the xxhash64 first, where
         // a collision can only merge two keys = undercount by at most
-        // the 2^-64 collision mass). The coverage bit (distinct keys ≤
-        // topK) rides the stats row as a column — no driver-side count
-        unifiedComponent("cells",
-            Sketches.countMinCells(slice, k, p.depth, p.width))
-          .unionByName(unifiedComponent("topk",
-            grouped.orderBy(col("cnt").desc, col("k").asc).limit(p.topK)))
-          .unionByName(unifiedComponent("kmv",
-            Sketches.kmvSketch(slice.select(k.as("k")), col("k"), p.kmvK)))
-          .unionByName(unifiedComponent("stats",
-            slice.agg(count(lit(1)).as("rows"),
-                coalesce(sum(Capacity.rowBytes(slice)), lit(0L)).as("bytes"))
-              .crossJoin(grouped.agg(count(lit(1)).as("__dk")))
-              .select(col("rows"), col("bytes"), lit(p.depth).as("depth"),
-                lit(p.width).as("width"), lit(p.topK).as("top_k"),
-                lit(p.kmvK).as("kmv_k"),
-                (col("__dk") <= p.topK).as("top_covered"))))
-          .write.mode("overwrite").parquet(s"$stage/data")
+        // the 2^-64 collision mass)
+        SegmentStore.write(unifiedSlice(
+          Sketches.countMinCells(slice, k, p.depth, p.width), grouped,
+          Sketches.kmvSketch(slice.select(k.as("k")), col("k"), p.kmvK),
+          slice.agg(count(lit(1)).as("rows"),
+            coalesce(sum(Capacity.rowBytes(slice)), lit(0L)).as("bytes")),
+          p, covered = true), path, replace, tag = tag)
       } finally grouped.unpersist()
     } finally slice.unpersist()
-    commitSlice(hfs, path, stage, target)
-  }
-
-  /** The commit point: parent mkdirs + atomic dir rename; a target that
-    * appeared meanwhile (replay race) wins and staging is dropped. */
-  private def commitSlice(hfs: org.apache.hadoop.fs.FileSystem, path: String,
-                          stage: org.apache.hadoop.fs.Path,
-                          target: org.apache.hadoop.fs.Path): Boolean = {
-    hfs.mkdirs(new org.apache.hadoop.fs.Path(path, "slices"))
-    if (hfs.exists(target)) { hfs.delete(stage, true); false }
-    else if (!hfs.rename(stage, target))
-      throw new java.io.IOException(
-        s"profile slice commit $stage -> $target failed")
-    else true
   }
 
   /** A loaded (still-lazy) profile: merged cell table, raw per-slice topk
@@ -376,47 +338,30 @@ object JoinPlanner {
   /** Load a profile bundle, folding accumulated slices: cells via
     * [[Sketches.countMinMerge]] (cell-wise sum), the KMV component via
     * [[Sketches.kmvMerge]] (k-min of the union — exactly the one-shot
-    * sketch), stats by summing slice rows. Only COMMITTED slices are
-    * read (an interrupted append's staging dir is invisible), and each
-    * committed slice carries all four components by construction — the
-    * torn-bundle state cannot be observed. The sketch shape is validated
-    * across slices (bounded collect over the slice-count-sized stats
-    * table); a depth/width/kmvK mix aborts — sketches of different
-    * shapes share no hash family or k-floor to merge under. */
+    * sketch), stats by summing slice rows. It reads exactly the slices of
+    * the newest [[SegmentStore]] manifest (one `_manifest` listing, no
+    * listing or schema-inference job), each carrying all four components
+    * by construction — the torn-bundle state cannot be observed. The
+    * sketch shape is validated across slices (bounded collect over the
+    * slice-count-sized stats table); a depth/width/kmvK mix aborts —
+    * sketches of different shapes share no hash family or k-floor to
+    * merge under. */
   def loadTableProfile(spark: org.apache.spark.sql.SparkSession,
-                       path: String): TableProfile = {
-    val dirs = sliceDirs(spark, path)
-    require(dirs.nonEmpty,
-      s"no committed profile slices at $path — saveTableProfile first " +
-        "(an interrupted write leaves only invisible staging)")
-    // LAYOUT-VERSION check: the unified single-table slice (`<slice>/data`)
-    // replaced the four component subdirs (cells/topk/kmv/stats) in the
-    // round-19 format break. A bundle written by a pre-break build — or a
-    // mixed pile from appending new-format slices onto an old-format base —
-    // must fail HERE with the migration instruction, not deep inside the
-    // parquet reader with an opaque path error. Bounded: one fs.exists per
-    // committed slice, driver-side metadata only.
-    val hfs = SeqFiles.fs(spark, path)
-    val legacy = dirs.filterNot(d =>
-      hfs.exists(new org.apache.hadoop.fs.Path(d, "data")))
-    require(legacy.isEmpty,
-      s"profile bundle at $path contains ${legacy.length} slice(s) in the " +
-        "legacy component-subdir layout (no data/ table): " +
-        legacy.map(_.split('/').last).sorted.mkString(", ") +
-        " — the on-disk format changed to one unified table per slice; " +
-        "rebuild the bundle (saveTableProfile/appendTableProfile) from the " +
-        "source data with this version")
-    // ONE relation over every slice's unified table; each component is a
-    // discriminator filter + projection of it (one file listing + footer
-    // set per bundle instead of four). The whole relation is SKETCH-BOUNDED
-    // — slices × (depth·width + topK + kmvK + 1) rows, KBs at any corpus
-    // scale — so it is read as ONE partition: every merge, join and
-    // aggregate over the components (here, in the decision and advice
-    // builders, in [[compactTableProfile]]) then plans with no shuffle,
-    // under whatever conf the caller's session holds. Without this each
-    // of those exchanges would pay a stage (and an AQE materialization
-    // round-trip) for a few KB.
-    val all = spark.read.parquet(dirs.map(d => s"$d/data"): _*).coalesce(1)
+                       path: String): TableProfile =
+    profileOf(path, SegmentStore.load(spark, path, "table profile"))
+
+  /** The profile of the unified `bundle` table stored at `path`. */
+  private def profileOf(path: String, bundle: DataFrame): TableProfile = {
+    // each component is a discriminator filter + projection of the ONE
+    // relation. The whole relation is SKETCH-BOUNDED — slices × (depth·
+    // width + topK + kmvK + 1) rows, KBs at any corpus scale — so it is
+    // read as ONE partition: every merge, join and aggregate over the
+    // components (here, in the decision and advice builders, in
+    // [[compactTableProfile]]) then plans with no shuffle, under whatever
+    // conf the caller's session holds. Without this each of those
+    // exchanges would pay a stage (and an AQE materialization round-trip)
+    // for a few KB.
+    val all = bundle.coalesce(1)
     def component(sub: String): DataFrame = {
       val owned = sub match {
         case "cells" => Seq("r", "c", "n")
@@ -443,21 +388,25 @@ object JoinPlanner {
       Sketches.countMinMerge(Seq(component("cells"))),
       component("topk"),
       Sketches.kmvMerge(Seq(component("kmv")), kmvK),
-      st.agg(sum(col("rows")).as("rows"), sum(col("bytes")).as("bytes")),
+      summedStats(st),
       depth, width, topK, kmvK, rows.forall(_.getBoolean(4)))
   }
 
+  /** The summed (rows, bytes) of the stats rows in `stats`. */
+  private def summedStats(stats: DataFrame): DataFrame =
+    stats.agg(sum(col("rows")).as("rows"), sum(col("bytes")).as("bytes"))
+
   /**
-   * Compact a profile bundle: fold the slice pile into ONE merged slice
-   * at `dst` (committed through the same staged atomic publish as every
-   * append). The bundle is the one artifact family whose compaction IS
-   * its merge semantics: cells collapse to the summed grid (≤ depth·width
-   * rows forever after), kmv to the k-min of the union (exactly the
-   * one-shot sketch), stats to one summed row, and topk to the merged
-   * per-key sums truncated back to `topK`. Under per-micro-batch
-   * maintenance ([[appendTableProfile]] from `foreachBatch`) the pile
-   * otherwise grows one slice per trigger — unbounded listing cost for
-   * an artifact whose information content is fixed-size.
+   * Compact a profile bundle: fold the slice pile into ONE merged slice,
+   * the first commit of `dst` ([[SegmentStore.foldCompact]]). The bundle
+   * is the one artifact family whose compaction IS its merge semantics:
+   * cells collapse to the summed grid (≤ depth·width rows forever after),
+   * kmv to the k-min of the union (exactly the one-shot sketch), stats to
+   * one summed row, and topk to the merged per-key sums truncated back to
+   * `topK`. Under per-micro-batch maintenance ([[appendTableProfile]]
+   * from `foreachBatch`) the pile otherwise grows one slice per trigger —
+   * unbounded read cost for an artifact whose information content is
+   * fixed-size.
    *
    * Decision preservation: every decision NUMBER derives from the MERGED
    * components, so a decision from `dst` equals a decision from the
@@ -470,50 +419,24 @@ object JoinPlanner {
    * from the fold, which is exactly what the per-slice bit exists to
    * catch), so a fold over more distinct keys than `topK` degrades the
    * marker from exact to conservative while changing no number.
-   * Audited: summed rows/bytes must match the pile's. Production shape:
-   * `dst` under a [[Generations]] root, published by pointer flip.
+   * Audited before the publish: the summed rows/bytes of `dst` must match
+   * the pile's, and `src` must still be the pile it folded — an append
+   * that lands mid-compaction fails it and `dst` publishes nothing.
+   * Production shape: `dst` under a [[Generations]] root, published by
+   * pointer flip.
    */
   def compactTableProfile(spark: org.apache.spark.sql.SparkSession,
-                          src: String, dst: String): Unit = {
-    require(src != dst, "compactTableProfile: dst must be a fresh path")
-    val prof = loadTableProfile(spark, src) // validates shape, one stats read
-    val hfs = SeqFiles.fs(spark, dst)
-    val target = new org.apache.hadoop.fs.Path(dst, "slices/base")
-    require(!hfs.exists(target),
-      s"compactTableProfile: $dst already holds a committed base slice — " +
-        "fold into a fresh generation path")
-    val stage = new org.apache.hadoop.fs.Path(dst, "_staging/base")
-    if (hfs.exists(stage)) hfs.delete(stage, true)
-    // the loaded components are single-partition (see
-    // [[loadTableProfile]]), so the fold below plans with no exchange
-    val pre = prof.stats.collect()(0)
-    val mergedTopk = prof.topk.groupBy(col("k")).agg(sum(col("cnt")).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // the four fold outputs as ONE unified write (the [[writeSlice]]
-      // discipline): one job, one commit; the merged-topk cache feeds
-      // both the truncated topk branch and the coverage re-check column,
-      // filled once inside the single action
-      unifiedComponent("cells", prof.cells)
-        .unionByName(unifiedComponent("topk",
-          mergedTopk.orderBy(col("cnt").desc, col("k").asc).limit(prof.topK)))
-        .unionByName(unifiedComponent("kmv", prof.kmv))
-        .unionByName(unifiedComponent("stats", prof.stats
-          .crossJoin(mergedTopk.agg(count(lit(1)).as("__dk")))
-          .select(col("rows"), col("bytes"), lit(prof.depth).as("depth"),
-            lit(prof.width).as("width"), lit(prof.topK).as("top_k"),
-            lit(prof.kmvK).as("kmv_k"),
-            (lit(prof.topCovered) && col("__dk") <= prof.topK)
-              .as("top_covered"))))
-        .write.mode("overwrite").parquet(s"$stage/data")
-    } finally mergedTopk.unpersist()
-    commitSlice(hfs, dst, stage, target)
-    val post = loadTableProfile(spark, dst).stats.collect()(0)
-    require(pre.getAs[Long]("rows") == post.getAs[Long]("rows") &&
-        pre.getAs[Long]("bytes") == post.getAs[Long]("bytes"),
-      s"compactTableProfile: summed stats changed ($pre -> $post) — " +
-        "the source changed mid-compaction; re-run")
-  }
+                          src: String, dst: String): Unit =
+    SegmentStore.foldCompact(spark, src, dst, "table profile", Nil,
+      b => summedStats(b.filter(col("component") === "stats"))) { pile =>
+      val prof = profileOf(src, pile)
+      // the loaded components are single-partition, so the fold plans
+      // with no exchange
+      unifiedSlice(prof.cells,
+        prof.topk.groupBy(col("k")).agg(sum(col("cnt")).as("cnt")), prof.kmv,
+        prof.stats, ProfileParams(prof.depth, prof.width, prof.topK, prof.kmvK),
+        prof.topCovered)
+    }
 
   /**
    * DISTINCT-KEY advice from a persisted bundle alone — the aggregation
@@ -582,7 +505,7 @@ object JoinPlanner {
   /** [[joinDecisionFromProfiles]] over ALREADY-LOADED bundles — the form
     * for a planner asking several questions of the same profiles (same
     * join under different thresholds, one fact against many candidate
-    * dims): each [[loadTableProfile]] costs a slice listing plus a
+    * dims): each [[loadTableProfile]] costs a manifest read plus a
     * bounded stats read, so a loop that reloads per question pays that
     * per question for artifacts that cannot have changed mid-plan.
     * Decision semantics are identical by construction (the path form

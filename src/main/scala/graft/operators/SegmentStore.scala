@@ -18,8 +18,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
  * ([[graft.streaming.StreamingWinnow.saveFingerprints]]), the entity
  * dictionary ([[graft.streaming.StreamingEntity.saveDictionary]]), bloom
  * words ([[Bloom.saveWords]]), PCA moments ([[Pca.saveMoments]]), the HLL
- * sketch table ([[Sketches.saveSketchTable]]) and the benchmark index
- * ([[TextAnalysis.saveBenchmarkIndex]]).
+ * sketch table ([[Sketches.saveSketchTable]]), the benchmark index
+ * ([[TextAnalysis.saveBenchmarkIndex]]) and the join planner's table
+ * profile ([[JoinPlanner.saveTableProfile]]).
  *
  * Commit S writes new files under `root/c-S/`, one directory level per
  * partition column as `partitionBy` writes them
@@ -39,9 +40,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
  *                              the data columns, then the k partition
  *                              columns; written by [[write]], carried by
  *                              every later commit
+ *   T  c-N  tag                the tag commit N was made under, kept while
+ *                              a file of `c-N` is live
  * }}}
  * A manifest without an `S` line (the serving table's, the lexical
  * index's) is read with the schema its client passes to [[frame]].
+ * A tagged commit whose tag the newest manifest already names publishes
+ * nothing: a replayed micro-batch or slice is a no-op, found in the
+ * manifest the commit reads anyway. A save drops the tags with the files.
  * Retired dirs stay on disk for [[RetiredGraceMs]] after the commit that
  * retired them, then [[recover]] deletes them. One writer per store.
  */
@@ -54,7 +60,7 @@ private[graft] object SegmentStore {
     * with `seq` it tells two stores apart that reused one path. `schema`
     * is the (data, partition) schema of its `S` line. */
   final case class Manifest(seq: Long, mtime: Long, live: Seq[Entry], retired: Seq[String],
-                            schema: Option[(StructType, StructType)])
+                            schema: Option[(StructType, StructType)], tags: Map[String, String])
 
   /** How long the files a commit retired stay on disk after it: a reader
     * resolved just before the commit still reads them. A serving request
@@ -75,7 +81,8 @@ private[graft] object SegmentStore {
       rows.collectFirst { case Seq("S", k, json) =>
         val all = DataType.fromJson(json).asInstanceOf[StructType]
         (StructType(all.dropRight(k.toInt)), StructType(all.takeRight(k.toInt)))
-      })
+      },
+      rows.collect { case Seq("T", commit, tag) => commit -> tag }.toMap)
   }
 
   private def newest(hfs: FileSystem, root: String): Option[(Long, FileStatus)] =
@@ -129,23 +136,28 @@ private[graft] object SegmentStore {
     * `commitDir` (partitioned by `partitionSchema`) and return the live
     * entries they supersede, then publish the next manifest: the live
     * entries minus those, plus the new files. Publishes nothing when
-    * nothing was superseded or written. Returns the superseded entries. */
-  def commit(spark: SparkSession, root: String, partitionSchema: StructType)
+    * nothing was superseded or written, or when the newest manifest
+    * already names `tag` (a replay: `rewrite` does not run). Returns the
+    * superseded entries. */
+  def commit(spark: SparkSession, root: String, partitionSchema: StructType, tag: String = "")
             (rewrite: (Seq[Entry], String) => Seq[Entry]): Seq[Entry] =
-    commitWith(spark, root, partitionSchema, None)(
-      (cur, dir) => rewrite(cur.fold(Seq.empty[Entry])(_.live), dir))(_ => ())
+    commitWith(spark, root, partitionSchema, None, tag)(
+      (cur, dir) => rewrite(cur.fold(Seq.empty[Entry])(_.live), dir))(_ => ()).getOrElse(Nil)
 
   /** [[commit]] with the manifest `rewrite` starts from, a `schema` for
     * the `S` line (else the current one is carried), and a `check` of the
     * new files that runs before the publish. With a schema it always
-    * publishes. */
+    * publishes. None when `tag` was already committed. */
   private def commitWith(spark: SparkSession, root: String, partitionSchema: StructType,
-                         schema: Option[(StructType, StructType)])
+                         schema: Option[(StructType, StructType)], tag: String)
                         (rewrite: (Option[Manifest], String) => Seq[Entry])
-                        (check: Seq[Entry] => Unit): Seq[Entry] = {
+                        (check: Seq[Entry] => Unit): Option[Seq[Entry]] = {
+    require(!tag.exists(c => c == '\t' || c == '\n' || c == '\r'),
+      s"a commit tag is one manifest field: no tab or line break, got '$tag'")
     val hfs = SeqFiles.fs(spark, root)
     recover(spark, root)
     val cur = latest(hfs, root)
+    if (tag.nonEmpty && cur.exists(_.tags.valuesIterator.contains(tag))) return None
     val live = cur.fold(Seq.empty[Entry])(_.live)
     val seq = cur.fold(0L)(_.seq) + 1
     val dir = new Path(root, SeqFiles.name("c", seq))
@@ -163,36 +175,42 @@ private[graft] object SegmentStore {
       val schemaLine = schema.orElse(cur.flatMap(_.schema)).map { case (data, part) =>
         s"S\t${part.length}\t${StructType(data ++ part).json}"
       }
+      val tags = (cur.fold(Map.empty[String, String])(_.tags) + (dir.getName -> tag))
+        .filter { case (c, t) => t.nonEmpty && keptCommits(c) }
       SeqFiles.publish(hfs, manifestDir(root), "m", seq,
         next.map(e => ("F" +: e.values :+ e.bytes.toString :+ e.path).mkString("\t")) ++
-          retired.map("R\t" + _) ++ schemaLine)
+          retired.map("R\t" + _) ++ schemaLine ++
+          tags.toSeq.sorted.map { case (c, t) => s"T\t$c\t$t" })
     }
-    dropped
+    Some(dropped)
   }
 
   /** Commit the laid-out frame `df` as the next commit of `root`,
     * partitioned by `partitionBy`: a save (`replace`) supersedes every
-    * live file, an append adds its files to them. It always publishes, so
-    * a save of an empty frame loads empty. An append must match the
-    * stored column names and types. */
-  def write(df: DataFrame, root: String, replace: Boolean, partitionBy: String*): Unit =
-    commitFrame(df, root, replace, partitionBy)(_ => ())
+    * live file, an append adds its files to them. It publishes, so a save
+    * of an empty frame loads empty, unless the newest manifest already
+    * names `tag`: then it writes nothing and returns false. An append must
+    * match the stored column names and types. */
+  def write(df: DataFrame, root: String, replace: Boolean, partitionBy: Seq[String] = Nil,
+            tag: String = ""): Boolean =
+    commitFrame(df, root, replace, partitionBy, tag)(_ => ())
 
   /** [[write]], running `check` on a frame over the new files before the
     * publish. */
   private def commitFrame(df: DataFrame, root: String, replace: Boolean,
-                          partitionBy: Seq[String])(check: DataFrame => Unit): Unit = {
+                          partitionBy: Seq[String], tag: String)
+                         (check: DataFrame => Unit): Boolean = {
     val part = StructType(partitionBy.map(df.schema(_)))
     val data = StructType(df.schema.filterNot(f => partitionBy.contains(f.name)))
     def shape(s: StructType) = s.map(f => (f.name, f.dataType.catalogString))
-    commitWith(df.sparkSession, root, part, Some((data, part))) { (cur, dir) =>
+    commitWith(df.sparkSession, root, part, Some((data, part)), tag) { (cur, dir) =>
       cur.flatMap(_.schema).filterNot(_ => replace).foreach { case (d, p) =>
         require(shape(d) ++ shape(p) == shape(data) ++ shape(part),
           s"appending ${data ++ part} to the store at $root of ${d ++ p}")
       }
       df.write.mode("overwrite").partitionBy(partitionBy: _*).parquet(dir)
       cur.filter(_ => replace).fold(Seq.empty[Entry])(_.live)
-    }(added => check(frame(df.sparkSession, root, added, data, part)))
+    }(added => check(frame(df.sparkSession, root, added, data, part))).nonEmpty
   }
 
   /**
@@ -213,7 +231,7 @@ private[graft] object SegmentStore {
     val source = latest(hfs, src).getOrElse(
       throw new IllegalStateException(s"no $artifact at $src — save first"))
     val pile = pinned(spark, src, source)
-    commitFrame(fold(pile), dst, replace = true, partitionBy) { done =>
+    commitFrame(fold(pile), dst, replace = true, partitionBy, tag = "") { done =>
       def sums(df: DataFrame) = df.select(xxhash64(df.columns.map(df(_)): _*).as("h"))
         .agg(count(lit(1)), coalesce(call_function("bit_xor", col("h")), lit(0L)))
       val r = sums(view(pile)).crossJoin(sums(view(done))).head()

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -103,9 +104,13 @@ object StreamingPipeline {
    *
    * Upsert semantics: each micro-batch (update mode → only cells whose
    * aggregate changed) REPLACES the (window_day) partitions it touches after
-   * merging with surviving rows — `foreachBatch` + [[upsertBatch]]. Replays
-   * of the same batch after failure commit the same content again →
-   * idempotent (SURVEY.md §7.4.1).
+   * merging with surviving rows — `foreachBatch` + [[upsertBatch]], tagged
+   * `<query id>-<batch id>`. The query id is the stable
+   * [[StreamingQuery.id]] kept in the checkpoint, so a batch that Spark
+   * replays after a failure (its output committed, its checkpoint commit
+   * not) finds its tag in the newest manifest and publishes nothing: the
+   * output is recorded once (SURVEY.md §7.4.1). A fresh checkpoint is a
+   * new query id, so its batches never match an older query's tags.
    */
   def start(source: DataFrame, tableDir: String, checkpointDir: String,
             precision: Int = 6,
@@ -116,8 +121,10 @@ object StreamingPipeline {
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertBatch(batch, tableDir)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        // the driver-side property Spark sets on the stream's thread
+        val query = batch.sparkSession.sparkContext.getLocalProperty(StreamExecution.QUERY_ID_KEY)
+        upsertBatch(batch, tableDir, tag = s"$query-$id")
       }
       .start()
   }
@@ -127,12 +134,14 @@ object StreamingPipeline {
    * (parquet dumps, archived topics) and merge into the serving table with
    * the same crash-atomic upsert the stream uses. One code path for bootstrap
    * and replay — `withWatermark` is a no-op in batch, so [[hourlyAgg]] is
-   * shared verbatim.
+   * shared verbatim. The commit is untagged: a rerun of a backfill commits
+   * again, and rewrites the same cells.
    *
    * Handoff semantics (kappa): the upsert REPLACES a (key, hour) cell, so a
    * live stream taking over must replay the same log from the start; one
    * starting mid-log would emit partial aggregates and clobber backfilled
-   * cells — replace-not-add is what keeps micro-batch replays idempotent.
+   * cells — replace-not-add is what keeps the cells right when a batch is
+   * recomputed under a tag that no longer names a live commit.
    */
   def backfill(rawJson: DataFrame, tableDir: String, precision: Int = 6): Unit = {
     val (valid, _) = validate(parseReadings(rawJson))
@@ -153,16 +162,17 @@ object StreamingPipeline {
    * batch, replace only the touched day partitions. Cost per trigger is
    * O(changed days), not O(table); the merge input is read through the
    * manifest (no listing, no schema-inference job). Crash-atomic: a reader
-   * sees the whole batch or none of it ([[SegmentStore.commit]]).
+   * sees the whole batch or none of it ([[SegmentStore.commit]]). A
+   * non-empty `tag` the newest manifest already names makes it a no-op.
    */
-  def upsertBatch(batch: DataFrame, tableDir: String): Unit = {
+  def upsertBatch(batch: DataFrame, tableDir: String, tag: String = ""): Unit = {
     val cols = (cellSchema ++ daySchema).map(f => col(f.name))
     val changed = batch.select(cols: _*).cache()
     try {
       val days = changed.select(col("window_day").cast("string")).distinct().collect()
         .map(_.getString(0)).toSeq
       val spark = batch.sparkSession
-      if (days.nonEmpty) SegmentStore.commit(spark, tableDir, daySchema) { (live, dir) =>
+      if (days.nonEmpty) SegmentStore.commit(spark, tableDir, daySchema, tag) { (live, dir) =>
         val touched = live.filter(e => days.contains(day(e)))
         // anti-join on the upsert key: survivors in the touched partitions
         // (none when no touched day is live yet, as in a first batch)

@@ -2,7 +2,7 @@ package graft
 
 import java.net.URI
 import java.util.EnumSet
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import org.apache.hadoop.fs.{CreateFlag, FSDataInputStream, FSDataOutputStream, FileStatus,
   FilterFileSystem, Path, RawLocalFileSystem}
@@ -17,7 +17,9 @@ import org.apache.spark.sql.SparkSession
  * one after it, as a process killed at that step would never issue them;
  * a crash-point sweep runs a verb with N = 1, 2, ... until it completes.
  * It can also log the reads (`listStatus`, `open`, `getFileStatus`), so a
- * test can count what a reader touches. Instances are not cached (every
+ * test can count what a reader touches, and run an action at the first
+ * write step, so a test can land a change while a verb runs. Instances
+ * are not cached (every
  * `getFileSystem` makes a new one), so the state lives in the companion.
  */
 class FaultFs extends FilterFileSystem(new FaultFs.Local) {
@@ -86,10 +88,20 @@ object FaultFs {
   private val writes = new AtomicInteger
   @volatile private var failAt = Int.MaxValue
   @volatile private var log: java.util.Queue[String] = _
+  private val interjection = new AtomicReference[() => Unit]
 
-  private def write(op: String, p: Path): Unit =
+  private def write(op: String, p: Path): Unit = {
+    Option(interjection.getAndSet(null)).foreach(_())
     if (writes.incrementAndGet() >= failAt)
       throw new java.io.IOException(s"injected crash at $op $p")
+  }
+
+  /** Run `f`, running `action` once, in the thread of the first write
+    * step `f` makes through this scheme, before that step. */
+  def interjecting[A](action: => Unit)(f: => A): A = {
+    interjection.set(() => action)
+    try f finally interjection.set(null)
+  }
 
   private def read(op: String, p: Path): Unit = {
     val l = log

@@ -474,8 +474,8 @@ class JoinPlannerSpec extends SparkSpec {
     }
   }
 
-  test("atomic slice publish: a torn write (staging only) is invisible to " +
-    "the loader, and a replayed sliceId is a committed no-op") {
+  test("a replayed sliceId is a committed no-op: the bundle does not " +
+    "double-count and publishes nothing") {
     withTmp { tmp =>
       val fact = (1 to 200).map(i => (1L + i % 10, i.toLong)).toDF("fk", "payload")
       val p = JoinPlanner.ProfileParams(depth = 4, width = 256, topK = 64,
@@ -486,15 +486,9 @@ class JoinPlannerSpec extends SparkSpec {
         s"$tmp/fact", p, sliceId = "batch-1")
       val before = JoinPlanner.profileDistinctAdvice(spark, s"$tmp/fact")
         .collect()(0).toSeq
-      // simulate the crash the round-17 layout could not survive: a slice
-      // whose cells landed but whose stats never did — under the staged
-      // publish it sits in _staging and the loader must not see it
-      val orphan = s"$tmp/fact/_staging/batch-2"
-      fact.limit(5).select($"fk".as("k"), lit(1L).as("cnt"))
-        .write.parquet(s"$orphan/cells")
-      assert(JoinPlanner.profileDistinctAdvice(spark, s"$tmp/fact")
-        .collect()(0).toSeq === before,
-        "a torn (uncommitted) slice changed the loaded bundle")
+      def seq() = graft.operators.SegmentStore.latest(
+        graft.operators.SeqFiles.fs(spark, s"$tmp/fact"), s"$tmp/fact").get.seq
+      val committed = seq()
       // replaying an already-committed sliceId must not double-count —
       // the exactly-once contract a foreachBatch maintainer leans on
       JoinPlanner.appendTableProfile(fact.filter($"payload" % 2 === 1), "fk",
@@ -502,14 +496,13 @@ class JoinPlannerSpec extends SparkSpec {
       assert(JoinPlanner.profileDistinctAdvice(spark, s"$tmp/fact")
         .collect()(0).toSeq === before,
         "an at-least-once replay double-counted a slice")
-      val slices = new java.io.File(s"$tmp/fact/slices").listFiles()
-        .map(_.getName).filterNot(_.startsWith(".")).sorted
-      assert(slices.toSeq === Seq("base", "batch-1"))
+      assert(seq() == committed, "a replayed sliceId published a commit")
+      assert(before.head == 200L)
     }
   }
 
-  test("sliceId hygiene: a name sliceDirs would skip (or that escapes the " +
-    "slices dir) is rejected; re-save resets only the bundle's own layout") {
+  test("sliceId hygiene: a tag that is not a plain id is rejected before " +
+    "anything is written; re-save replaces only the bundle's own commits") {
     withTmp { tmp =>
       val fact = (1 to 100).map(i => (1L + i % 5, i.toLong)).toDF("fk", "payload")
       val p = JoinPlanner.ProfileParams(depth = 4, width = 256, topK = 64,
@@ -517,11 +510,11 @@ class JoinPlannerSpec extends SparkSpec {
       JoinPlanner.saveTableProfile(fact, "fk", s"$tmp/fact", p)
       val before = JoinPlanner.profileDistinctAdvice(spark, s"$tmp/fact")
         .collect()(0).toSeq
-      // every id here would either commit invisibly ('.'-prefixed skipped
-      // by sliceDirs, '_'-prefixed collides with staging) or resolve the
-      // target outside slices/ ('.', '..', a path separator) — all must
+      // the sliceId is one field of a tab-separated manifest line: a tab
+      // or a line break would split it, and a dot-, dash- or
+      // underscore-led or path-like name is a caller mistake — all must
       // fail the append loudly BEFORE anything is written
-      for (bad <- Seq(".foo", "_foo", ".", "..", "a/b", "-x"))
+      for (bad <- Seq(".foo", "_foo", ".", "..", "a/b", "-x", "a\tb", "a\nb"))
         intercept[IllegalArgumentException] {
           JoinPlanner.appendTableProfile(fact, "fk", s"$tmp/fact", p,
             sliceId = bad)
@@ -529,8 +522,8 @@ class JoinPlannerSpec extends SparkSpec {
       assert(JoinPlanner.profileDistinctAdvice(spark, s"$tmp/fact")
         .collect()(0).toSeq === before,
         "a rejected sliceId changed the bundle")
-      // re-save resets slices/ + _staging/ ONLY: a neighbor file and a
-      // Generations pointer dir at the same path survive the save
+      // re-save touches only the store's c-N/ and _manifest/: a neighbor
+      // file and a Generations pointer dir at the same path survive it
       val foreign = java.nio.file.Path.of(s"$tmp/fact/keepme.txt")
       java.nio.file.Files.writeString(foreign, "not a bundle component")
       java.nio.file.Files.createDirectories(
@@ -543,9 +536,11 @@ class JoinPlannerSpec extends SparkSpec {
         java.nio.file.Path.of(s"$tmp/fact/_ptr")),
         "saveTableProfile wiped a non-bundle neighbor dir")
       // and the reset bundle reflects only the new base slice
-      val slices = new java.io.File(s"$tmp/fact/slices").listFiles()
-        .map(_.getName).filterNot(_.startsWith(".")).sorted
-      assert(slices.toSeq === Seq("base"))
+      val m = graft.operators.SegmentStore.latest(
+        graft.operators.SeqFiles.fs(spark, s"$tmp/fact"), s"$tmp/fact").get
+      assert(m.live.map(_.path.takeWhile(_ != '/')).distinct == Seq("c-00000002"))
+      assert(JoinPlanner.profileDistinctAdvice(spark, s"$tmp/fact")
+        .collect()(0).getAs[Long]("rows") == 50L)
     }
   }
 

@@ -160,17 +160,17 @@ class PlanServerSpec extends SparkSpec {
 
   test("a true 500 answers generically — no exception text, class names or " +
     "filesystem paths leak to the client") {
-    // register a path whose bundle is DELETED under the running server:
-    // the loader's require (an IllegalArgumentException) is a 400, so
-    // break it deeper — a slices dir whose stats component is unreadable
-    // garbage surfaces as a runtime failure, the 500 shape
+    // a committed bundle whose every live file is overwritten with
+    // garbage: the loader's stats read fails at runtime, the 500 shape
+    // (a caller error such as a sketch-shape mix is a 400)
     val root = java.nio.file.Files.createTempDirectory("graft_planserve5").toString
     try {
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Path.of(s"$root/bundle/slices/base/data"))
-      java.nio.file.Files.writeString(
-        java.nio.file.Path.of(s"$root/bundle/slices/base/data/part-0.parquet"),
-        "not parquet at all")
+      JoinPlanner.saveTableProfile(
+        Tables.supplier(spark, Sf).select(col("s_suppkey")), "s_suppkey", s"$root/bundle")
+      graft.operators.SegmentStore.read(spark, s"$root/bundle").get.inputFiles.foreach { f =>
+        java.nio.file.Files.writeString(
+          java.nio.file.Path.of(new java.net.URI(f)), "not parquet at all")
+      }
       val srv = new PlanServer(spark, Map("broken" -> s"$root/bundle"))
       val port = srv.start()
       try {

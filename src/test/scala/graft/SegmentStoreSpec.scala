@@ -7,13 +7,14 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Bloom, Dedup, EntityResolution, Pca, Retrieval, SegmentStore, SeqFiles,
-  Sketches, TextAnalysis}
+import graft.operators.{Bloom, Dedup, EntityResolution, JoinPlanner, Pca, Retrieval, SegmentStore,
+  SeqFiles, Sketches, TextAnalysis}
 import graft.streaming.{StreamingEntity, StreamingWinnow}
 
-/** The eight delta-append artifact families on [[SegmentStore]]: one
-  * commit path, loads pinned to one manifest, and a compaction that
-  * fails exactly when its source changed while it ran. */
+/** The delta-append artifact families on [[SegmentStore]]: one commit
+  * path, loads pinned to one manifest, tagged appends that a replay
+  * cannot repeat, and a compaction that fails exactly when its source
+  * changed while it ran. */
 class SegmentStoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -35,6 +36,22 @@ class SegmentStoreSpec extends SparkSpec {
 
   private def orWords(pile: DataFrame) =
     pile.groupBy(col("w")).agg(call_function("bit_or", col("bits")).as("bits"))
+
+  private val facts = (1 to 60).map(i => (1L + i % 7, i.toLong)).toDF("fk", "payload")
+
+  private val shape = JoinPlanner.ProfileParams(depth = 2, width = 64, topK = 16, kmvK = 8)
+
+  private def saveProfile(d: DataFrame, dir: String) =
+    JoinPlanner.saveTableProfile(d, "fk", dir, shape)
+
+  private def appendProfile(d: DataFrame, dir: String, sliceId: String = "") =
+    JoinPlanner.appendTableProfile(d, "fk", dir, shape, sliceId)
+
+  /** A profile reader resolved now: every component it folds, when called. */
+  private def profile(dir: String): () => Seq[String] = {
+    val p = JoinPlanner.loadTableProfile(spark, dir)
+    () => Seq(p.stats, p.cells, p.topk, p.kmv).flatMap(sorted)
+  }
 
   test("an append committed while a fold runs fails the compaction: dst " +
       "publishes nothing and src keeps base + append (band index, bloom words)") {
@@ -69,6 +86,21 @@ class SegmentStoreSpec extends SparkSpec {
       Bloom.compactWords(spark, wsrc, wdst)
       assert(manifest(wdst).get.seq == 1L)
       assert(sorted(Bloom.loadWords(spark, wdst)) == sorted(Bloom.loadWords(spark, wsrc)))
+
+      // the profile's own verb: the append lands at the fold's first write
+      // step, after the source was pinned and before the publish
+      val (psrc, pdst) = (s"$tmp/profile", s"$tmp/profile_gen2")
+      saveProfile(facts.filter($"payload" <= 30), psrc)
+      FaultFs.install(spark)
+      val e3 = intercept[IllegalArgumentException] {
+        FaultFs.interjecting(appendProfile(facts.filter($"payload" > 30), psrc)) {
+          JoinPlanner.compactTableProfile(spark, psrc, FaultFs.uri(pdst))
+        }
+      }
+      assert(e3.getMessage.contains("the source changed mid-compaction; re-run"), e3.getMessage)
+      assert(manifest(pdst).isEmpty)
+      assert(manifest(psrc).get.seq == 2L)
+      assert(JoinPlanner.loadTableProfile(spark, psrc).stats.head().getLong(0) == 60L)
     } finally Gates.deleteTree(tmp)
   }
 
@@ -113,6 +145,63 @@ class SegmentStoreSpec extends SparkSpec {
     } finally Gates.deleteTree(template)
   }
 
+  test("crash-atomic tagged appendTableProfile, saveTableProfile over a bundle " +
+      "and compactTableProfile into a fresh dst: every crash point reads the old " +
+      "or the new profile, recover plus a rerun converges, and a replayed tag " +
+      "publishes nothing") {
+    val template = Files.createTempDirectory("graft_profile_sweep").toString
+    try {
+      saveProfile(facts.filter($"payload" <= 20), s"$template/profile")
+      appendProfile(facts.filter($"payload" > 20 && $"payload" <= 40), s"$template/profile",
+        sliceId = "batch-1")
+      val more = facts.filter($"payload" > 40)
+      def pile(dir: String) = profile(s"$dir/profile")
+      def gen2(dir: String): () => Seq[String] =
+        SegmentStore.read(spark, s"$dir/gen2").fold(() => Seq("no gen2"))(_ =>
+          profile(s"$dir/gen2"))
+      def recoverAt(sub: String)(dir: String) = SegmentStore.recover(spark, s"$dir/$sub")
+      // the append and its replay, as a stream re-running a batch whose
+      // output committed: every rerun after a crash replays it once more
+      def appendTwice(dir: String): Unit = {
+        appendProfile(more, s"$dir/profile", sliceId = "batch-2")
+        appendProfile(more, s"$dir/profile", sliceId = "batch-2")
+      }
+      val t0 = System.nanoTime()
+      val appendSteps = FaultFs.crashSweep(spark, template, pile, recoverAt("profile"))(appendTwice)
+      val t1 = System.nanoTime()
+      val saveSteps = FaultFs.crashSweep(spark, template, pile, recoverAt("profile")) { dir =>
+        saveProfile(facts, s"$dir/profile")
+      }
+      val t2 = System.nanoTime()
+      val compactSteps = FaultFs.crashSweep(spark, template, gen2, recoverAt("gen2")) { dir =>
+        JoinPlanner.compactTableProfile(spark, s"$dir/profile", s"$dir/gen2")
+      }
+      val t3 = System.nanoTime()
+      info(f"appendTableProfile: $appendSteps steps in ${(t1 - t0) / 1e9}%.1f s; " +
+        f"saveTableProfile: $saveSteps steps in ${(t2 - t1) / 1e9}%.1f s; " +
+        f"compactTableProfile: $compactSteps steps in ${(t3 - t2) / 1e9}%.1f s")
+      assert(appendSteps >= 4 && saveSteps >= 4 && compactSteps >= 4,
+        s"$appendSteps, $saveSteps, $compactSteps")
+
+      // what the append sweep converged to holds the slice once: the same
+      // profile as one untagged append, one commit, and the replayed tag
+      // of batch-1 is a no-op too
+      val (twice, once) = (FaultFs.copyOf(template), FaultFs.copyOf(template))
+      try {
+        appendTwice(twice)
+        appendProfile(facts.filter($"payload" > 20 && $"payload" <= 40), s"$twice/profile",
+          sliceId = "batch-1")
+        appendProfile(more, s"$once/profile")
+        assert(profile(s"$twice/profile")() == profile(s"$once/profile")())
+        assert(manifest(s"$twice/profile").get.seq == 3L)
+        assert(manifest(s"$twice/profile").get.tags.values.toSeq.sorted == Seq("batch-1", "batch-2"))
+        // a save drops the tags with the slices they named
+        saveProfile(facts, s"$twice/profile")
+        assert(manifest(s"$twice/profile").get.tags.isEmpty)
+      } finally { Gates.deleteTree(twice); Gates.deleteTree(once) }
+    } finally Gates.deleteTree(template)
+  }
+
   test("every family loader lists only _manifest and starts no file-listing " +
       "or schema-inference job, at more live files than the parallel-listing " +
       "threshold; an empty save loads empty") {
@@ -136,8 +225,14 @@ class SegmentStoreSpec extends SparkSpec {
         docs.select(($"doc_id" % 2).as("g"), $"doc_id"), Seq(col("g")),
         col("doc_id").cast("string")), p("hll"), Seq("g"))
       TextAnalysis.saveBenchmarkIndex(docs.filter($"doc_id" <= 3), 5, p("bench"))
+      saveProfile(facts.limit(0), p("profile"))
+      facts.collect().take(33).foreach { r =>
+        appendProfile(facts.filter($"payload" === r.getLong(1)), p("profile"))
+      }
       assert(manifest(p("trigram")).get.live.length > 32,
         "the trigram index must hold more live files than the 32-path listing threshold")
+      assert(manifest(p("profile")).get.live.map(_.path.takeWhile(_ != '/')).distinct.length > 32,
+        "the profile must hold more appended slices than the 32-path listing threshold")
 
       FaultFs.install(spark)
       val u = (name: String) => FaultFs.uri(p(name))
@@ -154,7 +249,9 @@ class SegmentStoreSpec extends SparkSpec {
         "loadSketchTable" -> (() =>
           Sketches.loadSketchTable(spark, u("hll"), Seq("g")).collect().toSeq),
         "loadBenchmarkIndex" -> (() =>
-          TextAnalysis.loadBenchmarkIndex(spark, u("bench"))._1.collect().toSeq))
+          TextAnalysis.loadBenchmarkIndex(spark, u("bench"))._1.collect().toSeq),
+        "loadTableProfile" -> (() =>
+          JoinPlanner.loadTableProfile(spark, u("profile")).stats.collect().toSeq))
       loaders.foreach { case (name, load) =>
         val (rows, reads, js) = FaultFs.readsAndJobs(spark)(load())
         assert(rows.nonEmpty, name)
@@ -176,12 +273,12 @@ class SegmentStoreSpec extends SparkSpec {
   }
 
   test("no delta-append family writes, reads or lists its artifact dir itself") {
-    // the eight families' sources commit and load only through
+    // the nine families' sources commit and load only through
     // SegmentStore: an append-mode write, a directory read or a listing
-    // here would be a ninth copy of the old commit path
+    // here would be a tenth copy of the old commit path
     val families = Seq("operators/Dedup", "operators/Bloom", "operators/Sketches",
       "operators/Pca", "operators/Retrieval", "operators/TextAnalysis",
-      "streaming/StreamingWinnow", "streaming/StreamingEntity")
+      "operators/JoinPlanner", "streaming/StreamingWinnow", "streaming/StreamingEntity")
       .map(f => Paths.get(s"src/main/scala/graft/$f.scala"))
     assert(families.forall(Files.exists(_)), "family sources not found from the working dir")
     val banned = raw"""mode\("append"\)|read\.parquet\(|listStatus\(|getFileSystem\(""".r

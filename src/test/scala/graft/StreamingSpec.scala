@@ -66,6 +66,49 @@ class StreamingSpec extends SparkSpec {
     assert(t2.exists(r => r.getAs[String]("key") == "u14fzp" && r.getAs[Long]("count") == 1))
   }
 
+  test("a batch replayed after its checkpoint commit was lost publishes " +
+      "nothing; a fresh checkpoint over the same batch ids commits") {
+    val dir = Files.createTempDirectory("serve_replay").toString
+    val ckpt = Files.createTempDirectory("ckpt_replay").toString
+    val fresh = Files.createTempDirectory("ckpt_fresh").toString
+    try {
+      // no watermark-only batch after the data batch, so the data batch is
+      // the checkpoint's last commit
+      val s = spark.newSession()
+      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+      implicit val sqlCtx = s.sqlContext
+      val mem = MemoryStream[String]
+      mem.addData(json(H0 + 60000, "u155mz82dv33", 10.0), json(H0 + 3660000, "u14fzp11abcd", 7.0))
+      def run(checkpoint: String) = {
+        val q = StreamingPipeline.start(mem.toDF().withColumnRenamed("value", "json"),
+          dir, checkpoint, precision = 6, trigger = Trigger.AvailableNow())
+        try q.processAllAvailable() finally q.stop()
+        q
+      }
+      def manifest() = graft.operators.SegmentStore.latest(
+        graft.operators.SeqFiles.fs(spark, dir), dir).get
+      def cells() = StreamingPipeline.servingView(spark, dir).collect().map(_.toString).sorted.toSeq
+      val q1 = run(ckpt)
+      val (seq, served) = (manifest().seq, cells())
+      assert(served.length == 2)
+      assert(manifest().tags.values.toSeq == Seq(s"${q1.id}-0"))
+      // the output of batch 0 committed, its checkpoint commit did not
+      Files.delete(java.nio.file.Path.of(ckpt, "commits", "0"))
+      Files.deleteIfExists(java.nio.file.Path.of(ckpt, "commits", ".0.crc"))
+      val q2 = run(ckpt)
+      assert(q2.id == q1.id)
+      assert(q2.recentProgress.exists(p => p.batchId == 0L && p.numInputRows == 2L),
+        "batch 0 was not replayed")
+      assert(manifest().seq == seq, "the replayed batch published a commit")
+      assert(cells() == served)
+      // a fresh checkpoint is a new query: its batch 0 commits
+      val q3 = run(fresh)
+      assert(q3.id != q1.id)
+      assert(manifest().seq == seq + 1)
+      assert(cells() == served)
+    } finally Seq(dir, ckpt, fresh).foreach(Gates.deleteTree)
+  }
+
   test("invalid readings (negative/null ts) are split out, not poison pills") {
     val raw = Seq(
       json(H0, "u155mz82dv33", 1.0),
