@@ -68,11 +68,11 @@ private[graft] object AnnArtifacts {
 
   /**
    * Root of the persisted serving artifacts for `dir` — written once per
-   * JVM from the cached quantizers: `<root>/ivf` ([[Similarity.saveIvfIndex]]
-   * layout), `<root>/pq` ([[Quantization.savePq]] layout), `<root>/ivfpq`
-   * ([[Similarity.saveIvfPqWith]] layout, code table partitioned by
-   * `list_id`). Serve queries read THESE paths through the public load
-   * APIs — the same artifact round-trip a deployment makes.
+   * JVM from the cached quantizers: `<root>/ivf` ([[Similarity.saveIvfIndex]]),
+   * `<root>/pq` ([[Quantization.savePq]]), `<root>/ivfpq`
+   * ([[Similarity.saveIvfPqWith]], code rows partitioned by `list_id`).
+   * Serve queries read THESE paths through the public load APIs — the
+   * same artifact round-trip a deployment makes.
    */
   def artifactRoot(s: SparkSession, dir: String): String = synchronized {
     pathMemo.getOrElseUpdate(dir, {
@@ -93,8 +93,8 @@ private[graft] object AnnArtifacts {
   /** An IVF-PQ artifact GROWN by the incremental path — the ANN twin of
     * [[lexicalAppendRoot]]: quantizers trained and persisted from the even
     * half of the corpus only, then the odd half encoded against the STORED
-    * quantizers ([[Similarity.ivfPqEncode]] — no retraining, one narrow
-    * pass) and appended to the `partitionBy(list_id)` code layout. The
+    * quantizers and committed as one store append
+    * ([[Similarity.appendIvfPq]] — no retraining, one narrow pass). The
     * `ann_append_topk` gate serves planted duplicates of APPENDED vectors
     * from it: an append that failed to land (or landed with wrong codes /
     * in the wrong list) cannot return its query at rank 1 / cos 1.0. */
@@ -109,12 +109,7 @@ private[graft] object AnnArtifacts {
       Similarity.saveIvfPqWith(idx, books, p)
       // grow: encode the odd half against the artifact's own stored
       // quantizers (the honest deployment shape — no driver state reuse)
-      val loaded = Similarity.loadIvfPq(s, p)
-      Similarity.ivfPqEncode(e.filter(col("vec_id") % 2 =!= 0),
-          loaded.centroids, loaded.books)
-        .select(col("cid"), col("pq_codes"), col("list_id"))
-        .repartition(col("list_id"))
-        .write.mode("append").partitionBy("list_id").parquet(s"$p/encoded")
+      Similarity.appendIvfPq(e.filter(col("vec_id") % 2 =!= 0), p)
       p
     })
   }
@@ -124,7 +119,7 @@ private[graft] object AnnArtifacts {
   /** IVF-PQ maintenance under append drift — the `ann_recluster_recall`
     * artifact: the full-corpus index persisted, a drifted ingest clump
     * ([[Fixtures.annDriftClump]] — 256 copies of 4 vectors, guaranteed to
-    * pile into stale lists) appended via [[Similarity.ivfPqEncode]], then
+    * pile into stale lists) appended via [[Similarity.appendIvfPq]], then
     * [[Similarity.maintainIvfPq]] detects the oversized list and
     * re-clusters into a fresh generation from the grown corpus. Returns
     * (servingPath, fired) — fired must be true on this fixture; the gate
@@ -138,11 +133,7 @@ private[graft] object AnnArtifacts {
       val clump = Fixtures.annDriftClump(e)
       Similarity.saveIvfPq(e, p1, nlist = Nlist, m = M, ksub = Ksub,
         kmeansIters = Iters)
-      val loaded = Similarity.loadIvfPq(s, p1)
-      Similarity.ivfPqEncode(clump, loaded.centroids, loaded.books)
-        .select(col("cid"), col("pq_codes"), col("list_id"))
-        .repartition(col("list_id"))
-        .write.mode("append").partitionBy("list_id").parquet(s"$p1/encoded")
+      Similarity.appendIvfPq(clump, p1)
       val grown = e.select(col("vec_id"), col("embedding")).union(clump)
       // geometry (nlist/m/ksub) is derived from the p1 artifact itself
       val fired = Similarity.maintainIvfPq(s, p1, p2, grown,

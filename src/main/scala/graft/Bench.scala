@@ -46,7 +46,7 @@ case class BenchLexQuery(query_id: Long, terms: Seq[String])
  *    function itself, so `warm` reads near-zero there by design — their
  *    cost IS the construction, and min/max still carry their variance.
  *  - `streaming`: per-epoch wall seconds of 3 micro-batches served by
- *    [[StreamingAnnServing.serveIvfPqFromPath]] from the persisted IVF-PQ
+ *    [[StreamingAnnServing.serveIvfPqFromRoot]] from the persisted IVF-PQ
  *    artifact — quantizer load + stream construction are OUTSIDE the
  *    epochs (StreamingAnnSpec pins that quantizers are not re-read per
  *    epoch), so each epoch is pure micro-batch serving; epoch 0 still
@@ -285,8 +285,9 @@ object Bench {
 
     // streaming ANN serving latency: 3 micro-batches of the 8 fixture
     // queries (shifted ids — client id space) against the per-JVM persisted
-    // IVF-PQ artifact; the growing-index path re-lists code table + corpus
-    // per epoch, which is part of the honest per-epoch cost
+    // IVF-PQ artifact; the growing-index path re-reads the code table's
+    // newest manifest and the corpus per epoch, which is part of the honest
+    // per-epoch cost
     // the streaming sections run in a full bench, or when the subset names
     // "streaming" explicitly (focused iteration on epoch latency)
     val runStreaming = only.forall(_.contains("streaming"))
@@ -302,7 +303,7 @@ object Bench {
           .collect().map(r => BenchQueryVec(r.getLong(0), r.getSeq[Float](1)))
         val stream = MemoryStream[BenchQueryVec]
         var served = 0L
-        val q = StreamingAnnServing.serveIvfPqFromPath(stream.toDF(), indexPath,
+        val q = StreamingAnnServing.serveIvfPqFromRoot(stream.toDF(), indexPath,
           corpusPath, k = 5, nprobe = 8, shortlist = 50) { (ans, _) =>
           served += ans.count()
         }

@@ -735,10 +735,10 @@ private[graft] object Gates {
       Similarity.saveIvfIndex(
         Similarity.buildIvfIndex(e, nlist = AnnArtifacts.Nlist,
           kmeansIters = AnnArtifacts.Iters), tmp)
-      // counts collected eagerly from the artifact (build includes the
-      // write), then the throwaway copy is removed
-      val n = s.read.parquet(s"$tmp/assigned").count()
-      val nc = s.read.parquet(s"$tmp/centroids").count()
+      // counts collected eagerly from the artifact through its loader
+      // (build includes the write), then the throwaway copy is removed
+      val loaded = Similarity.loadIvfIndex(s, tmp)
+      val (n, nc) = (loaded.assigned.count(), loaded.centroids.length.toLong)
       deleteTree(tmp)
       Seq((n, nc)).toDF("n_assigned", "n_centroids")
     }),
@@ -750,8 +750,8 @@ private[graft] object Gates {
       val books = Quantization.buildPqCodebooks(e, m = AnnArtifacts.M,
         ksub = AnnArtifacts.Ksub, kmeansIters = AnnArtifacts.Iters)
       Quantization.savePq(Quantization.encodePq(e, books), books, tmp)
-      val n = s.read.parquet(s"$tmp/codes").count()
-      val nb = s.read.parquet(s"$tmp/books").count()
+      val (codes, stored) = Quantization.loadPq(s, tmp)
+      val (n, nb) = (codes.count(), stored.books.map(_.length.toLong).sum)
       deleteTree(tmp)
       Seq((n, nb)).toDF("n_codes", "n_book_rows")
     }),
@@ -762,9 +762,9 @@ private[graft] object Gates {
       val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_build").toString
       Similarity.saveIvfPq(e, tmp, nlist = AnnArtifacts.Nlist, m = AnnArtifacts.M,
         ksub = AnnArtifacts.Ksub, kmeansIters = AnnArtifacts.Iters)
-      val n = s.read.parquet(s"$tmp/encoded").count()
-      val nc = s.read.parquet(s"$tmp/centroids").count()
-      val nb = s.read.parquet(s"$tmp/books").count()
+      val loaded = Similarity.loadIvfPq(s, tmp)
+      val (n, nc, nb) = (loaded.encoded.count(), loaded.centroids.length.toLong,
+        loaded.books.books.map(_.length.toLong).sum)
       deleteTree(tmp)
       Seq((n, nc, nb)).toDF("n_codes", "n_centroids", "n_book_rows")
     }),

@@ -127,18 +127,19 @@ object Bpe {
         w => w =!= ""),
       " ")
 
-  /** Persist a model as an ordered (rank, left, right, freq) parquet table. */
+  /** Persist a model as an ordered (rank, left, right, freq) table: one
+    * [[SegmentStore]] save. */
   def saveBpeModel(spark: SparkSession, model: BpeModel, path: String): Unit = {
     import spark.implicits._
-    model.merges.zipWithIndex
+    SegmentStore.write(model.merges.zipWithIndex
       .map { case (m, i) => (i, m.left, m.right, m.freq) }
       .toDF("rank", "left", "right", "freq")
-      .coalesce(1).write.mode("overwrite").parquet(path)
+      .coalesce(1), path, replace = true)
   }
 
   /** Load a [[saveBpeModel]] artifact (rank order restored). */
   def loadBpeModel(spark: SparkSession, path: String): BpeModel =
-    BpeModel(spark.read.parquet(path)
+    BpeModel(SegmentStore.load(spark, path, "BPE model")
       .orderBy(col("rank"))
       .collect()
       .map(r => BpeMerge(r.getAs[String]("left"), r.getAs[String]("right"),

@@ -144,21 +144,22 @@ object Learn {
       .withColumn("pred_label", when(col("score") >= 0.5, 1).otherwise(0))
   }
 
-  /** Persist trained weights as a tiny parquet artifact (j, feature,
-    * weight) — the deployable model of the serving layer. */
+  /** Persist trained weights as a tiny (j, feature, weight) table — the
+    * deployable model of the serving layer: one [[SegmentStore]] save. */
   def saveModel(spark: org.apache.spark.sql.SparkSession, weights: Array[Double],
                 path: String): Unit = {
     import spark.implicits._
     require(weights.length == 4, s"saveModel: expected 4 weights, got ${weights.length}")
     val names = Seq("bias", "x1_tokens", "x2_punct", "x3_stop")
-    weights.toSeq.zipWithIndex.map { case (w, j) => (j, names(j), w) }
+    SegmentStore.write(weights.toSeq.zipWithIndex.map { case (w, j) => (j, names(j), w) }
       .toDF("j", "feature", "weight")
-      .coalesce(1).write.mode("overwrite").parquet(path)
+      .coalesce(1), path, replace = true)
   }
 
   /** Load a [[saveModel]] artifact back into the d+1 weight array. */
   def loadModel(spark: org.apache.spark.sql.SparkSession, path: String): Array[Double] = {
-    val rows = spark.read.parquet(path).select(col("j"), col("weight")).collect()
+    val rows = SegmentStore.load(spark, path, "quality model")
+      .select(col("j"), col("weight")).collect()
     require(rows.length == 4 && rows.map(_.getInt(0)).sorted.sameElements(0 until 4),
       s"loadModel: expected weight rows j=0..3, got ${rows.map(_.getInt(0)).mkString(",")}")
     val w = Array.ofDim[Double](4)

@@ -58,16 +58,15 @@ object Quantization {
    * Persist the quantized corpus as the servable ANN artifact (codes +
    * per-vector affine params) sorted by id within files — at 100 TB this
    * table IS the search corpus; the float column stays in cold storage for
-   * re-rank joins only.
+   * re-rank joins only. One [[SegmentStore]] save.
    */
   def saveQuantized(quantized: DataFrame, path: String,
                     idCol: String = "vec_id"): Unit =
-    quantized.sortWithinPartitions(col(idCol))
-      .write.mode("overwrite").parquet(path)
+    SegmentStore.write(quantized.sortWithinPartitions(col(idCol)), path, replace = true)
 
   /** Read a stored quantized corpus back; schema (id, codes, q_min, q_scale). */
   def loadQuantized(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    SegmentStore.load(spark, path, "quantized corpus")
 
   /** Max per-dimension |original − reconstructed| for a quantized row joined
     * back to its float vector — the audit column the gate bounds. */
@@ -209,43 +208,88 @@ object Quantization {
           .as("pq_codes"))
 
   /** Persist a PQ index: the code table (id-sorted within files) plus the
-    * codebook tensor alongside — same artifact convention as
-    * [[graft.operators.Similarity.saveIvfIndex]] / [[saveQuantized]]. At
+    * codebook tensor, as one [[SegmentStore]] save ([[indexTable]]). At
     * serving time the code table IS the ANN scan; the codebooks reload into
     * a literal. */
   def savePq(encoded: DataFrame, books: PqCodebooks, path: String,
-             idCol: String = "vec_id"): Unit = {
-    val spark = encoded.sparkSession
-    encoded.sortWithinPartitions(col(idCol))
-      .write.mode("overwrite").parquet(s"$path/codes")
-    import spark.implicits._
-    books.books.zipWithIndex
-      .flatMap { case (book, mi) => book.zipWithIndex.map { case (c, ki) => (mi, ki, c) } }
-      .toDF("m_idx", "k_idx", "centroid")
-      .write.mode("overwrite").parquet(s"$path/books")
-  }
-
-  /** Read + validate the codebook table of a persisted PQ / IVF-PQ index —
-    * the one shared loader (a format or validation change lands here once,
-    * not in per-index copies). */
-  private[graft] def readPqBooks(spark: org.apache.spark.sql.SparkSession,
-                                 path: String): PqCodebooks = {
-    val rows = spark.read.parquet(s"$path/books")
-      .orderBy(col("m_idx"), col("k_idx")).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2)))
-    require(rows.nonEmpty, s"no PQ codebooks at $path/books — empty or corrupt index artifact")
-    val books = rows.groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (_, g) => g.sortBy(_._2).map(_._3).toSeq }
-    val subDims = books.flatMap(_.map(_.length)).distinct
-    require(subDims.size == 1,
-      s"PQ codebooks at $path/books are ragged: centroid dims ${subDims.mkString(",")}")
-    PqCodebooks(books.length, subDims.head, books)
-  }
+             idCol: String = "vec_id"): Unit =
+    saveIndex(indexTable("codes", encoded, Nil, Some(books))
+      .sortWithinPartitions(col("component"), col("list_id"), col(idCol)), path, replace = true)
 
   /** Read a stored PQ index back: (code table, codebooks). */
   def loadPq(spark: org.apache.spark.sql.SparkSession,
-             path: String): (DataFrame, PqCodebooks) =
-    (spark.read.parquet(s"$path/codes"), readPqBooks(spark, path))
+             path: String): (DataFrame, PqCodebooks) = {
+    val index = SegmentStore.load(spark, path, "PQ index")
+    val books = quantizers(index, path)._2
+    require(books.nonEmpty, s"no PQ codebooks at $path — empty or corrupt index artifact")
+    (rowsOf(index, "codes").drop("list_id"), books.get)
+  }
+
+  // ------------------------------------------------------ stored ANN indexes
+
+  /** The `list_id` of the rows that belong to no IVF list: a partition
+    * value is never null, because the loader casts directory names to int
+    * and the null directory name does not cast. */
+  private val NoList = -1
+
+  /** Columns owned by the quantizer rows of a stored index. */
+  private val QuantizerColumns = Seq("m_idx", "k_idx", "centroid")
+
+  /**
+   * A PQ, IVF or IVF-PQ index as ONE table, the rows of each component
+   * discriminated by the `component` partition column and partitioned by
+   * `list_id`: the indexed rows (`codes` or `assigned`) with their own
+   * columns and their IVF list (PQ codes, which have none, and the
+   * quantizers sit under [[NoList]]), the coarse quantizer as `centroids`
+   * rows (k_idx = list id, centroid) and the PQ codebooks as `books` rows
+   * (m_idx, k_idx, centroid). A row's columns outside its component are
+   * null. One table is one store commit: the codes and the quantizers they
+   * were encoded with are published together or not at all, and a probe
+   * still prunes the code files to its lists.
+   */
+  private[graft] def indexTable(name: String, rows: DataFrame, centroids: Seq[(Int, Array[Float])],
+                                books: Option[PqCodebooks]): DataFrame = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val quantizer =
+      (centroids.map { case (li, c) => ("centroids", Option.empty[Int], li, c.toSeq) } ++
+        books.toSeq.flatMap(_.books.zipWithIndex.flatMap { case (book, mi) =>
+          book.zipWithIndex.map { case (c, ki) => ("books", Option(mi), ki, c) }
+        })).toDF("component" +: QuantizerColumns: _*).withColumn("list_id", lit(NoList))
+    val listed = if (rows.columns.contains("list_id")) rows else rows.withColumn("list_id", lit(NoList))
+    listed.withColumn("component", lit(name))
+      .unionByName(quantizer.coalesce(1), allowMissingColumns = true)
+  }
+
+  /** Commit an [[indexTable]] as a save (`replace`) or an append of `path`. */
+  private[graft] def saveIndex(table: DataFrame, path: String, replace: Boolean): Unit =
+    SegmentStore.write(table, path, replace, partitionBy = Seq("component", "list_id"))
+
+  /** The `name` rows of a loaded index, with their own columns and
+    * `list_id`; the component predicate prunes the other files at planning. */
+  private[graft] def rowsOf(index: DataFrame, name: String): DataFrame =
+    index.filter(col("component") === name).drop("component" +: QuantizerColumns: _*)
+
+  /** Both quantizers of a loaded index in one bounded collect: the coarse
+    * centroids by list id (empty when it has none) and the PQ codebooks
+    * (None when it has none), validated. */
+  private[graft] def quantizers(index: DataFrame, path: String)
+      : (Array[(Int, Array[Float])], Option[PqCodebooks]) = {
+    val rows = index.filter(col("component").isin("centroids", "books"))
+      .select(col("component"), col("m_idx"), col("k_idx"), col("centroid")).collect()
+    val cents = rows.filter(_.getString(0) == "centroids")
+      .map(r => (r.getInt(2), r.getSeq[Float](3).toArray)).sortBy(_._1)
+    val cells = rows.filter(_.getString(0) == "books")
+      .map(r => (r.getInt(1), r.getInt(2), r.getSeq[Float](3))).sortBy(r => (r._1, r._2))
+    val books = if (cells.isEmpty) None else {
+      val bs = cells.groupBy(_._1).toSeq.sortBy(_._1).map(_._2.map(_._3).toSeq)
+      val subDims = bs.flatMap(_.map(_.length)).distinct
+      require(subDims.size == 1,
+        s"PQ codebooks at $path are ragged: centroid dims ${subDims.mkString(",")}")
+      Some(PqCodebooks(bs.length, subDims.head, bs))
+    }
+    (cents, books)
+  }
 }
 
 /**

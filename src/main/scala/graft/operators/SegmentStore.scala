@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 /**
  * A partitioned parquet table that is never overwritten in place: the
- * commit step of every persisted artifact family that grows by appends.
+ * commit step of every persisted artifact family.
  * Its clients are the serving table ([[graft.streaming.StreamingPipeline]]),
  * the lexical index ([[TextAnalysis.saveLexicalIndex]]), and, through
  * [[write]], [[load]] and [[foldCompact]], the band index
@@ -19,8 +19,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
  * dictionary ([[graft.streaming.StreamingEntity.saveDictionary]]), bloom
  * words ([[Bloom.saveWords]]), PCA moments ([[Pca.saveMoments]]), the HLL
  * sketch table ([[Sketches.saveSketchTable]]), the benchmark index
- * ([[TextAnalysis.saveBenchmarkIndex]]) and the join planner's table
- * profile ([[JoinPlanner.saveTableProfile]]).
+ * ([[TextAnalysis.saveBenchmarkIndex]]), the join planner's table
+ * profile ([[JoinPlanner.saveTableProfile]]), the ANN indexes
+ * ([[Similarity.saveIvfPq]], [[Similarity.saveIvfIndex]],
+ * [[Quantization.savePq]], [[Quantization.saveQuantized]]) and the BPE
+ * and quality models ([[Bpe.saveBpeModel]], [[Learn.saveModel]]).
  *
  * Commit S writes new files under `root/c-S/`, one directory level per
  * partition column as `partitionBy` writes them

@@ -160,10 +160,9 @@ object Similarity {
    * Encode a corpus against EXISTING quantizers — the incremental-indexing
    * path: coarse assignment through the codegen'd centroid kernel plus PQ
    * codes, one narrow pass, NO quantizer rebuild. This is how new vectors
-   * join a stored IVF-PQ artifact as the corpus grows (append the rows to
-   * the `partitionBy(list_id)` layout), and how a gate can honestly reuse
-   * one trained index across its query paths instead of re-training
-   * identical quantizers per path.
+   * join a stored IVF-PQ artifact as the corpus grows ([[appendIvfPq]]),
+   * and how a gate can honestly reuse one trained index across its query
+   * paths instead of re-training identical quantizers per path.
    */
   def ivfPqEncode(corpus: DataFrame, centroids: Array[(Int, Array[Float])],
                   books: Quantization.PqCodebooks,
@@ -177,16 +176,16 @@ object Similarity {
   }
 
   /** A persisted IVF-PQ index: PQ codes partitioned by IVF list (probe joins
-    * prune partitions), both quantizer tables alongside. */
+    * prune partitions), both quantizers alongside. */
   final case class IvfPqIndex(centroids: Array[(Int, Array[Float])],
                               books: Quantization.PqCodebooks,
                               encoded: DataFrame)
 
   /** Build and persist the full IVF-PQ serving artifact in one corpus pass:
-    * `(cid, list_id, pq_codes)` written `partitionBy(list_id)` so a probe
-    * reads nprobe/nlist of the files, plus the coarse centroids and PQ
-    * codebooks. Both quantizers are deterministic hash-order samples — the
-    * artifact is bit-reproducible from the corpus alone. */
+    * `(cid, list_id, pq_codes)` partitioned by `list_id` so a probe reads
+    * nprobe/nlist of the files, plus the coarse centroids and PQ codebooks.
+    * Both quantizers are deterministic hash-order samples — the artifact is
+    * bit-reproducible from the corpus alone. */
   def saveIvfPq(corpus: DataFrame, path: String,
                 nlist: Int = 16, m: Int = 8, ksub: Int = 32,
                 idCol: String = "vec_id", vecCol: String = "embedding",
@@ -199,48 +198,46 @@ object Similarity {
   /** [[saveIvfPq]] from ALREADY-TRAINED quantizers — the persist half without
     * the training half, so a caller that holds a trained index/codebook pair
     * (a serve bench, a re-layout, a copy to a second cluster) can write the
-    * artifact without re-running the Lloyd passes. */
+    * artifact without re-running the Lloyd passes. One store commit: the
+    * codes and both quantizers ([[Quantization.indexTable]]). */
   def saveIvfPqWith(index: IvfIndex, books: Quantization.PqCodebooks,
-                    path: String): Unit = {
-    val spark = index.assigned.sparkSession
-    import spark.implicits._
-    // three order-free component writes to disjoint dirs (the quantizer
-    // tables are driver-local literals) — fan out ([[Jobs.concurrently]])
-    // so the two tiny writes ride inside the encoded table's wall time
-    Jobs.concurrently(
-      () => index.assigned.select(col("cid"), col("list_id"),
-          VectorFunctions.pqEncode(col("cv"), Quantization.pqBooksLiteral(books)).as("pq_codes"))
-        .write.mode("overwrite").partitionBy("list_id").parquet(s"$path/encoded"),
-      () => index.centroids.toSeq.toDF("list_id", "centroid")
-        .write.mode("overwrite").parquet(s"$path/centroids"),
-      () => books.books.zipWithIndex
-        .flatMap { case (book, mi) => book.zipWithIndex.map { case (c, ki) => (mi, ki, c) } }
-        .toDF("m_idx", "k_idx", "centroid")
-        .write.mode("overwrite").parquet(s"$path/books"))
+                    path: String): Unit =
+    Quantization.saveIndex(Quantization.indexTable("codes",
+      index.assigned.select(col("cid"), col("list_id"),
+        VectorFunctions.pqEncode(col("cv"), Quantization.pqBooksLiteral(books)).as("pq_codes")),
+      index.centroids, Some(books)), path, replace = true)
+
+  /** Read a stored IVF-PQ index back: its quantizers in one bounded
+    * collect, and its code table pinned to the newest commit. */
+  def loadIvfPq(spark: org.apache.spark.sql.SparkSession, path: String): IvfPqIndex = {
+    val index = SegmentStore.load(spark, path, "IVF-PQ index")
+    val (cents, books) = Quantization.quantizers(index, path)
+    require(cents.nonEmpty && books.nonEmpty,
+      s"no IVF centroids or PQ codebooks at $path — empty or corrupt index artifact")
+    IvfPqIndex(cents, books.get, Quantization.rowsOf(index, "codes"))
   }
 
-  /** Read + validate the coarse-centroid table of a persisted IVF / IVF-PQ
-    * index (shared by [[loadIvfPq]] and the streaming serving path, which
-    * needs the quantizers WITHOUT touching the code table). */
-  private[graft] def readCentroids(spark: org.apache.spark.sql.SparkSession,
-                                   path: String): Array[(Int, Array[Float])] = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .orderBy(col("list_id")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-    require(cents.nonEmpty,
-      s"no IVF centroids at $path/centroids — empty or corrupt index artifact")
-    cents
-  }
+  /** The code table of the stored IVF-PQ index at `path`, through its
+    * newest commit, without reading the quantizers. */
+  private[graft] def ivfPqCodes(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+    Quantization.rowsOf(SegmentStore.load(spark, path, "IVF-PQ index"), "codes")
 
-  /** Read a stored IVF-PQ index back. */
-  def loadIvfPq(spark: org.apache.spark.sql.SparkSession, path: String): IvfPqIndex =
-    IvfPqIndex(readCentroids(spark, path),
-      Quantization.readPqBooks(spark, path),
-      spark.read.parquet(s"$path/encoded"))
+  /** Grow a stored IVF-PQ index: encode `vectors` against the index's own
+    * quantizers ([[ivfPqEncode]] — no retraining, one narrow pass) and
+    * commit the codes as one store append, one file per list. Readers see
+    * the new codes from their next load ([[loadIvfPq]], the streamed
+    * server's next epoch). */
+  def appendIvfPq(vectors: DataFrame, path: String,
+                  idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+    val index = loadIvfPq(vectors.sparkSession, path)
+    Quantization.saveIndex(Quantization.indexTable("codes",
+      ivfPqEncode(vectors, index.centroids, index.books, idCol, vecCol).repartition(col("list_id")),
+      Nil, None), path, replace = false)
+  }
 
   /**
    * LIST-BALANCE drift stats of a persisted IVF-PQ artifact — the
-   * maintenance trigger for an index grown by [[ivfPqEncode]] appends:
+   * maintenance trigger for an index grown by [[appendIvfPq]]:
    * appended vectors are assigned by quantizers trained on an OLDER
    * corpus snapshot, so a drifted ingest distribution piles into a few
    * lists, and an oversized list is a probe-cost blowup (every query
@@ -249,17 +246,18 @@ object Similarity {
    * `(n_lists, n_codes, max_list_rows, balanced_target, n_oversized)`
    * where `balanced_target = ceil(n_codes / n_lists)` and a list is
    * oversized when its row count exceeds `oversizeFactor ×` that target.
-   * Reads ONLY the artifact (per-list counts off the partition layout —
-   * one KB-bounded aggregate), never the corpus.
+   * Reads ONLY the artifact (per-list counts — one KB-bounded
+   * aggregate), never the corpus.
    */
   def ivfPqListStats(spark: org.apache.spark.sql.SparkSession, path: String,
                      oversizeFactor: Double = 2.0): DataFrame = {
     require(oversizeFactor > 1.0,
       s"ivfPqListStats: oversizeFactor must be > 1, got $oversizeFactor")
-    val nLists = readCentroids(spark, path).length
+    val index = loadIvfPq(spark, path)
+    val nLists = index.centroids.length
     // per-list counts are bounded by nlist rows — the codebook-collect
     // discipline: model-sized state driver-side, corpus never touched
-    val counts = spark.read.parquet(s"$path/encoded")
+    val counts = index.encoded
       .groupBy(col("list_id")).agg(count(lit(1)).as("cnt"))
       .collect().map(_.getLong(1))
     val nCodes = counts.sum
@@ -284,7 +282,7 @@ object Similarity {
    * defaults: maintenance must hand the serving pointer an index shaped
    * like the one being maintained, or a parameter-omitting call would
    * silently flip serving onto different geometry. The production
-   * cadence: ingest appends via [[ivfPqEncode]] (cheap, no retraining),
+   * cadence: ingest appends via [[appendIvfPq]] (cheap, no retraining),
    * this runs out-of-band, and the serving pointer flips to `dst`
    * ([[Generations.advance]]) when it reports true — the old generation
    * stays readable throughout, and a recall gate
@@ -300,10 +298,9 @@ object Similarity {
       .collect()(0).getAs[Long]("n_oversized")
     if (oversized == 0L) false
     else {
-      val nlist = readCentroids(spark, src).length
-      val books = Quantization.readPqBooks(spark, src)
-      saveIvfPq(corpus, dst, nlist, books.m, books.books.head.length,
-        idCol, vecCol, kmeansIters)
+      val index = loadIvfPq(spark, src)
+      saveIvfPq(corpus, dst, index.centroids.length, index.books.m,
+        index.books.books.head.length, idCol, vecCol, kmeansIters)
       true
     }
   }
@@ -587,23 +584,18 @@ object Similarity {
   private[graft] def centroidsLiteral(cents: Array[(Int, Array[Float])]): org.apache.spark.sql.Column =
     typedLit(cents.sortBy(_._1).map(_._2.toSeq).toSeq)
 
-  /** Persist the index: assignment table partitioned by `list_id` (probe
-    * joins prune partitions) + the centroid table alongside. */
-  def saveIvfIndex(index: IvfIndex, path: String): Unit = {
-    val spark = index.assigned.sparkSession
-    import spark.implicits._
-    Jobs.concurrently( // order-free, disjoint dirs — see [[saveIvfPqWith]]
-      () => index.assigned.write.mode("overwrite")
-        .partitionBy("list_id").parquet(s"$path/assigned"),
-      () => index.centroids.toSeq.toDF("list_id", "centroid")
-        .write.mode("overwrite").parquet(s"$path/centroids"))
-  }
+  /** Persist the index as one store commit ([[Quantization.indexTable]]):
+    * the assignment rows partitioned by `list_id` (probe joins prune
+    * partitions) and the centroids. */
+  def saveIvfIndex(index: IvfIndex, path: String): Unit =
+    Quantization.saveIndex(Quantization.indexTable("assigned", index.assigned,
+      index.centroids, None), path, replace = true)
 
   def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .orderBy(col("list_id")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-    IvfIndex(cents, spark.read.parquet(s"$path/assigned"))
+    val index = SegmentStore.load(spark, path, "IVF index")
+    val cents = Quantization.quantizers(index, path)._1
+    require(cents.nonEmpty, s"no IVF centroids at $path — empty or corrupt index artifact")
+    IvfIndex(cents, Quantization.rowsOf(index, "assigned"))
   }
 
   /** Probe the query's `nprobe` nearest centroids and exactly re-rank those

@@ -50,8 +50,8 @@ object StreamJoins {
    * any stream volume. Note a path-backed `dim` keeps the file listing it
    * was read with; to pick up a refreshed dimension without restarting,
    * re-read it by path inside `foreachBatch` (the pattern
-   * [[StreamingAnnServing.serveIvfPqFromPath]] uses for its growing code
-   * table).
+   * [[StreamingAnnServing.serveIvfPqFromRoot]] uses for its growing code
+   * table and corpus).
    */
   def enrichStatic(stream: DataFrame, dim: DataFrame, key: String): DataFrame =
     stream.join(broadcast(dim), Seq(key), "left")

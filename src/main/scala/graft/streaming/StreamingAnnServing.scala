@@ -18,7 +18,7 @@ import graft.operators.{Quantization, Similarity}
  *    stream: probe the query's `nprobe` nearest coarse centroids (codegen'd
  *    literal-table expression, no state), stream-static equi-join on
  *    `list_id` against the encoded code table (partition-pruned on the
- *    stored `partitionBy(list_id)` layout), ADC-score inside codegen. No
+ *    stored `list_id` partitions), ADC-score inside codegen. No
  *    state store, no watermark, no shuffle of the static side beyond the
  *    pruned scan — the per-event cost is the same `corpus·nprobe/nlist`
  *    code rows as the batch path.
@@ -69,10 +69,10 @@ object StreamingAnnServing {
    * (probe → ADC shortlist → exact re-rank against the float `corpus`) and
    * hands the answer frame to `sink`.
    *
-   * The captured `index.encoded`/`corpus` DataFrames keep the FILE LISTING
-   * they were created with (Spark snapshots a path-backed relation's leaf
-   * files at read time), so rows appended to the artifact after this call
-   * are NOT visible here — use [[serveIvfPqFromPath]] for a growing index.
+   * The captured `index.encoded`/`corpus` DataFrames keep the files they
+   * were created over (the index's commit at load time), so rows appended
+   * to the artifact after this call are NOT visible here — use
+   * [[serveIvfPqFromRoot]] for a growing index.
    * The centroids and codebooks are driver-held literals baked into the
    * plan either way; a RETRAINED quantizer always requires a reload +
    * restart.
@@ -91,69 +91,31 @@ object StreamingAnnServing {
       .start()
 
   /**
-   * [[serveIvfPq]] for a GROWING index: BOTH the code table
-   * (`indexPath/encoded`) and the float corpus (`corpusPath`) are re-read
-   * inside every micro-batch, so their file listings are fresh and a vector
-   * appended via [[Similarity.ivfPqEncode]] +
-   * `write.mode("append").partitionBy("list_id")` (codes) plus a matching
-   * corpus append becomes searchable without restarting the stream (gated
-   * in StreamingAnnSpec with a planted duplicate of an appended vector).
-   * The corpus re-read matters as much as the code-table re-read: the exact
-   * re-rank inside [[Similarity.ivfPqQuery]] inner-joins the ADC shortlist
-   * against the corpus, so a snapshotted corpus would silently DROP every
-   * appended vector from the answers even though its codes were shortlisted.
-   * Quantizers still load once — they are immutable plan literals by
-   * design; a RETRAINED quantizer requires a reload + restart.
-   */
-  def serveIvfPqFromPath(queryStream: DataFrame, indexPath: String,
-                         corpusPath: String, k: Int, nprobe: Int = 4, shortlist: Int = 20,
-                         idCol: String = "vec_id", vecCol: String = "embedding",
-                         excludeSelf: Boolean = false)
-                        (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    // quantizers only — loading the whole index would list and footer-read
-    // the (large) code table once for a DataFrame this path never uses.
-    // The schema probes below still fail FAST at stream construction on a
-    // missing/corrupt code table or corpus (one footer read each) instead
-    // of letting the deployment look healthy until epoch 0 dies inside
-    // foreachBatch.
-    val spark0 = queryStream.sparkSession
-    val cents = Similarity.readCentroids(spark0, indexPath)
-    val books = Quantization.readPqBooks(spark0, indexPath)
-    spark0.read.parquet(s"$indexPath/encoded").schema
-    spark0.read.parquet(corpusPath).schema
-    queryStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        val enc = batch.sparkSession.read.parquet(s"$indexPath/encoded")
-        val corpus = batch.sparkSession.read.parquet(corpusPath)
-        sink(Similarity.ivfPqQuery(enc, cents, books,
-          corpus, batch.toDF(), k, nprobe, shortlist, idCol, vecCol, excludeSelf), epochId)
-      }
-      .start()
-  }
-
-  /**
-   * [[serveIvfPqFromPath]] for a [[graft.operators.Generations]] ROOT (or a
-   * raw index path — a pointer-less root serves as-is): the serving
-   * generation is RE-RESOLVED inside every micro-batch, so an out-of-band
-   * maintenance flip ([[Similarity.maintainIvfPq]] recluster →
-   * `Generations.advance`) is served from the NEXT epoch with no stream
-   * restart — the streamed twin of [[graft.serving.RetrievalServer]]'s
-   * per-request resolution, closing the gap where a running stream kept
-   * answering from the generation it was constructed over.
+   * [[serveIvfPq]] for a GROWING index, at a [[graft.operators.Generations]]
+   * ROOT or a raw index path (a pointer-less root serves as-is). Every
+   * micro-batch re-resolves the serving generation, re-reads the code
+   * table through its newest [[graft.operators.SegmentStore]] manifest
+   * (one `_manifest` listing, no listing or schema-inference job at any
+   * list count) and re-reads the float corpus. So codes committed by
+   * [[Similarity.appendIvfPq]] plus a matching corpus append are served
+   * from the next epoch, and an out-of-band maintenance flip
+   * ([[Similarity.maintainIvfPq]] recluster → `Generations.advance`) is
+   * served from the next epoch, with no stream restart — the streamed
+   * twin of [[graft.serving.RetrievalServer]]'s per-request resolution.
+   * The corpus re-read matters as much as the code re-read: the exact
+   * re-rank inside [[Similarity.ivfPqQuery]] inner-joins the ADC
+   * shortlist against the corpus, so a snapshotted corpus would silently
+   * DROP every appended vector from the answers. The corpus is an input
+   * table whose schema is read once, at construction.
    *
-   * Unlike the fixed-path variant, the quantizers canNOT be plan literals
-   * loaded once: a reclustered generation carries RETRAINED centroids and
-   * codebooks, so they are memoized PER RESOLVED GENERATION (model-sized
-   * driver state; the reload — two small collects — runs exactly when the
-   * pointer moves, same discipline as the RetrievalServer's per-generation
-   * memo). Within a generation, epochs still pay only the per-batch query
-   * cost: resolution is at most three driver-side FS metadata calls
-   * ([[graft.operators.Generations.resolveIfPublished]]), never a Spark
-   * job. Construction fails FAST on an unpublished root or a
-   * missing/corrupt initial generation (quantizer loads + schema probes),
-   * and the growing-index contract of [[serveIvfPqFromPath]] carries over:
-   * codes/corpus appended WITHIN a generation are visible next epoch too.
+   * The quantizers are memoized PER RESOLVED GENERATION (model-sized
+   * driver state, one collect of the quantizer rows when the pointer
+   * moves; a reclustered generation carries retrained ones), and an epoch
+   * takes path and quantizers from ONE resolution, so it never reads
+   * gen-A's codes with gen-B's centroids. Within a generation an epoch
+   * never re-reads a quantizer row. Construction fails FAST on an
+   * unpublished root, a missing or corrupt initial generation, or a
+   * missing corpus.
    */
   def serveIvfPqFromRoot(queryStream: DataFrame, indexRoot: String,
                          corpusPath: String, k: Int, nprobe: Int = 4, shortlist: Int = 20,
@@ -161,29 +123,17 @@ object StreamingAnnServing {
                          excludeSelf: Boolean = false)
                         (sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val spark0 = queryStream.sparkSession
-    // per-generation quantizer memo — the shared
-    // [[graft.operators.Generations.artifactMemo]] discipline; its
-    // construction warm loads the initial generation's quantizers
-    // (fail-fast), and current() below hands back path + quantizers from
-    // ONE resolution so an epoch can never read gen-A's code table with
-    // gen-B's centroids
     val memo = graft.operators.Generations.artifactMemo(spark0, indexRoot)(
-      path => (Similarity.readCentroids(spark0, path),
-        Quantization.readPqBooks(spark0, path)))
-    // fail-fast construction, continued: footer-probe the code table +
-    // corpus now, instead of letting the deployment look healthy until
-    // epoch 0 dies in foreachBatch
-    val p0 = memo.current()._1
-    spark0.read.parquet(s"$p0/encoded").schema
-    spark0.read.parquet(corpusPath).schema
+      path => Similarity.loadIvfPq(spark0, path))
+    val corpusSchema = spark0.read.parquet(corpusPath).schema
     queryStream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        val (p, (cents, books)) = memo.current()
-        val enc = batch.sparkSession.read.parquet(s"$p/encoded")
-        val corpus = batch.sparkSession.read.parquet(corpusPath)
-        sink(Similarity.ivfPqQuery(enc, cents, books,
-          corpus, batch.toDF(), k, nprobe, shortlist, idCol, vecCol, excludeSelf), epochId)
+        val (p, index) = memo.current()
+        val spark = batch.sparkSession
+        sink(Similarity.ivfPqQuery(Similarity.ivfPqCodes(spark, p), index.centroids, index.books,
+          spark.read.schema(corpusSchema).parquet(corpusPath), batch.toDF(), k, nprobe, shortlist,
+          idCol, vecCol, excludeSelf), epochId)
       }
       .start()
   }

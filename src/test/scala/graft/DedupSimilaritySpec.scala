@@ -484,9 +484,11 @@ class DedupSimilaritySpec extends SparkSpec {
     graft.operators.Similarity.saveIvfIndex(idx, path)
     val loaded = graft.operators.Similarity.loadIvfIndex(spark, path)
 
-    // persisted artifact: assignment table partitioned by list_id on disk
-    assert(new java.io.File(s"$path/assigned").listFiles()
-      .exists(_.getName.startsWith("list_id=")))
+    // persisted artifact: assignment rows partitioned by list_id, one commit
+    val live = graft.operators.SegmentStore.latest(
+      graft.operators.SeqFiles.fs(spark, path), path).get.live
+    val lists = live.filter(_.values.head == "assigned").map(_.values(1).toInt).toSet
+    assert(lists.size > 1 && lists.subsetOf(idx.centroids.map(_._1).toSet), lists)
     assert(loaded.centroids.map(_._1).toSeq == idx.centroids.map(_._1).toSeq)
 
     val viaLoaded = graft.operators.Similarity.ivfQuery(loaded, q, k = 3, nprobe = 4)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.operators.Similarity
+import graft.operators.{Quantization, SegmentStore, SeqFiles, Similarity}
 import graft.sources.Tables
 import graft.streaming.StreamingAnnServing
 
@@ -87,65 +87,73 @@ class StreamingAnnSpec extends SparkSpec {
 
   test("serving epochs never re-read the quantizers (loaded once at construction)") {
     // The bench's per-epoch latency claims to exclude quantizer/index
-    // loading. Pin the mechanism: centroids + codebooks become plan
-    // literals at stream CONSTRUCTION; the per-epoch re-read covers only
-    // the code table and the float corpus. Destroying the quantizer tables
-    // on disk right after construction makes any per-epoch quantizer
-    // reload fail loudly — every epoch must still answer.
+    // loading. Pin the mechanism: centroids + codebooks are memoized per
+    // resolved generation at stream CONSTRUCTION; within that generation
+    // an epoch lists `_manifest`, reads code files and the float corpus,
+    // and never opens a file holding quantizer rows.
     val e = Tables.embeddings(spark, Sf)
     val dir = java.nio.file.Files.createTempDirectory("ann_loadonce").toString
     try {
       implicit val sqlCtx = spark.sqlContext
-      Similarity.saveIvfPq(e, dir, nlist = 8, m = 8, ksub = 16)
+      Similarity.saveIvfPq(e, s"$dir/idx", nlist = 8, m = 8, ksub = 16)
       val corpusPath = s"$dir/corpus"
       e.write.mode("overwrite").parquet(corpusPath)
+      val live = SegmentStore.latest(SeqFiles.fs(spark, s"$dir/idx"), s"$dir/idx").get.live
+      val quantizerFiles = live.filter(_.values.head != "codes").map(_.path.split('/').last).toSet
+      val codeFiles = live.filter(_.values.head == "codes").map(_.path.split('/').last).toSet
+      // (the reads log file names; the quantizer rows are written by their
+      // own task, so their names differ from every code file's)
+      assert(quantizerFiles.nonEmpty && codeFiles.nonEmpty && !codeFiles.exists(quantizerFiles), live)
       val qs = e.filter(col("vec_id") < 4)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
         .collect().map(r => QueryVec(r.getLong(0), r.getSeq[Float](1)))
+      FaultFs.install(spark)
       val stream = MemoryStream[QueryVec]
       var served = 0L
-      val q = StreamingAnnServing.serveIvfPqFromPath(stream.toDF(), dir, corpusPath,
-        k = 1, nprobe = 4, shortlist = 10) { (ans, _) => served += ans.count() }
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(s"$dir/centroids")).deleteRecursively()
-      new Directory(new java.io.File(s"$dir/books")).deleteRecursively()
-      stream.addData(qs.toIndexedSeq: _*)
-      q.processAllAvailable()
-      stream.addData(qs.toIndexedSeq: _*)
-      q.processAllAvailable()
-      q.stop()
+      val q = StreamingAnnServing.serveIvfPqFromRoot(stream.toDF(), FaultFs.uri(s"$dir/idx"),
+        FaultFs.uri(corpusPath), k = 1, nprobe = 4, shortlist = 10) { (ans, _) =>
+        served += ans.count()
+      }
+      try {
+        (1 to 2).foreach { epoch =>
+          val (_, reads) = FaultFs.reads {
+            stream.addData(qs.toIndexedSeq: _*)
+            q.processAllAvailable()
+          }
+          // a parquet reader stats each file it opens
+          val opened = reads.map(_.split(' ')).collect {
+            case Array("open" | "getFileStatus", name) => name
+          }.toSet
+          assert(reads.contains("listStatus _manifest"), s"epoch $epoch: $reads")
+          assert(opened.exists(codeFiles), s"epoch $epoch read no code file: $reads")
+          assert(!opened.exists(quantizerFiles), s"epoch $epoch re-read a quantizer file: $reads")
+        }
+      } finally q.stop()
       // 2 epochs × 4 planted-duplicate queries × k=1
       assert(served == 8L)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(dir)).deleteRecursively()
-    }
+    } finally Gates.deleteTree(dir)
   }
 
   test("code+corpus rows appended to the stored index are served without a restart") {
-    // serveIvfPqFromPath re-reads BOTH the code table and the float corpus
-    // per micro-batch (fresh file listings), so ivfPqEncode-appended codes
-    // plus a matching corpus append become searchable mid-stream. The
-    // corpus grows too — an appended vector whose codes are shortlisted but
-    // whose float row is missing would be silently dropped by the exact
-    // re-rank join (the round-6 advisory bug). The probe is a planted
-    // duplicate of vector 300: before the append its codes AND floats are
-    // absent (answer != 300); after, it MUST come back rank-1 at cos 1.0 —
-    // deterministic, not rank luck.
+    // serveIvfPqFromRoot re-reads BOTH the code table (its newest manifest)
+    // and the float corpus per micro-batch, so codes committed by
+    // appendIvfPq plus a matching corpus append become searchable
+    // mid-stream. The corpus grows too — an appended vector whose codes are
+    // shortlisted but whose float row is missing would be silently dropped
+    // by the exact re-rank join (the round-6 advisory bug). The probe is a
+    // planted duplicate of vector 300: before the append its codes AND
+    // floats are absent (answer != 300); after, it MUST come back rank-1 at
+    // cos 1.0 — deterministic, not rank luck.
     val e = Tables.embeddings(spark, Sf)
     val dir = java.nio.file.Files.createTempDirectory("ann_grow").toString
     try {
       implicit val sqlCtx = spark.sqlContext
-      // index artifact trained on the full corpus; code table AND the
+      // quantizers trained on the full corpus; the code table AND the
       // served corpus both start at the first half
-      Similarity.saveIvfPq(e, dir, nlist = 8, m = 8, ksub = 16)
-      val idx = Similarity.loadIvfPq(spark, dir)
-      new java.io.File(s"$dir/encoded").listFiles().foreach { f =>
-        import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively()
-      }
-      Similarity.ivfPqEncode(e.filter(col("vec_id") < 250), idx.centroids, idx.books)
-        .write.mode("overwrite").partitionBy("list_id").parquet(s"$dir/encoded")
+      val cents = Similarity.buildIvfIndex(e, nlist = 8).centroids
+      Similarity.saveIvfPqWith(
+        Similarity.IvfIndex(cents, Similarity.assignIvf(e.filter(col("vec_id") < 250), cents)),
+        Quantization.buildPqCodebooks(e, m = 8, ksub = 16), dir)
       val corpusPath = s"$dir/corpus"
       e.filter(col("vec_id") < 250).write.mode("overwrite").parquet(corpusPath)
 
@@ -154,7 +162,7 @@ class StreamingAnnSpec extends SparkSpec {
         .collect().map(r => QueryVec(r.getLong(0), r.getSeq[Float](1)))
       val answers = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
       val stream = MemoryStream[QueryVec]
-      val q = StreamingAnnServing.serveIvfPqFromPath(stream.toDF(), dir, corpusPath,
+      val q = StreamingAnnServing.serveIvfPqFromRoot(stream.toDF(), dir, corpusPath,
         k = 1, nprobe = 8, shortlist = 10) { (ans, epoch) =>
         answers ++= ans.collect().map(r =>
           (epoch, r.getLong(0), r.getLong(2), r.getDouble(3)))
@@ -163,8 +171,7 @@ class StreamingAnnSpec extends SparkSpec {
       q.processAllAvailable()
       val before = answers.toList
       // append the second half mid-stream — codes and corpus, no restart
-      Similarity.ivfPqEncode(e.filter(col("vec_id") >= 250), idx.centroids, idx.books)
-        .write.mode("append").partitionBy("list_id").parquet(s"$dir/encoded")
+      Similarity.appendIvfPq(e.filter(col("vec_id") >= 250), dir)
       e.filter(col("vec_id") >= 250).write.mode("append").parquet(corpusPath)
       stream.addData(dupOf300: _*)
       q.processAllAvailable()
@@ -174,10 +181,47 @@ class StreamingAnnSpec extends SparkSpec {
       assert(before.nonEmpty && before.forall { case (_, _, cid, _) => cid != 300L })
       assert(after.exists { case (_, _, cid, cos) => cid == 300L && cos == 1.0 },
         s"appended vector not served: $after")
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(dir)).deleteRecursively()
-    }
+    } finally Gates.deleteTree(dir)
+  }
+
+  test("a streamed epoch over an appended index of more than 32 lists lists only " +
+      "_manifest under the index and starts no listing or schema-inference job") {
+    // nlist 40 puts the code rows in more list dirs than Spark's 32-path
+    // parallel-listing threshold; a reader that listed the code tree would
+    // list every one of them each epoch, as a Spark job
+    val e = Tables.embeddings(spark, Sf)
+    val dir = java.nio.file.Files.createTempDirectory("ann_epoch_listing").toString
+    try {
+      implicit val sqlCtx = spark.sqlContext
+      Similarity.saveIvfPq(e.filter(col("vec_id") < 400), s"$dir/idx", nlist = 40, m = 8, ksub = 16)
+      Similarity.appendIvfPq(e.filter(col("vec_id") >= 400), s"$dir/idx")
+      val m = SegmentStore.latest(SeqFiles.fs(spark, s"$dir/idx"), s"$dir/idx").get
+      assert(m.seq == 2L && m.live.filter(_.values.head == "codes").map(_.values(1)).distinct.size > 32,
+        "the index must hold codes in more than 32 lists")
+      val corpusPath = s"$dir/corpus"
+      e.write.mode("overwrite").parquet(corpusPath)
+      val qs = e.filter(col("vec_id") < 4)
+        .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
+        .collect().map(r => QueryVec(r.getLong(0), r.getSeq[Float](1)))
+      FaultFs.install(spark)
+      val stream = MemoryStream[QueryVec]
+      var served = 0L
+      val q = StreamingAnnServing.serveIvfPqFromRoot(stream.toDF(), FaultFs.uri(s"$dir/idx"),
+        corpusPath, k = 1, nprobe = 4, shortlist = 10) { (ans, _) => served += ans.count() }
+      try {
+        (1 to 2).foreach { epoch =>
+          val (_, reads, jobs) = FaultFs.readsAndJobs(spark) {
+            stream.addData(qs.toIndexedSeq: _*)
+            q.processAllAvailable()
+          }
+          assert(reads.filter(_.startsWith("listStatus")) == Seq("listStatus _ptr", "listStatus _manifest"),
+            s"epoch $epoch: $reads")
+          assert(jobs.nonEmpty && jobs.forall(j => j._1 != "null" && !j._2.contains("Listing")),
+            s"epoch $epoch: $jobs")
+        }
+      } finally q.stop()
+      assert(served == 8L)
+    } finally Gates.deleteTree(dir)
   }
 
   test("a Generations flip between micro-batches rebinds codes AND quantizers: " +

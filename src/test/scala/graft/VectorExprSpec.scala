@@ -206,9 +206,15 @@ class VectorExprSpec extends SparkSpec {
           shortlist = 10)
         .orderBy(col("qid"), col("rnk")).collect().map(_.toSeq)
       assert(stored.nonEmpty && stored.sameElements(scratch))
-      // the stored layout is list-partitioned (probe joins prune partitions)
-      assert(new java.io.File(s"$dir/encoded").listFiles()
-        .exists(_.getName.startsWith("list_id=")))
+      // the stored code rows are list-partitioned (probe joins prune
+      // partitions); the quantizer rows sit in no list
+      val live = graft.operators.SegmentStore.latest(
+        graft.operators.SeqFiles.fs(spark, dir), dir).get.live
+      val lists = live.filter(_.values.head == "codes").map(_.values(1).toInt).toSet
+      assert(lists.size > 1 && lists.subsetOf((0 until 8).toSet), lists)
+      assert(live.forall(f => f.path.contains(s"/component=${f.values.head}/list_id=${f.values(1)}/")))
+      assert(live.filter(_.values.head != "codes").map(_.values).toSet ==
+        Set(Seq("centroids", "-1"), Seq("books", "-1")))
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(dir)).deleteRecursively()
@@ -235,10 +241,7 @@ class VectorExprSpec extends SparkSpec {
       // drifted ingest: 256 copies of one vector encoded with the STALE
       // quantizers pile into a single list -> an oversized list appears
       val clump = Fixtures.annDriftClump(e)
-      val loaded = Similarity.loadIvfPq(spark, s"$dir/idx")
-      Similarity.ivfPqEncode(clump, loaded.centroids, loaded.books)
-        .select(col("cid"), col("pq_codes"), col("list_id"))
-        .write.mode("append").partitionBy("list_id").parquet(s"$dir/idx/encoded")
+      Similarity.appendIvfPq(clump, s"$dir/idx")
       val post = Similarity.ivfPqListStats(spark, s"$dir/idx", oversizeFactor = 2.0)
         .collect()(0)
       assert(post.getAs[Long]("n_codes") == e.count() + 256L)
@@ -250,11 +253,10 @@ class VectorExprSpec extends SparkSpec {
       // geometry of the artifact being maintained (nlist/m/ksub read from
       // src, never caller defaults — a default-shaped rebuild would flip
       // serving onto a different index shape)
-      assert(spark.read.parquet(s"$dir/gen2/encoded").count() == e.count() + 256L)
-      assert(spark.read.parquet(s"$dir/gen2/centroids").count() == 8L)
-      val g2books = spark.read.parquet(s"$dir/gen2/books")
-      assert(g2books.select(countDistinct(col("m_idx"))).head().getLong(0) == 8L)
-      assert(g2books.select(countDistinct(col("k_idx"))).head().getLong(0) == 16L)
+      val gen2 = Similarity.loadIvfPq(spark, s"$dir/gen2")
+      assert(gen2.encoded.count() == e.count() + 256L)
+      assert(gen2.centroids.length == 8)
+      assert(gen2.books.m == 8 && gen2.books.books.forall(_.length == 16))
       intercept[IllegalArgumentException] {
         Similarity.maintainIvfPq(spark, s"$dir/idx", s"$dir/idx", grown)
       }
