@@ -120,15 +120,14 @@ private[graft] object AnnArtifacts {
     * artifact: the full-corpus index persisted, a drifted ingest clump
     * ([[Fixtures.annDriftClump]] — 256 copies of 4 vectors, guaranteed to
     * pile into stale lists) appended via [[Similarity.appendIvfPq]], then
-    * [[Similarity.maintainIvfPq]] detects the oversized list and
-    * re-clusters into a fresh generation from the grown corpus. Returns
+    * [[Similarity.maintainIvfPq]] detects the oversized list and saves a
+    * re-clustered index of the grown corpus into the same store. Returns
     * (servingPath, fired) — fired must be true on this fixture; the gate
     * asserts it through the hash. */
   def ivfPqDriftRoots(s: SparkSession, dir: String): (String, Boolean) = synchronized {
     driftMemo.getOrElseUpdate(dir, {
       import org.apache.spark.sql.functions.col
       val p1 = s"$root/${dirKey(dir)}_anndrift"
-      val p2 = s"$root/${dirKey(dir)}_annreclus"
       val e = Tables.embeddings(s, dir)
       val clump = Fixtures.annDriftClump(e)
       Similarity.saveIvfPq(e, p1, nlist = Nlist, m = M, ksub = Ksub,
@@ -136,9 +135,9 @@ private[graft] object AnnArtifacts {
       Similarity.appendIvfPq(clump, p1)
       val grown = e.select(col("vec_id"), col("embedding")).union(clump)
       // geometry (nlist/m/ksub) is derived from the p1 artifact itself
-      val fired = Similarity.maintainIvfPq(s, p1, p2, grown,
+      val fired = Similarity.maintainIvfPq(s, p1, grown,
         oversizeFactor = 2.0, kmeansIters = Iters)
-      (if (fired) p2 else p1, fired)
+      (p1, fired)
     })
   }
 
@@ -182,29 +181,33 @@ private[graft] object AnnArtifacts {
     })
   }
 
-  /** Single-generation [[graft.operators.Retrieval.compactTrigramIndex]]
-    * rewrite of [[trigramAppendRoot]] — the artifact behind the compaction
-    * gate (`trigram_index_compact`): searching the compacted copy must
-    * answer row-identically to the uncompacted pile AND to the oracle's
-    * union replay. */
-  def trigramCompactRoot(s: SparkSession, dir: String): String = synchronized {
-    triCompactMemo.getOrElseUpdate(dir, {
-      val p = s"$root/${dirKey(dir)}_tricomp"
-      graft.operators.Retrieval.compactTrigramIndex(s, trigramAppendRoot(s, dir), p)
-      p
-    })
+  /** A copy of the store `src` at `dst`, compacted there in place by
+    * `compact`, so the uncompacted pile keeps serving its own gates. */
+  private def compactedCopy(src: String, dst: String)(compact: String => Unit): String = {
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(src), new java.io.File(dst))
+    compact(dst)
+    dst
   }
 
-  /** Single-segment [[TextAnalysis.compactLexicalIndex]] rewrite of
+  /** [[graft.operators.Retrieval.compactTrigramIndex]] of a copy of
+    * [[trigramAppendRoot]] — the artifact behind the compaction gate
+    * (`trigram_index_compact`): searching the compacted copy must answer
+    * row-identically to the uncompacted pile AND to the oracle's union
+    * replay. */
+  def trigramCompactRoot(s: SparkSession, dir: String): String = synchronized {
+    triCompactMemo.getOrElseUpdate(dir,
+      compactedCopy(trigramAppendRoot(s, dir), s"$root/${dirKey(dir)}_tricomp")(
+        graft.operators.Retrieval.compactTrigramIndex(s, _)))
+  }
+
+  /** [[TextAnalysis.compactLexicalIndex]] of a copy of
     * [[lexicalAppendRoot]] — the artifact behind the compaction gate
     * (`bm25_compact_topk`): serving from the compacted copy must reproduce
     * the full-corpus formula row for row, same oracle as the append path. */
   def lexicalCompactRoot(s: SparkSession, dir: String): String = synchronized {
-    lexCompactMemo.getOrElseUpdate(dir, {
-      val p = s"$root/${dirKey(dir)}_lexcomp"
-      TextAnalysis.compactLexicalIndex(s, lexicalAppendRoot(s, dir), p)
-      p
-    })
+    lexCompactMemo.getOrElseUpdate(dir,
+      compactedCopy(lexicalAppendRoot(s, dir), s"$root/${dirKey(dir)}_lexcomp")(
+        TextAnalysis.compactLexicalIndex(s, _)))
   }
 
   private val winnowAppMemo = scala.collection.mutable.Map[String, String]()
@@ -237,17 +240,14 @@ private[graft] object AnnArtifacts {
     })
   }
 
-  /** One-generation [[graft.streaming.StreamingWinnow.compactFingerprints]]
-    * rewrite of [[winnowIdxAppendRoot]] — the artifact behind
+  /** [[graft.streaming.StreamingWinnow.compactFingerprints]] of a copy
+    * of [[winnowIdxAppendRoot]] — the artifact behind
     * `winnow_index_compact`: flagging against the compacted copy must
     * reproduce the save→append→load oracle row for row. */
   def winnowIdxCompactRoot(s: SparkSession, dir: String): String = synchronized {
-    winnowCompactMemo.getOrElseUpdate(dir, {
-      val p = s"$root/${dirKey(dir)}_wincomp"
-      graft.streaming.StreamingWinnow.compactFingerprints(
-        s, winnowIdxAppendRoot(s, dir), p)
-      p
-    })
+    winnowCompactMemo.getOrElseUpdate(dir,
+      compactedCopy(winnowIdxAppendRoot(s, dir), s"$root/${dirKey(dir)}_wincomp")(
+        graft.streaming.StreamingWinnow.compactFingerprints(s, _)))
   }
 
   /** The benchmark-shingle decontamination index as base + delta segments
@@ -265,14 +265,12 @@ private[graft] object AnnArtifacts {
     })
   }
 
-  /** Distinct-folded [[TextAnalysis.compactBenchmarkIndex]] rewrite of
+  /** Distinct-folded [[TextAnalysis.compactBenchmarkIndex]] of a copy of
     * [[benchIdxAppendRoot]] — the artifact behind `decon_index_compact`. */
   def benchIdxCompactRoot(s: SparkSession, dir: String): String = synchronized {
-    benchCompactMemo.getOrElseUpdate(dir, {
-      val p = s"$root/${dirKey(dir)}_benchcomp"
-      TextAnalysis.compactBenchmarkIndex(s, benchIdxAppendRoot(s, dir), p)
-      p
-    })
+    benchCompactMemo.getOrElseUpdate(dir,
+      compactedCopy(benchIdxAppendRoot(s, dir), s"$root/${dirKey(dir)}_benchcomp")(
+        TextAnalysis.compactBenchmarkIndex(s, _)))
   }
 
   /** The same documents corpus indexed as TWO segments — an initial

@@ -35,6 +35,12 @@ private[graft] object Gates {
     }
   }
 
+  /** The newest commit of the artifact store at `root`, which must hold
+    * one: what the lifecycle gates compare across a save or compaction. */
+  private[graft] def storeState(s: SparkSession, root: String): SegmentStore.Manifest =
+    SegmentStore.latest(SeqFiles.fs(s, root), root).getOrElse(
+      throw new IllegalStateException(s"no store at $root"))
+
   /**
    * Start a streaming gate's query with a feed-volume-derived STATE
    * partition count (optimization guide §2.2/§2.5: derive partitioning
@@ -160,9 +166,9 @@ private[graft] object Gates {
     "band_index_append" -> ((s, dir) => {
       // the PERSISTED band-index lifecycle under continuous ingest
       // (round-17 task #3): base half saved, second half delta-appended
-      // (no rewrite), the pile compacted into a fresh generation, and an
-      // ingest batch of exact copies (every 37th doc, shifted ids) probed
-      // against BOTH generations. Recall contract = the
+      // (no rewrite), the pile compacted in place, and an ingest batch of
+      // exact copies (every 37th doc, shifted ids) probed against the pile
+      // and the compacted index. Recall contract = the
       // incremental_dedup_recall oracle: the stored union must find every
       // exact cross-pair with jaccard >= 0.95 (n_exact is DuckDB-checked,
       // n_missed = 0), and compaction_consistent pins that the fold
@@ -177,18 +183,20 @@ private[graft] object Gates {
           Dedup.buildBandIndex(corpus.filter(col("doc_id") % 2 === 0)), s"$tmp/idx")
         Dedup.appendBandIndex(
           Dedup.buildBandIndex(corpus.filter(col("doc_id") % 2 === 1)), s"$tmp/idx")
-        def probe(path: String) = Dedup.nearDupsAgainstIndex(
-            newBatch, Dedup.loadBandIndex(s, path), corpus, threshold = 0.95)
+        def probe(index: DataFrame) = Dedup.nearDupsAgainstIndex(
+            newBatch, index, corpus, threshold = 0.95)
           .select(col("new_id"), col("corpus_id")).collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
         // the pile probe and the fold are independent READS of the same
-        // committed pile (compaction writes only gen2) — overlap them
-        // (guide §2.6); the gen2 probe needs the fold and runs after
+        // committed pile (the pile's frame is pinned before the fold, whose
+        // commit retires the pile's files only after the store's grace) —
+        // overlap them (guide §2.6); the compacted probe runs after
+        val pile = Dedup.loadBandIndex(s, s"$tmp/idx")
         var pre: Set[(Long, Long)] = null
         Jobs.concurrently(
-          () => pre = probe(s"$tmp/idx"),
-          () => Dedup.compactBandIndex(s, s"$tmp/idx", s"$tmp/gen2"))
-        val post = probe(s"$tmp/gen2")
+          () => pre = probe(pile),
+          () => Dedup.compactBandIndex(s, s"$tmp/idx"))
+        val post = probe(Dedup.loadBandIndex(s, s"$tmp/idx"))
         // found pairs are local (collected) — the temp index can vanish
         val found = post.toSeq.map { case (a, b) => (a, b, 1) }
           .toDF("new_id", "corpus_id", "hit")
@@ -223,21 +231,18 @@ private[graft] object Gates {
 
     "ingest_lifecycle_capstone" -> ((s, dir) => {
       // the END-TO-END ingest arc the per-family gates prove piecewise,
-      // composed over one [[graft.operators.Generations]] root: gen-1 =
-      // the even-doc band index published under the root; STREAMED
-      // ingest (two real micro-batches of the odd docs) bands each batch
-      // in-flight and delta-appends INTO the serving generation (resolved
-      // through the pointer, never a raw path); maintenance folds the
-      // pile into gen-2 with compactBandIndex and FLIPS the pointer via
-      // advance(); admission-control probes serve through resolve()
-      // before and after the flip; RETENTION then prunes the superseded
-      // generation and stale pointers. Contract: the served pairs are
-      // IDENTICAL across the flip AND the prune (asserted in-query), the
-      // generation provably changed, post-prune storage is bounded to
-      // exactly the serving generation (dirs and pointers counted), and
-      // recall against the exact ground truth is total — the
-      // incremental_dedup_recall oracle, now across streaming +
-      // compaction + pointer-flip + retention boundaries at once.
+      // composed over one band-index store: the even-doc band index is
+      // saved; STREAMED ingest (two real micro-batches of the odd docs)
+      // bands each batch in-flight and delta-appends INTO the store;
+      // maintenance compacts the pile in place with compactBandIndex;
+      // admission-control probes serve before and after the compaction;
+      // RETENTION then runs the store's sweep. Contract: the served pairs
+      // are IDENTICAL across the compaction AND the sweep (asserted
+      // in-query), the compaction published a new base commit whose
+      // manifest retires every pre-compaction commit dir (storage stays
+      // bounded to the folded files), and recall against the exact ground
+      // truth is total — the incremental_dedup_recall oracle, now across
+      // streaming + compaction + retention boundaries at once.
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
       val tmp = java.nio.file.Files.createTempDirectory("graft_capstone").toString
@@ -246,10 +251,8 @@ private[graft] object Gates {
         val newBatch = corpus.filter(col("doc_id") % 37 === 0)
           .withColumn("doc_id", col("doc_id") + 1000000L)
         val root = s"$tmp/band"
-        Generations.advance(s, root) { dst =>
-          Dedup.saveBandIndex(
-            Dedup.buildBandIndex(corpus.filter(col("doc_id") % 2 === 0)), dst)
-        }
+        Dedup.saveBandIndex(
+          Dedup.buildBandIndex(corpus.filter(col("doc_id") % 2 === 0)), root)
         val rows = corpus.filter(col("doc_id") % 2 === 1)
           .select(col("doc_id"), col("text")).as[(Long, String)].collect()
         val mem = org.apache.spark.sql.execution.streaming.runtime
@@ -257,8 +260,7 @@ private[graft] object Gates {
         val q = startSized(rows.length, mem.toDF().toDF("doc_id", "text"))(
           _.writeStream
             .foreachBatch { (batch: DataFrame, _: Long) =>
-              Dedup.appendBandIndex(Dedup.buildBandIndex(batch),
-                Generations.resolve(s, root))
+              Dedup.appendBandIndex(Dedup.buildBandIndex(batch), root)
             }
             .start())
         val (b1, b2) = rows.splitAt(rows.length / 2)
@@ -266,40 +268,30 @@ private[graft] object Gates {
         mem.addData(b2.toIndexedSeq); q.processAllAvailable()
         q.stop()
         def probe() = Dedup.nearDupsAgainstIndex(
-            newBatch, Dedup.loadBandIndex(s, Generations.resolve(s, root)),
-            corpus, threshold = 0.95)
+            newBatch, Dedup.loadBandIndex(s, root), corpus, threshold = 0.95)
           .select(col("new_id"), col("corpus_id")).collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
         val pre = probe()
-        val g1 = Generations.resolve(s, root)
-        val g2 = Generations.advance(s, root) { dst =>
-          Dedup.compactBandIndex(s, g1, dst)
-        }
+        val before = storeState(s, root)
+        Dedup.compactBandIndex(s, root)
+        val after = storeState(s, root)
         val post = probe()
         require(pre == post,
-          "ingest_lifecycle_capstone: the flipped generation serves " +
+          "ingest_lifecycle_capstone: the compacted index serves " +
             "different pairs than the pile it replaced")
-        // retention closes the arc — the last lifecycle verb: prune the
-        // superseded generation + stale pointers, then prove the served
-        // answers are untouched, the pointer still lands on gen-2, and
-        // storage is bounded to EXACTLY the serving generation (one gen
-        // dir, one pointer file left — counted, not assumed)
-        val removed = Generations.pruneSuperseded(s, root)
-        require(removed == Seq(g1.split('/').last),
-          s"ingest_lifecycle_capstone: prune removed $removed, expected " +
-            s"exactly the superseded ${g1.split('/').last}")
-        // counted via Generations' own accessor — the gen-/ptr- layout
-        // literals live in exactly one place
-        val (gensLeft, ptrsLeft) = Generations.storageCounts(s, root)
-        require(gensLeft == 1 && ptrsLeft == 1,
-          s"ingest_lifecycle_capstone: prune left $gensLeft generation dirs " +
-            s"and $ptrsLeft pointers — storage is not bounded to the " +
-            "serving generation")
-        require(Generations.resolve(s, root) == g2,
-          "ingest_lifecycle_capstone: prune moved the serving pointer")
+        // retention closes the arc — the last lifecycle verb: the store's
+        // sweep, then proof that the served answers are untouched and
+        // storage is bounded to EXACTLY the folded files: the compaction's
+        // manifest retires every commit dir the pile lived in (counted,
+        // not assumed)
+        SegmentStore.recover(s, root)
+        val pileDirs = before.live.map(_.path.takeWhile(_ != '/')).distinct
+        require(pileDirs.length > 1 && pileDirs.forall(after.retired.contains),
+          s"ingest_lifecycle_capstone: the compaction retired ${after.retired}, " +
+            s"not every pre-compaction commit dir $pileDirs — storage is not " +
+            "bounded to the folded files")
         require(probe() == post,
-          "ingest_lifecycle_capstone: pruning superseded generations " +
-            "changed the served pairs")
+          "ingest_lifecycle_capstone: the retention sweep changed the served pairs")
         val found = post.toSeq.map { case (a, b) => (a, b, 1) }
           .toDF("new_id", "corpus_id", "hit")
         // exact ground truth — the incremental_dedup_recall derivation
@@ -326,8 +318,8 @@ private[graft] object Gates {
             col("na") === col("new_id") && col("nb") === col("corpus_id"), "left")
           .agg(count(lit(1)).as("n_exact"),
             count(when(col("hit").isNull, 1)).as("n_missed"))
-          .withColumn("flip_changed_generation",
-            lit(g2 != g1 && Generations.resolve(s, root) == g2))
+          .withColumn("flip_changed_generation", lit(after.seq > before.seq &&
+            SegmentStore.base(after) != SegmentStore.base(before)))
           .withColumn("served_identical", lit(true))
           .withColumn("prune_bounded_storage", lit(true))
           .withColumn("served_identical_after_prune", lit(true))
@@ -336,31 +328,29 @@ private[graft] object Gates {
 
     "retrieval_lifecycle_capstone" -> ((s, dir) => {
       // the lexical-serving END-TO-END arc — what ingest_lifecycle_capstone
-      // is for the band index, driven through the REST surface: gen-1 =
-      // BM25 index over the quarter corpus published under a Generations
-      // root and served by a live RetrievalServer (phase 0); ingest
-      // APPENDS a segment into the serving generation (phase 1 — the
-      // per-request path re-read makes it searchable with no restart);
-      // maintenance folds the two-segment pile into gen-2 via
-      // advance(compactLexicalIndex) (phase 2 — compaction+flip must be
-      // serving-invisible, asserted in-query); retention prunes the
-      // superseded generation (phase 3 — still identical, pointer still
-      // on gen-2). The oracle replays phase 0 over the quarter corpus and
-      // phases 1-3 over the half corpus one-shot in SQL, so every HTTP
-      // answer along the arc is value-pinned, not just shape-pinned.
+      // is for the band index, driven through the REST surface: a BM25
+      // index over the quarter corpus saved to one store and served by a
+      // live RetrievalServer (phase 0); ingest APPENDS a segment to the
+      // store (phase 1 — the per-request path re-read makes it searchable
+      // with no restart); maintenance compacts the two-segment pile in
+      // place with compactLexicalIndex (phase 2 — must be
+      // serving-invisible, asserted in-query); retention runs the store's
+      // sweep (phase 3 — still identical, and the compaction's manifest
+      // retires every pre-compaction commit dir). The oracle replays
+      // phase 0 over the quarter corpus and phases 1-3 over the half
+      // corpus one-shot in SQL, so every HTTP answer along the arc is
+      // value-pinned, not just shape-pinned.
       val tmp = java.nio.file.Files.createTempDirectory("graft_retr_cap").toString
       try {
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
         val root = s"$tmp/lexgen"
-        // gen-1 lexical build and the ANN-deployment artifacts (required
+        // the lexical build and the ANN-deployment artifacts (required
         // by the server contract, not under test here) are INDEPENDENT
         // writes to disjoint paths — fan them out (guide §2.6: overlap
         // independent jobs) instead of serializing phase-0 setup
         Jobs.concurrently(
-          () => Generations.advance(s, root) { dst =>
-            TextAnalysis.saveLexicalIndex(docs.filter(col("doc_id") % 4 === 0),
-              dst, nBuckets = 8)
-          },
+          () => TextAnalysis.saveLexicalIndex(docs.filter(col("doc_id") % 4 === 0),
+            root, nBuckets = 8),
           () => {
             val e = Tables.embeddings(s, dir).filter(col("vec_id") < 64)
             e.write.mode("overwrite").parquet(s"$tmp/corpus")
@@ -389,27 +379,24 @@ private[graft] object Gates {
             } finally conn.disconnect()
           }
           val p0 = ask()
-          TextAnalysis.appendLexicalIndex(docs.filter(col("doc_id") % 4 === 2),
-            Generations.resolve(s, root))
+          TextAnalysis.appendLexicalIndex(docs.filter(col("doc_id") % 4 === 2), root)
           val p1 = ask()
           require(p1 != p0,
             "retrieval_lifecycle_capstone: the appended segment is not " +
               "being served — the per-request re-read broke")
-          val g1 = Generations.resolve(s, root)
-          val g2 = Generations.advance(s, root) { dst =>
-            TextAnalysis.compactLexicalIndex(s, g1, dst)
-          }
+          val before = storeState(s, root)
+          TextAnalysis.compactLexicalIndex(s, root)
           val p2 = ask()
           require(p2 == p1,
-            "retrieval_lifecycle_capstone: compaction + pointer flip " +
-              "changed the served answers")
-          Generations.pruneSuperseded(s, root)
+            "retrieval_lifecycle_capstone: the compaction changed the served answers")
+          SegmentStore.recover(s, root)
           val p3 = ask()
           require(p3 == p1,
-            "retrieval_lifecycle_capstone: pruning the superseded " +
-              "generation changed the served answers")
-          require(Generations.resolve(s, root) == g2,
-            "retrieval_lifecycle_capstone: prune moved the serving pointer")
+            "retrieval_lifecycle_capstone: the retention sweep changed the served answers")
+          val pileDirs = before.live.map(_.path.takeWhile(_ != '/')).distinct
+          require(pileDirs.length == 2 && pileDirs.forall(storeState(s, root).retired.contains),
+            s"retrieval_lifecycle_capstone: the compaction did not retire every " +
+              s"pre-compaction commit dir $pileDirs — storage is not bounded")
           import s.implicits._
           Seq(0 -> p0, 1 -> p1, 2 -> p2, 3 -> p3)
             .flatMap { case (ph, rows) =>
@@ -856,8 +843,8 @@ private[graft] object Gates {
 
   // One phase of the retrieval capstone's lexical answers: the Bm25Sql
   // arithmetic (three fixed terms, top-10 by row_number) over a corpus
-  // SLICE — phase 0 serves gen-1 (quarter corpus), phases 1-3 serve the
-  // appended/compacted/pruned half corpus and must be row-identical.
+  // SLICE — phase 0 serves the quarter corpus, phases 1-3 serve the
+  // appended/compacted/swept half corpus and must be row-identical.
   // one BM25 oracle core for the whole surface — the phase replay derives
   // from [[Oracles.bm25SingleQuerySql]] so the k1/b constants, tokenizer
   // and rounding live in exactly one place
@@ -866,9 +853,9 @@ private[graft] object Gates {
 
   def oracles: Map[String, String] = Map(
 
-    // the REST lexical-serving arc: phase 0 = gen-1 (quarter corpus);
-    // phases 1-3 = append/compact+flip/prune, all serving the half corpus
-    // — the compaction/flip/prune invisibility is ALSO hash-checked here
+    // the REST lexical-serving arc: phase 0 = the quarter corpus;
+    // phases 1-3 = append/compact/sweep, all serving the half corpus
+    // — the compaction/sweep invisibility is ALSO hash-checked here
     // (three identical phase blocks), on top of the in-query requires
     "retrieval_lifecycle_capstone" ->
       s"""SELECT CAST(0 AS INT) AS phase, doc_id, score
@@ -1036,9 +1023,9 @@ private[graft] object Gates {
         |WHERE CAST(inter AS DOUBLE) / (la + lb - inter) >= 0.95""".stripMargin,
 
     // the capstone arc: same exact-recall contract as band_index_append,
-    // now served through streamed appends + compaction + the Generations
-    // pointer flip + the retention prune; the flip/prune booleans are
-    // in-query structural pins
+    // now served through streamed appends + an in-place compaction + the
+    // retention sweep; the compaction/retention booleans are in-query
+    // structural pins
     "ingest_lifecycle_capstone" ->
       """WITH sh AS (
         |  SELECT doc_id,

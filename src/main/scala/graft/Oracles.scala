@@ -244,9 +244,9 @@ private[graft] object Oracles {
   // Two one-shot replays of the batch-BM25 formula (same per-term
   // arithmetic as Bm25BatchSql, two queries, k=10), one per served EPOCH
   // of the streamed generation-flip gate: epoch 0 over the quarter slice
-  // (gen-1's corpus, doc_id % 4 = 0), epoch 1 over the half slice
-  // (gen-2's, doc_id % 2 = 0). A stream that kept serving the
-  // construction-time generation after the flip would reproduce epoch 0's
+  // (the first save's corpus, doc_id % 4 = 0), epoch 1 over the half
+  // slice (the second save's, doc_id % 2 = 0). A stream that kept serving
+  // the construction-time index after the save would reproduce epoch 0's
   // rows twice and fail the hash.
   private val Bm25GenFlipSql: String = {
     def epochSql(epoch: Int, pred: String) =
@@ -707,8 +707,8 @@ private[graft] object Oracles {
     // compaction preserves every serving-visible sum → same oracle again
     "bm25_compact_topk" -> Bm25Sql,
     "bm25_batch_topk" -> Bm25BatchSql,
-    // generation-aware streamed serving: epoch 0 = gen-1 (quarter slice,
-    // doc_id % 4 = 0), epoch 1 = gen-2 (half slice, doc_id % 2 = 0) —
+    // streamed serving across a save: epoch 0 = the first save (quarter
+    // slice, doc_id % 4 = 0), epoch 1 = the second (half slice, doc_id % 2 = 0) —
     // both epochs' scores replayed one-shot (see Bm25GenFlipSql)
     "streaming_bm25_generation_flip" -> Bm25GenFlipSql,
 
@@ -805,8 +805,8 @@ private[graft] object Oracles {
 
     "streaming_phash_flag" -> streamingPhashFlagOracle,
     "streaming_winnow_flag" -> streamingWinnowFlagOracle,
-    // generation-aware streamed admission: epoch 0 flags against gen-1
-    // (even docs' fingerprints), epoch 1 against gen-2 (full corpus) —
+    // streamed admission across a save: epoch 0 flags against the first
+    // save (even docs' fingerprints), epoch 1 against the second (full corpus) —
     // both epochs' winnow chains replayed over the matching stored slice
     "streaming_winnow_generation_flip" ->
       s"""SELECT CAST(0 AS INT) AS epoch, doc_id, dup_of, n_shared
@@ -2056,9 +2056,9 @@ private[graft] object Oracles {
         |WHERE sh.doc_id % 97 <> 0 AND u.g IN (SELECT g FROM b)
         |GROUP BY 1 ORDER BY 1""".stripMargin,
 
-    // generation-aware streamed admission: epoch 0 flags against the
-    // gen-1 suite (%97), epoch 1 against the flipped gen-2 union suite
-    // (%97 ∪ %89); training stream excludes both suites' docs. The same
+    // streamed admission across a save: epoch 0 flags against the first
+    // suite (%97), epoch 1 against the saved union suite (%97 ∪ %89);
+    // training stream excludes both suites' docs. The same
     // contamination aggregate, replayed per epoch per suite.
     "streaming_decon_generation_flip" ->
       """WITH tok AS (

@@ -818,8 +818,8 @@ private[graft] object Queries {
         val delta = Tables.embeddings(s, dir).filter(col("vec_id") % 37 === 0)
           .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
         Pca.appendMoments(Pca.rawMomentTable(delta, 64), s"$tmp/pile")
-        Pca.compactMoments(s, s"$tmp/pile", s"$tmp/gen2")
-        val (_, _, cov) = Pca.momentsFromTable(Pca.loadMoments(s, s"$tmp/gen2"), 64)
+        Pca.compactMoments(s, s"$tmp/pile")
+        val (_, _, cov) = Pca.momentsFromTable(Pca.loadMoments(s, s"$tmp/pile"), 64)
         val v = Pca.powerIteration(cov, 3)
         import s.implicits._
         v.zipWithIndex.map { case (x, i) => (i, x) }.toSeq.toDF("i", "loading")
@@ -1221,8 +1221,8 @@ private[graft] object Queries {
             concat(lit("x"), substring(norm, 2, Int.MaxValue)).as("pname"))
         StreamingEntity.appendDictionary(
           EntityResolution.spaceBlocked(mutated, "pid", "pname"), s"$tmp/pile")
-        StreamingEntity.compactDictionary(s, s"$tmp/pile", s"$tmp/gen2")
-        val idx = StreamingEntity.loadDictionary(s, s"$tmp/gen2")
+        StreamingEntity.compactDictionary(s, s"$tmp/pile")
+        val idx = StreamingEntity.loadDictionary(s, s"$tmp/pile")
         val queries = Tables.part(s, dir).filter(col("p_partkey") % 37 === 0)
           .select(col("p_partkey").as("id"),
             concat(lit("x"), substring(norm, 2, Int.MaxValue)).as("name"))
@@ -1828,8 +1828,8 @@ private[graft] object Queries {
           s"$tmp/pile", Seq("day"))
         Sketches.appendSketchTable(sk(ev.filter(col("event_id") % 2 === 1)),
           s"$tmp/pile", Seq("day"))
-        Sketches.compactSketchTable(s, s"$tmp/pile", s"$tmp/gen2", Seq("day"))
-        val served = Sketches.loadSketchTable(s, s"$tmp/gen2", Seq("day"))
+        Sketches.compactSketchTable(s, s"$tmp/pile", Seq("day"))
+        val served = Sketches.loadSketchTable(s, s"$tmp/pile", Seq("day"))
         val exact = ev.groupBy(col("day"))
           .agg(countDistinct(col("user_id")).as("n_exact"))
         val out = served.join(exact, "day")
@@ -2079,27 +2079,22 @@ private[graft] object Queries {
     }),
 
     "streaming_decon_generation_flip" -> ((s, dir) => {
-      // generation-aware streamed admission control — the FOURTH streamed
-      // family served through the Generations pointer (BM25, ANN, winnow
-      // are the others): gen-1 = the %97 eval suite's gram index
-      // published under a root; the training stream's epoch-0 verdicts
-      // come from gen-1; a NEW SUITE ships as gen-2 (the %97 ∪ %89
-      // union, built fresh under advance() so the change is attributable
-      // to the pointer move alone — the per-epoch path re-read would
-      // also pick up in-generation appends, gated separately by
-      // decontaminate_index_count); epoch 1 must flag against the union.
-      // The oracle replays both epochs' contamination aggregates over
-      // the matching suites.
+      // streamed admission control across a save — the FOURTH streamed
+      // family served from one store root that a save replaces in place
+      // (BM25, ANN, winnow are the others): generation 1 = the %97 eval
+      // suite's gram index saved to the root; the training stream's
+      // epoch-0 verdicts come from it; a NEW SUITE ships as generation 2
+      // (the %97 ∪ %89 union, saved over the root — appends are gated
+      // separately by decontaminate_index_count); epoch 1 must flag
+      // against the union. The oracle replays both epochs' contamination
+      // aggregates over the matching suites.
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
       val tmp = java.nio.file.Files.createTempDirectory("graft_deconflip").toString
       try {
         val docs = Tables.documents(s, dir)
         val root = s"$tmp/bench"
-        Generations.advance(s, root) { dst =>
-          TextAnalysis.saveBenchmarkIndex(
-            docs.filter(col("doc_id") % 97 === 0), shingleN = 5, dst)
-        }
+        TextAnalysis.saveBenchmarkIndex(docs.filter(col("doc_id") % 97 === 0), shingleN = 5, root)
         val rows = docs
           .filter(col("doc_id") % 97 =!= 0 && col("doc_id") % 89 =!= 0)
           .select(col("doc_id"), col("text")).as[(Long, String)].collect()
@@ -2112,30 +2107,20 @@ private[graft] object Queries {
             epochs += ans.collect()
           })
         try {
-          // gen-2 (the new suite) BUILDS concurrently with epoch 0 (guide
-          // §2.6): the pointer names gen-1 until the explicit publish
-          // below and the stream re-resolves per micro-batch, so epoch 0
-          // cannot observe the half-built generation — only the PUBLISH
-          // (the flip this gate asserts around) is sequenced after the
-          // epoch. Build + publish ≡ the one-call Generations.advance,
-          // split at its own commit point.
-          val gen2 = Generations.nextGenerationName(s, root)
-          val g2 = new org.apache.hadoop.fs.Path(root, gen2).toString
-          Jobs.concurrently(
-            () => { mem.addData(rows.toIndexedSeq: _*); q.processAllAvailable() },
-            () => TextAnalysis.saveBenchmarkIndex(
-              docs.filter(col("doc_id") % 97 === 0 || col("doc_id") % 89 === 0),
-              shingleN = 5, g2))
-          Generations.publish(s, root, gen2)
+          mem.addData(rows.toIndexedSeq: _*); q.processAllAvailable()
+          val g1 = Gates.storeState(s, root)
+          TextAnalysis.saveBenchmarkIndex(
+            docs.filter(col("doc_id") % 97 === 0 || col("doc_id") % 89 === 0),
+            shingleN = 5, root)
           mem.addData(rows.toIndexedSeq: _*); q.processAllAvailable()
           require(epochs.length == 2,
             s"streaming_decon_generation_flip: expected 2 epochs, got " +
               s"${epochs.length}")
           require(epochs(0).map(_.toSeq).toSet != epochs(1).map(_.toSeq).toSet,
-            "streaming_decon_generation_flip: gen-2 indexes a strictly " +
-              "larger suite — identical verdicts mean the flip was not served")
-          require(Generations.resolve(s, root) == g2,
-            "streaming_decon_generation_flip: pointer did not land on gen-2")
+            "streaming_decon_generation_flip: generation 2 indexes a strictly " +
+              "larger suite — identical verdicts mean the save was not served")
+          require(SegmentStore.base(Gates.storeState(s, root)) != SegmentStore.base(g1),
+            "streaming_decon_generation_flip: the save did not replace the suite")
         } finally q.stop()
         epochs.zipWithIndex.flatMap { case (ans, i) =>
           ans.map(r => (i, r.getLong(0), r.getLong(1)))
@@ -2677,16 +2662,17 @@ private[graft] object Queries {
     }),
 
     "streaming_winnow_generation_flip" -> ((s, dir) => {
-      // generation-aware streamed DECONTAMINATION admission — the third
-      // streamed family served through the Generations pointer (BM25 and
-      // ANN are the other two): gen-1 = the even docs' winnow fingerprints
-      // published under a root; the 75%-prefix probe batch streamed
-      // through flagStreamFromRoot flags against gen-1 (epoch 0);
-      // out-of-band maintenance publishes gen-2 (the full corpus —
-      // more stored originals, df cut over the merged set) and the SAME
-      // probe batch re-streamed must flag against gen-2 (epoch 1), the
-      // WinnowIndex rebuilt exactly once at the flip. The oracle replays
-      // both epochs' full winnow chains over the matching stored slices.
+      // streamed DECONTAMINATION admission across a save — the third
+      // streamed family served from one store root that a save replaces
+      // in place (BM25 and ANN are the other two): generation 1 = the even
+      // docs' winnow fingerprints saved to the root; the 75%-prefix probe
+      // batch streamed through flagStreamFromRoot flags against it
+      // (epoch 0); out-of-band maintenance saves generation 2 (the full
+      // corpus — more stored originals, df cut over the merged set) and
+      // the SAME probe batch re-streamed must flag against it (epoch 1),
+      // the WinnowIndex rebuilt exactly once at the new base commit. The
+      // oracle replays both epochs' full winnow chains over the matching
+      // stored slices.
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
       val tmp = java.nio.file.Files.createTempDirectory("graft_winflip").toString
@@ -2696,14 +2682,12 @@ private[graft] object Queries {
           TextAnalysis.winnowFingerprints(d)
             .select(col("doc_id").as("id"), col("fp"))
         val root = s"$tmp/wingen"
-        // gen-1 publish and the probe-batch collect are independent —
+        // the first save and the probe-batch collect are independent —
         // overlap them (guide §2.6); the stream below needs both
         var rows: Array[(Long, String)] = null
         Jobs.concurrently(
-          () => Generations.advance(s, root) { dst =>
-            graft.streaming.StreamingWinnow.saveFingerprints(
-              fps(docs.filter(col("doc_id") % 2 === 0)), dst)
-          },
+          () => graft.streaming.StreamingWinnow.saveFingerprints(
+            fps(docs.filter(col("doc_id") % 2 === 0)), root),
           () => rows = Fixtures.nearDupCopies(docs.filter(col("doc_id") < 500))
             .select(col("doc_id"), col("text")).as[(Long, String)].collect())
         val mem = org.apache.spark.sql.execution.streaming.runtime
@@ -2718,28 +2702,18 @@ private[graft] object Queries {
           epochs += ans.collect()
         }
         try {
-          // gen-2 BUILDS concurrently with epoch 0 (guide §2.6): the
-          // pointer names gen-1 until the explicit publish below, and the
-          // stream resolves it per micro-batch, so epoch 0 cannot observe
-          // the half-built generation — only the PUBLISH (the flip this
-          // gate asserts around) is sequenced after the epoch. Build +
-          // publish ≡ the one-call Generations.advance, split at its own
-          // commit point.
-          val gen2 = Generations.nextGenerationName(s, root)
-          val g2 = new org.apache.hadoop.fs.Path(root, gen2).toString
-          Jobs.concurrently(
-            () => { mem.addData(rows.toIndexedSeq: _*); q.processAllAvailable() },
-            () => graft.streaming.StreamingWinnow.saveFingerprints(fps(docs), g2))
-          Generations.publish(s, root, gen2)
+          mem.addData(rows.toIndexedSeq: _*); q.processAllAvailable()
+          val g1 = Gates.storeState(s, root)
+          graft.streaming.StreamingWinnow.saveFingerprints(fps(docs), root)
           mem.addData(rows.toIndexedSeq: _*); q.processAllAvailable()
           require(epochs.length == 2,
             s"streaming_winnow_generation_flip: expected 2 epochs, got " +
               s"${epochs.length}")
           require(epochs(0).map(_.toSeq).toSet != epochs(1).map(_.toSeq).toSet,
-            "streaming_winnow_generation_flip: gen-2 stores twice the " +
-              "corpus — identical flags mean the flip was not served")
-          require(Generations.resolve(s, root) == g2,
-            "streaming_winnow_generation_flip: pointer did not land on gen-2")
+            "streaming_winnow_generation_flip: generation 2 stores twice the " +
+              "corpus — identical flags mean the save was not served")
+          require(SegmentStore.base(Gates.storeState(s, root)) != SegmentStore.base(g1),
+            "streaming_winnow_generation_flip: the save did not replace the fingerprints")
         } finally q.stop()
         epochs.zipWithIndex.flatMap { case (ans, i) =>
           ans.map(r => (i, r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -3017,8 +2991,8 @@ private[graft] object Queries {
         Bloom.appendWords(Bloom.bloomWords(
           big.filter(col("o_orderkey") % 2 === 1), col("o_custkey"), m, k),
           s"$tmp/pile")
-        Bloom.compactWords(s, s"$tmp/pile", s"$tmp/gen2")
-        val words = Bloom.denseWords(Bloom.loadWords(s, s"$tmp/gen2"), m)
+        Bloom.compactWords(s, s"$tmp/pile")
+        val words = Bloom.denseWords(Bloom.loadWords(s, s"$tmp/pile"), m)
         Tables.customer(s, dir).filter(col("c_custkey") % 3 === 0)
           .select(col("c_custkey"),
             Bloom.containsExpr(words, col("c_custkey"), m, k).as("bloom_hit"))
@@ -3546,22 +3520,21 @@ private[graft] object Queries {
         val p = JoinPlanner.ProfileParams(depth = 4, width = 4096,
           topK = 4096, kmvK = 256)
         // fact and dim lifecycles are independent bundle chains over
-        // disjoint paths — fan each full save→append→compact chain out
-        // (guide §2.6); the decisions below read both only after the join
+        // disjoint paths — fan each save→append chain out, then both
+        // in-place compactions (guide §2.6); the pile decision reads both
+        // between the two
         Jobs.concurrently(
           () => {
             JoinPlanner.saveTableProfile(
               fact.filter(col("l_suppkey") % 2 === 0), "l_suppkey", s"$tmp/fact", p)
             JoinPlanner.appendTableProfile(
               fact.filter(col("l_suppkey") % 2 =!= 0), "l_suppkey", s"$tmp/fact", p)
-            JoinPlanner.compactTableProfile(s, s"$tmp/fact", s"$tmp/fact2")
           },
           () => {
             JoinPlanner.saveTableProfile(
               dim.filter(col("s_suppkey") % 2 === 0), "s_suppkey", s"$tmp/dim", p)
             JoinPlanner.appendTableProfile(
               dim.filter(col("s_suppkey") % 2 =!= 0), "s_suppkey", s"$tmp/dim", p)
-            JoinPlanner.compactTableProfile(s, s"$tmp/dim", s"$tmp/dim2")
           })
         val th = JoinPlanner.JoinThresholds(broadcastMaxDimRows = 2000,
           skewShareMin = 0.9, bloomSelectivityMax = 0.001)
@@ -3570,8 +3543,11 @@ private[graft] object Queries {
           minPartitions = 1, maxPartitions = 4096)
         val pile = JoinPlanner.joinDecisionFromProfiles(s, s"$tmp/fact",
           s"$tmp/dim", th, t).collect()
-        val out = JoinPlanner.joinDecisionFromProfiles(s, s"$tmp/fact2",
-          s"$tmp/dim2", th, t)
+        Jobs.concurrently(
+          () => JoinPlanner.compactTableProfile(s, s"$tmp/fact"),
+          () => JoinPlanner.compactTableProfile(s, s"$tmp/dim"))
+        val out = JoinPlanner.joinDecisionFromProfiles(s, s"$tmp/fact",
+          s"$tmp/dim", th, t)
         val post = out.collect()
         // numbers fold-invariant; the coverage marker may only degrade
         // (compactTableProfile scaladoc) — one collect per side, the
@@ -3652,18 +3628,15 @@ private[graft] object Queries {
     }),
 
     "profile_generation_flip" -> ((s, dir) => {
-      // the SERVING-GENERATION pointer closing every compaction family's
-      // "production shape: pointer flip" note, gated on the bundle family
-      // (the one whose decisions replay fully in SQL): gen-1 = the
-      // save+append pile published under a Generations root, the sized
-      // decision served THROUGH resolve(); maintenance folds the pile
-      // into gen-2 via advance(compactTableProfile) — build first, then
-      // the crash-atomic pointer commit — and the decision re-served
-      // through the flipped pointer must be row-identical (asserted
-      // in-query; the oracle replays the one-shot decision, so a fold or
-      // flip that changed anything a consumer can see fails the hash).
-      // The crash window itself — a generation built but unpublished
-      // keeps serving the old one — is GenerationsSpec's pin.
+      // an in-place compaction between two decisions, gated on the bundle
+      // family (the one whose decisions replay fully in SQL): the
+      // save+append pile at one root serves the sized decision;
+      // maintenance compacts the pile in place (compactTableProfile, one
+      // commit of the same store) and the decision re-served from the
+      // root must be row-identical (asserted in-query; the oracle replays
+      // the one-shot decision, so a fold that changed anything a consumer
+      // can see fails the hash). Its crash windows are SegmentStoreSpec's
+      // sweep.
       val tmp = java.nio.file.Files.createTempDirectory("graft_gen_flip").toString
       try {
         val fact = Tables.lineitem(s, dir)
@@ -3673,14 +3646,14 @@ private[graft] object Queries {
         val p = JoinPlanner.ProfileParams(depth = 4, width = 4096,
           topK = 4096, kmvK = 256)
         val root = s"$tmp/factgen"
-        // the gen-1 fact pile and the dim bundle are independent
-        // artifacts — fan the two builds out (guide §2.6)
+        // the fact pile and the dim bundle are independent artifacts —
+        // fan the two builds out (guide §2.6)
         Jobs.concurrently(
-          () => Generations.advance(s, root) { dst =>
+          () => {
             JoinPlanner.saveTableProfile(
-              fact.filter(col("l_suppkey") % 2 === 0), "l_suppkey", dst, p)
+              fact.filter(col("l_suppkey") % 2 === 0), "l_suppkey", root, p)
             JoinPlanner.appendTableProfile(
-              fact.filter(col("l_suppkey") % 2 =!= 0), "l_suppkey", dst, p)
+              fact.filter(col("l_suppkey") % 2 =!= 0), "l_suppkey", root, p)
           },
           () => JoinPlanner.saveTableProfile(dim, "s_suppkey", s"$tmp/dim", p))
         val th = JoinPlanner.JoinThresholds(broadcastMaxDimRows = 2000,
@@ -3688,13 +3661,11 @@ private[graft] object Queries {
         val t = Capacity.SizingTargets(
           targetPartitionBytes = 64L << 10, targetFileBytes = 256L << 10,
           minPartitions = 1, maxPartitions = 4096)
-        def decide() = JoinPlanner.joinDecisionFromProfiles(s,
-          Generations.resolve(s, root), s"$tmp/dim", th, t)
+        def decide() = JoinPlanner.joinDecisionFromProfiles(s, root, s"$tmp/dim", th, t)
         val pre = decide().collect()
-        val g1 = Generations.resolve(s, root)
-        val g2 = Generations.advance(s, root) { dst =>
-          JoinPlanner.compactTableProfile(s, g1, dst)
-        }
+        val g1 = Gates.storeState(s, root)
+        JoinPlanner.compactTableProfile(s, root)
+        val g2 = Gates.storeState(s, root)
         val out = decide()
         val post = out.collect()
         // every decision NUMBER is fold-invariant; the coverage marker may
@@ -3705,14 +3676,14 @@ private[graft] object Queries {
         def nums(rs: Array[org.apache.spark.sql.Row]) =
           rs.map(_.toSeq.patch(iCov, Nil, 1)).toSeq
         require(nums(pre) == nums(post),
-          "profile_generation_flip: the flipped generation serves a " +
+          "profile_generation_flip: the compacted bundle serves a " +
             "different decision than the pile it replaced")
         require(pre(0).getAs[Boolean]("top_share_exact") ||
             !post(0).getAs[Boolean]("top_share_exact"),
           "profile_generation_flip: the fold UPGRADED the coverage marker")
         val flipped = s.createDataFrame(java.util.Arrays.asList(post: _*), out.schema)
-          .withColumn("generation_changed", lit(g2 != g1 &&
-            Generations.resolve(s, root) == g2))
+          .withColumn("generation_changed", lit(g2.seq > g1.seq &&
+            SegmentStore.base(g2) != SegmentStore.base(g1)))
           .withColumn("decision_identical", lit(true))
         s.createDataFrame(
           java.util.Arrays.asList(flipped.collect(): _*), flipped.schema)
@@ -3720,23 +3691,23 @@ private[graft] object Queries {
     }),
 
     "streaming_bm25_generation_flip" -> ((s, dir) => {
-      // generation-aware STREAMED serving — the half of the serving story
-      // the REST servers already had (per-request resolution) brought to
-      // the running stream: a BM25 query stream served from a Generations
-      // ROOT re-resolves the pointer per micro-batch, so a maintenance
-      // flip landing BETWEEN two epochs is served by the second with no
-      // restart. gen-1 = index over the quarter slice (doc_id % 4 = 0);
-      // epoch 0 answers must be row-identical to gen-1's batch path;
-      // out-of-band maintenance publishes gen-2 (the half slice — more
-      // docs, every idf/avgdl moves); epoch 1 must be row-identical to
-      // gen-2's batch path. The oracle replays BOTH epochs' BM25
+      // STREAMED serving across a save — the half of the serving story the
+      // REST servers already had (per-request resolution) brought to the
+      // running stream: a BM25 query stream resolves its store's newest
+      // commit per micro-batch, so a save landing BETWEEN two epochs is
+      // served by the second with no restart. Generation 1 = index over
+      // the quarter slice (doc_id % 4 = 0); epoch 0 answers must be
+      // row-identical to its batch path; out-of-band maintenance saves
+      // generation 2 over the same root (the half slice — more docs,
+      // every idf/avgdl moves); epoch 1 must be row-identical to its
+      // batch path. The oracle replays BOTH epochs' BM25
       // formulas one-shot in SQL over the matching corpus slices — the
       // hash IS the row-identity proof for both epochs (the SQL replay
       // equals the engine's batch path, itself pinned by bm25_batch_topk;
-      // the in-engine streamed≡batch identity across a flip is
+      // the in-engine streamed≡batch identity across a save is
       // StreamingLexicalSpec's pin), so a stream that kept serving the
       // construction-time generation fails the hash. (Slices rather than
-      // even/all: the flip proof only needs the two generations to
+      // even/all: the proof only needs the two generations to
       // DIFFER; indexing half the corpus volume keeps the gate's two
       // index builds off the expensive-entry list.)
       import s.implicits._
@@ -3745,10 +3716,7 @@ private[graft] object Queries {
       try {
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
         val root = s"$tmp/lexgen"
-        Generations.advance(s, root) { dst =>
-          TextAnalysis.saveLexicalIndex(docs.filter(col("doc_id") % 4 === 0),
-            dst, nBuckets = 8)
-        }
+        TextAnalysis.saveLexicalIndex(docs.filter(col("doc_id") % 4 === 0), root, nBuckets = 8)
         val qs = Seq((1L, Seq("vector", "stream", "hash")),
           (2L, Seq("data", "merge")))
         val mem = org.apache.spark.sql.execution.streaming.runtime
@@ -3759,34 +3727,23 @@ private[graft] object Queries {
         // postings index, not feed-sized state — sizing the stream's
         // partitions by the 2-query feed serializes the index side
         // (measured 1.17× on this entry)
-        val q = graft.streaming.StreamingLexicalServing.serveBm25FromRoot(
+        val q = graft.streaming.StreamingLexicalServing.serveBm25FromPath(
           mem.toDF().toDF("query_id", "terms"), root, k = 10) { (ans, _) =>
           epochs += ans.collect()
         }
         try {
-          // gen-2 BUILDS concurrently with epoch 0 (guide §2.6): the
-          // pointer names gen-1 until the explicit publish below and the
-          // stream re-resolves per micro-batch, so epoch 0 cannot observe
-          // the half-built generation — only the PUBLISH (the flip this
-          // gate asserts around) is sequenced after the epoch. Build +
-          // publish ≡ the one-call Generations.advance, split at its own
-          // commit point.
-          val gen2 = Generations.nextGenerationName(s, root)
-          val g2 = new org.apache.hadoop.fs.Path(root, gen2).toString
-          Jobs.concurrently(
-            () => { mem.addData(qs: _*); q.processAllAvailable() },
-            () => TextAnalysis.saveLexicalIndex(
-              docs.filter(col("doc_id") % 2 === 0), g2, nBuckets = 8))
-          Generations.publish(s, root, gen2)
+          mem.addData(qs: _*); q.processAllAvailable()
+          val g1 = Gates.storeState(s, root)
+          TextAnalysis.saveLexicalIndex(docs.filter(col("doc_id") % 2 === 0), root, nBuckets = 8)
           mem.addData(qs: _*); q.processAllAvailable()
           require(epochs.length == 2,
             s"streaming_bm25_generation_flip: expected 2 served epochs, " +
               s"got ${epochs.length}")
           require(epochs(0).map(_.toSeq).toSet != epochs(1).map(_.toSeq).toSet,
-            "streaming_bm25_generation_flip: gen-2 indexes twice the docs " +
-              "— identical epoch answers mean the flip was not served")
-          require(Generations.resolve(s, root) == g2,
-            "streaming_bm25_generation_flip: pointer did not land on gen-2")
+            "streaming_bm25_generation_flip: generation 2 indexes twice the docs " +
+              "— identical epoch answers mean the save was not served")
+          require(SegmentStore.base(Gates.storeState(s, root)) != SegmentStore.base(g1),
+            "streaming_bm25_generation_flip: the save did not replace the index")
         } finally q.stop()
         epochs.zipWithIndex.flatMap { case (ans, i) =>
           ans.map(r => (i, r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))

@@ -224,20 +224,19 @@ object Bloom {
     words.groupBy(col("w")).agg(call_function("bit_or", col("bits")).as("bits"))
 
   /**
-   * Compact a words artifact: fold the base [[saveWords]] plus its
-   * [[appendWords]] commits into ONE merged commit at `dst` — the fold IS
+   * Compact a words artifact in place: fold the base [[saveWords]] plus
+   * its [[appendWords]] commits into ONE merged commit — the fold IS
    * the merge semantics (word-wise bit-OR, [[loadWords]]'s law), so the
    * compacted artifact holds ≤ m/62 rows forever after no matter how many
    * slices were appended. Under per-trigger membership maintenance the
    * pile otherwise grows one file set per batch for an artifact whose
    * information content is fixed-size (the
    * [[JoinPlanner.compactTableProfile]] shape). Audited on the merged
-   * word set by [[SegmentStore.foldCompact]]. Production shape: fresh
-   * path + [[Generations]] pointer flip; the old generation stays readable.
+   * word set by [[SegmentStore.compact]]; readers loaded before keep the
+   * pile's files for the store's grace.
    */
-  def compactWords(spark: org.apache.spark.sql.SparkSession,
-                   src: String, dst: String): Unit =
-    SegmentStore.foldCompact(spark, src, dst, "bloom words", Nil, orWords)(
+  def compactWords(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    SegmentStore.compact(spark, path, "bloom words", Nil, orWords)(
       pile => wordsLayout(orWords(pile)))
 
   /**

@@ -229,21 +229,20 @@ object Dedup {
     SegmentStore.write(bandLayout(index), path, replace = false, Seq("band"))
 
   /**
-   * Compact a band index: fold the base save plus its append commits into
-   * a fresh one-commit layout at `dst` — per band partition, `bh`-sorted
+   * Compact a band index in place: fold the base save plus its append
+   * commits into one commit of `path` — per band partition, `bh`-sorted
    * files whose parquet min/max stats prune probe row groups again (each
    * append lands unsorted RELATIVE to the base's runs, so under
    * continuous ingest probes pay more files and overlapping stat ranges
    * until a fold restores the layout). Rows are preserved VERBATIM
    * (batches are id-distinct by construction — compaction is file-layout
-   * work, no dedup), audited by [[SegmentStore.foldCompact]]; probing
-   * `dst` is row-identical to probing the pile. Production shape: a fresh
-   * generation published by the crash-atomic [[Generations.advance]]
-   * pointer flip (the ingest_lifecycle_capstone gate composes that arc).
+   * work, no dedup), audited by [[SegmentStore.compact]]; probing the
+   * compacted index is row-identical to probing the pile, and a reader
+   * loaded before keeps the pile's files for the store's grace (the
+   * ingest_lifecycle_capstone gate composes that arc).
    */
-  def compactBandIndex(spark: org.apache.spark.sql.SparkSession,
-                       src: String, dst: String): Unit =
-    SegmentStore.foldCompact(spark, src, dst, "band index", Seq("band"), identity)(bandLayout)
+  def compactBandIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    SegmentStore.compact(spark, path, "band index", Seq("band"), identity)(bandLayout)
 
   /**
    * Near-dup pairs (new_id, corpus_id, jaccard) between a NEW batch and an

@@ -208,9 +208,8 @@ object JoinPlanner {
    * publishes nothing: the exactly-once contract a `foreachBatch`
    * maintainer needs under at-least-once replays (pass `sliceId =
    * s"batch-$id"` — no side marker files, the commit IS the marker). The
-   * store writes only `path/c-N/` and `path/_manifest/`, so a
-   * [[Generations]] root or unrelated files at the same path survive a
-   * save.
+   * store writes only `path/c-N/` and `path/_manifest/`, so unrelated
+   * files at the same path survive a save.
    *
    * Narrow map-side-combined passes over the ONE materialized slice
    * cache, each shuffling rows bounded by the sketch shape (depth·width
@@ -302,12 +301,14 @@ object JoinPlanner {
       val k = sketchKey(slice, key)
       // the grouped counts feed BOTH the topk component and the exact
       // per-slice coverage bit; distinct-key-sized, cached for the reuse
-      // (the single write action fills it once — block locks serialize
-      // concurrent stage fills)
       val grouped = slice.select(k.as("k"))
         .groupBy(col("k")).agg(count(lit(1)).as("cnt"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
+        // fill BOTH caches in one sequential pass (computing grouped scans
+        // the slice), so the unified write's concurrent AQE stages only
+        // read them: racing first stages each filled the same block
+        grouped.count()
         // the kmv branch: the slice's KMV distinct-count sketch over the
         // SAME sketch key (k-min commutes with union, so the loader's
         // kmvMerge over slices IS the one-shot sketch — the pinned
@@ -397,8 +398,9 @@ object JoinPlanner {
     stats.agg(sum(col("rows")).as("rows"), sum(col("bytes")).as("bytes"))
 
   /**
-   * Compact a profile bundle: fold the slice pile into ONE merged slice,
-   * the first commit of `dst` ([[SegmentStore.foldCompact]]). The bundle
+   * Compact a profile bundle in place: fold the slice pile into ONE
+   * merged slice, one commit of its store ([[SegmentStore.compact]]). The
+   * bundle
    * is the one artifact family whose compaction IS its merge semantics:
    * cells collapse to the summed grid (≤ depth·width rows forever after),
    * kmv to the k-min of the union (exactly the one-shot sketch), stats to
@@ -419,17 +421,16 @@ object JoinPlanner {
    * from the fold, which is exactly what the per-slice bit exists to
    * catch), so a fold over more distinct keys than `topK` degrades the
    * marker from exact to conservative while changing no number.
-   * Audited before the publish: the summed rows/bytes of `dst` must match
-   * the pile's, and `src` must still be the pile it folded — an append
-   * that lands mid-compaction fails it and `dst` publishes nothing.
-   * Production shape: `dst` under a [[Generations]] root, published by
-   * pointer flip.
+   * Audited before the publish: the summed rows/bytes of the folded slice
+   * must match the pile's, and the newest commit must still be the pile
+   * it folded — an append that lands mid-compaction fails it and the
+   * store keeps the append. Readers loaded before keep the slices' files
+   * for the store's grace.
    */
-  def compactTableProfile(spark: org.apache.spark.sql.SparkSession,
-                          src: String, dst: String): Unit =
-    SegmentStore.foldCompact(spark, src, dst, "table profile", Nil,
+  def compactTableProfile(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    SegmentStore.compact(spark, path, "table profile", Nil,
       b => summedStats(b.filter(col("component") === "stats"))) { pile =>
-      val prof = profileOf(src, pile)
+      val prof = profileOf(path, pile)
       // the loaded components are single-partition, so the fold plans
       // with no exchange
       unifiedSlice(prof.cells,

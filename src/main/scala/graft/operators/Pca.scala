@@ -329,20 +329,18 @@ object Pca {
     table.groupBy(col("i"), col("j")).agg(sum(col("s")).as("s"))
 
   /**
-   * Compact a moments artifact: fold the base [[saveMoments]] plus its
-   * [[appendMoments]] commits into ONE merged commit at `dst` — the fold
+   * Compact a moments artifact in place: fold the base [[saveMoments]]
+   * plus its [[appendMoments]] commits into ONE merged commit — the fold
    * IS the merge semantics (cell-wise exact integer sum, [[loadMoments]]'s
    * law), so the compacted artifact holds (d²+d+1) rows forever after no
    * matter how many slices were appended (under per-trigger
    * incremental-PCA maintenance the pile otherwise grows one file set per
-   * batch). [[momentsFromTable]] over `dst` is byte-identical to the
-   * pile's by construction. Audited on the merged cell set by
-   * [[SegmentStore.foldCompact]]. Production shape: fresh path +
-   * [[Generations]] pointer flip.
+   * batch). [[momentsFromTable]] over the compacted table is
+   * byte-identical to the pile's by construction. Audited on the merged
+   * cell set by [[SegmentStore.compact]].
    */
-  def compactMoments(spark: org.apache.spark.sql.SparkSession,
-                     src: String, dst: String): Unit =
-    SegmentStore.foldCompact(spark, src, dst, "moment table", Nil, sumCells)(
+  def compactMoments(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    SegmentStore.compact(spark, path, "moment table", Nil, sumCells)(
       pile => momentsLayout(sumCells(pile)))
 
   /**

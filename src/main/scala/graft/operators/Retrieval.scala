@@ -146,25 +146,22 @@ object Retrieval {
     postings.repartitionByRange(partitions, col("gram")).sortWithinPartitions(col("gram"))
 
   /**
-   * Compact a trigram index: fold the base save plus its append commits
-   * into a fresh gram-range-partitioned, gram-sorted GENERATION at `dst`
-   * — the [[graft.operators.TextAnalysis.compactLexicalIndex]] discipline
+   * Compact a trigram index in place: fold the base save plus its append
+   * commits into one gram-range-partitioned, gram-sorted commit — the [[graft.operators.TextAnalysis.compactLexicalIndex]] discipline
    * applied to the substring index. Every [[appendTrigramIndex]] adds
    * small files whose gram ranges overlap the base layout, so under
    * continuous ingest each search pays more files and un-pruned row
    * groups until compaction restores the one-commit range-partitioned
    * layout. Posting rows are preserved VERBATIM (slices are distinct by
    * construction — compaction is pure file-layout work, no dedup, no
-   * regroup), audited by [[SegmentStore.foldCompact]], so
-   * [[searchTrigramIndex]] against `dst` is row-identical to `src` by
-   * construction. Production shape: the rewrite lands at a fresh path and
-   * the serving pointer flips — crash-safe, the old generation stays
-   * readable throughout.
+   * regroup), audited by [[SegmentStore.compact]], so
+   * [[searchTrigramIndex]] after it is row-identical to before by
+   * construction, and a reader loaded before keeps the pile's files for
+   * the store's grace.
    */
-  def compactTrigramIndex(spark: org.apache.spark.sql.SparkSession,
-                          src: String, dst: String,
+  def compactTrigramIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                           partitions: Int = 8): Unit =
-    SegmentStore.foldCompact(spark, src, dst, "trigram index", Nil, identity)(
+    SegmentStore.compact(spark, path, "trigram index", Nil, identity)(
       gramLayout(_, partitions))
 
   /**

@@ -10,9 +10,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
 /**
  * A partitioned parquet table that is never overwritten in place: the
  * commit step of every persisted artifact family.
- * Its clients are the serving table ([[graft.streaming.StreamingPipeline]]),
- * the lexical index ([[TextAnalysis.saveLexicalIndex]]), and, through
- * [[write]], [[load]] and [[foldCompact]], the band index
+ * Its clients are the serving table ([[graft.streaming.StreamingPipeline]])
+ * and, through [[write]], [[load]] and [[compact]], the lexical index
+ * ([[TextAnalysis.saveLexicalIndex]]), the band index
  * ([[Dedup.saveBandIndex]]), the trigram index
  * ([[Retrieval.saveTrigramIndex]]), winnow fingerprints
  * ([[graft.streaming.StreamingWinnow.saveFingerprints]]), the entity
@@ -22,8 +22,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
  * ([[TextAnalysis.saveBenchmarkIndex]]), the join planner's table
  * profile ([[JoinPlanner.saveTableProfile]]), the ANN indexes
  * ([[Similarity.saveIvfPq]], [[Similarity.saveIvfIndex]],
- * [[Quantization.savePq]], [[Quantization.saveQuantized]]) and the BPE
- * and quality models ([[Bpe.saveBpeModel]], [[Learn.saveModel]]).
+ * [[Quantization.savePq]], [[Quantization.saveQuantized]]), the BPE
+ * and quality models ([[Bpe.saveBpeModel]], [[Learn.saveModel]]) and the
+ * perceptual-hash table ([[graft.streaming.StreamingPhashDedup]]). A store
+ * root is the whole artifact: a save, an append and a compaction are each
+ * one commit of it, and there is no second version layer above it.
  *
  * Commit S writes new files under `root/c-S/`, one directory level per
  * partition column as `partitionBy` writes them
@@ -46,8 +49,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
  *   T  c-N  tag                the tag commit N was made under, kept while
  *                              a file of `c-N` is live
  * }}}
- * A manifest without an `S` line (the serving table's, the lexical
- * index's) is read with the schema its client passes to [[frame]].
+ * A manifest without an `S` line (the serving table's) is read with the
+ * schema its client passes to [[frame]].
  * A tagged commit whose tag the newest manifest already names publishes
  * nothing: a replayed micro-batch or slice is a no-op, found in the
  * manifest the commit reads anyway. A save drops the tags with the files.
@@ -217,34 +220,70 @@ private[graft] object SegmentStore {
   }
 
   /**
-   * Compact `src` into `dst`: pin the newest manifest of `src`, write
-   * `fold(frame)` (laid out, partitioned by `partitionBy`) as a save of
-   * `dst`, and publish it only if (1) the written files checksum-match
-   * the fold of the pinned source under `view` (the family's load-time
-   * merge onto its audit columns: row count plus the xor of per-row
-   * hashes, order-free) and (2) the newest manifest of `src` is still the
-   * pinned one, one listing and no Spark job: an append that landed while
-   * the fold ran fails the compaction, and `dst` keeps no manifest.
+   * Compact the store at `root` in place: pin its newest manifest P, write
+   * `fold(frame over P)` (laid out, partitioned by `partitionBy`) as the
+   * next commit, and publish a manifest whose live files are only the
+   * folded ones, so P's commit dirs retire under [[RetiredGraceMs]] and a
+   * reader pinned to P keeps its files meanwhile. It publishes only if
+   * (1) the newest manifest is still P, one listing and no Spark job, and
+   * (2) the written files checksum-match the pinned pile under `view`
+   * (the family's load-time merge onto its audit columns: row count plus
+   * the xor of per-row hashes, order-free). Compaction is a writer verb:
+   * a commit that lands while the fold runs (another writer, which the
+   * single-writer contract rules out) fails it loudly — by (1), or by the
+   * publish, which cannot take a number already published — and the
+   * store keeps that commit. The fold is not rebased onto it: commit dirs
+   * are numbered by manifest, so its files could sit in the fold's dir.
    */
-  def foldCompact(spark: SparkSession, src: String, dst: String, artifact: String,
-                  partitionBy: Seq[String], view: DataFrame => DataFrame)
-                 (fold: DataFrame => DataFrame): Unit = {
-    require(src != dst, s"compacting a $artifact: dst must be a fresh path")
-    val hfs = SeqFiles.fs(spark, src)
-    val source = latest(hfs, src).getOrElse(
-      throw new IllegalStateException(s"no $artifact at $src — save first"))
-    val pile = pinned(spark, src, source)
-    commitFrame(fold(pile), dst, replace = true, partitionBy, tag = "") { done =>
+  def compact(spark: SparkSession, root: String, artifact: String,
+              partitionBy: Seq[String], view: DataFrame => DataFrame)
+             (fold: DataFrame => DataFrame): Unit = {
+    val hfs = SeqFiles.fs(spark, root)
+    val pin = latest(hfs, root).getOrElse(
+      throw new IllegalStateException(s"no $artifact at $root — save first"))
+    val pile = pinned(spark, root, pin)
+    commitFrame(fold(pile), root, replace = true, partitionBy, tag = "") { done =>
+      require(newest(hfs, root).map { case (s, st) => (s, st.getModificationTime) } ==
+        Some((pin.seq, pin.mtime)),
+        s"compacting a $artifact at $root: the store changed mid-compaction; re-run")
       def sums(df: DataFrame) = df.select(xxhash64(df.columns.map(df(_)): _*).as("h"))
         .agg(count(lit(1)), coalesce(call_function("bit_xor", col("h")), lit(0L)))
       val r = sums(view(pile)).crossJoin(sums(view(done))).head()
       require(r.getLong(0) == r.getLong(2) && r.getLong(1) == r.getLong(3),
-        s"compacting a $artifact: $dst holds (${r.getLong(2)} rows, ${r.getLong(3)}), " +
-          s"the fold of $src (${r.getLong(0)} rows, ${r.getLong(1)}) — re-run")
-      require(newest(hfs, src).map { case (s, st) => (s, st.getModificationTime) } ==
-        Some((source.seq, source.mtime)),
-        s"compacting a $artifact: the source changed mid-compaction; re-run")
+        s"compacting a $artifact at $root: the fold wrote (${r.getLong(2)} rows, " +
+          s"${r.getLong(3)}), the pile holds (${r.getLong(0)} rows, ${r.getLong(1)}) — re-run")
     }
+  }
+
+  /** The store's base commit in `m`: the first live file of the oldest
+    * commit still live, i.e. of the last save or compaction, which
+    * replaced every live file. An append keeps it, a save or compaction
+    * moves it; the file name carries its write job's id, so a store
+    * deleted and rebuilt at the same path does not repeat it. */
+  def base(m: Manifest): String = m.live.map(_.path).minOption.getOrElse(s"empty-${m.seq}")
+
+  /**
+   * A driver-side artifact built from the store at `root` and rebuilt
+   * only when its [[base]] commit moves: the serve-path memo of a
+   * quantizer, an index or a banded table that appends do not change.
+   * [[current]] resolves the newest manifest once and returns a frame over
+   * exactly its files with the artifact built from that commit's base,
+   * so a caller never mixes two saves. One volatile pair, no lock: two
+   * threads may build the same base once each. Construction builds it,
+   * so a missing or unreadable store fails there.
+   */
+  final class BaseMemo[A](spark: SparkSession, root: String, artifact: String,
+                          build: DataFrame => A) {
+    @volatile private var memo: (String, A) = _
+    def current(): (DataFrame, A) = {
+      val m = latest(SeqFiles.fs(spark, root), root).getOrElse(
+        throw new IllegalStateException(s"no $artifact at $root — save first"))
+      val rows = pinned(spark, root, m)
+      val held = memo
+      if (held != null && held._1 == base(m)) (rows, held._2)
+      else { val a = build(rows); memo = (base(m), a); (rows, a) }
+    }
+    current()
   }
 
   /** Sweep the store: delete a crashed commit's leftovers (`.tmp`

@@ -4,12 +4,14 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** A directory of numbered files, `prefix-%08d`, whose highest number is
-  * the committed state: the commit step shared by the [[Generations]]
-  * pointer and the [[SegmentStore]] manifest. [[publish]] writes
-  * `.prefix-S.tmp` and renames it to `prefix-S`, the commit point (atomic
-  * on HDFS and local disks): a reader lists the old highest file or the
-  * new one, and a crash leaves only a `.tmp` stage no reader picks. One
-  * writer per directory: committing an existing number fails loudly. */
+  * the committed state: the commit step of the [[SegmentStore]] manifest.
+  * [[publish]] writes `.prefix-S.tmp` and renames it to `prefix-S`, the
+  * commit point (atomic on HDFS and local disks): a reader lists the old
+  * highest file or the new one, and a crash leaves only a `.tmp` stage no
+  * reader picks. One writer per directory: committing an existing number
+  * fails loudly, by the `exists` check and, for a number published after
+  * it, by the rename, which HDFS and the checksummed `file:` filesystem
+  * refuse onto an existing file. */
 private[graft] object SeqFiles {
 
   def name(prefix: String, seq: Long): String = f"$prefix-$seq%08d"

@@ -211,16 +211,27 @@ object Similarity {
     * collect, and its code table pinned to the newest commit. */
   def loadIvfPq(spark: org.apache.spark.sql.SparkSession, path: String): IvfPqIndex = {
     val index = SegmentStore.load(spark, path, "IVF-PQ index")
+    val (cents, books) = ivfPqQuantizers(index, path)
+    IvfPqIndex(cents, books, Quantization.rowsOf(index, "codes"))
+  }
+
+  private def ivfPqQuantizers(index: DataFrame, path: String)
+      : (Array[(Int, Array[Float])], Quantization.PqCodebooks) = {
     val (cents, books) = Quantization.quantizers(index, path)
     require(cents.nonEmpty && books.nonEmpty,
       s"no IVF centroids or PQ codebooks at $path — empty or corrupt index artifact")
-    IvfPqIndex(cents, books.get, Quantization.rowsOf(index, "codes"))
+    (cents, books.get)
   }
 
-  /** The code table of the stored IVF-PQ index at `path`, through its
-    * newest commit, without reading the quantizers. */
-  private[graft] def ivfPqCodes(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    Quantization.rowsOf(SegmentStore.load(spark, path, "IVF-PQ index"), "codes")
+  /** The quantizers of the IVF-PQ index at `path`, collected once per
+    * base commit ([[SegmentStore.BaseMemo]]): an [[appendIvfPq]] keeps
+    * them, a save or a re-cluster reloads them. Each `current()` returns
+    * them with a frame over the same commit, whose code rows
+    * ([[Quantization.rowsOf]]) a request or an epoch then reads, so codes
+    * and centroids always come from one save. */
+  private[graft] def quantizerMemo(spark: org.apache.spark.sql.SparkSession, path: String)
+      : SegmentStore.BaseMemo[(Array[(Int, Array[Float])], Quantization.PqCodebooks)] =
+    new SegmentStore.BaseMemo(spark, path, "IVF-PQ index", ivfPqQuantizers(_, path))
 
   /** Grow a stored IVF-PQ index: encode `vectors` against the index's own
     * quantizers ([[ivfPqEncode]] — no retraining, one narrow pass) and
@@ -273,33 +284,30 @@ object Similarity {
   /**
    * Index MAINTENANCE under append drift: when [[ivfPqListStats]] finds
    * any oversized list, retrain both quantizers from the CURRENT corpus
-   * and write a fresh generation at `dst` (re-clustering re-balances
-   * every list at once — re-splitting single lists would leave the PQ
-   * codebooks trained on the stale distribution too); otherwise do
-   * nothing. Returns whether the rewrite ran. The fresh generation's
-   * GEOMETRY (nlist, m, ksub) is READ FROM the `src` artifact itself —
+   * and save the re-clustered index into the same store (re-clustering
+   * re-balances every list at once — re-splitting single lists would
+   * leave the PQ codebooks trained on the stale distribution too);
+   * otherwise do nothing. Returns whether the save ran. The new index's
+   * GEOMETRY (nlist, m, ksub) is READ FROM the stored index itself —
    * centroid count and stored codebook shape — never trusted from caller
-   * defaults: maintenance must hand the serving pointer an index shaped
-   * like the one being maintained, or a parameter-omitting call would
-   * silently flip serving onto different geometry. The production
-   * cadence: ingest appends via [[appendIvfPq]] (cheap, no retraining),
-   * this runs out-of-band, and the serving pointer flips to `dst`
-   * ([[Generations.advance]]) when it reports true — the old generation
-   * stays readable throughout, and a recall gate
-   * (`ann_recluster_recall`) should pass before the flip.
+   * defaults, so a parameter-omitting call cannot change the geometry
+   * serving sees. The production cadence: ingest appends via
+   * [[appendIvfPq]] (cheap, no retraining) and this runs out-of-band; the
+   * save is one commit, readers loaded before keep the old index for the
+   * store's grace, and the servers reload the quantizers once
+   * ([[quantizerMemo]]).
    */
   def maintainIvfPq(spark: org.apache.spark.sql.SparkSession,
-                    src: String, dst: String, corpus: DataFrame,
+                    path: String, corpus: DataFrame,
                     oversizeFactor: Double = 2.0,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     kmeansIters: Int = 0): Boolean = {
-    require(src != dst, "maintainIvfPq: dst must be a fresh path")
-    val oversized = ivfPqListStats(spark, src, oversizeFactor)
+    val oversized = ivfPqListStats(spark, path, oversizeFactor)
       .collect()(0).getAs[Long]("n_oversized")
     if (oversized == 0L) false
     else {
-      val index = loadIvfPq(spark, src)
-      saveIvfPq(corpus, dst, index.centroids.length, index.books.m,
+      val index = loadIvfPq(spark, path)
+      saveIvfPq(corpus, path, index.centroids.length, index.books.m,
         index.books.books.head.length, idCol, vecCol, kmeansIters)
       true
     }

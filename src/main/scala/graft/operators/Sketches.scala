@@ -124,21 +124,20 @@ object Sketches {
       .withColumn("estimate", hll_sketch_estimate(col("sketch")))
 
   /**
-   * Compact a sketch-table artifact: fold the base + append commits into
-   * ONE row per group at `dst` — the fold IS the register union
+   * Compact a sketch-table artifact in place: fold the base + append
+   * commits into ONE row per group — the fold IS the register union
    * [[loadSketchTable]] performs, so the compacted artifact holds |groups|
    * rows forever after no matter how many slices were appended (under
    * per-trigger maintenance the pile otherwise grows one file set per
    * batch). Audited on the per-group ESTIMATES by
-   * [[SegmentStore.foldCompact]] (register unions are
+   * [[SegmentStore.compact]] (register unions are
    * associative/idempotent, so the folded sketch estimates identically;
    * estimates tolerate representation differences sketch bytes would
-   * not). Production shape: fresh path + [[Generations]] pointer flip.
+   * not).
    */
-  def compactSketchTable(spark: org.apache.spark.sql.SparkSession,
-                         src: String, dst: String,
+  def compactSketchTable(spark: org.apache.spark.sql.SparkSession, path: String,
                          groupCols: Seq[String]): Unit =
-    SegmentStore.foldCompact(spark, src, dst, "sketch table", Nil,
+    SegmentStore.compact(spark, path, "sketch table", Nil,
       unionSketches(_, groupCols).select((groupCols :+ "estimate").map(col): _*))(
       pile => sketchLayout(unionSketches(pile, groupCols), groupCols))
 

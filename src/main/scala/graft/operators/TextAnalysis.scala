@@ -514,10 +514,7 @@ object TextAnalysis {
   def saveLexicalIndex(docs: DataFrame, path: String, nBuckets: Int = 64,
                        idCol: String = "doc_id", textCol: String = "text"): Unit = {
     require(nBuckets > 0, "saveLexicalIndex: nBuckets must be positive")
-    SegmentStore.commit(docs.sparkSession, path, LexPartitions) { (live, dir) =>
-      writeLexicalSegment(docs, dir, nBuckets, idCol, textCol)
-      live
-    }
+    writeLexicalSegment(docs, path, replace = true, nBuckets, idCol, textCol)
   }
 
   /**
@@ -533,12 +530,9 @@ object TextAnalysis {
   def appendLexicalIndex(docs: DataFrame, path: String,
                          idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val spark = docs.sparkSession
-    SegmentStore.commit(spark, path, LexPartitions) { (live, dir) =>
-      val nBuckets = lexTable(spark, path, live, "stat").select(col("n_buckets"))
-        .head(1).headOption.getOrElse(throw noIndex(path)).getInt(0)
-      writeLexicalSegment(docs, dir, nBuckets, idCol, textCol)
-      Nil
-    }
+    val nBuckets = lexTable(spark, path, lexManifest(spark, path).live, "stat")
+      .select(col("n_buckets")).head(1).headOption.getOrElse(throw noIndex(path)).getInt(0)
+    writeLexicalSegment(docs, path, replace = false, nBuckets, idCol, textCol)
   }
 
   /** The index's data columns: those of all three components. */
@@ -552,6 +546,7 @@ object TextAnalysis {
   /** The partition columns: one `component=C/bucket=B` dir per bucket. */
   private[graft] val LexPartitions = StructType(Seq(
     StructField("component", StringType), StructField("bucket", IntegerType)))
+  private val LexPartitionCols = LexPartitions.fieldNames.toSeq
 
   /** Project `df` onto [[LexSchema]] under `component = tag`: owned
     * columns cast to the index type, the rest typed nulls; `bucketCol`
@@ -589,31 +584,32 @@ object TextAnalysis {
     * predicate prunes the other components' files at planning. */
   private def lexTable(spark: SparkSession, path: String,
                        entries: Seq[SegmentStore.Entry], comp: String): DataFrame =
-    lexIndex(spark, path, entries).filter(col("component") === comp)
-      .select(lexOwned(comp).map(col): _*)
+    ofComponent(lexIndex(spark, path, entries), comp)
 
-  /** Write [[lexComponent]] rows as one segment into the commit dir
-    * `dir`. Repartition on the partition columns first (else every task
-    * writes a file per bucket: tasks × nBuckets small files at scale),
-    * then sort partition-col-then-token within tasks so the writer needs
-    * no extra sort and files stay token-sorted for tight parquet
-    * row-group min/max stats. */
-  private def writeSegment(rows: DataFrame, dir: String): Unit =
+  private def ofComponent(index: DataFrame, comp: String): DataFrame =
+    index.filter(col("component") === comp).select(lexOwned(comp).map(col): _*)
+
+  /** Lay [[lexComponent]] rows out as one segment. Repartition on the
+    * partition columns first (else every task writes a file per bucket:
+    * tasks × nBuckets small files at scale), then sort
+    * partition-col-then-token within tasks so the writer needs no extra
+    * sort and files stay token-sorted for tight parquet row-group min/max
+    * stats. */
+  private def lexLayout(rows: DataFrame): DataFrame =
     rows.repartition(col("component"), col("bucket"))
       .sortWithinPartitions(col("component"), col("bucket"), col("token"))
-      .write.mode("overwrite").partitionBy("component", "bucket")
-      .parquet(dir)
 
-  /** One index segment, the shared write of save and append: the three
-    * components union into ONE [[writeSegment]] — one job, where a
-    * per-table layout paid a write per table (guide §1.2/§2.4).
+  /** One index segment, the shared write of save and append, committed
+    * as a save (`replace`) or an append: the three components union into
+    * ONE write — one job, where a per-table layout paid a write per table
+    * (guide §1.2/§2.4).
     *
     * `tf`/`dl` are persisted across the three component derivations —
     * without the cache each subtree re-ran the tokenize→aggregate
     * pipeline, tripling the build's shuffle cost (same discipline as
     * Dedup's `sigd`). */
-  private def writeLexicalSegment(docs: DataFrame, dir: String, nBuckets: Int,
-                                  idCol: String, textCol: String): Unit = {
+  private def writeLexicalSegment(docs: DataFrame, path: String, replace: Boolean,
+                                  nBuckets: Int, idCol: String, textCol: String): Unit = {
     val toks = docs
       .select(col(idCol).as("doc_id"), explode(TextFunctions.tokens(col(textCol))).as("token"))
       .filter(col("token") =!= "")
@@ -630,7 +626,7 @@ object TextAnalysis {
         // scans tf) so the unified write's concurrent AQE stages are pure
         // cache readers — racing first-stages would tokenize twice
         dl.count()
-        writeSegment(lexComponent("post",
+        SegmentStore.write(lexLayout(lexComponent("post",
             bucket,
             tf.join(dl.select(col("doc_id"), col("dl")), "doc_id"))
           .unionByName(lexComponent("term", bucket, dfq))
@@ -638,7 +634,7 @@ object TextAnalysis {
             dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"),
                 sum(col("n_post")).as("n_postings"))
               .crossJoin(broadcast(dfq.agg(count(lit(1)).as("n_terms"))))
-              .withColumn("n_buckets", lit(nBuckets)))), dir)
+              .withColumn("n_buckets", lit(nBuckets))))), path, replace, LexPartitionCols)
       } finally dl.unpersist()
     } finally tf.unpersist()
   }
@@ -656,16 +652,15 @@ object TextAnalysis {
    * per-query path.
    */
   def validateLexicalIndex(spark: SparkSession, path: String): DataFrame =
-    lexAudit(spark, path, lexManifest(spark, path).live)
+    lexAudit(lexIndex(spark, path, lexManifest(spark, path).live))
 
-  private def lexAudit(spark: SparkSession, path: String,
-                       entries: Seq[SegmentStore.Entry]): DataFrame = {
+  private def lexAudit(index: DataFrame): DataFrame = {
     val isC = (c: String) => col("component") === c
     // coalesce(…, 0): an index with data rows and no stat row must AUDIT
     // as inconsistent, not NPE on a null sum
     def rows(c: String) = coalesce(sum(when(isC(c), lit(1L)).otherwise(lit(0L))), lit(0L))
     def committed(c: String) = coalesce(sum(when(isC("stat"), col(c))), lit(0L))
-    lexIndex(spark, path, entries)
+    index
       .agg(rows("stat").as("n_segments"),
         committed("n_postings").as("n_postings_expected"), rows("post").as("n_postings_actual"),
         committed("n_terms").as("n_terms_expected"), rows("term").as("n_terms_actual"))
@@ -674,57 +669,62 @@ object TextAnalysis {
   }
 
   /**
-   * Compact a lexical index into a single-segment copy at `dst`, written
-   * as the first commit of the `dst` store: termstats delta rows are
+   * Compact a lexical index in place into a single segment, one commit
+   * of its store ([[SegmentStore.compact]]): termstats delta rows are
    * summed per term, stats delta rows into one row, and postings
    * rewritten with the standard clustering (they carry no deltas —
    * compaction just coalesces the small files appends accumulate).
-   * Serving from `dst` is row-identical to serving from `src` by
-   * construction (the serve paths only ever consume the SUMS —
-   * gate-pinned). Production shape: compaction writes a fresh generation
-   * and the serving pointer flips to it crash-atomically via
-   * [[Generations.advance]]
-   * (`advance(s, root)(dst => compactLexicalIndex(s, src, dst))`); the
-   * serve paths resolve the pointer per request / per micro-batch.
+   * Serving after it is row-identical to serving before by construction
+   * (the serve paths only ever consume the SUMS — gate-pinned, and
+   * checksummed before the publish on [[lexServed]]). A segment appended
+   * while the fold runs fails the compaction and stays live; readers
+   * loaded before keep the segments' files for the store's grace.
    */
-  def compactLexicalIndex(spark: SparkSession, src: String, dst: String): Unit = {
-    require(src != dst, "compactLexicalIndex: dst must be a fresh path")
-    val live = lexManifest(spark, src).live
-    // the source must pass its audit first: the compacted stat row is
-    // derived from the rewritten tables, so compacting a TORN index would
-    // otherwise launder data rows without their stat row into a
-    // green-auditing artifact whose idf/avgdl stay silently skewed
-    val audit = lexAudit(spark, src, live).collect()(0)
-    require(audit.getAs[Boolean]("postings_consistent") &&
-      audit.getAs[Boolean]("terms_consistent"),
-      s"compactLexicalIndex: source index at $src is torn (postings " +
-        s"${audit.getAs[Long]("n_postings_actual")} vs committed " +
-        s"${audit.getAs[Long]("n_postings_expected")}, termstats " +
-        s"${audit.getAs[Long]("n_terms_actual")} vs committed " +
-        s"${audit.getAs[Long]("n_terms_expected")}) — compacting would " +
-        "hide the tear; rebuild from the corpus")
-    val srcStats = lexTable(spark, src, live, "stat")
-    val nBuckets = srcStats.agg(max(col("n_buckets"))).head().getInt(0)
-    // the whole fold is ONE segment write. Its stat row's audit counts
-    // are computed IN-PLAN from the same expressions that produce the
-    // written rows (postings preserved verbatim — their count is the
-    // source's; termstats merge per term — their count is the merged
-    // group count), so the record matches what lands by construction
-    val posts = lexTable(spark, src, live, "post")
-    val terms = lexTable(spark, src, live, "term")
-      .groupBy(col("bucket"), col("token")).agg(sum(col("dfq")).as("dfq"))
-    val stat = srcStats
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-      .crossJoin(broadcast(posts.agg(count(lit(1)).as("n_postings"))))
-      .crossJoin(broadcast(terms.agg(count(lit(1)).as("n_terms"))))
-      .withColumn("n_buckets", lit(nBuckets))
-    SegmentStore.commit(spark, dst, LexPartitions) { (dstLive, dir) =>
-      writeSegment(lexComponent("post", col("bucket"), posts)
+  def compactLexicalIndex(spark: SparkSession, path: String): Unit =
+    SegmentStore.compact(spark, path, "lexical index", LexPartitionCols, lexServed) { pile =>
+      // the source must pass its audit first: the compacted stat row is
+      // derived from the rewritten tables, so compacting a TORN index would
+      // otherwise launder data rows without their stat row into a
+      // green-auditing artifact whose idf/avgdl stay silently skewed
+      val audit = lexAudit(pile).collect()(0)
+      require(audit.getAs[Boolean]("postings_consistent") &&
+        audit.getAs[Boolean]("terms_consistent"),
+        s"compactLexicalIndex: index at $path is torn (postings " +
+          s"${audit.getAs[Long]("n_postings_actual")} vs committed " +
+          s"${audit.getAs[Long]("n_postings_expected")}, termstats " +
+          s"${audit.getAs[Long]("n_terms_actual")} vs committed " +
+          s"${audit.getAs[Long]("n_terms_expected")}) — compacting would " +
+          "hide the tear; rebuild from the corpus")
+      // the whole fold is ONE segment. Its stat row's audit counts are
+      // computed IN-PLAN from the same expressions that produce the
+      // written rows (postings preserved verbatim — their count is the
+      // pile's; termstats merge per term — their count is the merged
+      // group count), so the record matches what lands by construction
+      val posts = ofComponent(pile, "post")
+      val terms = mergedTerms(pile)
+      val stat = summedStat(pile)
+        .crossJoin(broadcast(posts.agg(count(lit(1)).as("n_postings"))))
+        .crossJoin(broadcast(terms.agg(count(lit(1)).as("n_terms"))))
+      lexLayout(lexComponent("post", col("bucket"), posts)
         .unionByName(lexComponent("term", col("bucket"), terms))
-        .unionByName(lexComponent("stat", lit(0), stat)), dir)
-      dstLive
+        .unionByName(lexComponent("stat", lit(0), stat)))
     }
-  }
+
+  /** The index as serving reads it — postings verbatim, dfq summed per
+    * term, the corpus scalars summed — which a compaction must keep. */
+  private def lexServed(index: DataFrame): DataFrame =
+    lexComponent("post", col("bucket"), ofComponent(index, "post"))
+      .unionByName(lexComponent("term", col("bucket"), mergedTerms(index)))
+      .unionByName(lexComponent("stat", lit(0), summedStat(index)))
+
+  /** The termstats deltas of `index` summed per (bucket, token). */
+  private def mergedTerms(index: DataFrame): DataFrame =
+    ofComponent(index, "term").groupBy(col("bucket"), col("token")).agg(sum(col("dfq")).as("dfq"))
+
+  /** The stat deltas of `index` summed into its corpus scalars. */
+  private def summedStat(index: DataFrame): DataFrame =
+    ofComponent(index, "stat").agg(sum(col("n_docs")).as("n_docs"),
+      sum(col("sum_dl")).as("sum_dl"), max(col("n_buckets")).as("n_buckets"))
 
   /** Per-JVM memo of collected index scalars, keyed by index path and
     * invalidated by the manifest [[version]] — see [[lexicalStats]].
@@ -1440,26 +1440,25 @@ object TextAnalysis {
     idx.select(col("n")).distinct().collect().map(_.getInt(0))
 
   /**
-   * Compact a benchmark index: fold the base [[saveBenchmarkIndex]] plus
-   * its [[appendBenchmarkIndex]] commits into a fresh DISTINCT
-   * gram-range-partitioned commit at `dst`. Unlike the verbatim-row
+   * Compact a benchmark index in place: fold the base
+   * [[saveBenchmarkIndex]] plus its [[appendBenchmarkIndex]] commits into
+   * one DISTINCT gram-range-partitioned commit. Unlike the verbatim-row
    * compactors (trigram/winnow/band — their slices are disjoint by
    * construction), benchmark suites OVERLAP in grams (two suites share
    * boilerplate), and the loader's `distinct()` pays for that overlap on
    * every probe — the fold dedups once at rewrite time, so the compacted
    * artifact is smaller than the pile AND the load-time distinct becomes
    * a no-op pass over already-unique rows. Audited on the distinct
-   * (g, n) rows by [[SegmentStore.foldCompact]]; the width mix check
+   * (g, n) rows by [[SegmentStore.compact]]; the width mix check
    * aborts exactly as the loader would.
    */
-  def compactBenchmarkIndex(spark: org.apache.spark.sql.SparkSession,
-                            src: String, dst: String,
+  def compactBenchmarkIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                             numPartitions: Int = 4): Unit =
-    SegmentStore.foldCompact(spark, src, dst, "benchmark index", Nil,
+    SegmentStore.compact(spark, dir, "benchmark index", Nil,
       _.select(col("g"), col("n")).distinct()) { idx =>
       val widths = widthsOf(idx)
       require(widths.length == 1,
-        s"compactBenchmarkIndex: index at $src holds " +
+        s"compactBenchmarkIndex: index at $dir holds " +
           (if (widths.isEmpty) "no grams" else s"mixed widths ${widths.sorted.mkString(",")}") +
           " — nothing well-formed to fold")
       gramLayout(idx.select(col("g"), col("n")).distinct(), numPartitions)

@@ -5,7 +5,7 @@ import com.sun.net.httpserver.HttpExchange
 import org.apache.spark.sql.SparkSession
 
 import graft.operators.QueryBuilders.QueryError
-import graft.operators.{Capacity, Generations, JoinPlanner}
+import graft.operators.{Capacity, JoinPlanner}
 import graft.serving.HttpEndpoint.{parseQuery, respond}
 
 /**
@@ -52,11 +52,8 @@ import graft.serving.HttpEndpoint.{parseQuery, respond}
  * immediately, the same growing-artifact contract as the lexical
  * server. Nothing corpus-sized is ever read or cached.
  *
- * A registered path may be a [[Generations]] ROOT instead of a raw
- * bundle: the serving generation is resolved per request, so an
- * out-of-band `compact → advance` pointer flip is served immediately
- * with no restart — the deployment shape where maintenance and serving
- * never coordinate beyond the pointer.
+ * A save or a compaction of a registered bundle is one more commit of
+ * its store, so it too is served by the next request with no restart.
  */
 class PlanServer(spark: SparkSession, profiles: Map[String, String],
                  port: Int = 0) {
@@ -97,16 +94,9 @@ class PlanServer(spark: SparkSession, profiles: Map[String, String],
   private def profilePath(params: Map[String, String], name: String): String = {
     val t = params.getOrElse(name,
       throw QueryError(s"Missing parameter: $name"))
-    val registered = profiles.getOrElse(t,
+    profiles.getOrElse(t,
       throw QueryError(s"Unknown table '$t'; registered: " +
         profiles.keys.toSeq.sorted.mkString(", ")))
-    // a registered path may be a Generations ROOT rather than a raw
-    // bundle: resolve the serving generation PER REQUEST, so an
-    // out-of-band compact→advance flip is picked up immediately without
-    // a server restart (the same growing-artifact contract as the
-    // per-request delta fold — at most three driver-side FS metadata
-    // calls via resolveIfPublished, one for a raw path, never a Spark job)
-    Generations.resolveIfPublished(spark, registered).getOrElse(registered)
   }
 
   private def positiveDouble(params: Map[String, String], name: String,

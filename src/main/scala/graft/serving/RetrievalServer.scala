@@ -45,39 +45,35 @@ import graft.serving.HttpEndpoint.{parseQuery, respond}
  * does not match the index (`width` of the coarse quantizer — scoring a
  * wrong-dim vector would silently truncate the dot product instead).
  *
- * The lexical and ANN paths may each be a [[graft.operators.Generations]]
- * ROOT instead of a raw artifact: the serving generation resolves per
- * request, so an out-of-band maintenance flip ([[Similarity.maintainIvfPq]]
- * recluster → `advance`, or a lexical `compactLexicalIndex` fold → flip)
- * is served immediately with no restart. The ANN quantizers (centroids +
- * codebooks) are the index artifact's driver/broadcast-small state —
- * collected ONCE PER GENERATION (memoized on the resolved path: requests
- * pay at most three FS metadata calls via
- * [[graft.operators.Generations.resolveIfPublished]], and the collect
- * re-runs exactly when the pointer moves); the code table and float
- * corpus stay DataFrames. A raw
- * (pointer-less) path behaves as before: immutable per deployment,
- * loaded once. The lexical path re-reads by path inside the query call
- * and so serves appended segments immediately (same growing-index
- * contract as the streaming server).
+ * Both indexes are [[graft.operators.SegmentStore]] roots that every
+ * request resolves to their newest commit, so an append, a save, a
+ * re-cluster ([[Similarity.maintainIvfPq]]) or a compaction
+ * ([[TextAnalysis.compactLexicalIndex]]) is served by the next request
+ * with no restart. The ANN quantizers (centroids + codebooks) are the
+ * index's driver/broadcast-small state, collected once per base commit
+ * ([[Similarity.quantizerMemo]]: an append does not reload them, a save
+ * does); a request reads the code rows of the same commit, and the code
+ * table and float corpus stay DataFrames. The lexical path re-reads by
+ * path inside the query call (same growing-index contract as the
+ * streaming server).
  */
 class RetrievalServer(spark: SparkSession, lexicalPath: String,
                       ivfPqPath: String, corpusPath: String, port: Int = 0,
                       qualityModelPath: Option[String] = None) {
 
-  private def resolved(p: String): String =
-    graft.operators.Generations.resolveIfPublished(spark, p).getOrElse(p)
-
-  // per-generation ANN index memo — the shared
-  // [[graft.operators.Generations.artifactMemo]] discipline; its
-  // construction warm IS the fail-fast startup contract (a missing or
-  // corrupt IVF-PQ artifact aborts the deployment here instead of
-  // surfacing as opaque generic-500 bodies at query time), and it
-  // reloads exactly when the pointer flips
-  private val annMemo = graft.operators.Generations.artifactMemo(
-    spark, ivfPqPath)(p => Similarity.loadIvfPq(spark, p))
-  private def index: Similarity.IvfPqIndex = annMemo.artifact()
-  private def dim = index.centroids.head._2.length
+  // the quantizer memo's construction IS the fail-fast startup contract:
+  // a missing or corrupt IVF-PQ index aborts the deployment here instead
+  // of surfacing as opaque generic-500 bodies at query time
+  private val annMemo = Similarity.quantizerMemo(spark, ivfPqPath)
+  /** The ANN index of one resolution (quantizers and codes of one
+    * commit), checked against the query vector's dimension. */
+  private def index(vec: Seq[Float]): Similarity.IvfPqIndex = {
+    val (rows, (centroids, books)) = annMemo.current()
+    val dim = centroids.head._2.length
+    if (vec.length != dim)
+      throw QueryError(s"Vector dimension ${vec.length} does not match index dim $dim")
+    Similarity.IvfPqIndex(centroids, books, graft.operators.Quantization.rowsOf(rows, "codes"))
+  }
   private def corpus: DataFrame = spark.read.parquet(corpusPath)
   // trained classifier weights: model-sized, loaded once per deployment
   // (the artifact is immutable; retraining writes a fresh path)
@@ -127,7 +123,7 @@ class RetrievalServer(spark: SparkSession, lexicalPath: String,
       .map(_.trim).filter(_.nonEmpty)
     if (terms.isEmpty) throw QueryError("Missing or empty terms")
     val k = positiveInt(params, "k", 10)
-    val rows = TextAnalysis.bm25QueryIndex(spark, resolved(lexicalPath), terms, k)
+    val rows = TextAnalysis.bm25QueryIndex(spark, lexicalPath, terms, k)
       .collect().map(r => s"[${r.getLong(0)},${Json.number(r.get(1))}]")
     Json.message(Seq("doc_id", "score"), rows.toSeq, "retrieval")
   }
@@ -138,8 +134,7 @@ class RetrievalServer(spark: SparkSession, lexicalPath: String,
     if (raw.isEmpty) throw QueryError("Missing or empty vector")
     val vec = raw.map(s =>
       s.toFloatOption.getOrElse(throw QueryError(s"Invalid vector component: $s")))
-    if (vec.length != dim)
-      throw QueryError(s"Vector dimension ${vec.length} does not match index dim $dim")
+    val index = this.index(vec)
     val k = positiveInt(params, "k", 5)
     val nprobe = positiveInt(params, "nprobe", 8)
     import spark.implicits._
@@ -160,14 +155,13 @@ class RetrievalServer(spark: SparkSession, lexicalPath: String,
     if (raw.isEmpty) throw QueryError("Missing or empty vector")
     val vec = raw.map(s =>
       s.toFloatOption.getOrElse(throw QueryError(s"Invalid vector component: $s")))
-    if (vec.length != dim)
-      throw QueryError(s"Vector dimension ${vec.length} does not match index dim $dim")
+    val index = this.index(vec)
     val k = positiveInt(params, "k", 10)
     val depth = positiveInt(params, "depth", math.max(20, k))
     val nprobe = positiveInt(params, "nprobe", 8)
     import spark.implicits._
     val lex = Retrieval.ranked(
-        TextAnalysis.bm25QueryIndex(spark, resolved(lexicalPath), terms, depth),
+        TextAnalysis.bm25QueryIndex(spark, lexicalPath, terms, depth),
         "doc_id", "score")
       .select(col("doc_id"), col("rnk"))
     val q = Seq((0L, vec)).toDF("vec_id", "embedding")

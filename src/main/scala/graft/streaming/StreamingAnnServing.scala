@@ -91,31 +91,27 @@ object StreamingAnnServing {
       .start()
 
   /**
-   * [[serveIvfPq]] for a GROWING index, at a [[graft.operators.Generations]]
-   * ROOT or a raw index path (a pointer-less root serves as-is). Every
-   * micro-batch re-resolves the serving generation, re-reads the code
-   * table through its newest [[graft.operators.SegmentStore]] manifest
-   * (one `_manifest` listing, no listing or schema-inference job at any
-   * list count) and re-reads the float corpus. So codes committed by
+   * [[serveIvfPq]] for a GROWING index at `indexRoot`. Every micro-batch
+   * resolves the index's newest [[graft.operators.SegmentStore]] manifest
+   * once (one `_manifest` listing, no listing or schema-inference job at
+   * any list count), reads the code rows of exactly that commit, and
+   * re-reads the float corpus. So codes committed by
    * [[Similarity.appendIvfPq]] plus a matching corpus append are served
-   * from the next epoch, and an out-of-band maintenance flip
-   * ([[Similarity.maintainIvfPq]] recluster → `Generations.advance`) is
-   * served from the next epoch, with no stream restart — the streamed
-   * twin of [[graft.serving.RetrievalServer]]'s per-request resolution.
-   * The corpus re-read matters as much as the code re-read: the exact
+   * from the next epoch, and so is a re-cluster
+   * ([[Similarity.maintainIvfPq]]) or any other save, with no stream
+   * restart — the streamed twin of [[graft.serving.RetrievalServer]]. The
+   * corpus re-read matters as much as the code re-read: the exact
    * re-rank inside [[Similarity.ivfPqQuery]] inner-joins the ADC
    * shortlist against the corpus, so a snapshotted corpus would silently
    * DROP every appended vector from the answers. The corpus is an input
    * table whose schema is read once, at construction.
    *
-   * The quantizers are memoized PER RESOLVED GENERATION (model-sized
-   * driver state, one collect of the quantizer rows when the pointer
-   * moves; a reclustered generation carries retrained ones), and an epoch
-   * takes path and quantizers from ONE resolution, so it never reads
-   * gen-A's codes with gen-B's centroids. Within a generation an epoch
-   * never re-reads a quantizer row. Construction fails FAST on an
-   * unpublished root, a missing or corrupt initial generation, or a
-   * missing corpus.
+   * The quantizers are collected once per base commit
+   * ([[Similarity.quantizerMemo]]): an append does not reload them, a
+   * save does, and an epoch takes codes and quantizers from ONE manifest,
+   * so it never reads one save's codes with another's centroids.
+   * Construction fails FAST on a missing or corrupt index or a missing
+   * corpus.
    */
   def serveIvfPqFromRoot(queryStream: DataFrame, indexRoot: String,
                          corpusPath: String, k: Int, nprobe: Int = 4, shortlist: Int = 20,
@@ -123,17 +119,15 @@ object StreamingAnnServing {
                          excludeSelf: Boolean = false)
                         (sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val spark0 = queryStream.sparkSession
-    val memo = graft.operators.Generations.artifactMemo(spark0, indexRoot)(
-      path => Similarity.loadIvfPq(spark0, path))
+    val memo = Similarity.quantizerMemo(spark0, indexRoot)
     val corpusSchema = spark0.read.parquet(corpusPath).schema
     queryStream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        val (p, index) = memo.current()
-        val spark = batch.sparkSession
-        sink(Similarity.ivfPqQuery(Similarity.ivfPqCodes(spark, p), index.centroids, index.books,
-          spark.read.schema(corpusSchema).parquet(corpusPath), batch.toDF(), k, nprobe, shortlist,
-          idCol, vecCol, excludeSelf), epochId)
+        val (rows, (centroids, books)) = memo.current()
+        sink(Similarity.ivfPqQuery(Quantization.rowsOf(rows, "codes"), centroids, books,
+          batch.sparkSession.read.schema(corpusSchema).parquet(corpusPath), batch.toDF(), k,
+          nprobe, shortlist, idCol, vecCol, excludeSelf), epochId)
       }
       .start()
   }

@@ -52,39 +52,31 @@ object StreamingDecon {
       .select(col("id"), col("g"))
 
   /**
-   * Generation-aware streamed admission control — the per-doc
-   * contamination verdicts served from a [[graft.operators.Generations]]
-   * ROOT (or a raw benchmark-index path): each micro-batch resolves the
-   * serving generation (driver-side FS metadata only) and probes through
-   * [[graft.operators.TextAnalysis.contaminationFromIndex]], which reads
-   * the index BY PATH inside the call — so a new eval suite becomes live
-   * on the next epoch whether it arrives as an
-   * [[graft.operators.TextAnalysis.appendBenchmarkIndex]] delta into the
-   * serving generation (growing-index freshness, fresh file listing per
-   * epoch) or as a `compactBenchmarkIndex → Generations.advance` pointer
-   * flip (generation freshness). No per-generation memo is needed, unlike
-   * the ANN/winnow roots: eval-suite gram sets are MBs against a 100 TB
-   * corpus, so the per-epoch re-load is a bounded width-check collect +
-   * one broadcast-eligible scan, not corpus work. `sink` receives the
-   * per-doc `(train_id, n_shared)` aggregate per epoch.
+   * Streamed admission control — the per-doc contamination verdicts
+   * served from the benchmark index at `root`: each micro-batch probes
+   * through [[graft.operators.TextAnalysis.contaminationFromIndex]], which
+   * resolves the index's newest commit inside the call, so a new eval
+   * suite is live on the next epoch whether it arrives as an
+   * [[graft.operators.TextAnalysis.appendBenchmarkIndex]], a save or a
+   * compaction. No driver-side memo is needed, unlike the ANN/winnow
+   * roots: eval-suite gram sets are MBs against a 100 TB corpus, so the
+   * per-epoch re-load is a bounded width-check collect + one
+   * broadcast-eligible scan, not corpus work. `sink` receives the per-doc
+   * `(train_id, n_shared)` aggregate per epoch.
    */
   def flagStreamFromRoot(stream: DataFrame, root: String,
                          idCol: String = "doc_id", textCol: String = "text")
                         (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark0 = stream.sparkSession
-    def resolved(): String =
-      graft.operators.Generations.resolveIfPublished(spark0, root)
-        .getOrElse(root)
-    // fail fast at construction: an unpublished root, unreadable index or
+    // fail fast at construction: a missing or unreadable index or a
     // width mix aborts deployment here, not in epoch 0's foreachBatch
-    graft.operators.TextAnalysis.loadBenchmarkIndexOpt(spark0, resolved())
+    graft.operators.TextAnalysis.loadBenchmarkIndexOpt(stream.sparkSession, root)
     stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                        epochId: Long) =>
         sink(graft.operators.TextAnalysis.contaminationFromIndex(
-          batch.toDF(), resolved(), idCol, textCol), epochId)
+          batch.toDF(), root, idCol, textCol), epochId)
       }
       .start()
   }

@@ -22,7 +22,7 @@ import graft.functions.TextFunctions
  * scans over the tokenized array, and the χ² sum folds the term values
  * through an exact DECIMAL(30,12) `aggregate` — matching the batch
  * oracle's decimal summation, so streamed scores replay bit-for-bit.
- * O(vocab × tokens) per row and codegen-friendly; for vocabularies far
+ * O(vocab × tokens) per row and friendly to codegen; for vocabularies far
  * past the default 50 a map-based kernel would win, hence the hard cap.
  */
 object StreamingDivergence {

@@ -79,21 +79,20 @@ object StreamingEntity {
       .localCheckpoint()
 
   /**
-   * Compact a dictionary artifact: fold the base [[saveDictionary]] plus
-   * its [[appendDictionary]] commits into ONE merged commit at `dst` —
+   * Compact a dictionary artifact in place: fold the base
+   * [[saveDictionary]] plus its [[appendDictionary]] commits into ONE
+   * merged commit —
    * the fold IS the duplicate-(nm, bk, space) merge [[loadDictionary]]
    * performs (counts sum, representative = minimum id), written back
    * UNCAPPED with the standard (space, bk) range layout, so the artifact
    * stays |V|·2 rows forever after no matter how many ingest batches were
    * appended. The whole-block cap still applies at load time over the
-   * merged set, so an index built from `dst` equals one built from the
-   * pile by construction. Audited on the merged row set by
-   * [[SegmentStore.foldCompact]]. Production shape: fresh path +
-   * [[graft.operators.Generations]] pointer flip.
+   * merged set, so an index built after the fold equals one built from
+   * the pile by construction. Audited on the merged row set by
+   * [[SegmentStore.compact]].
    */
-  def compactDictionary(spark: org.apache.spark.sql.SparkSession,
-                        src: String, dst: String): Unit =
-    SegmentStore.foldCompact(spark, src, dst, "dictionary", Nil, merged)(
+  def compactDictionary(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    SegmentStore.compact(spark, path, "dictionary", Nil, merged)(
       pile => dictLayout(merged(pile)))
 
   /**

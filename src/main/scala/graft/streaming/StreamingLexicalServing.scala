@@ -36,11 +36,9 @@ import graft.operators.TextAnalysis
  * searchable on the next epoch without restarting the stream (gate-pinned
  * with a term unique to the appended documents). This matters because a
  * captured DataFrame would snapshot its leaf files at stream construction
- * and silently never see appends. [[serveBm25FromRoot]] extends the same
- * freshness across GENERATIONS: it re-resolves a
- * [[graft.operators.Generations]] pointer per micro-batch, so maintenance
- * flips are served without a restart (gate-pinned by
- * `streaming_bm25_generation_flip`).
+ * and silently never see appends. A save or a compaction of the index is
+ * one more commit of the same store, so it is served from the next epoch
+ * too, with no restart (gate-pinned by `streaming_bm25_generation_flip`).
  */
 object StreamingLexicalServing {
 
@@ -58,45 +56,9 @@ object StreamingLexicalServing {
                         k1: Double = 1.2, b: Double = 0.75,
                         queryIdCol: String = "query_id", termsCol: String = "terms",
                         maxBatchQueries: Int = 100000)
-                       (sink: (DataFrame, Long) => Unit): StreamingQuery =
-    serveBm25Resolving(queryStream, () => indexPath, k, k1, b,
-      queryIdCol, termsCol, maxBatchQueries)(sink)
-
-  /**
-   * [[serveBm25FromPath]] for a [[graft.operators.Generations]] ROOT (or a
-   * raw index path — a pointer-less root serves as-is): the serving
-   * generation is RE-RESOLVED inside every micro-batch (at most three
-   * driver-side FS metadata calls, never a Spark job), so an out-of-band
-   * maintenance flip (`compactLexicalIndex` fold → `Generations.advance`)
-   * is served from the NEXT epoch with no stream restart — the streamed
-   * twin of [[graft.serving.RetrievalServer]]'s per-request resolution.
-   * Within a generation the growing-index contract carries over unchanged
-   * (appended segments searchable next epoch); across a flip the whole
-   * artifact — postings, termstats, stats — rebinds at once, so an epoch
-   * can never mix two generations' sums. The construction-time
-   * torn-segment audit runs against the generation serving AT START.
-   */
-  def serveBm25FromRoot(queryStream: DataFrame, indexRoot: String, k: Int,
-                        k1: Double = 1.2, b: Double = 0.75,
-                        queryIdCol: String = "query_id", termsCol: String = "terms",
-                        maxBatchQueries: Int = 100000)
                        (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val spark0 = queryStream.sparkSession
-    serveBm25Resolving(queryStream,
-      () => graft.operators.Generations.resolveIfPublished(spark0, indexRoot)
-        .getOrElse(indexRoot),
-      k, k1, b, queryIdCol, termsCol, maxBatchQueries)(sink)
-  }
-
-  private def serveBm25Resolving(queryStream: DataFrame,
-                                 resolvePath: () => String, k: Int,
-                                 k1: Double, b: Double,
-                                 queryIdCol: String, termsCol: String,
-                                 maxBatchQueries: Int)
-                                (sink: (DataFrame, Long) => Unit): StreamingQuery = {
     require(maxBatchQueries > 0,
       "serveBm25FromPath: maxBatchQueries must be positive")
-    val indexPath = resolvePath()
     // fail FAST at stream construction on a missing, corrupt or TORN
     // artifact (data files published without their stats commit record —
     // silently skewed idf/avgdl) instead of letting the deployment look
@@ -147,11 +109,8 @@ object StreamingLexicalServing {
           !org.apache.spark.unsafe.types.UTF8String.fromString(t)
             .trim().toString.isEmpty
         if (qs.exists(q => q._2 != null && q._2.exists(nonBlank)))
-          // re-resolve the serving path PER EPOCH: for a Generations root
-          // this is what makes an out-of-band pointer flip visible on the
-          // next micro-batch (for a raw path the resolver is constant)
           sink(TextAnalysis.bm25QueryIndexBatchLocal(batch.sparkSession,
-            resolvePath(), qs, k, k1, b), epochId)
+            indexPath, qs, k, k1, b), epochId)
       }
       .start()
   }

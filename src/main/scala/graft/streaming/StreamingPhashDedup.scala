@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
-import graft.operators.{Dedup, Multimodal}
+import graft.operators.{Dedup, Multimodal, SegmentStore}
 import graft.operators.Multimodal.MediaRecord
 
 /**
@@ -100,21 +100,21 @@ object StreamingPhashDedup {
       .filter(col("hamming") <= maxHamming)
   }
 
+  /** Save stored perceptual hashes (a static (idCol, hashCol) frame, e.g.
+    * [[Multimodal.imagePerceptualHashes]] output) as the corpus epoch's
+    * hash store at `path`: one [[SegmentStore]] commit replacing every
+    * live file, the artifact [[flagStreamFromRoot]] serves. */
+  def saveHashes(hashes: DataFrame, path: String): Unit =
+    SegmentStore.write(hashes, path, replace = true)
+
   /**
-   * Generation-aware streamed flagging — [[flagAgainstIndex]] served from
-   * a [[graft.operators.Generations]] ROOT (or a raw path) holding
-   * persisted perceptual hashes (a plain `(idCol, hashCol)` parquet —
-   * [[Multimodal.imagePerceptualHashes]] output written as the corpus
-   * epoch's hash artifact): each micro-batch resolves the serving
-   * generation, and the [[bandedIndex]] is rebuilt ONCE PER GENERATION
-   * (memoized on the resolved path — the band-explode + bucket-count
-   * aggregation is corpus-epoch work, paid exactly when the pointer
-   * moves), so a maintenance flip to a re-hashed corpus is served from
-   * the next epoch with no stream restart — the multimodal member of the
-   * generation-aware streamed-serving family (BM25 / ANN / winnow /
-   * decon are the others). Within a generation the index is a snapshot
-   * by design (the `localCheckpoint` severs it); hashes appended into
-   * the serving generation become visible at the next flip.
+   * Streamed flagging — [[flagAgainstIndex]] served from the hash store
+   * at `root` ([[saveHashes]]). The [[bandedIndex]] (band explode plus
+   * bucket-count aggregation, corpus-epoch work) is built once per base
+   * commit ([[SegmentStore.BaseMemo]]), so a save of a re-hashed corpus
+   * is served from the next epoch with no stream restart. Between saves
+   * the index is a snapshot by design (the `localCheckpoint` severs it).
+   * Construction fails fast on a missing store.
    */
   def flagStreamFromRoot(stream: Dataset[MediaRecord], root: String,
                          bands: Int = 4, maxHamming: Int = 3,
@@ -122,16 +122,12 @@ object StreamingPhashDedup {
                          idCol: String = "media_id", hashCol: String = "phash")
                         (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    // per-generation index memo (warmed = fail-fast at construction) —
-    // the shared [[graft.operators.Generations.artifactMemo]] discipline
-    val memo = graft.operators.Generations.artifactMemo(
-      stream.sparkSession, root)(path =>
-      bandedIndex(stream.sparkSession.read.parquet(path),
-        bands, maxBucketSize, idCol, hashCol))
+    val memo = new SegmentStore.BaseMemo(stream.sparkSession, root, "hash store",
+      bandedIndex(_, bands, maxBucketSize, idCol, hashCol))
     stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[MediaRecord], epochId: Long) =>
-        sink(flagAgainstIndex(batch, memo.artifact(), bands, maxHamming),
+        sink(flagAgainstIndex(batch, memo.current()._2, bands, maxHamming),
           epochId)
       }
       .start()

@@ -99,25 +99,21 @@ object StreamingWinnow {
     SegmentStore.load(spark, path, "fingerprint set")
 
   /**
-   * Compact a fingerprint artifact: fold the base [[saveFingerprints]]
-   * plus its [[appendFingerprints]] commits into a fresh
-   * fp-range-partitioned, fp-sorted commit at `dst` (the
+   * Compact a fingerprint artifact in place: fold the base
+   * [[saveFingerprints]] plus its [[appendFingerprints]] commits into one
+   * fp-range-partitioned, fp-sorted commit (the
    * [[graft.operators.Retrieval.compactTrigramIndex]] discipline).
    * Every append lands files whose fp ranges overlap the base layout,
    * so under continuous ingest a flag join's probe pays more files and
    * un-pruned row groups until a fold restores the one-commit range
    * layout. Rows are preserved VERBATIM (the df cut happens at
    * [[fingerprintIndex]] build, not here — compaction is pure
-   * file-layout work), audited by [[SegmentStore.foldCompact]], so an
-   * index built from `dst` is identical to one built from `src` by
-   * construction. Production shape: a fresh
-   * generation published by the crash-atomic
-   * [[graft.operators.Generations.advance]] pointer flip; the old
-   * generation stays readable throughout.
+   * file-layout work), audited by [[SegmentStore.compact]], so an index
+   * built after the fold is identical to one built from the pile by
+   * construction.
    */
-  def compactFingerprints(spark: org.apache.spark.sql.SparkSession,
-                          src: String, dst: String): Unit =
-    SegmentStore.foldCompact(spark, src, dst, "fingerprint set", Nil, identity)(fpLayout)
+  def compactFingerprints(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    SegmentStore.compact(spark, path, "fingerprint set", Nil, identity)(fpLayout)
 
   /**
    * Flag a stream of (idCol, textCol) documents against a prebuilt
@@ -168,43 +164,35 @@ object StreamingWinnow {
       .filter(col("n_shared") >= minShared)
   }
 
+  /** The [[WinnowIndex]] of the fingerprint store at `root`, rebuilt only
+    * when its base commit moves ([[SegmentStore.BaseMemo]]). */
+  private[graft] def indexMemo(spark: org.apache.spark.sql.SparkSession, root: String,
+                               maxDf: Int): SegmentStore.BaseMemo[WinnowIndex] =
+    new SegmentStore.BaseMemo(spark, root, "fingerprint set", fingerprintIndex(_, maxDf))
+
   /**
-   * Generation-aware streamed admission flagging — [[flagAgainstIndex]]
-   * served from a [[graft.operators.Generations]] ROOT (or a raw
-   * fingerprint path): the serving generation is re-resolved inside every
-   * micro-batch (driver-side FS metadata only), and the [[WinnowIndex]] is
-   * rebuilt ONCE PER GENERATION (memoized on the resolved path — the df
-   * aggregation + array collection is corpus-epoch work, paid exactly when
-   * the pointer moves, never per epoch), so an out-of-band
-   * `compactFingerprints → Generations.advance` flip is served from the
-   * NEXT micro-batch with no stream restart — the decontamination twin of
-   * [[StreamingLexicalServing.serveBm25FromRoot]] /
-   * [[StreamingAnnServing.serveIvfPqFromRoot]].
-   *
-   * WITHIN a generation the index is a SNAPSHOT by design (the
-   * `localCheckpoint` in [[fingerprintIndex]] severs it): fingerprints
-   * appended into the serving generation become visible at the next flip,
-   * not the next epoch — the deployment cadence where ingest appends
-   * continuously and maintenance periodically folds + flips. Construction
-   * fails fast on an unpublished root or unreadable fingerprints (the
-   * initial generation's index is built eagerly).
+   * Streamed admission flagging — [[flagAgainstIndex]] served from the
+   * fingerprint store at `root`. The [[WinnowIndex]] (the df aggregation
+   * plus array collection, corpus-epoch work) is built once per base
+   * commit ([[indexMemo]]): a save or a compaction is served from the
+   * NEXT micro-batch with no stream restart, while fingerprints appended
+   * in between join the index at the next save or compaction, not the
+   * next epoch (the `localCheckpoint` in [[fingerprintIndex]] makes the
+   * index a snapshot) — the cadence where ingest appends continuously and
+   * maintenance periodically folds. Construction fails fast on a missing
+   * or unreadable store (the initial index is built eagerly).
    */
   def flagStreamFromRoot(stream: DataFrame, root: String, maxDf: Int = 20,
                          k: Int = 8, w: Int = 4, minShared: Long = 2,
                          idCol: String = "doc_id", textCol: String = "text")
                         (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark0 = stream.sparkSession
-    // per-generation WinnowIndex memo (warmed = fail-fast at
-    // construction) — the shared
-    // [[graft.operators.Generations.artifactMemo]] discipline
-    val memo = graft.operators.Generations.artifactMemo(spark0, root)(
-      path => fingerprintIndex(loadFingerprints(spark0, path), maxDf))
+    val memo = indexMemo(stream.sparkSession, root, maxDf)
     stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                        epochId: Long) =>
-        sink(flagAgainstIndex(batch.toDF(), memo.artifact(),
+        sink(flagAgainstIndex(batch.toDF(), memo.current()._2,
           k, w, minShared, idCol, textCol), epochId)
       }
       .start()

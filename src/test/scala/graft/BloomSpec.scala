@@ -116,18 +116,18 @@ class BloomSpec extends SparkSpec {
         all.filter(col("id") > 150 && col("id") <= 300), col("id"), M, K), s"$tmp/pile")
       Bloom.appendWords(Bloom.bloomWords(
         all.filter(col("id") > 300), col("id"), M, K), s"$tmp/pile")
-      Bloom.compactWords(spark, s"$tmp/pile", s"$tmp/gen2")
       def rows(p: String) = Bloom.loadWords(spark, p)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-      assert(rows(s"$tmp/gen2") === rows(s"$tmp/pile"))
-      // the live files of each store's newest manifest
+      // the live files of the store's newest manifest
       def parquets(p: String) =
         graft.operators.SegmentStore.latest(graft.operators.SeqFiles.fs(spark, p), p)
           .get.live.length
-      assert(parquets(s"$tmp/gen2") < parquets(s"$tmp/pile"),
-        "the fold must shrink the file pile")
-      intercept[IllegalArgumentException] {
-        Bloom.compactWords(spark, s"$tmp/pile", s"$tmp/pile")
+      val (pile, pileFiles) = (rows(s"$tmp/pile"), parquets(s"$tmp/pile"))
+      Bloom.compactWords(spark, s"$tmp/pile")
+      assert(rows(s"$tmp/pile") === pile)
+      assert(parquets(s"$tmp/pile") < pileFiles, "the fold must shrink the file pile")
+      intercept[IllegalStateException] {
+        Bloom.compactWords(spark, s"$tmp/none")
       }
     } finally Gates.deleteTree(tmp)
   }

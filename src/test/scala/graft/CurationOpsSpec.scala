@@ -360,18 +360,16 @@ class CurationOpsSpec extends SparkSpec {
       assert(TextAnalysis.contaminationFromIndex(train, dir)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == oneShot)
       // compaction: the distinct fold dedups base/delta overlap, keeps
-      // contamination results identical, and the generation carries
+      // contamination results identical, and the compacted index carries
       // exactly the pile's distinct grams
-      val gen2 = java.nio.file.Files.createTempDirectory("decon_idx_gen2").toString
-      try {
-        TextAnalysis.compactBenchmarkIndex(spark, dir, gen2)
-        assert(TextAnalysis.contaminationFromIndex(train, gen2)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == oneShot)
-        val pile = graft.operators.SegmentStore.load(spark, dir, "benchmark index")
-        val gen = graft.operators.SegmentStore.load(spark, gen2, "benchmark index")
-        assert(gen.count() == pile.select($"g").distinct().count())
-        assert(gen.count() == gen.distinct().count())
-      } finally Gates.deleteTree(gen2)
+      val pileGrams = graft.operators.SegmentStore.load(spark, dir, "benchmark index")
+        .select($"g").distinct().count()
+      TextAnalysis.compactBenchmarkIndex(spark, dir)
+      assert(TextAnalysis.contaminationFromIndex(train, dir)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == oneShot)
+      val gen = graft.operators.SegmentStore.load(spark, dir, "benchmark index")
+      assert(gen.count() == pileGrams)
+      assert(gen.count() == gen.distinct().count())
       // width mix: a 4-gram delta against a 5-gram base must abort
       TextAnalysis.appendBenchmarkIndex(bench.filter($"doc_id" === 101L), 4, dir)
       val ex = intercept[IllegalArgumentException] {
@@ -379,13 +377,10 @@ class CurationOpsSpec extends SparkSpec {
       }
       assert(ex.getMessage.contains("mixes shingle widths"))
       // and the compactor refuses the malformed pile just like the loader
-      val gen3 = java.nio.file.Files.createTempDirectory("decon_idx_gen3").toString
-      try {
-        val ex2 = intercept[IllegalArgumentException] {
-          TextAnalysis.compactBenchmarkIndex(spark, dir, gen3)
-        }
-        assert(ex2.getMessage.contains("mixed widths"))
-      } finally Gates.deleteTree(gen3)
+      val ex2 = intercept[IllegalArgumentException] {
+        TextAnalysis.compactBenchmarkIndex(spark, dir)
+      }
+      assert(ex2.getMessage.contains("mixed widths"))
     } finally Gates.deleteTree(dir)
 
     // a legitimately EMPTY index (every benchmark text shorter than the

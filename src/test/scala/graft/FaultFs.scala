@@ -17,9 +17,10 @@ import org.apache.spark.sql.SparkSession
  * one after it, as a process killed at that step would never issue them;
  * a crash-point sweep runs a verb with N = 1, 2, ... until it completes.
  * It can also log the reads (`listStatus`, `open`, `getFileStatus`), so a
- * test can count what a reader touches, and run an action at the first
- * write step, so a test can land a change while a verb runs. Instances
- * are not cached (every
+ * test can count what a reader touches, and run an action at the Nth
+ * write step, so a test can land a change while a verb runs. A rename
+ * onto an existing file is refused, as the checksummed `file:`
+ * filesystem and HDFS refuse it. Instances are not cached (every
  * `getFileSystem` makes a new one), so the state lives in the companion.
  */
 class FaultFs extends FilterFileSystem(new FaultFs.Local) {
@@ -80,27 +81,51 @@ class FaultFs extends FilterFileSystem(new FaultFs.Local) {
 object FaultFs {
   val Scheme = "faultfs"
 
-  /** The raw local filesystem, answering to [[Scheme]]. */
+  /** The raw local filesystem, answering to [[Scheme]]. Its rename onto
+    * an existing file returns false and keeps that file, as the default
+    * checksummed `file:` filesystem does; the raw one would replace it. */
   class Local extends RawLocalFileSystem {
     override def getUri: URI = URI.create(s"$Scheme:///")
+    override def rename(src: Path, dst: Path): Boolean =
+      !(exists(dst) && getFileStatus(dst).isFile) && super.rename(src, dst)
   }
 
   private val writes = new AtomicInteger
   @volatile private var failAt = Int.MaxValue
   @volatile private var log: java.util.Queue[String] = _
+  private val steps = new AtomicInteger
+  @volatile private var interjectAt = 0
   private val interjection = new AtomicReference[() => Unit]
+  @volatile private var interjectionFailure: Option[Throwable] = None
 
   private def write(op: String, p: Path): Unit = {
-    Option(interjection.getAndSet(null)).foreach(_())
+    if (steps.incrementAndGet() == interjectAt)
+      Option(interjection.getAndSet(null)).foreach { action =>
+        // a thread of its own: the step may be a Spark task's, whose
+        // thread carries the task's read-only session conf
+        val t = new Thread(() =>
+          try action() catch { case e: Throwable => interjectionFailure = Some(e) })
+        t.start()
+        t.join()
+      }
     if (writes.incrementAndGet() >= failAt)
       throw new java.io.IOException(s"injected crash at $op $p")
   }
 
-  /** Run `f`, running `action` once, in the thread of the first write
-    * step `f` makes through this scheme, before that step. */
-  def interjecting[A](action: => Unit)(f: => A): A = {
+  /** Run `f`, running `action` once before the `step`th write step `f`
+    * makes through this scheme (1 = the first); that step waits for it,
+    * other threads' steps go on meanwhile. Returns what `f` returned or
+    * threw, and whether `action` ran (false once `step` is past `f`'s
+    * last write step). A failure of `action` itself is rethrown. */
+  def interjecting[A](action: => Unit, step: Int = 1)(f: => A): (scala.util.Try[A], Boolean) = {
+    steps.set(0)
+    interjectionFailure = None
     interjection.set(() => action)
-    try f finally interjection.set(null)
+    interjectAt = step
+    val result = try scala.util.Try(f) finally interjectAt = 0
+    val ran = interjection.getAndSet(null) == null
+    interjectionFailure.foreach(e => throw e)
+    (result, ran)
   }
 
   private def read(op: String, p: Path): Unit = {

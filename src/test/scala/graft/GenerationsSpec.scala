@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Generations
+import graft.operators.{Generations, SegmentStore}
 
-/** The serving-generation pointer: monotone crash-atomic flips, a reader
-  * can never observe an unpublished generation, and pruning never touches
-  * what the pointer names. */
+/** The `Generations` shim the benchmark's retrieval workload builds on: an
+  * artifact root is one store root, `advance` commits into it and
+  * `resolve` checks it holds a commit. */
 class GenerationsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -15,72 +15,31 @@ class GenerationsSpec extends SparkSpec {
     try f(tmp) finally Gates.deleteTree(tmp)
   }
 
-  private def writeGen(path: String, v: Long): Unit =
-    Seq((v, s"payload$v")).toDF("v", "s").write.mode("overwrite").parquet(path)
+  private def save(path: String, v: Long): Unit =
+    SegmentStore.write(Seq((v, s"payload$v")).toDF("v", "s"), path, replace = true)
 
   private def readV(path: String): Long =
-    spark.read.parquet(path).select(col("v")).head().getLong(0)
+    SegmentStore.load(spark, path, "test table").select(col("v")).head().getLong(0)
 
   test("advance publishes, resolve serves, a second advance flips while the " +
     "old generation stays readable") {
     withTmp { root =>
-      intercept[IllegalStateException] { Generations.resolve(spark, root) }
-      assert(Generations.current(spark, root).isEmpty)
-      val g1 = Generations.advance(spark, root)(writeGen(_, 1L))
-      assert(Generations.current(spark, root) === Some("gen-00000001"))
-      assert(Generations.resolve(spark, root) === g1)
+      intercept[IllegalArgumentException] { Generations.resolve(spark, root) }
+      assert(Generations.advance(spark, root)(save(_, 1L)) === root)
+      assert(Generations.resolve(spark, root) === root)
       assert(readV(Generations.resolve(spark, root)) === 1L)
-      val g2 = Generations.advance(spark, root)(writeGen(_, 2L))
-      assert(Generations.current(spark, root) === Some("gen-00000002"))
+      val first = SegmentStore.load(spark, root, "test table")
+      Generations.advance(spark, root)(save(_, 2L))
       assert(readV(Generations.resolve(spark, root)) === 2L)
-      assert(readV(g1) === 1L, "superseded generation must stay readable")
-      assert(g2 === Generations.resolve(spark, root))
-    }
-  }
-
-  test("crash between build and publish keeps serving the old generation; " +
-    "a later advance skips the orphaned sequence") {
-    withTmp { root =>
-      Generations.advance(spark, root)(writeGen(_, 1L))
-      // simulate the crash: the new generation is fully built but the
-      // pointer rename never ran
-      writeGen(s"$root/gen-00000002", 99L)
-      assert(readV(Generations.resolve(spark, root)) === 1L,
-        "an unpublished generation must be invisible to readers")
-      // a stale pointer staging file is equally invisible
-      java.nio.file.Files.createDirectories(java.nio.file.Path.of(s"$root/_ptr"))
-      java.nio.file.Files.writeString(
-        java.nio.file.Path.of(s"$root/_ptr/.ptr-00000099.tmp"), "gen-00000002\n")
-      assert(readV(Generations.resolve(spark, root)) === 1L)
-      // recovery: the next advance allocates PAST the orphan (never
-      // re-publishing a half-built dir under a racing reader)
-      val g3 = Generations.advance(spark, root)(writeGen(_, 3L))
-      assert(g3.endsWith("gen-00000003"))
-      assert(readV(Generations.resolve(spark, root)) === 3L)
-    }
-  }
-
-  test("publish guards: missing dir and malformed names fail loudly; " +
-    "explicit publish of a prebuilt generation works") {
-    withTmp { root =>
-      intercept[IllegalArgumentException] {
-        Generations.publish(spark, root, "gen-00000001")
-      }
-      intercept[IllegalArgumentException] {
-        Generations.publish(spark, root, "../../etc")
-      }
-      writeGen(s"$root/gen-00000001", 7L)
-      Generations.publish(spark, root, "gen-00000001")
-      assert(readV(Generations.resolve(spark, root)) === 7L)
+      assert(first.select(col("v")).head().getLong(0) === 1L,
+        "a frame loaded before the save must keep reading its files")
     }
   }
 
   test("a second family serves through the pointer: BM25 index built, " +
     "appended, compacted and flipped — answers identical across the flip") {
-    // the resolver composes with every load/serve path that takes an
-    // artifact path; the gates pin the band-index and bundle families,
-    // this pins the lexical one (save -> append INTO the serving
-    // generation -> compactLexicalIndex fold -> advance/flip)
+    // the benchmark's lexical shape: save through advance, append to the
+    // resolved root, compact it in place through advance
     import graft.operators.TextAnalysis
     import graft.sources.Tables
     withTmp { root =>
@@ -94,85 +53,13 @@ class GenerationsSpec extends SparkSpec {
       def serve() = TextAnalysis.bm25QueryIndex(spark,
           Generations.resolve(spark, root), Seq("vector", "stream"), k = 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      def seq() = SegmentStore.latest(graft.operators.SeqFiles.fs(spark, root), root).get.seq
       val pre = serve()
-      assert(pre.nonEmpty)
-      val g1 = Generations.resolve(spark, root)
-      val g2 = Generations.advance(spark, root) { dst =>
-        TextAnalysis.compactLexicalIndex(spark, g1, dst)
-      }
-      assert(g2 != g1 && Generations.resolve(spark, root) == g2)
+      assert(pre.nonEmpty && seq() == 2L)
+      Generations.advance(spark, root)(TextAnalysis.compactLexicalIndex(spark, _))
+      assert(seq() == 3L)
       assert(serve() === pre,
-        "the flipped lexical generation serves different answers")
-    }
-  }
-
-  test("pruneSuperseded removes old generations, orphans and old pointers " +
-    "but never the serving generation; resolve still works after") {
-    withTmp { root =>
-      Generations.advance(spark, root)(writeGen(_, 1L))
-      Generations.advance(spark, root)(writeGen(_, 2L))
-      writeGen(s"$root/gen-00000003", 99L) // crash orphan
-      val removed = Generations.pruneSuperseded(spark, root)
-      assert(removed.toSet === Set("gen-00000001", "gen-00000003"))
-      assert(readV(Generations.resolve(spark, root)) === 2L)
-      // idempotent
-      assert(Generations.pruneSuperseded(spark, root).isEmpty)
-      // pointer dir holds exactly the current pointer
-      val ptrs = new java.io.File(s"$root/_ptr").listFiles().map(_.getName)
-        .filterNot(_.startsWith(".")) // hadoop local-fs .crc sidecars
-      assert(ptrs.toSeq === Seq("ptr-00000002"))
-      // deleting the serving generation out from under the pointer is the
-      // one unrecoverable tamper — resolve names the failure
-      Gates.deleteTree(s"$root/gen-00000002")
-      val ex = intercept[IllegalStateException] {
-        Generations.resolve(spark, root)
-      }
-      assert(ex.getMessage.contains("gone"))
-    }
-  }
-
-  test("resolveIfPublished: one-listing serve-path entry — None for a raw " +
-    "path, the serving generation for a root, loud on a dangling pointer") {
-    withTmp { root =>
-      // never published (and not even a directory): a raw path, serve as-is
-      assert(Generations.resolveIfPublished(spark, root).isEmpty)
-      // a plain artifact dir with data but no pointer is equally raw
-      writeGen(s"$root/plain", 7L)
-      assert(Generations.resolveIfPublished(spark, s"$root/plain").isEmpty)
-      val g1 = Generations.advance(spark, root)(writeGen(_, 1L))
-      assert(Generations.resolveIfPublished(spark, root) === Some(g1))
-      val g2 = Generations.advance(spark, root)(writeGen(_, 2L))
-      assert(Generations.resolveIfPublished(spark, root) === Some(g2))
-      assert(readV(Generations.resolveIfPublished(spark, root).get) === 2L)
-      // a dangling pointer is a BROKEN root, not a raw path — it must not
-      // silently degrade to serving the root dir itself
-      Gates.deleteTree(g2)
-      val ex = intercept[IllegalStateException] {
-        Generations.resolveIfPublished(spark, root)
-      }
-      assert(ex.getMessage.contains("gone"))
-    }
-  }
-
-  test("the lifecycle keeps cycling after a prune: advance allocates past " +
-    "pruned history and roots are independent") {
-    withTmp { tmp =>
-      val a = s"$tmp/rootA"
-      val b = s"$tmp/rootB"
-      Generations.advance(spark, a)(writeGen(_, 1L))
-      Generations.advance(spark, a)(writeGen(_, 2L))
-      Generations.pruneSuperseded(spark, a)
-      // post-prune advance: next name continues the monotone sequence
-      // (never re-using a pruned slot a stale reader might still name)
-      val g3 = Generations.advance(spark, a)(writeGen(_, 3L))
-      assert(g3.endsWith("gen-00000003"))
-      assert(readV(Generations.resolve(spark, a)) === 3L)
-      assert(Generations.pruneSuperseded(spark, a) === Seq("gen-00000002"))
-      // a sibling root has its own sequence and pointer
-      Generations.advance(spark, b)(writeGen(_, 9L))
-      assert(Generations.current(spark, b) === Some("gen-00000001"))
-      assert(readV(Generations.resolve(spark, a)) === 3L)
-      assert(readV(Generations.resolve(spark, b)) === 9L)
+        "the compacted lexical index serves different answers")
     }
   }
 }

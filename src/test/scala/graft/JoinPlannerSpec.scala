@@ -340,25 +340,22 @@ class JoinPlannerSpec extends SparkSpec {
       JoinPlanner.appendTableProfile(fact.filter($"payload" % 3 === 2), "fk",
         s"$tmp/fact", p)
       JoinPlanner.saveTableProfile(dim, "dk", s"$tmp/dim", p)
-      JoinPlanner.compactTableProfile(spark, s"$tmp/fact", s"$tmp/fact2")
       val thr = JoinThresholds(broadcastMaxDimRows = 10, skewShareMin = 0.04,
         bloomSelectivityMax = 0.2, cmsDepth = 4, cmsWidth = 256)
-      def dcs(path: String) = JoinPlanner
-        .joinDecisionFromProfiles(spark, path, s"$tmp/dim", thr).collect()(0)
-      assert(dcs(s"$tmp/fact2").toSeq === dcs(s"$tmp/fact").toSeq)
+      def dcs() = JoinPlanner
+        .joinDecisionFromProfiles(spark, s"$tmp/fact", s"$tmp/dim", thr).collect()(0).toSeq
+      def advice() = JoinPlanner.profileDistinctAdvice(spark, s"$tmp/fact").collect()(0).toSeq
+      // the live files of the bundle's newest manifest
+      def parquets() = graft.operators.SegmentStore.latest(
+        graft.operators.SeqFiles.fs(spark, s"$tmp/fact"), s"$tmp/fact").get.live.length
+      val (pileDcs, pileAdvice, pileFiles) = (dcs(), advice(), parquets())
+      JoinPlanner.compactTableProfile(spark, s"$tmp/fact")
+      assert(dcs() === pileDcs)
       // and the distinct/overlap advice survive the fold too
-      assert(JoinPlanner.profileDistinctAdvice(spark, s"$tmp/fact2")
-        .collect()(0).toSeq ===
-        JoinPlanner.profileDistinctAdvice(spark, s"$tmp/fact").collect()(0).toSeq)
-      def parquets(p2: String) = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-        walk(new java.io.File(p2)).count(_.getName.endsWith(".parquet"))
-      }
-      assert(parquets(s"$tmp/fact2") < parquets(s"$tmp/fact"),
-        "the fold must shrink the file pile")
-      intercept[IllegalArgumentException] {
-        JoinPlanner.compactTableProfile(spark, s"$tmp/fact", s"$tmp/fact")
+      assert(advice() === pileAdvice)
+      assert(parquets() < pileFiles, "the fold must shrink the file pile")
+      intercept[IllegalStateException] {
+        JoinPlanner.compactTableProfile(spark, s"$tmp/none")
       }
       // coverage degrade under fold: two slices each COVERED (15 and 15
       // distinct keys, disjoint, topK = 16) merge to 30 > topK — the fold
@@ -373,15 +370,15 @@ class JoinPlannerSpec extends SparkSpec {
       JoinPlanner.appendTableProfile(sliceB2, "fk", s"$tmp/fcov", p16)
       JoinPlanner.saveTableProfile(dim, "dk", s"$tmp/dcov", p16)
       assert(JoinPlanner.loadTableProfile(spark, s"$tmp/fcov").topCovered)
-      JoinPlanner.compactTableProfile(spark, s"$tmp/fcov", s"$tmp/fcov2")
-      assert(!JoinPlanner.loadTableProfile(spark, s"$tmp/fcov2").topCovered,
-        "a fold that truncated the merged key set must degrade coverage")
       val thc = JoinThresholds(broadcastMaxDimRows = 10, skewShareMin = 0.9,
         bloomSelectivityMax = 0.001, cmsDepth = 4, cmsWidth = 256)
-      assert(JoinPlanner.joinDecisionFromProfiles(spark, s"$tmp/fcov2",
-          s"$tmp/dcov", thc).drop("top_share_exact").collect()(0).toSeq ===
-        JoinPlanner.joinDecisionFromProfiles(spark, s"$tmp/fcov",
-          s"$tmp/dcov", thc).drop("top_share_exact").collect()(0).toSeq,
+      def covDcs() = JoinPlanner.joinDecisionFromProfiles(spark, s"$tmp/fcov",
+        s"$tmp/dcov", thc).drop("top_share_exact").collect()(0).toSeq
+      val covPile = covDcs()
+      JoinPlanner.compactTableProfile(spark, s"$tmp/fcov")
+      assert(!JoinPlanner.loadTableProfile(spark, s"$tmp/fcov").topCovered,
+        "a fold that truncated the merged key set must degrade coverage")
+      assert(covDcs() === covPile,
         "the coverage degrade must not move any decision number")
       // kmvK mismatch across bundles aborts the overlap advice
       JoinPlanner.saveTableProfile(dim, "dk", s"$tmp/dim8",
@@ -427,15 +424,15 @@ class JoinPlannerSpec extends SparkSpec {
         assert(fromArtifacts.toSeq === oneShot.toSeq,
           s"trial $trial ($slices slices): merge law broken")
         // compaction preserves the decision and both advice forms
-        JoinPlanner.compactTableProfile(spark, s"$tmp/fact", s"$tmp/fact2")
-        assert(JoinPlanner.joinDecisionFromProfiles(spark, s"$tmp/fact2",
+        JoinPlanner.compactTableProfile(spark, s"$tmp/fact")
+        assert(JoinPlanner.joinDecisionFromProfiles(spark, s"$tmp/fact",
           s"$tmp/dim", thr).drop("top_share_exact").collect()(0).toSeq ===
           fromArtifacts.toSeq,
           s"trial $trial: compaction changed the decision")
         val direct = graft.operators.Sketches.kmvEstimate(
           graft.operators.Sketches.kmvSketch(
             fact.select($"fk".as("k")), col("k"), 16), 16).collect()(0)
-        val advice = JoinPlanner.profileDistinctAdvice(spark, s"$tmp/fact2")
+        val advice = JoinPlanner.profileDistinctAdvice(spark, s"$tmp/fact")
           .collect()(0)
         Seq("k", "n", "hk", "estimate").foreach { c =>
           assert(advice.getAs[Any](c) == direct.getAs[Any](c),
@@ -523,17 +520,17 @@ class JoinPlannerSpec extends SparkSpec {
         .collect()(0).toSeq === before,
         "a rejected sliceId changed the bundle")
       // re-save touches only the store's c-N/ and _manifest/: a neighbor
-      // file and a Generations pointer dir at the same path survive it
+      // file and a neighbor dir at the same path survive it
       val foreign = java.nio.file.Path.of(s"$tmp/fact/keepme.txt")
       java.nio.file.Files.writeString(foreign, "not a bundle component")
       java.nio.file.Files.createDirectories(
-        java.nio.file.Path.of(s"$tmp/fact/_ptr"))
+        java.nio.file.Path.of(s"$tmp/fact/other"))
       JoinPlanner.saveTableProfile(fact.filter($"payload" % 2 === 0), "fk",
         s"$tmp/fact", p)
       assert(java.nio.file.Files.exists(foreign),
         "saveTableProfile wiped a non-bundle neighbor file")
       assert(java.nio.file.Files.isDirectory(
-        java.nio.file.Path.of(s"$tmp/fact/_ptr")),
+        java.nio.file.Path.of(s"$tmp/fact/other")),
         "saveTableProfile wiped a non-bundle neighbor dir")
       // and the reset bundle reflects only the new base slice
       val m = graft.operators.SegmentStore.latest(

@@ -161,23 +161,23 @@ class PcaSpec extends SparkSpec {
     try {
       Pca.saveMoments(Pca.rawMomentTable(toyVecs, 3), s"$tmp/pile")
       Pca.appendMoments(Pca.rawMomentTable(extra, 3), s"$tmp/pile")
-      Pca.compactMoments(spark, s"$tmp/pile", s"$tmp/gen2")
-      val (nP, meanP, covP) = Pca.momentsFromTable(Pca.loadMoments(spark, s"$tmp/pile"), 3)
-      val (nC, meanC, covC) = Pca.momentsFromTable(Pca.loadMoments(spark, s"$tmp/gen2"), 3)
-      assert(nC === nP)
-      assert(meanC.toSeq === meanP.toSeq)
-      assert(covC.map(_.toSeq).toSeq === covP.map(_.toSeq).toSeq)
-      // the compacted generation is already one cell set — (d²+d+1) rows
-      assert(graft.operators.SegmentStore.load(spark, s"$tmp/gen2", "moment table")
-        .count() === (9 + 3 + 1).toLong)
-      // the live files of each store's newest manifest
+      // the live files of the store's newest manifest
       def parquets(p: String) =
         graft.operators.SegmentStore.latest(graft.operators.SeqFiles.fs(spark, p), p)
           .get.live.length
-      assert(parquets(s"$tmp/gen2") < parquets(s"$tmp/pile"),
-        "the fold must shrink the file pile")
-      intercept[IllegalArgumentException] {
-        Pca.compactMoments(spark, s"$tmp/pile", s"$tmp/pile")
+      val (nP, meanP, covP) = Pca.momentsFromTable(Pca.loadMoments(spark, s"$tmp/pile"), 3)
+      val pileFiles = parquets(s"$tmp/pile")
+      Pca.compactMoments(spark, s"$tmp/pile")
+      val (nC, meanC, covC) = Pca.momentsFromTable(Pca.loadMoments(spark, s"$tmp/pile"), 3)
+      assert(nC === nP)
+      assert(meanC.toSeq === meanP.toSeq)
+      assert(covC.map(_.toSeq).toSeq === covP.map(_.toSeq).toSeq)
+      // the compacted store is already one cell set — (d²+d+1) rows
+      assert(graft.operators.SegmentStore.load(spark, s"$tmp/pile", "moment table")
+        .count() === (9 + 3 + 1).toLong)
+      assert(parquets(s"$tmp/pile") < pileFiles, "the fold must shrink the file pile")
+      intercept[IllegalStateException] {
+        Pca.compactMoments(spark, s"$tmp/none")
       }
     } finally Gates.deleteTree(tmp)
   }

@@ -124,18 +124,17 @@ class PlanServerSpec extends SparkSpec {
 
   test("a registered Generations root is resolved PER REQUEST: a pointer " +
     "flip under the running server changes what serves, no restart") {
-    import graft.operators.Generations
+    // the name predates in-place saves: the registered path is one store
+    // root, and a save into it under the running server is the flip
     val root = java.nio.file.Files.createTempDirectory("graft_planserveg").toString
     try {
       val p = JoinPlanner.ProfileParams(depth = 4, width = 1024,
         topK = 2048, kmvK = 64)
       val dim = Tables.supplier(spark, Sf)
         .select(col("s_suppkey"), col("s_acctbal"))
-      // gen-1: the half-corpus bundle
-      Generations.advance(spark, s"$root/dimgen") { dst =>
-        JoinPlanner.saveTableProfile(
-          dim.filter(col("s_suppkey") % 2 === 0), "s_suppkey", dst, p)
-      }
+      // the half-corpus bundle
+      JoinPlanner.saveTableProfile(
+        dim.filter(col("s_suppkey") % 2 === 0), "s_suppkey", s"$root/dimgen", p)
       val srv = new PlanServer(spark, Map("supplier" -> s"$root/dimgen"))
       val port = srv.start()
       try {
@@ -146,13 +145,11 @@ class PlanServerSpec extends SparkSpec {
           body.split("\"data\":\\[\\[")(1).split(",")(0).toLong
         }
         val half = servedRows()
-        // maintenance publishes gen-2 (the FULL bundle) while the server
-        // runs — the next request must serve it through the flipped pointer
-        Generations.advance(spark, s"$root/dimgen") { dst =>
-          JoinPlanner.saveTableProfile(dim, "s_suppkey", dst, p)
-        }
+        // maintenance saves the FULL bundle into the same root while the
+        // server runs — the next request must serve it
+        JoinPlanner.saveTableProfile(dim, "s_suppkey", s"$root/dimgen", p)
         val full = servedRows()
-        assert(full > half, s"flip not picked up: $half -> $full")
+        assert(full > half, s"save not picked up: $half -> $full")
         assert(full == dim.count())
       } finally srv.stop()
     } finally Gates.deleteTree(root)

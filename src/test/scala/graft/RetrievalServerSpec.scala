@@ -79,19 +79,17 @@ class RetrievalServerSpec extends SparkSpec {
 
   test("Generations roots resolve per request: an ANN maintenance flip " +
     "under the running server re-loads the quantizers, no restart") {
-    import graft.operators.Generations
-    import spark.implicits._
+    // the name predates in-place saves: the ANN path is one store root,
+    // and a save into it under the running server is the flip
     val root = java.nio.file.Files.createTempDirectory("graft_retr_gen").toString
     try {
       val e = Tables.embeddings(spark, Sf)
       e.write.mode("overwrite").parquet(s"$root/corpus")
       TextAnalysis.saveLexicalIndex(
         Tables.documents(spark, Sf).limit(50), s"$root/lex", nBuckets = 8)
-      // gen-1: index over HALF the corpus — vec_id 3 is absent (odd)
-      Generations.advance(spark, s"$root/anngen") { dst =>
-        Similarity.saveIvfPq(e.filter(col("vec_id") % 2 === 0), dst,
-          nlist = 8, m = 8, ksub = 16, kmeansIters = 1)
-      }
+      // the first save: index over HALF the corpus — vec_id 3 is absent (odd)
+      Similarity.saveIvfPq(e.filter(col("vec_id") % 2 === 0), s"$root/anngen",
+        nlist = 8, m = 8, ksub = 16, kmeansIters = 1)
       val srv = new RetrievalServer(spark, s"$root/lex", s"$root/anngen",
         s"$root/corpus")
       val port = srv.start()
@@ -103,17 +101,16 @@ class RetrievalServerSpec extends SparkSpec {
           assert(code == 200, body)
           body
         }
-        // gen-1 cannot answer with the odd vector itself
+        // the half index cannot answer with the odd vector itself
         assert(!top1().contains("[1,3,1.0]"))
-        // maintenance publishes gen-2 over the FULL corpus while the
-        // server runs: the per-generation memo must reload on the flip
-        // and the self-duplicate now comes back at rank 1 / cos 1.0
-        Generations.advance(spark, s"$root/anngen") { dst =>
-          Similarity.saveIvfPq(e, dst, nlist = 8, m = 8, ksub = 16,
-            kmeansIters = 1)
-        }
+        // maintenance saves an index over the FULL corpus into the same
+        // root while the server runs: the quantizer memo must reload at
+        // the new base commit and the self-duplicate now comes back at
+        // rank 1 / cos 1.0
+        Similarity.saveIvfPq(e, s"$root/anngen", nlist = 8, m = 8, ksub = 16,
+          kmeansIters = 1)
         assert(top1().contains("[1,3,1.0]"),
-          "the flipped ANN generation was not picked up by the running server")
+          "the saved ANN index was not picked up by the running server")
       } finally srv.stop()
     } finally Gates.deleteTree(root)
   }

@@ -85,30 +85,28 @@ class RetrievalSpec extends SparkSpec {
     val c = Seq((5L, "resort tableau"))
     val docs = (a ++ b ++ c).toDF("doc_id", "text")
     val src = java.nio.file.Files.createTempDirectory("tri_cmp_spec").toString
-    val dst = src + "_gen2"
     try {
       Retrieval.saveTrigramIndex(Retrieval.trigramPostings(a.toDF("doc_id", "text")), src)
       Retrieval.appendTrigramIndex(Retrieval.trigramPostings(b.toDF("doc_id", "text")), src)
       Retrieval.appendTrigramIndex(Retrieval.trigramPostings(c.toDF("doc_id", "text")), src)
-      Retrieval.compactTrigramIndex(spark, src, dst)
-      // the live files of each store's newest manifest
-      def files(p: String) = SegmentStore.latest(SeqFiles.fs(spark, p), p).get.live.length
-      assert(files(dst) < files(src),
-        s"compaction must shrink the file pile: ${files(src)} -> ${files(dst)}")
-      // row multiset preserved verbatim
-      val rows = (p: String) => SegmentStore.load(spark, p, "trigram index").collect()
+      // the live files of the store's newest manifest
+      def files() = SegmentStore.latest(SeqFiles.fs(spark, src), src).get.live.length
+      val rows = () => SegmentStore.load(spark, src, "trigram index").collect()
         .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-      assert(rows(dst) === rows(src))
-      // identical search results through the compacted generation
-      val pre = Retrieval.searchTrigramIndex(spark, src, docs, "sort table")
+      def search() = Retrieval.searchTrigramIndex(spark, src, docs, "sort table")
         .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq
-      val post = Retrieval.searchTrigramIndex(spark, dst, docs, "sort table")
-        .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq
-      assert(post === pre)
-      intercept[IllegalArgumentException] {
-        Retrieval.compactTrigramIndex(spark, src, src)
+      val (pileFiles, pileRows, pre) = (files(), rows(), search())
+      Retrieval.compactTrigramIndex(spark, src)
+      assert(files() < pileFiles,
+        s"compaction must shrink the file pile: $pileFiles -> ${files()}")
+      // row multiset preserved verbatim
+      assert(rows() === pileRows)
+      // identical search results through the compacted index
+      assert(search() === pre)
+      intercept[IllegalStateException] {
+        Retrieval.compactTrigramIndex(spark, src + "_none")
       }
-    } finally { Gates.deleteTree(src); Gates.deleteTree(dst) }
+    } finally Gates.deleteTree(src)
   }
 
   test("trigram postings: sliding 3-grams, lowercased, short texts empty") {

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import graft.operators.{Bloom, Bpe, Dedup, EntityResolution, JoinPlanner, Learn, Pca, Quantization,
   Retrieval, SegmentStore, SeqFiles, Similarity, Sketches, TextAnalysis}
@@ -68,52 +69,280 @@ class SegmentStoreSpec extends SparkSpec {
 
   test("an append committed while a fold runs fails the compaction: dst " +
       "publishes nothing and src keeps base + append (band index, bloom words)") {
+    // a compaction is the store's own next commit: it publishes nothing,
+    // and the store keeps base + append
     val tmp = Files.createTempDirectory("graft_store_midcompact").toString
     try {
-      val (src, dst) = (s"$tmp/band", s"$tmp/band_gen2")
-      Dedup.saveBandIndex(bands(docs.filter($"doc_id" <= 3)), src)
+      val band = s"$tmp/band"
+      Dedup.saveBandIndex(bands(docs.filter($"doc_id" <= 3)), band)
       val e1 = intercept[IllegalArgumentException] {
-        SegmentStore.foldCompact(spark, src, dst, "band index", Seq("band"), identity) { pile =>
-          Dedup.appendBandIndex(bands(docs.filter($"doc_id" > 3)), src)
+        SegmentStore.compact(spark, band, "band index", Seq("band"), identity) { pile =>
+          Dedup.appendBandIndex(bands(docs.filter($"doc_id" > 3)), band)
           pile.repartition(col("band")).sortWithinPartitions(col("bh"))
         }
       }
-      assert(e1.getMessage.contains("the source changed mid-compaction; re-run"), e1.getMessage)
-      assert(manifest(dst).isEmpty)
-      assert(sorted(Dedup.loadBandIndex(spark, src)) ==
+      assert(e1.getMessage.contains("the store changed mid-compaction; re-run"), e1.getMessage)
+      assert(manifest(band).get.seq == 2L)
+      assert(sorted(Dedup.loadBandIndex(spark, band)) ==
         sorted(bands(docs).select("id", "bh", "band")))
 
-      val (wsrc, wdst) = (s"$tmp/words", s"$tmp/words_gen2")
-      Bloom.saveWords(words(docs.filter($"doc_id" <= 3)), wsrc)
+      val w = s"$tmp/words"
+      Bloom.saveWords(words(docs.filter($"doc_id" <= 3)), w)
       val e2 = intercept[IllegalArgumentException] {
-        SegmentStore.foldCompact(spark, wsrc, wdst, "bloom words", Nil, orWords) { pile =>
-          Bloom.appendWords(words(docs.filter($"doc_id" > 3)), wsrc)
+        SegmentStore.compact(spark, w, "bloom words", Nil, orWords) { pile =>
+          Bloom.appendWords(words(docs.filter($"doc_id" > 3)), w)
           orWords(pile).coalesce(1)
         }
       }
-      assert(e2.getMessage.contains("the source changed mid-compaction; re-run"), e2.getMessage)
-      assert(manifest(wdst).isEmpty)
-      assert(manifest(wsrc).get.seq == 2L)
-      assert(sorted(Bloom.loadWords(spark, wsrc)) == sorted(orWords(words(docs))))
-      // and with the source left alone the same fold publishes commit 1
-      Bloom.compactWords(spark, wsrc, wdst)
-      assert(manifest(wdst).get.seq == 1L)
-      assert(sorted(Bloom.loadWords(spark, wdst)) == sorted(Bloom.loadWords(spark, wsrc)))
+      assert(e2.getMessage.contains("the store changed mid-compaction; re-run"), e2.getMessage)
+      assert(manifest(w).get.seq == 2L)
+      assert(sorted(Bloom.loadWords(spark, w)) == sorted(orWords(words(docs))))
+      // and with the store left alone the same fold publishes commit 3
+      Bloom.compactWords(spark, w)
+      assert(manifest(w).get.seq == 3L && manifest(w).get.live.map(_.path.take(10)).distinct ==
+        Seq("c-00000003"))
+      assert(sorted(Bloom.loadWords(spark, w)) == sorted(orWords(words(docs))))
 
       // the profile's own verb: the append lands at the fold's first write
-      // step, after the source was pinned and before the publish
-      val (psrc, pdst) = (s"$tmp/profile", s"$tmp/profile_gen2")
-      saveProfile(facts.filter($"payload" <= 30), psrc)
+      // step, after the store was pinned and before the publish
+      val prof = s"$tmp/profile"
+      saveProfile(facts.filter($"payload" <= 30), prof)
       FaultFs.install(spark)
-      val e3 = intercept[IllegalArgumentException] {
-        FaultFs.interjecting(appendProfile(facts.filter($"payload" > 30), psrc)) {
-          JoinPlanner.compactTableProfile(spark, psrc, FaultFs.uri(pdst))
-        }
+      val (r3, ran3) = FaultFs.interjecting(appendProfile(facts.filter($"payload" > 30), prof)) {
+        JoinPlanner.compactTableProfile(spark, FaultFs.uri(prof))
       }
-      assert(e3.getMessage.contains("the source changed mid-compaction; re-run"), e3.getMessage)
-      assert(manifest(pdst).isEmpty)
-      assert(manifest(psrc).get.seq == 2L)
-      assert(JoinPlanner.loadTableProfile(spark, psrc).stats.head().getLong(0) == 60L)
+      assert(ran3 && r3.failed.get.getMessage.contains("the store changed mid-compaction; re-run"),
+        r3)
+      assert(manifest(prof).get.seq == 2L)
+      assert(JoinPlanner.loadTableProfile(spark, prof).stats.head().getLong(0) == 60L)
+
+      // the lexical index, which had no mid-compaction check: an append at
+      // the fold's first write step fails it, and the store keeps both
+      // segments (24 + 18 postings)
+      val lex = s"$tmp/lex"
+      TextAnalysis.saveLexicalIndex(docs.filter($"doc_id" <= 3), lex, nBuckets = 4)
+      val (r4, ran4) = FaultFs.interjecting(
+          TextAnalysis.appendLexicalIndex(docs.filter($"doc_id" > 3), lex)) {
+        TextAnalysis.compactLexicalIndex(spark, FaultFs.uri(lex))
+      }
+      assert(ran4 && r4.failed.get.getMessage.contains("the store changed mid-compaction; re-run"),
+        r4)
+      val audit = TextAnalysis.validateLexicalIndex(spark, lex).collect()(0)
+      assert(audit.getAs[Long]("n_segments") == 2L && audit.getAs[Long]("n_postings_actual") == 42L &&
+        audit.getAs[Boolean]("postings_consistent") && audit.getAs[Boolean]("terms_consistent"),
+        audit)
+    } finally Gates.deleteTree(tmp)
+  }
+
+  test("compaction is a commit of the store: an append after it is served " +
+      "with the folded rows, and a frame loaded before it still reads the pile") {
+    val tmp = Files.createTempDirectory("graft_store_inplace").toString
+    try {
+      val band = s"$tmp/band"
+      Dedup.saveBandIndex(bands(docs.filter($"doc_id" <= 2)), band)
+      Dedup.appendBandIndex(bands(docs.filter($"doc_id" === 3L)), band)
+      val pile = Dedup.loadBandIndex(spark, band)
+      val pileRows = sorted(pile)
+      assert(pileRows.length == 6)
+      val before = manifest(band).get
+      Dedup.compactBandIndex(spark, band)
+      val after = manifest(band).get
+      // the compaction retired every commit dir the pile lived in
+      assert(before.live.map(_.path.take(10)).distinct.sorted == Seq("c-00000001", "c-00000002"))
+      assert(Seq("c-00000001", "c-00000002").forall(after.retired.contains), after.retired)
+      assert(after.live.forall(_.path.startsWith("c-00000003/")))
+      // a reader loaded before the compaction keeps its files for the grace
+      SegmentStore.recover(spark, band)
+      assert(sorted(pile) == pileRows)
+      // the next append lands in the same store: the next load serves 10
+      Dedup.appendBandIndex(bands(docs.filter($"doc_id" > 3)), band)
+      assert(sorted(Dedup.loadBandIndex(spark, band)) ==
+        sorted(bands(docs).select("id", "bh", "band")))
+      assert(Dedup.loadBandIndex(spark, band).count() == 10L)
+    } finally Gates.deleteTree(tmp)
+  }
+
+  /** A second writer's append that commits in one piece wherever it lands:
+    * the files `append` adds to a copy of `template/sub` are staged, and
+    * the returned action commits them to the store at its argument
+    * through [[SegmentStore.commit]] — its sweep, manifest read, files
+    * and publish — placing them with a file copy instead of a Spark job,
+    * so it can run at any write step of a verb, a task's included, and
+    * shares no job dir with it. Also returns the rows the staged store
+    * loads: the template's plus the append's. */
+  private def stagedAppend(template: String, sub: String, partitions: StructType)
+                          (append: String => Unit): (String => Unit, String) = {
+    val staged = FaultFs.copyOf(template)
+    append(s"$staged/$sub")
+    val m = manifest(s"$staged/$sub").get
+    val dir = SeqFiles.name("c", m.seq)
+    val files = m.live.map(_.path).filter(_.startsWith(s"$dir/")).map(_.stripPrefix(s"$dir/"))
+    val action = (root: String) => {
+      SegmentStore.commit(spark, root, partitions) { (_, commitDir) =>
+        files.foreach { f =>
+          val to = Paths.get(new org.apache.hadoop.fs.Path(commitDir, f).toUri.getPath)
+          Files.createDirectories(to.getParent)
+          Files.copy(Paths.get(s"$staged/$sub/$dir/$f"), to)
+        }
+        Nil
+      }
+      ()
+    }
+    (action, staged)
+  }
+
+  /** Every manifest under `root` names only files that exist. */
+  private def manifestsWhole(root: String): Unit = {
+    val mdir = Paths.get(root, "_manifest")
+    Files.list(mdir).iterator().asScala.filter(_.getFileName.toString.startsWith("m-")).foreach { m =>
+      Files.readAllLines(m).asScala.filter(_.startsWith("F\t")).foreach { line =>
+        val rel = line.split('\t').last
+        assert(Files.exists(Paths.get(root, rel)), s"$m names missing $rel")
+      }
+    }
+  }
+
+  /**
+   * Interject `appendAt` at every write step of `compact` on a fresh copy
+   * of `template/sub` until the compaction makes no more steps. Each case
+   * must end with the compaction failing loudly and the store reading
+   * `expected` (base + append), or with the compaction done and the fold
+   * reading `expected`; every manifest names only existing files, and a
+   * rerun of the compaction after a failure converges to `expected`.
+   * Returns the number of interjected steps and how many of them failed
+   * the compaction.
+   */
+  private def interjectionSweep(template: String, sub: String, read: String => Seq[String],
+                                expected: Seq[String], appendAt: String => Unit)
+                               (compact: String => Unit): (Int, Int) = {
+    FaultFs.install(spark)
+    var n = 0
+    var failed = 0
+    var ran = true
+    while (ran) {
+      n += 1
+      val local = FaultFs.copyOf(template)
+      try {
+        val root = s"$local/$sub"
+        val (result, interjected) =
+          FaultFs.interjecting(appendAt(FaultFs.uri(root)), step = n)(compact(FaultFs.uri(root)))
+        ran = interjected
+        if (ran) {
+          assert(read(root) == expected, s"step $n (${result.failed.toOption}): store lost or doubled rows")
+          manifestsWhole(root)
+          if (result.isFailure) {
+            failed += 1
+            compact(root)
+            assert(read(root) == expected, s"step $n: a rerun did not converge")
+            manifestsWhole(root)
+          }
+        } else assert(result.isSuccess, s"step $n: $result")
+      } finally Gates.deleteTree(local)
+    }
+    (n - 1, failed)
+  }
+
+  test("an append interjected at every write step of an in-place compaction " +
+      "(band index, lexical index) fails it loudly or is folded: no row is lost " +
+      "or doubled and no manifest names a missing file") {
+    val template = Files.createTempDirectory("graft_store_interject").toString
+    try {
+      Dedup.saveBandIndex(bands(docs.filter($"doc_id" <= 2)), s"$template/band")
+      Dedup.appendBandIndex(bands(docs.filter($"doc_id" === 3L)), s"$template/band")
+      TextAnalysis.saveLexicalIndex(docs.filter($"doc_id" <= 2), s"$template/lex", nBuckets = 2)
+      TextAnalysis.appendLexicalIndex(docs.filter($"doc_id" === 3L), s"$template/lex")
+
+      def bandRows(root: String) = sorted(Dedup.loadBandIndex(spark, root))
+      val (bandAppend, bandStaged) = stagedAppend(template, "band",
+        StructType(Seq(StructField("band", IntegerType)))) { root =>
+        Dedup.appendBandIndex(bands(docs.filter($"doc_id" > 3)), root)
+      }
+      // what serving reads of a lexical index: postings verbatim, dfq and
+      // the corpus scalars summed
+      def lexRows(root: String) = {
+        val m = manifest(root).get
+        val all = SegmentStore.frame(spark, root, m.live, TextAnalysis.LexSchema,
+          TextAnalysis.LexPartitions)
+        sorted(all.filter($"component" === "post").select("token", "doc_id", "tf", "dl")) ++
+          sorted(all.filter($"component" === "term").groupBy("token").agg(sum("dfq"))) ++
+          sorted(all.filter($"component" === "stat").agg(sum("n_docs"), sum("sum_dl")))
+      }
+      val (lexAppend, lexStaged) = stagedAppend(template, "lex", TextAnalysis.LexPartitions) {
+        root => TextAnalysis.appendLexicalIndex(docs.filter($"doc_id" > 3), root)
+      }
+      try {
+        val t0 = System.nanoTime()
+        val bandSteps = interjectionSweep(template, "band", bandRows,
+          bandRows(s"$bandStaged/band"), bandAppend)(Dedup.compactBandIndex(spark, _))
+        val t1 = System.nanoTime()
+        val lexSteps = interjectionSweep(template, "lex", lexRows,
+          lexRows(s"$lexStaged/lex"), lexAppend)(TextAnalysis.compactLexicalIndex(spark, _))
+        val t2 = System.nanoTime()
+        info(f"compactBandIndex: ${bandSteps._1} steps (${bandSteps._2} failed the " +
+          f"compaction) in ${(t1 - t0) / 1e9}%.1f s; compactLexicalIndex: ${lexSteps._1} " +
+          f"steps (${lexSteps._2} failed it) in ${(t2 - t1) / 1e9}%.1f s")
+        assert(bandSteps._1 >= 4 && lexSteps._1 >= 4, s"$bandSteps, $lexSteps")
+      } finally { Gates.deleteTree(bandStaged); Gates.deleteTree(lexStaged) }
+    } finally Gates.deleteTree(template)
+  }
+
+  test("an append keeps the ANN quantizers and the WinnowIndex; a save or a " +
+      "compaction rebuilds them") {
+    val tmp = Files.createTempDirectory("graft_store_memo").toString
+    try {
+      val ann = s"$tmp/ann"
+      Similarity.saveIvfPq(vecs.filter($"vec_id" < 48), ann, nlist = 4, m = 8, ksub = 8)
+      val quantizers = Similarity.quantizerMemo(spark, ann)
+      val q0 = quantizers.current()._2
+      Similarity.appendIvfPq(vecs.filter($"vec_id" >= 48), ann)
+      val (codes, q1) = quantizers.current()
+      assert(q1 eq q0, "an append reloaded the quantizers")
+      assert(Quantization.rowsOf(codes, "codes").count() == 64L)
+      Similarity.saveIvfPq(vecs, ann, nlist = 4, m = 8, ksub = 8)
+      assert(!(quantizers.current()._2 eq q0), "a save kept the old quantizers")
+
+      val fp = s"$tmp/winnow"
+      def fps(d: DataFrame) = TextAnalysis.winnowFingerprints(d).select(col("doc_id").as("id"), col("fp"))
+      StreamingWinnow.saveFingerprints(fps(docs.filter($"doc_id" <= 3)), fp)
+      val index = StreamingWinnow.indexMemo(spark, fp, maxDf = 20)
+      val i0 = index.current()._2
+      StreamingWinnow.appendFingerprints(fps(docs.filter($"doc_id" > 3)), fp)
+      val i1 = index.current()._2
+      assert(i1 eq i0, "an append rebuilt the WinnowIndex")
+      StreamingWinnow.compactFingerprints(spark, fp)
+      val i2 = index.current()._2
+      assert(!(i2 eq i0), "a compaction kept the old WinnowIndex")
+      assert(index.current()._2 eq i2)
+    } finally Gates.deleteTree(tmp)
+  }
+
+  test("publishing an existing manifest number fails under file: and faultfs:, " +
+      "whose rename onto an existing file is refused and keeps that file") {
+    val tmp = Files.createTempDirectory("graft_store_publish").toString
+    try {
+      FaultFs.install(spark)
+      for (root <- Seq(s"$tmp/local", FaultFs.uri(s"$tmp/fault"))) {
+        val hfs = SeqFiles.fs(spark, root)
+        val dir = new org.apache.hadoop.fs.Path(root, "_manifest")
+        SeqFiles.publish(hfs, dir, "m", 1L, Seq("first"))
+        intercept[java.io.IOException](SeqFiles.publish(hfs, dir, "m", 1L, Seq("second")))
+        val tmpFile = new org.apache.hadoop.fs.Path(dir, ".other.tmp")
+        val out = hfs.create(tmpFile, true)
+        try out.write("second\n".getBytes("UTF-8")) finally out.close()
+        assert(!hfs.rename(tmpFile, new org.apache.hadoop.fs.Path(dir, "m-00000001")), root)
+        assert(SeqFiles.read(hfs, new org.apache.hadoop.fs.Path(dir, "m-00000001")) == Seq("first"))
+      }
+      // a writer that publishes the same number between another's exists
+      // check and its rename: the rename is refused, and the first stays
+      val root = s"$tmp/fault"
+      val dir = new org.apache.hadoop.fs.Path(FaultFs.uri(root), "_manifest")
+      val (r, ran) = FaultFs.interjecting(SeqFiles.publish(SeqFiles.fs(spark, root),
+          new org.apache.hadoop.fs.Path(root, "_manifest"), "m", 2L, Seq("first"))) {
+        SeqFiles.publish(SeqFiles.fs(spark, dir.toString), dir, "m", 2L, Seq("second"))
+      }
+      assert(ran && r.failed.get.isInstanceOf[java.io.IOException], r)
+      assert(SeqFiles.read(SeqFiles.fs(spark, root), new org.apache.hadoop.fs.Path(root,
+        "_manifest/m-00000002")) == Seq("first"))
     } finally Gates.deleteTree(tmp)
   }
 
@@ -129,11 +358,12 @@ class SegmentStoreSpec extends SparkSpec {
         val f = Dedup.loadBandIndex(spark, s"$dir/band")
         () => sorted(f)
       }
-      def gen2(dir: String): () => Seq[String] =
-        SegmentStore.read(spark, s"$dir/gen2").fold(() => Seq("no gen2")) { _ =>
-          val f = Bloom.loadWords(spark, s"$dir/gen2")
-          () => sorted(f)
-        }
+      // the compaction is in place: its reader is the pile's raw rows,
+      // one per word and slice before the fold, one per word after it
+      def pile(dir: String): () => Seq[String] = {
+        val f = SegmentStore.load(spark, s"$dir/pile", "bloom words")
+        () => sorted(f)
+      }
       val t0 = System.nanoTime()
       val appendSteps = FaultFs.crashSweep(spark, template, band,
         dir => SegmentStore.recover(spark, s"$dir/band")) { dir =>
@@ -145,9 +375,9 @@ class SegmentStoreSpec extends SparkSpec {
         Dedup.saveBandIndex(bands(docs), s"$dir/band")
       }
       val t2 = System.nanoTime()
-      val compactSteps = FaultFs.crashSweep(spark, template, gen2,
-        dir => SegmentStore.recover(spark, s"$dir/gen2")) { dir =>
-        Bloom.compactWords(spark, s"$dir/pile", s"$dir/gen2")
+      val compactSteps = FaultFs.crashSweep(spark, template, pile,
+        dir => SegmentStore.recover(spark, s"$dir/pile")) { dir =>
+        Bloom.compactWords(spark, s"$dir/pile")
       }
       val t3 = System.nanoTime()
       info(f"appendBandIndex: $appendSteps steps in ${(t1 - t0) / 1e9}%.1f s; " +
@@ -169,9 +399,6 @@ class SegmentStoreSpec extends SparkSpec {
         sliceId = "batch-1")
       val more = facts.filter($"payload" > 40)
       def pile(dir: String) = profile(s"$dir/profile")
-      def gen2(dir: String): () => Seq[String] =
-        SegmentStore.read(spark, s"$dir/gen2").fold(() => Seq("no gen2"))(_ =>
-          profile(s"$dir/gen2"))
       def recoverAt(sub: String)(dir: String) = SegmentStore.recover(spark, s"$dir/$sub")
       // the append and its replay, as a stream re-running a batch whose
       // output committed: every rerun after a crash replays it once more
@@ -186,8 +413,8 @@ class SegmentStoreSpec extends SparkSpec {
         saveProfile(facts, s"$dir/profile")
       }
       val t2 = System.nanoTime()
-      val compactSteps = FaultFs.crashSweep(spark, template, gen2, recoverAt("gen2")) { dir =>
-        JoinPlanner.compactTableProfile(spark, s"$dir/profile", s"$dir/gen2")
+      val compactSteps = FaultFs.crashSweep(spark, template, pile, recoverAt("profile")) { dir =>
+        JoinPlanner.compactTableProfile(spark, s"$dir/profile")
       }
       val t3 = System.nanoTime()
       info(f"appendTableProfile: $appendSteps steps in ${(t1 - t0) / 1e9}%.1f s; " +
@@ -226,8 +453,6 @@ class SegmentStoreSpec extends SparkSpec {
       val clump = Fixtures.annDriftClump(vecs).coalesce(1)
       Similarity.appendIvfPq(clump, s"$template/drift")
       def recoverAt(sub: String)(dir: String) = SegmentStore.recover(spark, s"$dir/$sub")
-      def gen2(dir: String): () => Seq[String] =
-        SegmentStore.read(spark, s"$dir/gen2").fold(() => Seq("no gen2"))(_ => ann(s"$dir/gen2"))
       val t0 = System.nanoTime()
       val saveSteps = FaultFs.crashSweep(spark, template, dir => ann(s"$dir/ann"),
         recoverAt("ann")) { dir =>
@@ -239,8 +464,9 @@ class SegmentStoreSpec extends SparkSpec {
         Similarity.appendIvfPq(vecs.filter($"vec_id" >= 48), s"$dir/ann")
       }
       val t2 = System.nanoTime()
-      val maintainSteps = FaultFs.crashSweep(spark, template, gen2, recoverAt("gen2")) { dir =>
-        assert(Similarity.maintainIvfPq(spark, s"$dir/drift", s"$dir/gen2",
+      val maintainSteps = FaultFs.crashSweep(spark, template, dir => ann(s"$dir/drift"),
+        recoverAt("drift")) { dir =>
+        assert(Similarity.maintainIvfPq(spark, s"$dir/drift",
           vecs.filter($"vec_id" < 48).union(clump)))
       }
       val t3 = System.nanoTime()

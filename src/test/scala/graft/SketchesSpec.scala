@@ -145,14 +145,14 @@ class SketchesSpec extends SparkSpec {
       val direct = ests(sk(ev))
       assert(ests(Sketches.loadSketchTable(spark, s"$tmp/pile", Seq("day")))
         === direct)
-      Sketches.compactSketchTable(spark, s"$tmp/pile", s"$tmp/gen2", Seq("day"))
-      assert(ests(Sketches.loadSketchTable(spark, s"$tmp/gen2", Seq("day")))
+      Sketches.compactSketchTable(spark, s"$tmp/pile", Seq("day"))
+      assert(ests(Sketches.loadSketchTable(spark, s"$tmp/pile", Seq("day")))
         === direct, "compacted registers diverged from the pile")
       // the fold holds one row per day on disk
-      assert(graft.operators.SegmentStore.load(spark, s"$tmp/gen2", "sketch table").count() ===
+      assert(graft.operators.SegmentStore.load(spark, s"$tmp/pile", "sketch table").count() ===
         ev.select(col("day")).distinct().count())
-      intercept[IllegalArgumentException] {
-        Sketches.compactSketchTable(spark, s"$tmp/pile", s"$tmp/pile", Seq("day"))
+      intercept[IllegalStateException] {
+        Sketches.compactSketchTable(spark, s"$tmp/none", Seq("day"))
       }
     } finally Gates.deleteTree(tmp)
   }

@@ -214,7 +214,7 @@ class StreamingAnnSpec extends SparkSpec {
             stream.addData(qs.toIndexedSeq: _*)
             q.processAllAvailable()
           }
-          assert(reads.filter(_.startsWith("listStatus")) == Seq("listStatus _ptr", "listStatus _manifest"),
+          assert(reads.filter(_.startsWith("listStatus")) == Seq("listStatus _manifest"),
             s"epoch $epoch: $reads")
           assert(jobs.nonEmpty && jobs.forall(j => j._1 != "null" && !j._2.contains("Listing")),
             s"epoch $epoch: $jobs")
@@ -226,7 +226,8 @@ class StreamingAnnSpec extends SparkSpec {
 
   test("a Generations flip between micro-batches rebinds codes AND quantizers: " +
     "epoch 0 answers from gen-1, epoch 1 from the reclustered gen-2, no restart") {
-    import graft.operators.Generations
+    // the name predates in-place saves: the index is one store root, and
+    // a save into it between micro-batches is the flip
     val e = Tables.embeddings(spark, Sf)
     val dir = java.nio.file.Files.createTempDirectory("ann_genflip").toString
     try {
@@ -234,26 +235,24 @@ class StreamingAnnSpec extends SparkSpec {
       val root = s"$dir/anngen"
       val corpusPath = s"$dir/corpus"
       e.write.mode("overwrite").parquet(corpusPath)
-      // gen-1: trained + encoded over the first half only
-      val g1 = Generations.advance(spark, root) { dst =>
-        Similarity.saveIvfPq(e.filter(col("vec_id") < 250), dst,
-          nlist = 8, m = 8, ksub = 16)
-      }
-      // probe: a planted duplicate of vector 300 — absent from gen-1's
-      // code table, exact-match in gen-2's
+      // the first save: trained + encoded over the first half only
+      Similarity.saveIvfPq(e.filter(col("vec_id") < 250), root,
+        nlist = 8, m = 8, ksub = 16)
+      // probe: a planted duplicate of vector 300 — absent from the first
+      // index's code table, exact-match in the second's
       val dup300 = e.filter(col("vec_id") === 300)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
         .collect().map(r => QueryVec(r.getLong(0), r.getSeq[Float](1)))
       val qdf = () => e.filter(col("vec_id") === 300)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-      def batchOn(path: String) = {
-        val idx = Similarity.loadIvfPq(spark, path)
+      def batchOn() = {
+        val idx = Similarity.loadIvfPq(spark, root)
         Similarity.ivfPqQuery(idx.encoded, idx.centroids, idx.books,
             spark.read.parquet(corpusPath), qdf(), k = 1, nprobe = 8,
             shortlist = 10, excludeSelf = false)
           .collect().map(_.toSeq).toSet
       }
-      val expected0 = batchOn(g1)
+      val expected0 = batchOn()
       val answers = scala.collection.mutable.ArrayBuffer.empty[Set[Seq[Any]]]
       val stream = MemoryStream[QueryVec]
       val q = StreamingAnnServing.serveIvfPqFromRoot(stream.toDF(), root,
@@ -264,23 +263,22 @@ class StreamingAnnSpec extends SparkSpec {
         stream.addData(dup300.toIndexedSeq: _*)
         q.processAllAvailable()
         // out-of-band maintenance: retrain over the FULL corpus at a
-        // DIFFERENT geometry (nlist 4) and flip — a stream that kept the
-        // gen-1 quantizers would probe gen-2's 4-list codes with 8 stale
-        // centroids and could not reproduce the gen-2 batch answers
-        val g2 = Generations.advance(spark, root) { dst =>
-          Similarity.saveIvfPq(e, dst, nlist = 4, m = 8, ksub = 16,
-            kmeansIters = 1)
-        }
-        val expected1 = batchOn(g2)
+        // DIFFERENT geometry (nlist 4) and save into the same root — a
+        // stream that kept the first quantizers would probe the new 4-list
+        // codes with 8 stale centroids and could not reproduce the new
+        // batch answers
+        Similarity.saveIvfPq(e, root, nlist = 4, m = 8, ksub = 16, kmeansIters = 1)
+        val expected1 = batchOn()
         stream.addData(dup300.toIndexedSeq: _*)
         q.processAllAvailable()
         assert(answers.length == 2)
         assert(answers(0) == expected0,
-          "epoch 0 must serve the generation published at construction")
-        // gen-1 cannot know vector 300; gen-2 must answer it at cos 1.0
+          "epoch 0 must serve the index saved at construction")
+        // the first index cannot know vector 300; the second must answer
+        // it at cos 1.0
         assert(answers(0).forall(r => r(2).asInstanceOf[Long] != 300L))
         assert(answers(1) == expected1,
-          "the epoch after the flip must serve the new generation")
+          "the epoch after the save must serve the new index")
         assert(answers(1).exists(r => r(2).asInstanceOf[Long] == 300L &&
           r(3).asInstanceOf[Double] == 1.0))
       } finally q.stop()

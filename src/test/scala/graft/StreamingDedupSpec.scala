@@ -159,7 +159,9 @@ class StreamingDedupSpec extends SparkSpec {
 
   test("phash Generations flip between micro-batches rebinds the banded " +
     "index: epoch 0 flags against gen-1, epoch 1 against gen-2, no restart") {
-    import graft.operators.{Generations, Multimodal}
+    // the name predates in-place saves: the hashes are one store root, and
+    // a save into it between micro-batches is the flip
+    import graft.operators.Multimodal
     import graft.sources.Tables
     import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
@@ -174,13 +176,12 @@ class StreamingDedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("phash_genflip").toString
     try {
       val root = s"$dir/phgen"
-      // gen-1: hash artifact over half the PLANTED ORIGINALS (copies are
+      // the first save: hashes of half the PLANTED ORIGINALS (copies are
       // planted every 6th id, so an even/odd split would be a no-op —
-      // the %12 split leaves the %12==6 originals knowable only to gen-2)
-      Generations.advance(spark, root) { dst =>
-        hashes(media.filter(col("media_id") % 12 === 0))
-          .write.mode("overwrite").parquet(dst)
-      }
+      // the %12 split leaves the %12==6 originals knowable only to the
+      // second save)
+      graft.streaming.StreamingPhashDedup.saveHashes(
+        hashes(media.filter(col("media_id") % 12 === 0)), root)
       def expect(stored: org.apache.spark.sql.DataFrame) =
         graft.streaming.StreamingPhashDedup.flagAgainstIndex(
             planted.toIndexedSeq.toDS(),
@@ -195,20 +196,18 @@ class StreamingDedupSpec extends SparkSpec {
       }
       try {
         mem.addData(planted.toIndexedSeq: _*); q.processAllAvailable()
-        // maintenance re-hashes the FULL corpus into gen-2 and flips
-        Generations.advance(spark, root) { dst =>
-          hashes(media).write.mode("overwrite").parquet(dst)
-        }
+        // maintenance re-hashes the FULL corpus and saves it into the root
+        graft.streaming.StreamingPhashDedup.saveHashes(hashes(media), root)
         val e1 = expect(hashes(media))
         mem.addData(planted.toIndexedSeq: _*); q.processAllAvailable()
         assert(epochs.length == 2)
         assert(epochs(0) == e0 && e0.nonEmpty,
-          "epoch 0 must flag against the generation serving at construction")
+          "epoch 0 must flag against the hashes saved at construction")
         assert(epochs(1) == e1,
-          "the epoch after the flip must flag against the new generation")
+          "the epoch after the save must flag against the new hashes")
         assert(e1 != e0,
-          "gen-2 stores all the hashes; the flag sets must differ")
-        // the %12==6 originals are only knowable to gen-2
+          "the second save stores all the hashes; the flag sets must differ")
+        // the %12==6 originals are only knowable to the second save
         assert(epochs(1).exists(r => r(1).asInstanceOf[Long] % 12 == 6))
         assert(epochs(0).forall(r => r(1).asInstanceOf[Long] % 12 == 0))
       } finally q.stop()

@@ -94,25 +94,22 @@ class StreamingEntitySpec extends SparkSpec {
       val e2 = flagEpoch(StreamingEntity.loadDictionary(spark, tmp), "ent_e2")
       assert(e2 === Seq(("cold anvil", 1, 1L), ("old anvil", 1, 2L),
         ("qold anvil", 0, 100L)))
-      // COMPACTION: fold the base + delta pile into one merged generation —
-      // flagging through an index built from it must be row-identical
-      // (duplicate (nm, bk, space) rows merged with summed counts and the
-      // MIN rep, exactly what loadDictionary does to the pile)
-      val gen2 = s"$tmp-gen2"
-      try {
-        StreamingEntity.compactDictionary(spark, tmp, gen2)
-        val e3 = flagEpoch(StreamingEntity.loadDictionary(spark, gen2), "ent_e3")
-        assert(e3 === e2, "compacted dictionary diverged from the pile")
-        // merged on disk: the duplicate name collapses to one row per space
-        val dupRows = graft.operators.SegmentStore.load(spark, gen2, "dictionary")
-          .filter(col("nm") === "old anvil").collect()
-        assert(dupRows.length === 2) // one per block space
-        assert(dupRows.forall(_.getAs[Long]("rep") === 2L),
-          "merge must keep the minimum representative")
-        intercept[IllegalArgumentException] {
-          StreamingEntity.compactDictionary(spark, tmp, tmp)
-        }
-      } finally Gates.deleteTree(gen2)
+      // COMPACTION: fold the base + delta pile into one merged commit in
+      // place — flagging through an index built from it must be
+      // row-identical (duplicate (nm, bk, space) rows merged with summed
+      // counts and the MIN rep, exactly what loadDictionary does to the pile)
+      StreamingEntity.compactDictionary(spark, tmp)
+      val e3 = flagEpoch(StreamingEntity.loadDictionary(spark, tmp), "ent_e3")
+      assert(e3 === e2, "compacted dictionary diverged from the pile")
+      // merged on disk: the duplicate name collapses to one row per space
+      val dupRows = graft.operators.SegmentStore.load(spark, tmp, "dictionary")
+        .filter(col("nm") === "old anvil").collect()
+      assert(dupRows.length === 2) // one per block space
+      assert(dupRows.forall(_.getAs[Long]("rep") === 2L),
+        "merge must keep the minimum representative")
+      intercept[IllegalStateException] {
+        StreamingEntity.compactDictionary(spark, s"$tmp-none")
+      }
     } finally Gates.deleteTree(tmp)
   }
 }

@@ -74,7 +74,8 @@ class StreamingLexicalSpec extends SparkSpec {
 
   test("a Generations flip between micro-batches is served next epoch: " +
     "epoch 0 from gen-1, epoch 1 from gen-2, no restart; raw paths still work") {
-    import graft.operators.Generations
+    // the name predates in-place saves: the index is one store root; a
+    // save into it is the flip, and an append plus a compaction follow
     val docsA = Seq(
       (1L, "spark scan spark merge"), (2L, "scan filter join"),
       (3L, "merge merge merge scan")).toDF("doc_id", "text")
@@ -85,55 +86,43 @@ class StreamingLexicalSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_lex_genflip").toString
     try {
       val root = s"$dir/lexgen"
-      val g1 = Generations.advance(spark, root) { dst =>
-        TextAnalysis.saveLexicalIndex(docsA, dst, nBuckets = 8)
-      }
+      TextAnalysis.saveLexicalIndex(docsA, root, nBuckets = 8)
       implicit val sqlCtx = spark.sqlContext
       val stream = MemoryStream[LexQuery]
       val epochs = scala.collection.mutable.ArrayBuffer.empty[Set[Seq[Any]]]
-      val q = StreamingLexicalServing.serveBm25FromRoot(stream.toDF(), root, k = 3) {
+      val q = StreamingLexicalServing.serveBm25FromPath(stream.toDF(), root, k = 3) {
         (ans, _) => epochs += ans.collect().map(_.toSeq).toSet
       }
       try {
         val qs = Seq(LexQuery(1L, Seq("spark")))
-        def batchOn(path: String) = TextAnalysis.bm25QueryIndexBatch(spark,
-          path, qs.toDF("query_id", "terms"), k = 3).collect().map(_.toSeq).toSet
-        val expected0 = batchOn(g1)
+        def batch() = TextAnalysis.bm25QueryIndexBatch(spark,
+          root, qs.toDF("query_id", "terms"), k = 3).collect().map(_.toSeq).toSet
+        val expected0 = batch()
         stream.addData(qs: _*)
         q.processAllAvailable()
         assert(epochs.size == 1 && epochs(0) == expected0 && expected0.nonEmpty)
-        // out-of-band maintenance publishes a new generation (more docs,
-        // different idf/avgdl — every score moves); the running stream
-        // must serve it on the NEXT epoch through the flipped pointer
-        val g2 = Generations.advance(spark, root) { dst =>
-          TextAnalysis.saveLexicalIndex(docsAll, dst, nBuckets = 8)
-        }
-        val expected1 = batchOn(g2)
+        // out-of-band maintenance saves a new index into the root (more
+        // docs, different idf/avgdl — every score moves); the running
+        // stream must serve it on the NEXT epoch
+        TextAnalysis.saveLexicalIndex(docsAll, root, nBuckets = 8)
+        val expected1 = batch()
         stream.addData(qs: _*)
         q.processAllAvailable()
         assert(epochs.size == 2 && epochs(1) == expected1)
         assert(epochs(1) != expected0,
-          "gen-2 indexes two more spark docs — identical answers mean the " +
-            "flip was not served")
-        // doc 4 (gen-2 only) must now be a hit
+          "the second save indexes two more spark docs — identical answers " +
+            "mean the save was not served")
+        // doc 4 (second save only) must now be a hit
         assert(epochs(1).exists(_(1) == 4L))
+        // an append, then an in-place compaction between epochs: the
+        // compacted index serves what the two segments served
+        TextAnalysis.appendLexicalIndex(Seq((6L, "spark spark row")).toDF("doc_id", "text"), root)
+        val expected2 = batch()
+        TextAnalysis.compactLexicalIndex(spark, root)
+        stream.addData(qs: _*)
+        q.processAllAvailable()
+        assert(epochs.size == 3 && epochs(2) == expected2 && epochs(2) != expected1)
       } finally q.stop()
-      // a RAW index path through the root entry point serves as-is
-      val rawDir = s"$dir/raw"
-      TextAnalysis.saveLexicalIndex(docsA, rawDir, nBuckets = 8)
-      val stream2 = MemoryStream[LexQuery]
-      val got = scala.collection.mutable.ArrayBuffer.empty[Set[Seq[Any]]]
-      val q2 = StreamingLexicalServing.serveBm25FromRoot(stream2.toDF(), rawDir, k = 3) {
-        (ans, _) => got += ans.collect().map(_.toSeq).toSet
-      }
-      try {
-        val qs = Seq(LexQuery(9L, Seq("merge")))
-        val exp = TextAnalysis.bm25QueryIndexBatch(spark, rawDir,
-          qs.toDF("query_id", "terms"), k = 3).collect().map(_.toSeq).toSet
-        stream2.addData(qs: _*)
-        q2.processAllAvailable()
-        assert(got.size == 1 && got(0) == exp && exp.nonEmpty)
-      } finally q2.stop()
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(dir)).deleteRecursively()
@@ -177,16 +166,10 @@ class StreamingLexicalSpec extends SparkSpec {
       // and compaction must refuse too — deriving the compacted commit
       // record from the rewritten tables would otherwise launder the tear
       // into a green-auditing artifact with silently skewed idf/avgdl
-      val dstTorn = java.nio.file.Files.createTempDirectory("graft_lex_torncpt").toString + "/c"
-      try {
-        val ec = intercept[IllegalArgumentException] {
-          TextAnalysis.compactLexicalIndex(spark, dir, dstTorn)
-        }
-        assert(ec.getMessage.contains("torn"))
-      } finally {
-        import scala.reflect.io.Directory
-        new Directory(new java.io.File(new java.io.File(dstTorn).getParent)).deleteRecursively()
+      val ec = intercept[IllegalArgumentException] {
+        TextAnalysis.compactLexicalIndex(spark, dir)
       }
+      assert(ec.getMessage.contains("torn"))
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(dir)).deleteRecursively()
@@ -222,19 +205,18 @@ class StreamingLexicalSpec extends SparkSpec {
       (1L, "spark scan spark merge"), (2L, "scan filter join"),
       (3L, "merge merge merge scan"), (4L, "filter value row")).toDF("doc_id", "text")
     val src = java.nio.file.Files.createTempDirectory("graft_lex_src").toString
-    val dst = java.nio.file.Files.createTempDirectory("graft_lex_dst").toString + "/c"
     try {
       TextAnalysis.saveLexicalIndex(docs.filter($"doc_id" <= 2), src, nBuckets = 8)
       TextAnalysis.appendLexicalIndex(docs.filter($"doc_id" > 2), src)
-      TextAnalysis.compactLexicalIndex(spark, src, dst)
       val terms = Seq("spark", "merge", "filter")
       val before = TextAnalysis.bm25QueryIndex(spark, src, terms, k = 10).collect().toSeq
-      val after = TextAnalysis.bm25QueryIndex(spark, dst, terms, k = 10).collect().toSeq
+      TextAnalysis.compactLexicalIndex(spark, src)
+      val after = TextAnalysis.bm25QueryIndex(spark, src, terms, k = 10).collect().toSeq
       assert(after == before && before.nonEmpty)
       // compaction really merged the termstats deltas: one row per term
-      val m = SegmentStore.latest(SeqFiles.fs(spark, dst), dst).get
-      assert(m.seq == 1L)
-      val all = SegmentStore.frame(spark, dst, m.live,
+      val m = SegmentStore.latest(SeqFiles.fs(spark, src), src).get
+      assert(m.seq == 3L && m.live.forall(_.path.startsWith("c-00000003/")))
+      val all = SegmentStore.frame(spark, src, m.live,
         TextAnalysis.LexSchema, TextAnalysis.LexPartitions)
       val ts = all.filter($"component" === "term")
       assert(ts.count() == ts.select("token").distinct().count())
@@ -243,7 +225,6 @@ class StreamingLexicalSpec extends SparkSpec {
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(src)).deleteRecursively()
-      new Directory(new java.io.File(new java.io.File(dst).getParent)).deleteRecursively()
     }
   }
 
@@ -304,6 +285,33 @@ class StreamingLexicalSpec extends SparkSpec {
       info(f"append: $appendSteps steps in ${(t1 - t0) / 1e9}%.1f s; " +
         f"save: $saveSteps steps in ${(System.nanoTime() - t1) / 1e9}%.1f s")
       assert(appendSteps >= 6 && saveSteps >= 6, s"$appendSteps, $saveSteps")
+    } finally Gates.deleteTree(template)
+  }
+
+  test("crash-atomic compactLexicalIndex in place: every crash point serves " +
+      "the same answer from the two segments or the one folded segment, audits " +
+      "consistent, and recover plus a rerun converges") {
+    val docs = Seq(
+      (1L, "spark scan spark merge"), (2L, "scan filter join"),
+      (3L, "merge merge merge scan")).toDF("doc_id", "text")
+    val template = Files.createTempDirectory("graft_lex_compact_sweep").toString
+    try {
+      TextAnalysis.saveLexicalIndex(docs.filter($"doc_id" <= 2), template, nBuckets = 2)
+      TextAnalysis.appendLexicalIndex(docs.filter($"doc_id" === 3L), template)
+      val terms = Seq("spark", "merge", "scan")
+      def open(dir: String): () => Seq[String] = {
+        val audit = TextAnalysis.validateLexicalIndex(spark, dir).collect()(0)
+        assert(audit.getAs[Boolean]("postings_consistent") &&
+          audit.getAs[Boolean]("terms_consistent"), s"$dir audits torn: $audit")
+        val answer = TextAnalysis.bm25QueryIndex(spark, dir, terms, k = 10)
+        () => s"segments ${audit.getAs[Long]("n_segments")}" +:
+          answer.collect().map(_.toString).toSeq
+      }
+      val t0 = System.nanoTime()
+      val steps = FaultFs.crashSweep(spark, template, open,
+        dir => SegmentStore.recover(spark, dir))(TextAnalysis.compactLexicalIndex(spark, _))
+      info(f"compactLexicalIndex: $steps steps in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+      assert(steps >= 6, s"$steps")
     } finally Gates.deleteTree(template)
   }
 

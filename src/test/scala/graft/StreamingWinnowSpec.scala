@@ -65,7 +65,9 @@ class StreamingWinnowSpec extends SparkSpec {
 
   test("a Generations flip between micro-batches rebinds the index: epoch 0 " +
     "flags against gen-1, epoch 1 against gen-2, no restart; raw path serves") {
-    import graft.operators.Generations
+    // the name predates in-place saves: the fingerprints are one store
+    // root, a save into it is the flip, and the index is rebuilt at each
+    // new base commit (a save or a compaction), not at an append
     implicit val sqlCtx = spark.sqlContext
     val docs = graft.sources.Tables.documents(spark, Sf)
     def fps(d: org.apache.spark.sql.DataFrame) =
@@ -73,12 +75,10 @@ class StreamingWinnowSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("winflip_spec").toString
     try {
       val root = s"$dir/wingen"
-      Generations.advance(spark, root) { dst =>
-        StreamingWinnow.saveFingerprints(fps(docs.filter(col("doc_id") < 30)), dst)
-      }
+      StreamingWinnow.saveFingerprints(fps(docs.filter(col("doc_id") < 30)), root)
       val probes = Fixtures.nearDupCopies(docs.filter(col("doc_id") < 60))
         .select(col("doc_id"), col("text")).as[(Long, String)].collect()
-      // batch-path expectations per generation
+      // batch-path expectations per stored set
       def expect(stored: org.apache.spark.sql.DataFrame) =
         StreamingWinnow.flagAgainstIndex(
             Fixtures.nearDupCopies(docs.filter(col("doc_id") < 60)),
@@ -94,32 +94,27 @@ class StreamingWinnowSpec extends SparkSpec {
       }
       try {
         mem.addData(probes.toIndexedSeq: _*); q.processAllAvailable()
-        Generations.advance(spark, root) { dst =>
-          StreamingWinnow.saveFingerprints(fps(docs.filter(col("doc_id") < 60)), dst)
-        }
+        StreamingWinnow.saveFingerprints(fps(docs.filter(col("doc_id") < 60)), root)
         val e1 = expect(docs.filter(col("doc_id") < 60))
         mem.addData(probes.toIndexedSeq: _*); q.processAllAvailable()
         assert(epochs.length == 2)
         assert(epochs(0) == e0 && e0.nonEmpty,
-          "epoch 0 must flag against the generation serving at construction")
+          "epoch 0 must flag against the fingerprints saved at construction")
         assert(epochs(1) == e1,
-          "the epoch after the flip must flag against the new generation")
-        assert(e1 != e0, "gen-2 stores more docs; flags must differ")
+          "the epoch after the save must flag against the new fingerprints")
+        assert(e1 != e0, "the second save stores more docs; flags must differ")
+        // an append keeps the base commit: the next epoch still flags
+        // against the saved set; the compaction that folds it moves the
+        // base, and the epoch after it flags against the union
+        StreamingWinnow.appendFingerprints(
+          fps(docs.filter(col("doc_id") >= 60 && col("doc_id") < 90)), root)
+        mem.addData(probes.toIndexedSeq: _*); q.processAllAvailable()
+        StreamingWinnow.compactFingerprints(spark, root)
+        mem.addData(probes.toIndexedSeq: _*); q.processAllAvailable()
+        assert(epochs.length == 4)
+        assert(epochs(2) == e1, "an append must not rebuild the index")
+        assert(epochs(3) == expect(docs.filter(col("doc_id") < 90)))
       } finally q.stop()
-      // a RAW fingerprint path through the root entry point serves as-is
-      val raw = s"$dir/raw"
-      StreamingWinnow.saveFingerprints(fps(docs.filter(col("doc_id") < 30)), raw)
-      val mem2 = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)]
-      val got = scala.collection.mutable.ArrayBuffer.empty[Set[Seq[Any]]]
-      val q2 = StreamingWinnow.flagStreamFromRoot(
-        mem2.toDF().toDF("doc_id", "text"), raw) { (ans, _) =>
-        got += ans.collect().map(_.toSeq).toSet
-      }
-      try {
-        mem2.addData(probes.toIndexedSeq: _*); q2.processAllAvailable()
-        assert(got.length == 1 && got(0) == e0)
-      } finally q2.stop()
     } finally Gates.deleteTree(dir)
   }
 
@@ -174,21 +169,21 @@ class StreamingWinnowSpec extends SparkSpec {
     assert(idx.inverted.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
       idxDirect.inverted.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
 
-    // compaction: a fresh one-generation fold preserves rows VERBATIM
+    // compaction: an in-place one-commit fold preserves rows VERBATIM
     // (multiplicity included — the df cut happens at index build, not here)
-    val gen2 = java.nio.file.Files.createTempDirectory("winnow_idx_gen2").toString
-    StreamingWinnow.compactFingerprints(spark, tmp, gen2)
     def bag(p: String) = StreamingWinnow.loadFingerprints(spark, p)
       .groupBy(col("id"), col("fp")).count()
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(bag(gen2) == bag(tmp))
-    // and one generation = exactly one fp-sorted file set, fewer files
     def parquets(p: String) =
       graft.operators.SegmentStore.latest(graft.operators.SeqFiles.fs(spark, p), p)
         .get.live.length
-    assert(parquets(gen2) <= parquets(tmp))
-    intercept[IllegalArgumentException] {
-      StreamingWinnow.compactFingerprints(spark, tmp, tmp)
+    val (pile, pileFiles) = (bag(tmp), parquets(tmp))
+    StreamingWinnow.compactFingerprints(spark, tmp)
+    assert(bag(tmp) == pile)
+    // and one commit = exactly one fp-sorted file set, no more files
+    assert(parquets(tmp) <= pileFiles)
+    intercept[IllegalStateException] {
+      StreamingWinnow.compactFingerprints(spark, s"$tmp-none")
     }
   }
 

@@ -234,10 +234,11 @@ class VectorExprSpec extends SparkSpec {
       assert(pre.getAs[Long]("n_codes") == e.count())
       assert(pre.getAs[Long]("n_oversized") == 0L,
         s"random corpus should not trip a 4x oversize factor: $pre")
-      // below threshold: maintenance is a no-op, dst untouched
-      assert(!Similarity.maintainIvfPq(spark, s"$dir/idx", s"$dir/gen2", e,
-        oversizeFactor = 4.0))
-      assert(!new java.io.File(s"$dir/gen2").exists())
+      def seq() = graft.operators.SegmentStore.latest(
+        graft.operators.SeqFiles.fs(spark, s"$dir/idx"), s"$dir/idx").get.seq
+      // below threshold: maintenance is a no-op, no commit published
+      assert(!Similarity.maintainIvfPq(spark, s"$dir/idx", e, oversizeFactor = 4.0))
+      assert(seq() == 1L)
       // drifted ingest: 256 copies of one vector encoded with the STALE
       // quantizers pile into a single list -> an oversized list appears
       val clump = Fixtures.annDriftClump(e)
@@ -247,19 +248,16 @@ class VectorExprSpec extends SparkSpec {
       assert(post.getAs[Long]("n_codes") == e.count() + 256L)
       assert(post.getAs[Long]("n_oversized") >= 1L, s"clump must overfill a list: $post")
       val grown = e.select(col("vec_id"), col("embedding")).union(clump)
-      assert(Similarity.maintainIvfPq(spark, s"$dir/idx", s"$dir/gen2", grown,
-        oversizeFactor = 2.0))
-      // the fresh generation carries every grown-corpus vector AND the
-      // geometry of the artifact being maintained (nlist/m/ksub read from
-      // src, never caller defaults — a default-shaped rebuild would flip
-      // serving onto a different index shape)
-      val gen2 = Similarity.loadIvfPq(spark, s"$dir/gen2")
-      assert(gen2.encoded.count() == e.count() + 256L)
-      assert(gen2.centroids.length == 8)
-      assert(gen2.books.m == 8 && gen2.books.books.forall(_.length == 16))
-      intercept[IllegalArgumentException] {
-        Similarity.maintainIvfPq(spark, s"$dir/idx", s"$dir/idx", grown)
-      }
+      assert(Similarity.maintainIvfPq(spark, s"$dir/idx", grown, oversizeFactor = 2.0))
+      // the re-clustered save carries every grown-corpus vector AND the
+      // geometry of the index being maintained (nlist/m/ksub read from
+      // the store, never caller defaults — a default-shaped rebuild would
+      // move serving onto a different index shape)
+      assert(seq() == 3L)
+      val reclustered = Similarity.loadIvfPq(spark, s"$dir/idx")
+      assert(reclustered.encoded.count() == e.count() + 256L)
+      assert(reclustered.centroids.length == 8)
+      assert(reclustered.books.m == 8 && reclustered.books.books.forall(_.length == 16))
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(dir)).deleteRecursively()
