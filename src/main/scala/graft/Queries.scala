@@ -60,7 +60,7 @@ private[graft] object Queries {
       // the timed window is the PRUNED READ path
       QueryBuilders.history(
         graft.streaming.StreamingPipeline.servingView(
-          s, ViewArtifacts.keyedStoreDir(s, dir)),
+          s, ViewArtifacts.keyedStoreDir(s, dir), Jan05, Jan12),
         "avg", Seq("cl", "vi"), Jan05, Jan12)
     }),
 

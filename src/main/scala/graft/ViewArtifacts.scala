@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 import graft.operators.AggCore
 import graft.sources.Tables
@@ -29,9 +28,7 @@ private[graft] object ViewArtifacts {
   def keyedStoreDir(s: SparkSession, dir: String): String = synchronized {
     keyedMemo.getOrElseUpdate(dir, {
       val p = s"$root/${DirKeys.key(dir)}_keyed"
-      StreamingPipeline.upsertBatch(
-        AggCore.hourlyView(Tables.readings(s, dir))
-          .withColumn("window_day", to_date(col("window_start"))), p)
+      StreamingPipeline.upsertBatch(AggCore.hourlyView(Tables.readings(s, dir)), p)
       StreamingPipeline.compact(s, p, filesPerDay = 2)
       p
     })

@@ -124,6 +124,10 @@ object Dedup {
         array_distinct(TextFunctions.shingles(col(textCol), shingleN)).as("sh"))
       .filter(size(col("sh")) > 0)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // fill the cache in one sequential pass: the banding exchange and both
+    // verify joins scan sigd in concurrent stages, each of which would
+    // otherwise compute and store the same blocks
+    sigd.count()
 
     // Slim band rows: (id, band, bandHash) ONLY — the shingle arrays stay out
     // of the explode/shuffle/distinct path (carrying them through banding was

@@ -85,19 +85,16 @@ object QueryBuilders {
    * Restrict a view partitioned by `window_day` (the streaming serving
    * table) to the days that can hold a `window_start` in `[fromMs, toMs]`,
    * so the scan prunes every other day directory; a view without that
-   * column is returned as is. `window_day` is `to_date(window_start)` in
-   * the WRITER's session time zone, which a reader cannot know, so the
-   * bounds are the UTC dates of the range widened by one day on each side:
-   * a zone's local date never differs from the UTC date by more than one
-   * day (offsets stay under 24 h), so no cell is pruned away whatever
-   * zones the writer and the reader use.
+   * column is returned as is. `window_day` is the UTC date of
+   * `window_start` whatever zone wrote it
+   * ([[graft.streaming.StreamingPipeline.upsertBatch]]), so the bounds
+   * are the UTC dates of the range, exactly.
    */
   private def dayPruned(view: DataFrame, fromMs: Long, toMs: Long): DataFrame =
     if (!view.columns.contains("window_day")) view
     else {
       def utcDay(ms: Long) = Instant.ofEpochMilli(ms).atZone(ZoneOffset.UTC).toLocalDate
-      view.filter(col("window_day").between(
-        lit(utcDay(fromMs).minusDays(1)), lit(utcDay(toMs).plusDays(1))))
+      view.filter(col("window_day").between(lit(utcDay(fromMs)), lit(utcDay(toMs))))
     }
 
   /**
@@ -107,7 +104,9 @@ object QueryBuilders {
    *
    * Plan shape: prefix+time range filters push into the view scan (and
    * prune day partitions, see [[dayPruned]]); one partial/final
-   * hash-aggregate merges cells across prefixes (A2); the aggregated,
+   * hash-aggregate merges cells across prefixes (A2), with no exchange
+   * between the two when the view is one partition (a serving view that
+   * fits one split); the aggregated,
    * query-sized result is coalesced to one partition and sorted there —
    * no range exchange, no sampling job.
    */

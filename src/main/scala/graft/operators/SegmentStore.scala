@@ -70,9 +70,10 @@ private[graft] object SegmentStore {
 
   /** How long the files a commit retired stay on disk after it: a reader
     * resolved just before the commit still reads them. A serving request
-    * takes about 0.4 s at the median (perfbench `serve`) and seconds in
-    * its tail; ten minutes is over a thousand medians, and holds at most
-    * 60 commits of superseded day files at the reference's 10 s trigger. */
+    * takes about a quarter second at the median (perfbench `serve`, three
+    * clients) and seconds in its tail; ten minutes is over two thousand
+    * medians, and holds at most 60 commits of superseded day files at the
+    * reference's 10 s trigger. */
   private val RetiredGraceMs = 10 * 60 * 1000L
 
   private def manifestDir(root: String) = new Path(root, "_manifest")
@@ -167,29 +168,48 @@ private[graft] object SegmentStore {
     val live = cur.fold(Seq.empty[Entry])(_.live)
     val seq = cur.fold(0L)(_.seq) + 1
     val dir = new Path(root, SeqFiles.name("c", seq))
-    val dropped = rewrite(cur, dir.toString)
-    val added = written(hfs, dir, dir.getName, partitionSchema.fieldNames.toSeq, Nil)
-    if (schema.nonEmpty || dropped.nonEmpty || added.nonEmpty) {
-      check(added)
-      val next = live.filterNot(dropped.toSet) ++ added
-      def unit(rel: String) = rel.substring(0, rel.lastIndexOf('/'))
-      def commitOf(rel: String) = rel.takeWhile(_ != '/')
-      val keptCommits = next.map(e => commitOf(e.path)).toSet
-      val retired = live.map(e => unit(e.path)).distinct
-        .filterNot(next.map(e => unit(e.path)).toSet)
-        .map(u => if (keptCommits(commitOf(u))) u else commitOf(u)).distinct
-      val schemaLine = schema.orElse(cur.flatMap(_.schema)).map { case (data, part) =>
-        s"S\t${part.length}\t${StructType(data ++ part).json}"
+    def files() = written(hfs, dir, dir.getName, partitionSchema.fieldNames.toSeq, Nil)
+    try {
+      val dropped = rewrite(cur, dir.toString)
+      val added = files()
+      if (schema.nonEmpty || dropped.nonEmpty || added.nonEmpty) {
+        check(added)
+        val next = live.filterNot(dropped.toSet) ++ added
+        def unit(rel: String) = rel.substring(0, rel.lastIndexOf('/'))
+        def commitOf(rel: String) = rel.takeWhile(_ != '/')
+        val keptCommits = next.map(e => commitOf(e.path)).toSet
+        val retired = live.map(e => unit(e.path)).distinct
+          .filterNot(next.map(e => unit(e.path)).toSet)
+          .map(u => if (keptCommits(commitOf(u))) u else commitOf(u)).distinct
+        val schemaLine = schema.orElse(cur.flatMap(_.schema)).map { case (data, part) =>
+          s"S\t${part.length}\t${StructType(data ++ part).json}"
+        }
+        val tags = (cur.fold(Map.empty[String, String])(_.tags) + (dir.getName -> tag))
+          .filter { case (c, t) => t.nonEmpty && keptCommits(c) }
+        SeqFiles.publish(hfs, manifestDir(root), "m", seq,
+          next.map(e => ("F" +: e.values :+ e.bytes.toString :+ e.path).mkString("\t")) ++
+            retired.map("R\t" + _) ++ schemaLine ++
+            tags.toSeq.sorted.map { case (c, t) => s"T\t$c\t$t" })
       }
-      val tags = (cur.fold(Map.empty[String, String])(_.tags) + (dir.getName -> tag))
-        .filter { case (c, t) => t.nonEmpty && keptCommits(c) }
-      SeqFiles.publish(hfs, manifestDir(root), "m", seq,
-        next.map(e => ("F" +: e.values :+ e.bytes.toString :+ e.path).mkString("\t")) ++
-          retired.map("R\t" + _) ++ schemaLine ++
-          tags.toSeq.sorted.map { case (c, t) => s"T\t$c\t$t" })
+      Some(dropped)
+    } catch { case e: Exception =>
+      try dropUnnamed(hfs, root, seq, files()) catch { case c: Exception => e.addSuppressed(c) }
+      throw e
     }
-    Some(dropped)
   }
+
+  /** After commit `seq` failed: if another commit took its number meanwhile
+    * (a second writer), `c-seq` is that commit's live dir, which neither
+    * [[recover]] nor a later commit drops whole; delete the files of
+    * `inDir` (the failed commit's and that one's) that its manifest does
+    * not name. Without such a manifest `c-seq` is a crash leftover, which
+    * [[recover]] deletes. */
+  private def dropUnnamed(hfs: FileSystem, root: String, seq: Long, inDir: => Seq[Entry]): Unit =
+    SeqFiles.numbered(SeqFiles.listAll(hfs, manifestDir(root)), "m").find(_._1 == seq)
+      .foreach { case (_, st) =>
+        val named = parse(hfs, seq, st).live.map(_.path).toSet
+        inDir.filterNot(f => named(f.path)).foreach(f => hfs.delete(new Path(root, f.path), false))
+      }
 
   /** Commit the laid-out frame `df` as the next commit of `root`,
     * partitioned by `partitionBy`: a save (`replace`) supersedes every
@@ -233,7 +253,8 @@ private[graft] object SegmentStore {
    * single-writer contract rules out) fails it loudly — by (1), or by the
    * publish, which cannot take a number already published — and the
    * store keeps that commit. The fold is not rebased onto it: commit dirs
-   * are numbered by manifest, so its files could sit in the fold's dir.
+   * are numbered by manifest, so its files could sit in the fold's dir,
+   * from which the failed fold deletes its own files ([[commitWith]]).
    */
   def compact(spark: SparkSession, root: String, artifact: String,
               partitionBy: Seq[String], view: DataFrame => DataFrame)

@@ -30,16 +30,16 @@ import graft.serving.HttpEndpoint.{parseQuery, respond}
  * core, each resolving the view and running its own Spark jobs. The
  * serving layer only ever touches already-aggregated, already-small query
  * results.
+ *
+ * `viewProvider(fromMs, toMs)` is called once per request with the
+ * `window_start` range the request reads: a history's range (a named
+ * interval's included), a snapshot's truncated hour at both ends.
  */
-class RestServer(viewProvider: () => DataFrame, port: Int) {
+class RestServer(viewProvider: (Long, Long) => DataFrame, port: Int) {
 
   /** Static view (batch results, tests): every request sees the same frame. */
-  def this(view: DataFrame, port: Int) = this(() => view, port)
+  def this(view: DataFrame, port: Int) = this((_, _) => view, port)
   def this(view: DataFrame) = this(view, 7070)
-
-  /** Resolved per request — a live provider re-lists the serving table, so
-    * responses track the streaming upsert with no server restart. */
-  private def view: DataFrame = viewProvider()
 
   private val endpoint = new HttpEndpoint(port, "/api/temperature/aggregate", handle)
 
@@ -77,13 +77,14 @@ class RestServer(viewProvider: () => DataFrame, port: Int) {
     val prefixes = params.getOrElse("geohashes", "").split(",").toSeq.filter(_.nonEmpty)
     val now = System.currentTimeMillis()
     val to = params.get("to").flatMap(_.toLongOption).filter(_ > 0).getOrElse(now)
-    val result = params.get("interval").filter(_.nonEmpty) match {
-      case Some(iv) => QueryBuilders.historyInterval(view, op, prefixes, to, iv)
+    val from = params.get("interval").filter(_.nonEmpty) match {
+      case Some(iv) => QueryBuilders.fromForInterval(to, iv)
       case None =>
         val from = params.get("from").flatMap(_.toLongOption).filter(_ > 0).getOrElse(0L)
         if (from >= to) throw QueryError(s"Invalid range: from $from >= to $to")
-        QueryBuilders.history(view, op, prefixes, from, to)
+        from
     }
+    val result = QueryBuilders.history(viewProvider(from, to), op, prefixes, from, to)
     // reference history columns: ["timestamp", op] with epoch-ms keys
     // (README.md:83-86)
     val rows = result.collect().map { r =>
@@ -98,7 +99,9 @@ class RestServer(viewProvider: () => DataFrame, port: Int) {
     val bbox = params.getOrElse("bbox", "").split(",").toSeq
       .filter(_.nonEmpty).flatMap(_.toDoubleOption)
     if (bbox.length != 4) throw QueryError(s"Invalid bbox: ${params.getOrElse("bbox", "")}")
-    val result = QueryBuilders.snapshot(view, op, ts, bbox(0), bbox(1), bbox(2), bbox(3))
+    val hour = QueryBuilders.truncateToHourMs(ts)
+    val result = QueryBuilders.snapshot(viewProvider(hour, hour), op, ts,
+      bbox(0), bbox(1), bbox(2), bbox(3))
     val rows = result.collect().map { r =>
       s"""["${r.getString(0)}",${Json.number(r.get(1))}]"""
     }
@@ -113,11 +116,11 @@ object RestServer {
     * micro-batch upserts are visible immediately — the Kafka-Streams
     * interactive-query analogue (reference serves its RocksDB store the
     * same way, `querying/QueryingService.java:39`). Requests run
-    * concurrently, and each scans only the day partitions its time range
-    * or snapshot hour can touch (plus a one-day margin,
-    * [[graft.operators.QueryBuilders]]), so a request's cost tracks the
-    * days it asks for, not the table's retention. */
+    * concurrently, and each reads exactly the UTC days its time range or
+    * snapshot hour lies in, so a request's cost tracks the days it asks
+    * for, not the table's retention; a read that fits one split runs as
+    * one Spark job of one task. */
   def live(spark: org.apache.spark.sql.SparkSession, tableDir: String,
            port: Int = 7070): RestServer =
-    new RestServer(() => graft.streaming.StreamingPipeline.servingView(spark, tableDir), port)
+    new RestServer(graft.streaming.StreamingPipeline.servingView(spark, tableDir, _, _), port)
 }

@@ -1,6 +1,9 @@
 package graft.streaming
 
+import java.time.{Instant, LocalDate, ZoneOffset}
+
 import org.apache.hadoop.fs.Path
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
@@ -39,9 +42,9 @@ import graft.operators.{AggCore, SegmentStore, SeqFiles}
  *
  * At scale: state is keyed by (gh-prefix, hour) — cardinality bounded by
  * 32^p × retained hours, independent of input volume; the serving table is
- * partitioned by day so snapshot/point queries prune to the queried day and
- * history queries to the queried range, each plus a one-day margin
- * ([[graft.operators.QueryBuilders]]).
+ * partitioned by the UTC day of `window_start`, so a snapshot reads exactly
+ * its hour's day and a history exactly the days of its range
+ * ([[servingView]], [[graft.operators.QueryBuilders]]).
  */
 object StreamingPipeline {
 
@@ -93,10 +96,19 @@ object StreamingPipeline {
       substring(col("geohash"), 1, precision).as("key"),
       col("tempVal").as("value"))
 
-  /** Continuous hourly aggregate with 24 h lateness tolerance (W3). */
+  /** Continuous hourly aggregate with 24 h lateness tolerance (W3), with
+    * the day [[upsertBatch]] files each cell under. */
   def hourlyAgg(keyed: DataFrame): DataFrame =
     AggCore.hourlyView(keyed.withWatermark("ts", "24 hours"))
-      .withColumn("window_day", to_date(col("window_start")))
+      .withColumn("window_day", windowDay)
+
+  /** The UTC date of `window_start`, whatever the session time zone:
+    * `to_date` would file one instant under another day in another zone. */
+  private def windowDay =
+    date_from_unix_date(floor(unix_seconds(col("window_start")) / 86400).cast("int"))
+
+  private def utcDay(ms: Long): LocalDate =
+    Instant.ofEpochMilli(ms).atZone(ZoneOffset.UTC).toLocalDate
 
   /**
    * Start the full pipeline writing to `tableDir` (parquet, partitioned by
@@ -159,7 +171,9 @@ object StreamingPipeline {
   /**
    * Merge a micro-batch of changed cells into the serving table — keep every
    * existing cell whose (key, window_start) is NOT in the batch, union the
-   * batch, replace only the touched day partitions. Cost per trigger is
+   * batch, replace only the touched day partitions. A cell's day is the
+   * UTC date of its `window_start`, derived here (a `window_day` column of
+   * `batch` is replaced). Cost per trigger is
    * O(changed days), not O(table); the merge input is read through the
    * manifest (no listing, no schema-inference job). Crash-atomic: a reader
    * sees the whole batch or none of it ([[SegmentStore.commit]]). A
@@ -167,7 +181,7 @@ object StreamingPipeline {
    */
   def upsertBatch(batch: DataFrame, tableDir: String, tag: String = ""): Unit = {
     val cols = (cellSchema ++ daySchema).map(f => col(f.name))
-    val changed = batch.select(cols: _*).cache()
+    val changed = batch.withColumn("window_day", windowDay).select(cols: _*).cache()
     try {
       val days = changed.select(col("window_day").cast("string")).distinct().collect()
         .map(_.getString(0)).toSeq
@@ -219,14 +233,23 @@ object StreamingPipeline {
     * REST layer reads; feeds [[graft.operators.QueryBuilders]]).
     *
     * One listing of `_manifest` and one manifest read pin the view to the
-    * newest commit: it reads exactly the files named there, with the fixed
-    * schema ([[upsertBatch]]'s columns plus `window_day`). No other
+    * newest commit: it reads exactly the files named there whose day lies
+    * in `[utcDay(fromMs), utcDay(toMs)]` (every day by default), with the
+    * fixed schema ([[upsertBatch]]'s columns plus `window_day`). No other
     * filesystem call, no Spark job, and a later commit does not change it.
+    *
+    * When the selected files' recorded bytes fit one split
+    * (`spark.sql.files.maxPartitionBytes`), the view is coalesced to one
+    * partition: a query's aggregate then runs in the scan's single task,
+    * with no exchange, while its filters still push into the scan. A
+    * larger read keeps Spark's split planning.
     *
     * A table never committed to, or one whose every day partition was
     * expired by [[retainFrom]], has no cells to serve — fail with that
-    * cause instead of serving an empty table. */
-  def servingView(spark: SparkSession, tableDir: String): DataFrame = {
+    * cause instead of serving an empty table. A range with no live day
+    * is an empty view. */
+  def servingView(spark: SparkSession, tableDir: String,
+                  fromMs: Long = Long.MinValue, toMs: Long = Long.MaxValue): DataFrame = {
     val m = SegmentStore.latest(SeqFiles.fs(spark, tableDir), tableDir).getOrElse(
       throw new IllegalStateException(s"servingView: no serving table at $tableDir"))
     if (m.live.isEmpty)
@@ -234,7 +257,14 @@ object StreamingPipeline {
         s"servingView: $tableDir has no day partitions — every window_day " +
           "was expired by retainFrom (or nothing was ever upserted); " +
           "re-ingest or widen retention before serving")
-    cells(spark, tableDir, m.live)
+    val (first, last) = (utcDay(fromMs), utcDay(toMs))
+    val selected = m.live.filter { e =>
+      val d = LocalDate.parse(day(e))
+      !d.isBefore(first) && !d.isAfter(last)
+    }
+    val view = cells(spark, tableDir, selected)
+    val split = JavaUtils.byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    if (selected.map(_.bytes).sum <= split) view.coalesce(1) else view
   }
 
   /**

@@ -121,6 +121,134 @@ class RestServerSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  /** Run `f`; returns its value and the Spark jobs and tasks started
+    * meanwhile, on any thread. A marker job flushes the listener bus:
+    * events arrive in order, so once its start is seen every earlier
+    * job's tasks are too. */
+  private def jobsAndTasks[A](f: => A): (A, Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val marker = s"marker-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val stages = new java.util.concurrent.ConcurrentHashMap[Integer, String]
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Integer]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val d = String.valueOf(e.properties.getProperty("spark.job.description"))
+        jobs.add(d)
+        e.stageIds.foreach(st => stages.put(st, d))
+      }
+      override def onTaskStart(e: SparkListenerTaskStart): Unit = tasks.add(e.stageId)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val a = f
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.contains(marker) && System.nanoTime() < deadline) Thread.sleep(20)
+      (a, jobs.asScala.count(_ != marker), tasks.asScala.count(st => stages.get(st) != marker))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a live history or snapshot request over a backfilled table runs as one " +
+    "Spark job of one task with no exchange, its filters pushed into the scan; " +
+    "a read larger than one split keeps its exchange and answers the same bytes") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.operators.{SegmentStore, SeqFiles}
+    import graft.streaming.StreamingPipeline
+
+    val H0 = 1704067200000L // 2024-01-01 00:00:00 UTC
+    val H = 3600000L
+    // three days of readings over 40 geohashes, two readings per cell
+    val readings = for {
+      d <- 0 until 3; h <- Seq(0, 11, 23); g <- 0 until 40; r <- 0 until 2
+    } yield s"""{"timestamp":${H0 + d * 24 * H + h * H + r * 60000},"sensorId":"s$g",""" +
+      s""""geohash":"u155${"0123456789bcdefghjkmnpqrstuvwxyz"(g % 32)}${g / 32}x","tempVal":${g + r},"tempUnit":"c"}"""
+    val dir = java.nio.file.Files.createTempDirectory("serve_plan").toString
+    StreamingPipeline.backfill(readings.toDF("json"), dir)
+
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val day2 = H0 + 24 * H
+    val history = s"/api/temperature/aggregate/avg/history?geohashes=u155&from=$day2&to=${day2 + 23 * H}"
+    val snapshot = s"/api/temperature/aggregate/sum/snapshot?ts=${day2 + 11 * H + 5}&bbox=51.5,4.0,51.1,4.8"
+    def serve(s: org.apache.spark.sql.SparkSession, path: String): (String, SparkPlan) = {
+      plans.clear()
+      s.listenerManager.register(listener)
+      val srv = RestServer.live(s, dir, port = 0)
+      val port = srv.start()
+      try {
+        val ((code, body), jobs, tasks) = jobsAndTasks(get(s"http://localhost:$port$path"))
+        assert(code == 200, body)
+        val deadline = System.nanoTime() + 30000000000L
+        while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+        assert(plans.size == 1, plans)
+        if (s eq spark) assert(jobs == 1 && tasks == 1, s"$path: $jobs jobs, $tasks tasks")
+        (body, plans.peek())
+      } finally { srv.stop(); s.listenerManager.unregister(listener) }
+    }
+    // the final plan's nodes, inside an adaptive plan and its stages too
+    val aqe = new AdaptiveSparkPlanHelper {}
+    def exchanges(p: SparkPlan) = aqe.collect(p) { case e: Exchange => e }
+
+    try {
+      val served = Seq(history, snapshot).map { path =>
+        val (body, plan) = serve(spark, path)
+        assert(body.contains("\"data\":[["), body)
+        assert(exchanges(plan).isEmpty, s"$path:\n$plan")
+        val pushed = aqe.collect(plan) { case s: FileSourceScanExec => s }.head.metadata("PushedFilters")
+        assert(pushed.contains("GreaterThanOrEqual(key,u15") && pushed.contains("LessThan(key,u15") &&
+          pushed.contains("(window_start,"), pushed)
+        body
+      }
+
+      // the same requests in a session whose split is smaller than the
+      // day's files: Spark's distributed plan, the same answers
+      val m = SegmentStore.latest(SeqFiles.fs(spark, dir), dir).get
+      val dayBytes = m.live.filter(_.values.head == "2024-01-02").map(_.bytes).sum
+      val small = spark.newSession()
+      small.conf.set("spark.sql.files.maxPartitionBytes", (dayBytes - 1).toString)
+      Seq(history, snapshot).zip(served).foreach { case (path, body) =>
+        val (b, plan) = serve(small, path)
+        assert(exchanges(plan).nonEmpty, s"$path:\n$plan")
+        assert(b == body)
+      }
+
+      // a range or hour with no live day: an empty answer, not an error
+      val far = H0 + 30 * 24 * H
+      Seq(s"/api/temperature/aggregate/count/history?geohashes=u155&from=$far&to=${far + H}",
+          s"/api/temperature/aggregate/count/snapshot?ts=$far&bbox=51.5,4.0,51.1,4.8").foreach { path =>
+        val (body, _) = serve(spark, path)
+        assert(body.contains("\"data\":[]"), body)
+      }
+    } finally Gates.deleteTree(dir)
+  }
+
+  test("the view provider gets each request's window_start range") {
+    val ranges = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
+    val srv = new RestServer((from, to) => { ranges.add((from, to)); view }, 0)
+    val port = srv.start()
+    try {
+      val base = s"http://localhost:$port/api/temperature/aggregate/count"
+      get(s"$base/history?geohashes=u155&from=1704067200000&to=1704153600000")
+      get(s"$base/history?geohashes=u155&interval=1week&to=1704153600000")
+      get(s"$base/snapshot?ts=1704068100000&bbox=51.5,4.0,51.1,4.8")
+      assert(ranges.toArray.toSeq == Seq(
+        (1704067200000L, 1704153600000L),
+        (1704153600000L - 7 * 86400000L, 1704153600000L),
+        (1704067200000L, 1704067200000L)))
+    } finally srv.stop()
+  }
+
   test("error-body JSON escaping covers control characters, not just quotes") {
     // Spark exception text routinely carries newlines/tabs; RFC 8259
     // requires every char < 0x20 escaped or the error body is unparseable
@@ -155,7 +283,7 @@ class RestServerSpec extends SparkSpec {
     val entered = new CountDownLatch(1)
     val release = new CountDownLatch(1)
     val calls = new AtomicInteger(0)
-    val gated = new RestServer(() => {
+    val gated = new RestServer((_, _) => {
       if (calls.incrementAndGet() == 1) {
         entered.countDown()
         release.await(120, TimeUnit.SECONDS) // longer than get's read timeout

@@ -202,13 +202,29 @@ class SegmentStoreSpec extends SparkSpec {
     }
   }
 
+  /** Every parquet file under `root` is named by its newest manifest or
+    * lies in a dir that manifest retired: a failed commit left nothing
+    * behind that no sweep would delete. */
+  private def noStrays(root: String): Unit = {
+    val m = manifest(root).get
+    val named = m.live.map(_.path).toSet
+    Files.walk(Paths.get(root)).iterator().asScala
+      .map(f => Paths.get(root).relativize(f).toString)
+      .filter(_.endsWith(".parquet"))
+      .foreach { rel =>
+        assert(named(rel) || m.retired.exists(d => rel.startsWith(s"$d/")),
+          s"${m.seq}: $rel is neither live nor retired")
+      }
+  }
+
   /**
    * Interject `appendAt` at every write step of `compact` on a fresh copy
    * of `template/sub` until the compaction makes no more steps. Each case
    * must end with the compaction failing loudly and the store reading
    * `expected` (base + append), or with the compaction done and the fold
-   * reading `expected`; every manifest names only existing files, and a
-   * rerun of the compaction after a failure converges to `expected`.
+   * reading `expected`; every manifest names only existing files, a
+   * failed compaction leaves no parquet file the newest manifest neither
+   * names nor retired, and a rerun of it converges to `expected`.
    * Returns the number of interjected steps and how many of them failed
    * the compaction.
    */
@@ -232,6 +248,7 @@ class SegmentStoreSpec extends SparkSpec {
           manifestsWhole(root)
           if (result.isFailure) {
             failed += 1
+            noStrays(root)
             compact(root)
             assert(read(root) == expected, s"step $n: a rerun did not converge")
             manifestsWhole(root)

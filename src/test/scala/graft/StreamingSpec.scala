@@ -136,8 +136,7 @@ class StreamingSpec extends SparkSpec {
     val batch = Seq(("u155mz", "2024-01-01 00:00:00", "2024-01-01 01:00:00", 2L, 40.0, 20.0))
       .toDF("key", "ws", "we", "count", "sum", "avg")
       .select($"key", to_timestamp($"ws").as("window_start"),
-        to_timestamp($"we").as("window_end"), $"count", $"sum", $"avg",
-        to_date(to_timestamp($"ws")).as("window_day"))
+        to_timestamp($"we").as("window_end"), $"count", $"sum", $"avg")
     StreamingPipeline.upsertBatch(batch, dir)
     StreamingPipeline.upsertBatch(batch, dir) // replay
     val t = StreamingPipeline.servingView(spark, dir).collect()
@@ -191,8 +190,7 @@ class StreamingSpec extends SparkSpec {
     Seq((key, ws, we, cnt, sum, sum / cnt))
       .toDF("key", "ws", "we", "count", "sum", "avg")
       .select($"key", to_timestamp($"ws").as("window_start"),
-        to_timestamp($"we").as("window_end"), $"count", $"sum", $"avg",
-        to_date(to_timestamp($"ws")).as("window_day"))
+        to_timestamp($"we").as("window_end"), $"count", $"sum", $"avg")
   }
 
   /** A view's rows as sorted strings, for exact comparisons. */
@@ -376,8 +374,7 @@ class StreamingSpec extends SparkSpec {
       (s"k$i", "2024-01-01 00:00:00", "2024-01-01 01:00:00", 1L, i.toDouble, i.toDouble)
     }.toDF("key", "ws", "we", "count", "sum", "avg")
       .select($"key", to_timestamp($"ws").as("window_start"),
-        to_timestamp($"we").as("window_end"), $"count", $"sum", $"avg",
-        to_date(to_timestamp($"ws")).as("window_day"))
+        to_timestamp($"we").as("window_end"), $"count", $"sum", $"avg")
     val d1 = Files.createTempDirectory("serve7a").toString
     StreamingPipeline.upsertBatch(wide, d1)
     def parquets(d: String) = viewFiles(d)("2024-01-01").length
@@ -397,7 +394,7 @@ class StreamingSpec extends SparkSpec {
       val cells = (0 until 200).map(i => (s"k$i", s"$day 00:00:00")).toDF("key", "ws")
         .select($"key", to_timestamp($"ws").as("window_start"),
           to_timestamp($"ws").as("window_end"), lit(1L).as("count"), lit(1.0).as("sum"),
-          lit(1.0).as("avg"), to_date(to_timestamp($"ws")).as("window_day"))
+          lit(1.0).as("avg"))
       StreamingPipeline.upsertBatch(cells, dir)
     }
     // more files than spark.sql.sources.parallelPartitionDiscovery.threshold
@@ -459,7 +456,7 @@ class StreamingSpec extends SparkSpec {
           timestamp_millis(lit(ms)).as("window_start"),
           timestamp_millis(lit(ms + H)).as("window_end"),
           lit(i + 1L).as("count"), lit(10.0 * i).as("sum"), lit(10.0 * i / (i + 1)).as("avg"))
-      }.reduce(_ union _).withColumn("window_day", to_date($"window_start"))
+      }.reduce(_ union _)
       StreamingPipeline.upsertBatch(cells, dir)
     }
     def inZone(tz: String): SparkSession = {
@@ -490,7 +487,7 @@ class StreamingSpec extends SparkSpec {
     assert(answers(spark, utcDir, pruned = true) == reference)
 
     // the partition predicate reaches the scan, and a snapshot reads only
-    // the day files within one day of its hour
+    // its hour's day file
     val snap = QueryBuilders.snapshotByPrefixes(
       StreamingPipeline.servingView(spark, utcDir), "sum", Seq("u155"), jan2)
     snap.collect()
@@ -501,19 +498,25 @@ class StreamingSpec extends SparkSpec {
     assert(scans.head.toString.contains("PartitionFilters: [") &&
       scans.head.partitionFilters.exists(_.references.exists(_.name == "window_day")),
       scans.head.toString)
-    assert(scans.head.metrics("numFiles").value == 3) // 2024-01-01..03, not the far days
+    assert(scans.head.metrics("numFiles").value == 1) // 2024-01-02 only
+    // a view resolved for the hour selects that day's file in the manifest
+    assert(StreamingPipeline.servingView(spark, utcDir, jan2, jan2).inputFiles.length == 1)
 
-    // a reader in another zone: the day bounds do not depend on its zone
-    Seq("Pacific/Kiritimati", "Etc/GMT+12").foreach { tz =>
-      assert(answers(inZone(tz), utcDir, pruned = true) == reference, tz)
-    }
-    // a writer in another zone files the same instants under other days
-    // (23:00 UTC is the next day at +14, 00:00 UTC the previous day at -12);
-    // the one-day margin still finds every cell
-    Seq("Pacific/Kiritimati", "Etc/GMT+12").foreach { tz =>
-      val dir = Files.createTempDirectory("serve_prune_tz").toString
-      write(inZone(tz), dir)
-      assert(answers(spark, dir, pruned = true) == reference, tz)
+    // a writer in another zone files every instant under its UTC day
+    // (23:00 UTC would be the next day at +14, 00:00 UTC the previous day
+    // at -12), so a reader in any zone finds every cell in exactly the
+    // days of its range
+    val zones = Seq("UTC", "Pacific/Kiritimati", "Etc/GMT+12")
+    def days(dir: String) = StreamingPipeline.servingView(spark, dir).inputFiles.toSeq
+      .map("window_day=([0-9-]+)".r.findFirstMatchIn(_).get.group(1)).sorted
+    zones.foreach { writer =>
+      val dir =
+        if (writer == "UTC") utcDir
+        else { val d = Files.createTempDirectory("serve_prune_tz").toString; write(inZone(writer), d); d }
+      assert(days(dir) == days(utcDir), writer)
+      zones.foreach { reader =>
+        assert(answers(inZone(reader), dir, pruned = true) == reference, s"$writer -> $reader")
+      }
     }
   }
 
