@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.sql.Timestamp
-import java.time.{Instant, ZoneOffset, ZonedDateTime}
+import java.time.{Instant, LocalDate, ZoneOffset, ZonedDateTime}
 import java.time.temporal.ChronoUnit
 
 import org.apache.spark.sql.{Column, DataFrame}
@@ -78,6 +78,10 @@ object QueryBuilders {
   def truncateToHourMs(tsMs: Long): Long =
     Instant.ofEpochMilli(tsMs).truncatedTo(ChronoUnit.HOURS).toEpochMilli
 
+  /** The UTC date of epoch-ms: the serving table's `window_day` of a
+    * cell whose `window_start` is `ms`. */
+  def utcDay(ms: Long): LocalDate = Instant.ofEpochMilli(ms).atZone(ZoneOffset.UTC).toLocalDate
+
   private def tsLit(ms: Long): Column =
     lit(new Timestamp(ms)).cast("timestamp")
 
@@ -92,10 +96,7 @@ object QueryBuilders {
    */
   private def dayPruned(view: DataFrame, fromMs: Long, toMs: Long): DataFrame =
     if (!view.columns.contains("window_day")) view
-    else {
-      def utcDay(ms: Long) = Instant.ofEpochMilli(ms).atZone(ZoneOffset.UTC).toLocalDate
-      view.filter(col("window_day").between(lit(utcDay(fromMs)), lit(utcDay(toMs))))
-    }
+    else view.filter(col("window_day").between(lit(utcDay(fromMs)), lit(utcDay(toMs))))
 
   /**
    * History: aggregate time-series over `prefixes` within `[fromMs, toMs]`.

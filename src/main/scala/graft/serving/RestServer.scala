@@ -79,11 +79,9 @@ class RestServer(viewProvider: (Long, Long) => DataFrame, port: Int) {
     val to = params.get("to").flatMap(_.toLongOption).filter(_ > 0).getOrElse(now)
     val from = params.get("interval").filter(_.nonEmpty) match {
       case Some(iv) => QueryBuilders.fromForInterval(to, iv)
-      case None =>
-        val from = params.get("from").flatMap(_.toLongOption).filter(_ > 0).getOrElse(0L)
-        if (from >= to) throw QueryError(s"Invalid range: from $from >= to $to")
-        from
+      case None => params.get("from").flatMap(_.toLongOption).filter(_ > 0).getOrElse(0L)
     }
+    // history rejects from >= to
     val result = QueryBuilders.history(viewProvider(from, to), op, prefixes, from, to)
     // reference history columns: ["timestamp", op] with epoch-ms keys
     // (README.md:83-86)

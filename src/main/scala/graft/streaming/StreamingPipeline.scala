@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.time.{Instant, LocalDate, ZoneOffset}
+import java.time.LocalDate
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.network.util.JavaUtils
@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.operators.{AggCore, SegmentStore, SeqFiles}
+import graft.operators.{AggCore, QueryBuilders, SegmentStore, SeqFiles}
 
 /**
  * The reference's continuous ingestion topology (SURVEY.md §3.1), as
@@ -97,7 +97,8 @@ object StreamingPipeline {
       col("tempVal").as("value"))
 
   /** Continuous hourly aggregate with 24 h lateness tolerance (W3), with
-    * the day [[upsertBatch]] files each cell under. */
+    * the day [[upsertBatch]] files each cell under, for callers that group
+    * a batch by day (perfbench's traced ingest counts a batch's days). */
   def hourlyAgg(keyed: DataFrame): DataFrame =
     AggCore.hourlyView(keyed.withWatermark("ts", "24 hours"))
       .withColumn("window_day", windowDay)
@@ -106,9 +107,6 @@ object StreamingPipeline {
     * `to_date` would file one instant under another day in another zone. */
   private def windowDay =
     date_from_unix_date(floor(unix_seconds(col("window_start")) / 86400).cast("int"))
-
-  private def utcDay(ms: Long): LocalDate =
-    Instant.ofEpochMilli(ms).atZone(ZoneOffset.UTC).toLocalDate
 
   /**
    * Start the full pipeline writing to `tableDir` (parquet, partitioned by
@@ -257,7 +255,7 @@ object StreamingPipeline {
         s"servingView: $tableDir has no day partitions — every window_day " +
           "was expired by retainFrom (or nothing was ever upserted); " +
           "re-ingest or widen retention before serving")
-    val (first, last) = (utcDay(fromMs), utcDay(toMs))
+    val (first, last) = (QueryBuilders.utcDay(fromMs), QueryBuilders.utcDay(toMs))
     val selected = m.live.filter { e =>
       val d = LocalDate.parse(day(e))
       !d.isBefore(first) && !d.isAfter(last)

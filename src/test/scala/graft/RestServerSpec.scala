@@ -65,6 +65,9 @@ class RestServerSpec extends SparkSpec {
       val (code2, _) = get(s"http://localhost:$port/api/temperature/aggregate/avg/snapshot" +
         "?ts=1704068100000&bbox=bad")
       assert(code2 == 400)
+      val (code3, body3) = get(s"http://localhost:$port/api/temperature/aggregate/avg/history" +
+        "?geohashes=u155&from=5&to=2")
+      assert(code3 == 400 && body3.contains("Invalid range"), body3)
     } finally srv.stop()
   }
 
