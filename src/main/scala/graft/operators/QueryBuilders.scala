@@ -56,6 +56,9 @@ object QueryBuilders {
     ps
   }
 
+  def validateRange(fromMs: Long, toMs: Long): Unit =
+    if (fromMs >= toMs) throw QueryError(s"Invalid range: from $fromMs >= to $toMs")
+
   /**
    * Named-interval arithmetic anchored at `to` (epoch ms) — reference
    * `QueryingController.java:220-238`: 1day → −1 day, 1week → −7 days,
@@ -106,8 +109,8 @@ object QueryBuilders {
    * Plan shape: prefix+time range filters push into the view scan (and
    * prune day partitions, see [[dayPruned]]); one partial/final
    * hash-aggregate merges cells across prefixes (A2), with no exchange
-   * between the two when the view is one partition (a serving view that
-   * fits one split); the aggregated,
+   * between the two when the view is one partition (a small serving
+   * view, see `StreamingPipeline.OneTaskReadBytes`); the aggregated,
    * query-sized result is coalesced to one partition and sorted there —
    * no range exchange, no sampling job.
    */
@@ -115,7 +118,7 @@ object QueryBuilders {
               fromMs: Long, toMs: Long): DataFrame = {
     val o = validateOp(op)
     val ps = validatePrefixes(prefixes)
-    if (fromMs >= toMs) throw QueryError(s"Invalid range: from $fromMs >= to $toMs")
+    validateRange(fromMs, toMs)
     val filtered = dayPruned(view, fromMs, toMs)
       .filter(GeoFunctions.prefixPredicate(col("key"), ps))
       .filter(col("window_start").between(tsLit(fromMs), tsLit(toMs)))

@@ -81,7 +81,8 @@ class RestServer(viewProvider: (Long, Long) => DataFrame, port: Int) {
       case Some(iv) => QueryBuilders.fromForInterval(to, iv)
       case None => params.get("from").flatMap(_.toLongOption).filter(_ > 0).getOrElse(0L)
     }
-    // history rejects from >= to
+    // before the view: an inverted range is a 400 even with no table
+    QueryBuilders.validateRange(from, to)
     val result = QueryBuilders.history(viewProvider(from, to), op, prefixes, from, to)
     // reference history columns: ["timestamp", op] with epoch-ms keys
     // (README.md:83-86)
@@ -116,8 +117,9 @@ object RestServer {
     * same way, `querying/QueryingService.java:39`). Requests run
     * concurrently, and each reads exactly the UTC days its time range or
     * snapshot hour lies in, so a request's cost tracks the days it asks
-    * for, not the table's retention; a read that fits one split runs as
-    * one Spark job of one task. */
+    * for, not the table's retention; a read of at most
+    * [[graft.streaming.StreamingPipeline.OneTaskReadBytes]] runs as one
+    * Spark job of one task. */
   def live(spark: org.apache.spark.sql.SparkSession, tableDir: String,
            port: Int = 7070): RestServer =
     new RestServer(graft.streaming.StreamingPipeline.servingView(spark, tableDir, _, _), port)

@@ -69,6 +69,16 @@ class RestServerSpec extends SparkSpec {
         "?geohashes=u155&from=5&to=2")
       assert(code3 == 400 && body3.contains("Invalid range"), body3)
     } finally srv.stop()
+    // the range is checked before the view resolves: a live server over a
+    // table never committed to still answers an inverted range with 400
+    val none = java.nio.file.Files.createTempDirectory("serve_none").toString
+    val live = RestServer.live(spark, none, port = 0)
+    val livePort = live.start()
+    try {
+      val (code, body) = get(s"http://localhost:$livePort/api/temperature/aggregate/avg/history" +
+        "?geohashes=u155&from=5&to=2")
+      assert(code == 400 && body.contains("Invalid range"), body)
+    } finally { live.stop(); Gates.deleteTree(none) }
   }
 
   test("interval-form history works end to end") {
@@ -157,7 +167,7 @@ class RestServerSpec extends SparkSpec {
 
   test("a live history or snapshot request over a backfilled table runs as one " +
     "Spark job of one task with no exchange, its filters pushed into the scan; " +
-    "a read larger than one split keeps its exchange and answers the same bytes") {
+    "a read above OneTaskReadBytes keeps its exchange and answers the same bytes") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.Exchange
@@ -184,10 +194,10 @@ class RestServerSpec extends SparkSpec {
     val day2 = H0 + 24 * H
     val history = s"/api/temperature/aggregate/avg/history?geohashes=u155&from=$day2&to=${day2 + 23 * H}"
     val snapshot = s"/api/temperature/aggregate/sum/snapshot?ts=${day2 + 11 * H + 5}&bbox=51.5,4.0,51.1,4.8"
-    def serve(s: org.apache.spark.sql.SparkSession, path: String): (String, SparkPlan) = {
+    def serve(path: String, srv: RestServer = RestServer.live(spark, dir, port = 0),
+              oneTask: Boolean = true): (String, SparkPlan) = {
       plans.clear()
-      s.listenerManager.register(listener)
-      val srv = RestServer.live(s, dir, port = 0)
+      spark.listenerManager.register(listener)
       val port = srv.start()
       try {
         val ((code, body), jobs, tasks) = jobsAndTasks(get(s"http://localhost:$port$path"))
@@ -195,42 +205,51 @@ class RestServerSpec extends SparkSpec {
         val deadline = System.nanoTime() + 30000000000L
         while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
         assert(plans.size == 1, plans)
-        if (s eq spark) assert(jobs == 1 && tasks == 1, s"$path: $jobs jobs, $tasks tasks")
+        if (oneTask) assert(jobs == 1 && tasks == 1, s"$path: $jobs jobs, $tasks tasks")
         (body, plans.peek())
-      } finally { srv.stop(); s.listenerManager.unregister(listener) }
+      } finally { srv.stop(); spark.listenerManager.unregister(listener) }
     }
     // the final plan's nodes, inside an adaptive plan and its stages too
     val aqe = new AdaptiveSparkPlanHelper {}
     def exchanges(p: SparkPlan) = aqe.collect(p) { case e: Exchange => e }
 
     try {
-      val served = Seq(history, snapshot).map { path =>
-        val (body, plan) = serve(spark, path)
+      Seq(history, snapshot).foreach { path =>
+        val (body, plan) = serve(path)
         assert(body.contains("\"data\":[["), body)
         assert(exchanges(plan).isEmpty, s"$path:\n$plan")
         val pushed = aqe.collect(plan) { case s: FileSourceScanExec => s }.head.metadata("PushedFilters")
         assert(pushed.contains("GreaterThanOrEqual(key,u15") && pushed.contains("LessThan(key,u15") &&
           pushed.contains("(window_start,"), pushed)
-        body
       }
 
-      // the same requests in a session whose split is smaller than the
-      // day's files: Spark's distributed plan, the same answers
+      // a day larger than OneTaskReadBytes: Spark's split plan with its
+      // exchange, answering the same bytes as one task over the whole table
+      val big = H0 + 4 * 24 * H // 2024-01-05
+      StreamingPipeline.upsertBatch(spark.range(0L, 60000L).select(
+        concat(lit("u155"), lower(reverse(lpad(conv((col("id") % 30000).cast("string"), 10, 32), 4, "0")))).as("key"),
+        (lit(big / 1000) + (col("id") / 30000).cast("long") * 3600).cast("timestamp").as("window_start"),
+        (lit(big / 1000) + (col("id") / 30000).cast("long") * 3600 + 3600).cast("timestamp").as("window_end"),
+        (col("id") % 7 + 1).as("count"),
+        (rand(7) * 100).as("sum"))
+        .withColumn("avg", col("sum") / col("count")), dir)
       val m = SegmentStore.latest(SeqFiles.fs(spark, dir), dir).get
-      val dayBytes = m.live.filter(_.values.head == "2024-01-02").map(_.bytes).sum
-      val small = spark.newSession()
-      small.conf.set("spark.sql.files.maxPartitionBytes", (dayBytes - 1).toString)
-      Seq(history, snapshot).zip(served).foreach { case (path, body) =>
-        val (b, plan) = serve(small, path)
+      assert(m.live.filter(_.values.head == "2024-01-05").map(_.bytes).sum >
+        StreamingPipeline.OneTaskReadBytes)
+      Seq(s"/api/temperature/aggregate/avg/history?geohashes=u155&from=$big&to=${big + H}",
+          s"/api/temperature/aggregate/sum/snapshot?ts=${big + H + 5}&bbox=51.5,4.0,51.1,4.8").foreach { path =>
+        val (body, plan) = serve(path, oneTask = false)
+        assert(body.contains("\"data\":[["), body)
         assert(exchanges(plan).nonEmpty, s"$path:\n$plan")
-        assert(b == body)
+        val whole = new RestServer(StreamingPipeline.servingView(spark, dir).coalesce(1), 0)
+        assert(serve(path, whole, oneTask = false)._1 == body)
       }
 
       // a range or hour with no live day: an empty answer, not an error
       val far = H0 + 30 * 24 * H
       Seq(s"/api/temperature/aggregate/count/history?geohashes=u155&from=$far&to=${far + H}",
           s"/api/temperature/aggregate/count/snapshot?ts=$far&bbox=51.5,4.0,51.1,4.8").foreach { path =>
-        val (body, _) = serve(spark, path)
+        val (body, _) = serve(path)
         assert(body.contains("\"data\":[]"), body)
       }
     } finally Gates.deleteTree(dir)
