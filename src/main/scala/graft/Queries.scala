@@ -378,11 +378,10 @@ private[graft] object Queries {
       // batch serving: three queries answered by ONE pruned postings scan
       // over the union of their terms; per-query top-10 via the heap-based
       // TopKPerKey physical operator
-      import s.implicits._
       val qs = Seq(
         (1L, Seq("vector", "stream", "hash")),
         (2L, Seq("data", "merge")),
-        (3L, Seq("window", "stream"))).toDF("query_id", "terms")
+        (3L, Seq("window", "stream")))
       TextAnalysis.bm25QueryIndexBatch(s, AnnArtifacts.lexicalRoot(s, dir), qs, k = 10)
     }),
 

@@ -19,9 +19,6 @@ import graft.geo.Geohash
  */
 object GeoFunctions {
 
-  /** (lat, lon, length) → geohash string. */
-  val geohashEncodeUdf = udf((lat: Double, lon: Double, len: Int) => Geohash.encode(lat, lon, len))
-
   /** geohash → struct(lat, lon) of the cell center. */
   val geohashDecodeUdf = udf((h: String) => {
     val (lat, lon) = Geohash.decodeCenter(h)
@@ -37,10 +34,6 @@ object GeoFunctions {
     * extension) — the ingest hot path must not cross a UDF boundary. */
   def geohash_encode(lat: Column, lon: Column, length: Column): Column =
     call_function("geohash_encode", lat, lon, length)
-
-  /** UDF fallback for sessions without the function registry entry. */
-  def geohash_encode_udf(lat: Column, lon: Column, length: Column): Column =
-    geohashEncodeUdf(lat, lon, length)
 
   /**
    * Driver-side bbox → covering geohash prefixes (N, W, S, E).

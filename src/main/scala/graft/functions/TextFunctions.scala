@@ -32,43 +32,17 @@ object TextFunctions {
     size(filter(split(lower(text), "(?<=[^a-z0-9])|(?=[^a-z0-9])"),
       t => t =!= "" && t =!= " "))
 
-  private val shinglesUdf = udf { (text: String, n: Int) =>
-    if (text == null) Array.empty[String]
-    else {
-      val toks = text.trim.toLowerCase.split("\\s+")
-      if (toks.length < n) Array.empty[String]
-      else {
-        val out = new Array[String](toks.length - n + 1)
-        var i = 0
-        while (i < out.length) {
-          val sb = new java.lang.StringBuilder(32)
-          var j = 0
-          while (j < n) { if (j > 0) sb.append(' '); sb.append(toks(i + j)); j += 1 }
-          out(i) = sb.toString
-          i += 1
-        }
-        out
-      }
-    }
-  }
-
   /** Word n-gram shingles: array of `n`-token windows joined by single
     * spaces; empty array when fewer than n tokens (null text too — matching
     * the legacy UDF contract, hence the coalesce). Native codegen'd
     * expression ([[graft.plans.WordShingles]]): one byte pass over the
     * UTF8String, zero String allocation, no UDF conversion boundary — this
     * is the per-document inner loop of every dedup scan. TextExprSpec pins
-    * row-for-row equality with [[shingles_udf]]. */
+    * row-for-row equality with the Scala-UDF baseline. */
   def shingles(text: Column, n: Int): Column =
     coalesce(
       toCol(graft.plans.WordShingles(toExpr(text), toExpr(lit(n)))),
       array().cast("array<string>"))
-
-  /** Legacy Scala-UDF variant of [[shingles]] (parity baseline / A-B bench).
-    * The equivalent sequence+transform+slice+concat_ws higher-order stack
-    * measured ~1 ms/doc — ~100× this UDF; the native expression above beats
-    * both. */
-  def shingles_udf(text: Column, n: Int): Column = shinglesUdf(text, lit(n))
 
   /** Content-defined chunk spans (windowed-Gear CDC): array of
     * (start, len) BYTE offsets into the UTF-8 encoding, boundaries where
@@ -100,14 +74,6 @@ object TextFunctions {
           i => s.substr(i, lit(n))))
   }
 
-  /** splitmix64 sequence — deterministic 64-bit mixing constants. */
-  private def mixConstant(i: Int): Long = {
-    var z = i.toLong * 0x9E3779B97F4A7C15L + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
   /**
    * MinHash signature over a set of string shingles: `numHashes` independent
    * min-hash values. Each shingle is string-hashed ONCE (xxhash64, the
@@ -121,7 +87,7 @@ object TextFunctions {
    *
    * Native codegen'd expression ([[graft.plans.MinHashSignature]]): ONE pass
    * over the shingle array instead of `numHashes` interpreted higher-order
-   * traversals (the legacy [[minHashSignature_hof]] did 32 × transform +
+   * traversals (the higher-order formulation did 32 × transform +
    * array_min). Null/empty input → all-null signature, matching
    * `array_min(empty) = null` in the HOF formulation (the coalesce pins the
    * null-input edge; callers filter `size(sh) > 0` anyway).
@@ -131,45 +97,16 @@ object TextFunctions {
       toCol(graft.plans.MinHashSignature(toExpr(shingleArr), toExpr(lit(numHashes)))),
       array((0 until numHashes).map(_ => lit(null).cast("long")): _*))
 
-  /** Legacy higher-order-function variant of [[minHashSignature]] (parity
-    * baseline / A-B bench). */
-  def minHashSignature_hof(shingleArr: Column, numHashes: Int): Column = {
-    val base = transform(shingleArr, s => xxhash64(s))
-    array((0 until numHashes).map { i =>
-      array_min(transform(base, h => h.bitwiseXOR(lit(mixConstant(i)))))
-    }: _*)
-  }
-
-  private val simHashVoteUdf = udf { hs: Seq[Long] =>
-    // bit b of result = 1 iff (# tokens with bit b set) * 2 > n
-    val counts = new Array[Int](64)
-    hs.foreach { h =>
-      var b = 0
-      while (b < 64) { counts(b) += ((h >>> b) & 1L).toInt; b += 1 }
-    }
-    val n = hs.length
-    var out = 0L
-    var b = 0
-    while (b < 64) { if (counts(b) * 2 > n) out |= (1L << b); b += 1 }
-    out
-  }
-
   /**
    * 64-bit SimHash over tokens: per bit position, majority vote of the
    * tokens' xxhash64 bits. Native codegen'd expression
    * ([[graft.plans.SimHash64]]): hashes + votes in one pass over the token
    * array — no per-row UDF boundary and no intermediate hash array (the
-   * legacy [[simHash64_udf]] paid both). Empty array → 0L (identical);
+   * Scala-UDF formulation paid both). Empty array → 0L (identical);
    * null array → null (the legacy path NPE'd — strictly better).
    */
   def simHash64(tokensArr: Column): Column =
     toCol(graft.plans.SimHash64(toExpr(tokensArr)))
-
-  /** Legacy transform+vote-UDF variant of [[simHash64]] (parity baseline /
-    * A-B bench; a 64-term Catalyst expression tree was also tried — blew up
-    * codegen size and ran ~50× slower than the UDF). */
-  def simHash64_udf(tokensArr: Column): Column =
-    simHashVoteUdf(transform(tokensArr, t => xxhash64(t)))
 
   /** Hamming distance between two 64-bit simhashes: bit_count(a XOR b). */
   def hamming64(a: Column, b: Column): Column =

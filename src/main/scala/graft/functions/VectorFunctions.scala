@@ -8,57 +8,24 @@ import org.apache.spark.sql.functions._
  * (TESTDATA.md `embeddings.parquet`) — evaluated per-row on executors, no
  * driver involvement.
  *
- * Implementation: plain Scala UDFs over the float arrays. The equivalent
+ * Implementation: native codegen'd Catalyst expressions (`graft.plans`)
+ * running a primitive loop over the float arrays. The equivalent
  * `zip_with`/`aggregate` higher-order expressions measured ~50× slower (per-
- * element expression interpretation + array allocation per row); a UDF doing
- * a primitive loop is the pragmatic hot path. Arithmetic is promoted to
+ * element expression interpretation + array allocation per row) than even
+ * a Scala UDF doing that loop. Arithmetic is promoted to
  * DOUBLE (float32 inputs are exact in float64) and accumulated left-to-right
  * in ascending index order, so results are bit-reproducible across engines —
  * required for DuckDB-oracle parity and stable top-k ranking.
  */
 object VectorFunctions {
 
-  private val dotUdf = udf { (a: Array[Float], b: Array[Float]) =>
-    val n = math.min(a.length, b.length)
-    var s = 0.0
-    var i = 0
-    while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-    s
-  }
-
-  private val norm2SqUdf = udf { a: Array[Float] =>
-    var s = 0.0
-    var i = 0
-    while (i < a.length) { val x = a(i).toDouble; s += x * x; i += 1 }
-    s
-  }
-
-  private val cosineUdf = udf { (a: Array[Float], b: Array[Float]) =>
-    val n = math.min(a.length, b.length)
-    var d = 0.0
-    var i = 0
-    while (i < n) { d += a(i).toDouble * b(i).toDouble; i += 1 }
-    var na = 0.0
-    i = 0
-    while (i < a.length) { val x = a(i).toDouble; na += x * x; i += 1 }
-    var nb = 0.0
-    i = 0
-    while (i < b.length) { val x = b(i).toDouble; nb += x * x; i += 1 }
-    val denom = math.sqrt(na) * math.sqrt(nb)
-    if (denom == 0.0) 0.0 else d / denom
-  }
-
   import org.apache.spark.sql.graftshim.GraftPlanBridge.{column => toCol, expr => toExpr}
 
   /** Σ aᵢ·bᵢ, accumulated sequentially (ascending i) in double.
     * Native codegen'd Catalyst expression ([[graft.plans.VecDot]]) reading
-    * ArrayData in place — no UDF conversion/allocation per row. Identical
-    * arithmetic to [[dotUdf]] (kept for A/B benching). */
+    * ArrayData in place — no UDF conversion/allocation per row. */
   def dot(a: Column, b: Column): Column =
     toCol(graft.plans.VecDot(toExpr(a), toExpr(b)))
-
-  /** UDF variant of [[dot]] (conversion-boundary baseline). */
-  def dot_udf(a: Column, b: Column): Column = dotUdf(a, b)
 
   /** Σ aᵢ² (sequential), native expression. */
   def norm2Sq(a: Column): Column = toCol(graft.plans.VecNorm2Sq(toExpr(a)))
@@ -82,9 +49,6 @@ object VectorFunctions {
     * Native codegen'd expression ([[graft.plans.VecCosine]]). */
   def cosine(a: Column, b: Column): Column =
     toCol(graft.plans.VecCosine(toExpr(a), toExpr(b)))
-
-  /** UDF variant of [[cosine]] (conversion-boundary baseline). */
-  def cosine_udf(a: Column, b: Column): Column = cosineUdf(a, b)
 
   /** Indices of the `k` centroids nearest to `v` by cosine (desc, ties →
     * lower index). `cents` must be a literal array<array<float>> column
@@ -114,8 +78,8 @@ object VectorFunctions {
     z ^ (z >>> 31)
   }
 
-  /** The splitmix64-derived ±1 hyperplane table shared by [[srpBucket]] and
-    * [[srpBucket_udf]] — built once at plan time, shipped as a literal.
+  /** The splitmix64-derived ±1 hyperplane table of [[srpBucket]] — built
+    * once at plan time, shipped as a literal.
     * `private[graft]` so the ann_lsh_topk oracle builder can inline the
     * exact same table into its DuckDB replay. */
   private[graft] def srpSigns(nBits: Int, dim: Int, seed: Int): Array[Array[Double]] =
@@ -133,31 +97,11 @@ object VectorFunctions {
    * Native codegen'd expression ([[graft.plans.VecSrpBucket]]) with the sign
    * table as a literal — the bucket assigner runs once per corpus vector, so
    * no UDF conversion boundary in the scan. VectorExprSpec pins bit-equality
-   * with [[srpBucket_udf]].
+   * with a Scala-UDF baseline.
    */
   def srpBucket(v: Column, nBits: Int, dim: Int, seed: Int = 0): Column = {
     val signs = srpSigns(nBits, dim, seed)
     toCol(graft.plans.VecSrpBucket(
       toExpr(v), toExpr(typedLit(signs.map(_.toSeq).toSeq))))
-  }
-
-  /** Legacy Scala-UDF variant of [[srpBucket]] (parity baseline). */
-  def srpBucket_udf(v: Column, nBits: Int, dim: Int, seed: Int = 0): Column = {
-    val signs = srpSigns(nBits, dim, seed)
-    val f = udf { v: Array[Float] =>
-      var out = 0L
-      var b = 0
-      while (b < nBits) {
-        val row = signs(b)
-        val n = math.min(v.length, dim)
-        var proj = 0.0
-        var i = 0
-        while (i < n) { proj += v(i).toDouble * row(i); i += 1 }
-        if (proj >= 0) out |= (1L << b)
-        b += 1
-      }
-      out
-    }
-    f(v)
   }
 }

@@ -596,6 +596,10 @@ object Dedup {
         explode(array_distinct(TextFunctions.shingles(col(textCol), shingleN))).as("g"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
+      // fill the cache in one sequential pass: the df-count, the sizes and
+      // both join sides scan ex in concurrent stages, each of which would
+      // otherwise compute and store the same blocks
+      ex.count()
       val dfOk = ex.groupBy(col("g")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= maxDf).select(col("g"))
       val exf = ex.join(dfOk, "g")

@@ -261,13 +261,13 @@ object TextAnalysis {
    *
    * Scores are rounded to 6 decimals so ordering (and the DuckDB oracle
    * replay) is robust to double-summation order; ties break on `idCol`.
+   * Query terms are normalized by [[queryTokens]], as the index scorer's.
    */
   def bm25TopK(docs: DataFrame, queryTerms: Seq[String], k: Int,
                k1: Double = 1.2, b: Double = 0.75,
                idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    require(queryTerms.nonEmpty, "bm25TopK: queryTerms must be non-empty")
     require(k > 0, "bm25TopK: k must be positive")
-    val terms = queryTerms.map(_.trim.toLowerCase).distinct
+    val terms = queryTokens(queryTerms)
     val toks = docs
       .select(col(idCol), explode(TextFunctions.tokens(col(textCol))).as("token"))
       .filter(col("token") =!= "")
@@ -834,102 +834,48 @@ object TextAnalysis {
 
   /**
    * Answer a BM25 top-k query from a [[saveLexicalIndex]] artifact (plus any
-   * [[appendLexicalIndex]] segments). Same arithmetic, literal for literal,
-   * as [[bm25TopK]] — the two paths return row-identical results
-   * (spec-pinned) — but the only data touched is the segment-count-sized
-   * stats table and the query terms' postings/termstats buckets: the bucket
-   * ids land on the partition column as a static isin, so the scans prune to
-   * ≤ |queryTerms| of the nBuckets directories.
+   * [[appendLexicalIndex]] segments): a batch of one through
+   * [[bm25QueryIndexBatch]], projected to (doc_id, score) in rank order.
+   * Row-identical to [[bm25TopK]] over the indexed corpus (spec-pinned).
    */
   def bm25QueryIndex(spark: SparkSession, path: String, queryTerms: Seq[String],
-                     k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(queryTerms.nonEmpty, "bm25QueryIndex: queryTerms must be non-empty")
-    require(k > 0, "bm25QueryIndex: k must be positive")
-    val terms = queryTerms.map(_.trim.toLowerCase).distinct
-    val m = lexManifest(spark, path)
-    val (nDocs, avgdl, nBuckets) = lexicalStats(spark, path, m)
-    val bucketIds = termBuckets(terms, nBuckets)
-    val postings = lexTable(spark, path, m.live, "post")
-      .where(col("bucket").isin(bucketIds: _*) && col("token").isin(terms: _*))
-    val num = col("tf") * lit(k1 + 1.0)
-    val den = col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl))
-    val idf = log((lit(nDocs) - col("dfq") + lit(0.5)) / (col("dfq") + lit(0.5)) + lit(1.0))
-    postings.join(broadcast(memoDfq(spark, path, m, terms, bucketIds)), "token")
-      .select(col("doc_id"), (idf * num / den).as("s"))
-      .groupBy(col("doc_id"))
-      .agg(round(sum(col("s")), 6).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-  }
+                     k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    bm25QueryIndexBatch(spark, path, Seq((0L, queryTerms)), k, k1, b)
+      .select(col("doc_id"), col("score"))
 
   /**
-   * Batch BM25 serving: answer a whole batch of queries with ONE pruned
-   * postings scan over the union of their terms (production retrieval
-   * serves batches — the ANN paths already do). `queries` carries
-   * (`queryIdCol`, `termsCol`: array<string>); terms are trimmed/lowercased
-   * like [[bm25TopK]]. The per-(query, doc) score is the same literal
-   * arithmetic as [[bm25QueryIndex]] — a query's rows in the batch result
-   * are row-identical to serving it alone (spec-pinned) — and the per-query
-   * top-k runs on the heap-based [[graft.plans.TopK.perKey]] physical
-   * operator, not a full sort. Output: (query_id, doc_id, score, rnk),
-   * rnk 1..k per query.
+   * BM25 serving from a [[saveLexicalIndex]] artifact (plus any
+   * [[appendLexicalIndex]] segments) — the one scorer over a lexical
+   * index: a batch of (query_id, terms) answered with ONE pruned postings
+   * scan over the union of their terms. Terms are normalized by
+   * [[queryTokens]]; a query with no servable term contributes no rows.
+   * The score is the same literal arithmetic as [[bm25TopK]] (spec-pinned
+   * row-identical), and the per-query top-k runs on the heap-based
+   * [[graft.plans.TopK.perKey]] physical operator, not a full sort.
+   * Output: (query_id, doc_id, score, rnk), rnk 1..k per query, ordered by
+   * (query_id, rnk).
    *
-   * Scale shape: the union term list is collected (bounded by the batch's
-   * total query terms — serving batches are small by contract) and becomes
-   * static partition-pruning literals; the query↔term map and summed dfq
-   * sidecar ride broadcasts; the one shuffle is the (query_id, doc_id)
-   * score aggregation, proportional to matching postings × queries sharing
-   * the term, not to the corpus.
+   * The batch is driver-resident (serving batches are small by contract):
+   * the (query, term) pairs become a broadcast local relation, the union
+   * term list becomes static partition-pruning literals, and with
+   * [[lexicalStats]] memoized and [[termBuckets]] driver-side, a call on
+   * an index commit already seen runs ONE Spark job, the scoring scan.
+   * The one shuffle that scales is the (query_id, doc_id) score
+   * aggregation, proportional to matching postings × queries sharing the
+   * term, not to the corpus; the result (≤ queries × k rows) is ordered in
+   * one task.
+   *
+   * The index is resolved by path inside the call, so an append, save or
+   * compaction is served by the next call.
    */
-  def bm25QueryIndexBatch(spark: SparkSession, path: String, queries: DataFrame,
-                          k: Int, k1: Double = 1.2, b: Double = 0.75,
-                          queryIdCol: String = "query_id",
-                          termsCol: String = "terms"): DataFrame = {
+  def bm25QueryIndexBatch(spark: SparkSession, path: String,
+                          queries: Seq[(Long, Seq[String])], k: Int,
+                          k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k > 0, "bm25QueryIndexBatch: k must be positive")
-    val qt = queries
-      .select(col(queryIdCol).as("query_id"), explode(col(termsCol)).as("raw"))
-      .select(col("query_id"), trim(lower(col("raw"))).as("token"))
-      .filter(col("token") =!= "").distinct()
-    val terms = qt.select(col("token")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    scoreBatch(spark, path, qt, terms, k, k1, b)
-  }
-
-  /**
-   * [[bm25QueryIndexBatch]] for a DRIVER-RESIDENT query batch — the
-   * streaming serving path ([[graft.streaming.StreamingLexicalServing]])
-   * collects each micro-batch (serving batches are small by contract) and
-   * calls this: the (query, term) pairs become a local relation, term
-   * normalization runs through the same `UTF8String` trim/lowercase the
-   * SQL expressions apply, and with [[lexicalStats]] memoized and
-   * [[termBuckets]] driver-side the ONLY Spark job per call is the pruned
-   * scoring scan itself. Row-identical to the DataFrame path by
-   * construction (shared [[scoreBatch]]; spec-pinned).
-   */
-  def bm25QueryIndexBatchLocal(spark: SparkSession, path: String,
-                               queries: Seq[(Long, Seq[String])], k: Int,
-                               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(k > 0, "bm25QueryIndexBatchLocal: k must be positive")
     import spark.implicits._
-    val qt = queries.flatMap { case (qid, terms) =>
-      Option(terms).getOrElse(Seq.empty).filter(_ != null).map { raw =>
-        // exact parity with the SQL trim(lower(raw)) the DataFrame path runs
-        val t = org.apache.spark.unsafe.types.UTF8String.fromString(raw)
-          .trim().toLowerCase().toString
-        (qid, t)
-      }.filter(_._2.nonEmpty)
-    }.distinct
-    val terms = qt.map(_._2).distinct
-    scoreBatch(spark, path, qt.toDF("query_id", "token"), terms, k, k1, b)
-  }
-
-  /** Shared scoring tail of the two batch-serving entry points: one pruned
-    * postings scan for the union of `terms`, broadcast query↔term fan-out,
-    * per-query heap top-k. */
-  private def scoreBatch(spark: SparkSession, path: String, qt: DataFrame,
-                         terms: Seq[String], k: Int, k1: Double, b: Double): DataFrame = {
-    require(terms.nonEmpty, "bm25QueryIndexBatch: no non-empty query terms")
     val m = lexManifest(spark, path)
+    val qt = queries.flatMap { case (qid, terms) => queryTokens(terms).map((qid, _)) }.distinct
+    val terms = qt.map(_._2).distinct
     val (nDocs, avgdl, nBuckets) = lexicalStats(spark, path, m)
     val bucketIds = termBuckets(terms, nBuckets)
     val postings = lexTable(spark, path, m.live, "post")
@@ -938,15 +884,32 @@ object TextAnalysis {
     val den = col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl))
     val idf = log((lit(nDocs) - col("dfq") + lit(0.5)) / (col("dfq") + lit(0.5)) + lit(1.0))
     val scored = postings
-      .join(broadcast(qt), "token") // fan each posting out to its queries
+      // fan each posting out to its queries
+      .join(broadcast(qt.toDF("query_id", "token")), "token")
       .join(broadcast(memoDfq(spark, path, m, terms, bucketIds)), "token")
       .select(col("query_id"), col("doc_id"), (idf * num / den).as("s"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(round(sum(col("s")), 6).as("score"))
     graft.plans.TopK.perKey(scored, k, Seq(col("query_id")),
         Seq(col("score").desc, col("doc_id").asc))
-      .orderBy(col("query_id").asc, col("rnk").asc)
+      .coalesce(1).sortWithinPartitions(col("query_id"), col("rnk"))
   }
+
+  /** Java `\s` runs at a term's ends, which the tokenizer's `\s+` split
+    * drops ([[TextFunctions.tokens]]). */
+  private val EdgeSpace = java.util.regex.Pattern.compile("^\\s+|\\s+$")
+
+  /** The index tokens a query's terms can match — the one query-term
+    * normalization of every BM25 path: each term lowercased by Spark's
+    * `lower` (the expression the tokenizer applies, so no JVM default
+    * locale enters), its edge whitespace stripped, null and empty terms
+    * dropped, duplicates collapsed. */
+  private[graft] def queryTokens(terms: Seq[String]): Seq[String] =
+    Option(terms).getOrElse(Nil).filter(_ != null).map { t =>
+      val lowered = org.apache.spark.sql.catalyst.expressions.Lower(
+        org.apache.spark.sql.catalyst.expressions.Literal(t)).eval().toString
+      EdgeSpace.matcher(lowered).replaceAll("")
+    }.filter(_.nonEmpty).distinct
 
   /**
    * Robust winnowing fingerprints (Schleimer, Wilkerson & Aiken,
@@ -1112,6 +1075,10 @@ object TextAnalysis {
       .select(col(idCol).as("id"), col("pos"), col("fp"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
+      // fill the cache in one sequential pass: the index window, the df cut
+      // and the join scan sel in concurrent stages, each of which would
+      // otherwise compute and store the same blocks
+      sel.count()
       val withIdx = sel.withColumn("sidx",
         row_number().over(Window.partitionBy(col("id")).orderBy(col("pos"))))
       val distinctFps = sel.select(col("id"), col("fp")).distinct()

@@ -21,7 +21,9 @@ import graft.serving.HttpEndpoint.{parseQuery, respond}
  *   GET /api/retrieve/lexical?terms=t1,t2[,…]&k=10
  *     → `{"columns":["doc_id","score"],"data":[[id,score],…],
  *        "metadata":{"metric":"retrieval"}}` — row-identical to
- *     [[TextAnalysis.bm25QueryIndex]] on the same artifact (spec-pinned).
+ *     [[TextAnalysis.bm25QueryIndex]] on the same artifact (spec-pinned):
+ *     the request is a batch of one through the one lexical scorer,
+ *     [[TextAnalysis.bm25QueryIndexBatch]], which normalizes the terms.
  *   GET /api/retrieve/ann?vector=v1,v2,…&k=5[&nprobe=8]
  *     → `{"columns":["rnk","vec_id","cos"],…}` — row-identical to
  *     [[Similarity.ivfPqQuery]] (`excludeSelf = false`: client queries live
@@ -119,8 +121,7 @@ class RetrievalServer(spark: SparkSession, lexicalPath: String,
     }
 
   private def lexical(params: Map[String, String]): String = {
-    val terms = params.getOrElse("terms", "").split(",").toSeq
-      .map(_.trim).filter(_.nonEmpty)
+    val terms = TextAnalysis.queryTokens(params.getOrElse("terms", "").split(",").toSeq)
     if (terms.isEmpty) throw QueryError("Missing or empty terms")
     val k = positiveInt(params, "k", 10)
     val rows = TextAnalysis.bm25QueryIndex(spark, lexicalPath, terms, k)
@@ -147,8 +148,7 @@ class RetrievalServer(spark: SparkSession, lexicalPath: String,
   }
 
   private def hybrid(params: Map[String, String]): String = {
-    val terms = params.getOrElse("terms", "").split(",").toSeq
-      .map(_.trim).filter(_.nonEmpty)
+    val terms = TextAnalysis.queryTokens(params.getOrElse("terms", "").split(",").toSeq)
     if (terms.isEmpty) throw QueryError("Missing or empty terms")
     val raw = params.getOrElse("vector", "").split(",").toSeq
       .map(_.trim).filter(_.nonEmpty)

@@ -12,23 +12,22 @@ import graft.operators.TextAnalysis
  * STATIC side of a stream-static composition, the query batches are the
  * stream — the lexical twin of [[StreamingAnnServing]].
  *
- * Every micro-batch answers through the EXACT batch scoring pipeline
- * ([[TextAnalysis.bm25QueryIndexBatchLocal]] — the driver-resident entry of
- * the same shared scorer as [[TextAnalysis.bm25QueryIndexBatch]]: one
- * pruned postings scan for the union of the batch's terms, heap-based
- * per-query top-k), so streaming answers are row-identical to batch
- * answers for the same query set by construction (gated in
- * StreamingLexicalSpec, not assumed). Per-query top-k needs a rank over
- * the candidate set, which append-mode streaming cannot express without
- * state; answering each micro-batch with the batch operator is the
- * standard serving shape and keeps ONE implementation of the scoring
- * semantics.
+ * Every micro-batch answers through the one lexical scorer
+ * ([[TextAnalysis.bm25QueryIndexBatch]]: one pruned postings scan for the
+ * union of the batch's terms, heap-based per-query top-k), so streaming
+ * answers are row-identical to batch answers for the same query set by
+ * construction (gated in StreamingLexicalSpec, not assumed). Per-query
+ * top-k needs a rank over the candidate set, which append-mode streaming
+ * cannot express without state; answering each micro-batch with the batch
+ * operator is the standard serving shape and keeps ONE implementation of
+ * the scoring semantics.
  *
  * Epoch cost discipline: the micro-batch is collected once (serving
  * batches are driver-small by contract) and the serve prelude — term
- * normalization, corpus stats (memoized on the index's manifest version),
- * bucket pruning ids (driver-side xxhash64) — runs without Spark jobs, so
- * each epoch spends its wall-clock on the one pruned scoring scan.
+ * normalization ([[TextAnalysis.queryTokens]]), corpus stats (memoized on
+ * the index's manifest version), bucket pruning ids (driver-side
+ * xxhash64) — runs without Spark jobs, so each epoch spends its
+ * wall-clock on the one pruned scoring scan.
  *
  * GROWING-INDEX semantics: the batch operator resolves the index's newest
  * manifest BY PATH inside each call, so every micro-batch reads the newest
@@ -45,12 +44,12 @@ object StreamingLexicalServing {
   /**
    * Serve BM25 top-k answers for a stream of (query_id, terms) rows from
    * the index at `indexPath`: each micro-batch's answer frame
-   * (query_id, doc_id, score, rnk) goes to `sink`. Queries with no
-   * non-blank term (empty/blank/null terms arrays) are DATA, not
-   * exceptions: they are dropped per batch, and a micro-batch left with
-   * nothing servable is skipped — one malformed client query must never
-   * take down serving for everyone (`sink` sees only epochs that carried
-   * servable queries).
+   * (query_id, doc_id, score, rnk) goes to `sink`. Queries with no term
+   * that [[TextAnalysis.queryTokens]] keeps (empty/blank/null terms
+   * arrays) are DATA, not exceptions: they contribute no rows, and a
+   * micro-batch left with nothing servable is skipped — one malformed
+   * client query must never take down serving for everyone (`sink` sees
+   * only epochs that carried servable queries).
    */
   def serveBm25FromPath(queryStream: DataFrame, indexPath: String, k: Int,
                         k1: Double = 1.2, b: Double = 0.75,
@@ -103,13 +102,9 @@ object StreamingLexicalServing {
           case r if !r.isNullAt(0) && !r.isNullAt(1) =>
             (r.getLong(0), r.getSeq[String](1))
         }.toSeq
-        // servable = at least one term that normalizes (same UTF8String
-        // trim/lowercase the scoring path applies) to a non-blank token
-        def nonBlank(t: String): Boolean = t != null &&
-          !org.apache.spark.unsafe.types.UTF8String.fromString(t)
-            .trim().toString.isEmpty
-        if (qs.exists(q => q._2 != null && q._2.exists(nonBlank)))
-          sink(TextAnalysis.bm25QueryIndexBatchLocal(batch.sparkSession,
+        // servable = at least one term the scorer's normalization keeps
+        if (qs.exists(q => TextAnalysis.queryTokens(q._2).nonEmpty))
+          sink(TextAnalysis.bm25QueryIndexBatch(batch.sparkSession,
             indexPath, qs, k, k1, b), epochId)
       }
       .start()

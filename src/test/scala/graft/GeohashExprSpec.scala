@@ -15,7 +15,7 @@ class GeohashExprSpec extends SparkSpec {
       .toDF("lat", "lon", "len")
     val rows = df.select(
       GeoFunctions.geohash_encode($"lat", $"lon", $"len").as("native"),
-      GeoFunctions.geohash_encode_udf($"lat", $"lon", $"len").as("viaUdf"),
+      Baselines.geohash_encode_udf($"lat", $"lon", $"len").as("viaUdf"),
       $"lat", $"lon", $"len").collect()
     rows.foreach { r =>
       val expect = Geohash.encode(r.getDouble(2), r.getDouble(3), r.getInt(4))

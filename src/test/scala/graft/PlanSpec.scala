@@ -280,13 +280,11 @@ class PlanSpec extends SparkSpec {
 
   test("batch BM25 serving: ONE pruned postings scan, heap top-k (no full sort)") {
     import graft.operators.TextAnalysis
-    import spark.implicits._
     val docs = Tables.documents(spark, Sf)
     val dir = java.nio.file.Files.createTempDirectory("lex_batch_prune").toString
     try {
       TextAnalysis.saveLexicalIndex(docs, dir, nBuckets = 16)
       val qs = Seq((1L, Seq("vector", "stream")), (2L, Seq("hash", "stream")))
-        .toDF("query_id", "terms")
       val served = TextAnalysis.bm25QueryIndexBatch(spark, dir, qs, k = 5)
       val plan = explainFormatted(served)
       // the whole batch reads the index store exactly once — the

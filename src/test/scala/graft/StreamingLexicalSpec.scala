@@ -35,7 +35,7 @@ class StreamingLexicalSpec extends SparkSpec {
         // epoch 0: answers must equal the batch operator on the same index
         val q0 = Seq(LexQuery(1L, Seq("spark", "merge")), LexQuery(2L, Seq("filter")))
         val expected0 = TextAnalysis.bm25QueryIndexBatch(spark, dir,
-          q0.toDF("query_id", "terms"), k = 3).collect().map(_.toSeq).toSet
+          q0.map(q => (q.query_id, q.terms)), k = 3).collect().map(_.toSeq).toSet
         stream.addData(q0: _*)
         q.processAllAvailable()
         assert(epochs.size == 1 && epochs(0) == expected0 && expected0.nonEmpty)
@@ -47,7 +47,7 @@ class StreamingLexicalSpec extends SparkSpec {
           Seq((6L, "zebra zebra spark"), (7L, "zebra row")).toDF("doc_id", "text"), dir)
         val q1 = Seq(LexQuery(3L, Seq("zebra")))
         val expected1 = TextAnalysis.bm25QueryIndexBatch(spark, dir,
-          q1.toDF("query_id", "terms"), k = 3).collect().map(_.toSeq).toSet
+          q1.map(q => (q.query_id, q.terms)), k = 3).collect().map(_.toSeq).toSet
         stream.addData(q1: _*)
         q.processAllAvailable()
         assert(epochs.size == 2 && epochs(1) == expected1)
@@ -96,7 +96,7 @@ class StreamingLexicalSpec extends SparkSpec {
       try {
         val qs = Seq(LexQuery(1L, Seq("spark")))
         def batch() = TextAnalysis.bm25QueryIndexBatch(spark,
-          root, qs.toDF("query_id", "terms"), k = 3).collect().map(_.toSeq).toSet
+          root, qs.map(q => (q.query_id, q.terms)), k = 3).collect().map(_.toSeq).toSet
         val expected0 = batch()
         stream.addData(qs: _*)
         q.processAllAvailable()
@@ -321,25 +321,34 @@ class StreamingLexicalSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val dir = Files.createTempDirectory("graft_lex_zero").toString
     try {
-      // 64 buckets × 2 components + 1 stat dir: over the 32-path threshold
-      // above which a listing index would launch a listing job
-      TextAnalysis.saveLexicalIndex(docs, dir, nBuckets = 64)
       FaultFs.install(spark)
-      def read() = FaultFs.readsAndJobs(spark)(TextAnalysis.bm25QueryIndex(spark,
-        FaultFs.uri(dir), Seq("spark", "w7", "v3"), k = 5).collect().toSeq)
-      val (cold, coldReads, coldJobs) = read()
-      val (warm, warmReads, warmJobs) = read()
-      assert(cold.nonEmpty && warm == cold)
-      Seq(coldReads, warmReads).foreach { reads =>
-        assert(reads.filter(_.startsWith("listStatus")) == Seq("listStatus _manifest"), reads)
+      // one query, and a batch of three: each reads its own index, so its
+      // first read finds both memos cold
+      val reads: Seq[String => Seq[org.apache.spark.sql.Row]] = Seq(
+        TextAnalysis.bm25QueryIndex(spark, _, Seq("spark", "w7", "v3"), k = 5)
+          .collect().toSeq,
+        TextAnalysis.bm25QueryIndexBatch(spark, _, Seq((1L, Seq("spark", "w7")),
+          (2L, Seq("v3")), (3L, Seq("w11", "v5", "spark"))), k = 5).collect().toSeq)
+      reads.zipWithIndex.foreach { case (serve, i) =>
+        val index = s"$dir/$i"
+        // 64 buckets × 2 components + 1 stat dir: over the 32-path threshold
+        // above which a listing index would launch a listing job
+        TextAnalysis.saveLexicalIndex(docs, index, nBuckets = 64)
+        def read() = FaultFs.readsAndJobs(spark)(serve(FaultFs.uri(index)))
+        val (cold, coldReads, coldJobs) = read()
+        val (warm, warmReads, warmJobs) = read()
+        assert(cold.nonEmpty && warm == cold)
+        Seq(coldReads, warmReads).foreach { reads =>
+          assert(reads.filter(_.startsWith("listStatus")) == Seq("listStatus _manifest"), reads)
+        }
+        Seq(coldJobs, warmJobs).foreach { js =>
+          assert(js.nonEmpty && js.forall(j => j._1 != "null" && !j._2.contains("Listing")), js)
+        }
+        // cold: the stats memo collect, the dfq memo collect and the scoring
+        // scan; warm (both memos hit on the same manifest): the scan alone
+        assert(coldJobs.map(_._1).distinct.length == 3, coldJobs)
+        assert(warmJobs.map(_._1).distinct.length == 1, warmJobs)
       }
-      Seq(coldJobs, warmJobs).foreach { js =>
-        assert(js.nonEmpty && js.forall(j => j._1 != "null" && !j._2.contains("Listing")), js)
-      }
-      // cold: the stats memo collect, the dfq memo collect and the scoring
-      // scan; warm (both memos hit on the same manifest): the scan alone
-      assert(coldJobs.map(_._1).distinct.length == 3, coldJobs)
-      assert(warmJobs.map(_._1).distinct.length == 1, warmJobs)
     } finally Gates.deleteTree(dir)
   }
 }

@@ -41,7 +41,7 @@ class TextExprSpec extends SparkSpec {
     for (n <- Seq(1, 2, 3, 5)) {
       val rows = edgeDf.select(
         TextFunctions.shingles(col("text"), n).as("native"),
-        TextFunctions.shingles_udf(col("text"), n).as("legacy")).collect()
+        Baselines.shingles_udf(col("text"), n).as("legacy")).collect()
       rows.zip(edgeTexts).foreach { case (r, t) =>
         assert(r.getSeq[String](0) == r.getSeq[String](1),
           s"n=$n text=${Option(t).map(_.take(40))}")
@@ -52,7 +52,7 @@ class TextExprSpec extends SparkSpec {
   test("word_shingles ≡ legacy UDF on the documents table") {
     val rows = Tables.documents(spark, Sf).select(
       TextFunctions.shingles(col("text"), 3).as("native"),
-      TextFunctions.shingles_udf(col("text"), 3).as("legacy")).collect()
+      Baselines.shingles_udf(col("text"), 3).as("legacy")).collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1)))
   }
@@ -62,14 +62,14 @@ class TextExprSpec extends SparkSpec {
       .select(array_distinct(TextFunctions.shingles(col("text"), 3)).as("sh"))
     val rows = sh.select(
       TextFunctions.minHashSignature(col("sh"), 32).as("native"),
-      TextFunctions.minHashSignature_hof(col("sh"), 32).as("legacy")).collect()
+      Baselines.minHashSignature_hof(col("sh"), 32).as("legacy")).collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getSeq[java.lang.Long](0) == r.getSeq[java.lang.Long](1)))
 
     // empty + null inputs: all-null signature both ways (array_min(empty)=null)
     val edge = Seq(Seq.empty[String], null).toDF("sh").select(
       TextFunctions.minHashSignature(col("sh"), 4).as("native"),
-      TextFunctions.minHashSignature_hof(col("sh"), 4).as("legacy")).collect()
+      Baselines.minHashSignature_hof(col("sh"), 4).as("legacy")).collect()
     edge.foreach { r =>
       assert(r.getSeq[java.lang.Long](0) == Seq(null, null, null, null))
       assert(r.getSeq[java.lang.Long](0) == r.getSeq[java.lang.Long](1))
@@ -81,7 +81,7 @@ class TextExprSpec extends SparkSpec {
       .select(TextFunctions.tokens(col("text")).as("t"))
       .select(
         TextFunctions.simHash64(col("t")).as("native"),
-        TextFunctions.simHash64_udf(col("t")).as("legacy")).collect()
+        Baselines.simHash64_udf(col("t")).as("legacy")).collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getLong(0) == r.getLong(1)))
 
@@ -94,7 +94,7 @@ class TextExprSpec extends SparkSpec {
     val df = Seq(Seq("a", null, "b")).toDF("sh")
     val r = df.select(
       TextFunctions.minHashSignature(col("sh"), 8).as("native"),
-      TextFunctions.minHashSignature_hof(col("sh"), 8).as("legacy")).head()
+      Baselines.minHashSignature_hof(col("sh"), 8).as("legacy")).head()
     assert(r.getSeq[java.lang.Long](0) == r.getSeq[java.lang.Long](1))
   }
 
@@ -129,7 +129,7 @@ class TextExprSpec extends SparkSpec {
     for (n <- Seq(1, 2, 3)) {
       val rows = df.select(
         TextFunctions.shingles(col("text"), n).as("native"),
-        TextFunctions.shingles_udf(col("text"), n).as("legacy"),
+        Baselines.shingles_udf(col("text"), n).as("legacy"),
         col("text")).collect()
       rows.foreach { r =>
         assert(r.getSeq[String](0) == r.getSeq[String](1),
@@ -141,9 +141,9 @@ class TextExprSpec extends SparkSpec {
         TextFunctions.tokens(col("text")).as("t"))
       .select(
         TextFunctions.minHashSignature(col("sh"), 16).as("sig_n"),
-        TextFunctions.minHashSignature_hof(col("sh"), 16).as("sig_l"),
+        Baselines.minHashSignature_hof(col("sh"), 16).as("sig_l"),
         TextFunctions.simHash64(col("t")).as("sim_n"),
-        TextFunctions.simHash64_udf(col("t")).as("sim_l")).collect()
+        Baselines.simHash64_udf(col("t")).as("sim_l")).collect()
     sigRows.foreach { r =>
       assert(r.getSeq[java.lang.Long](0) == r.getSeq[java.lang.Long](1))
       assert(r.getLong(2) == r.getLong(3))

@@ -184,23 +184,38 @@ class TextFunctionsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_lex_batch").toString
     try {
       TextAnalysis.saveLexicalIndex(docs, dir, nBuckets = 8)
+      // 40 is padded and mixed-case (normalized like the tokenizer, so
+      // it asks for spark and merge); 50 has no servable term
       val qs = Seq(
         (10L, Seq("spark", "merge")),
         (20L, Seq("filter")),
-        (30L, Seq("absent_term"))).toDF("query_id", "terms")
+        (30L, Seq("absent_term")),
+        (40L, Seq("\tSpark", "MERGE ")),
+        (50L, Seq(" ", "\t", "")))
       val batch = TextAnalysis.bm25QueryIndexBatch(spark, dir, qs, k = 3).collect()
-      qs.collect().foreach { q =>
-        val qid = q.getLong(0)
-        val alone = TextAnalysis
-          .bm25QueryIndex(spark, dir, q.getSeq[String](1), k = 3).collect().toSeq
-        val mine = batch.filter(_.getLong(0) == qid).sortBy(_.getInt(3))
-          .map(r => Row(r.get(1), r.get(2))).toSeq
-        assert(mine == alone.map(r => Row(r.get(0), r.get(1))),
-          s"query $qid diverges: $mine vs $alone")
+      def rowsOf(qid: Long) = batch.filter(_.getLong(0) == qid).sortBy(_.getInt(3))
+        .map(r => Row(r.get(1), r.get(2))).toSeq
+      qs.foreach { case (qid, terms) =>
+        val alone = TextAnalysis.bm25QueryIndex(spark, dir, terms, k = 3).collect().toSeq
+        assert(rowsOf(qid) == alone, s"query $qid diverges: ${rowsOf(qid)} vs $alone")
       }
-      // rnk is dense 1..n per query and the no-hit query is simply absent
-      assert(batch.filter(_.getLong(0) == 30L).isEmpty)
+      val direct = TextAnalysis.bm25TopK(docs, Seq("\tSpark", "MERGE "), k = 3).collect().toSeq
+      assert(rowsOf(40L) == direct && direct.nonEmpty)
+      assert(rowsOf(40L) == rowsOf(10L))
+      // rnk is dense 1..n per query; the no-hit and no-term queries are
+      // simply absent, and a batch of no-term queries answers empty
+      assert(rowsOf(30L).isEmpty && rowsOf(50L).isEmpty)
       assert(batch.filter(_.getLong(0) == 10L).map(_.getInt(3)).sorted.toSeq == Seq(1, 2, 3))
+      assert(TextAnalysis.bm25QueryIndexBatch(spark, dir, Seq((60L, Seq(" "))), k = 3)
+        .collect().isEmpty)
+      // the JVM's default locale does not enter: Java's toLowerCase under
+      // tr maps FILTER to fılter (dotless ı), which no index token holds
+      val locale = java.util.Locale.getDefault
+      val lowered = try {
+        java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+        TextAnalysis.queryTokens(Seq("FILTER"))
+      } finally java.util.Locale.setDefault(locale)
+      assert(lowered == Seq("filter"))
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(dir)).deleteRecursively()

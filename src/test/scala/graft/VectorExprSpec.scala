@@ -19,9 +19,9 @@ class VectorExprSpec extends SparkSpec {
   test("vec_dot / vec_cosine / vec_norm2sq match the UDF baselines bit-for-bit") {
     val out = pairs.select(
       VectorFunctions.dot(col("va"), col("vb")).as("d_native"),
-      VectorFunctions.dot_udf(col("va"), col("vb")).as("d_udf"),
+      Baselines.dot_udf(col("va"), col("vb")).as("d_udf"),
       VectorFunctions.cosine(col("va"), col("vb")).as("c_native"),
-      VectorFunctions.cosine_udf(col("va"), col("vb")).as("c_udf"),
+      Baselines.cosine_udf(col("va"), col("vb")).as("c_udf"),
       VectorFunctions.norm2Sq(col("va")).as("n_native")).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
@@ -65,7 +65,7 @@ class VectorExprSpec extends SparkSpec {
     for (seed <- Seq(0, 1, 7)) {
       val rows = e.select(
         VectorFunctions.srpBucket(col("embedding"), 12, 16, seed).as("native"),
-        VectorFunctions.srpBucket_udf(col("embedding"), 12, 16, seed).as("legacy"))
+        Baselines.srpBucket_udf(col("embedding"), 12, 16, seed).as("legacy"))
         .collect()
       assert(rows.nonEmpty)
       rows.foreach(r => assert(r.getLong(0) == r.getLong(1), s"seed=$seed"))
