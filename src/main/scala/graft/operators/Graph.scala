@@ -123,8 +123,9 @@ object Graph {
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val e = (if (edgesDistinct) e0 else e0.distinct())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
+    // both endpoints from ONE scan of e: a union of two scans runs two
+    // concurrent tasks that each compute and cache the same block
+    val nodes = e.select(explode(array(col("src"), col("dst"))).as("node"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -279,8 +280,9 @@ object Graph {
       else e0.distinct()
     val e = e1
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
+    // both endpoints from ONE scan of e: a union of two scans runs two
+    // concurrent tasks that each compute and cache the same block
+    val nodes = e.select(explode(array(col("src"), col("dst"))).as("node"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -398,7 +400,8 @@ object Graph {
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val deg = und.select(col("u").as("n")).union(und.select(col("v").as("n")))
+      // one scan of und, as for the node sets above
+      val deg = und.select(explode(array(col("u"), col("v"))).as("n"))
         .groupBy(col("n")).agg(count(lit(1)).as("d"))
         .localCheckpoint()
       val oriented = und
@@ -497,8 +500,8 @@ object Graph {
     }
     val e = (if (edgesDistinct) e0 else e0.distinct())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val graphNodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
+    // one scan of e, as in hits
+    val graphNodes = e.select(explode(array(col("src"), col("dst"))).as("node"))
       .distinct()
     val nodes = (seeds match {
       // seeds are a driver-small model-sized set (teleport targets); any

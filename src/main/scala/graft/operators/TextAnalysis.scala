@@ -792,27 +792,25 @@ object TextAnalysis {
     * freshness contract, spec-pinned). Entries are query-term-sized; the
     * map is cleared wholesale at [[StatsMemoCap]] like [[statsMemo]]. */
   private val dfqMemo = scala.collection.mutable.Map[
-    (String, Seq[String]), ((Long, Long), Array[(String, Long)])]()
+    (String, Seq[String]), ((Long, Long), Map[String, Long])]()
 
-  /** The pruned-dfq side of a scoring join, memoized: a LocalRelation of
-    * the collected (token, dfq) rows — row-identical to [[prunedDfq]] by
-    * construction (same aggregation, collected once per version). */
+  /** The pruned dfq of `terms`, memoized: token → dfq, equal to
+    * [[prunedDfq]] by construction (same aggregation, collected once per
+    * version). A term with no posting has no entry. */
   private def memoDfq(spark: SparkSession, path: String, m: SegmentStore.Manifest,
-                      terms: Seq[String], bucketIds: Seq[Int]): DataFrame = {
-    import spark.implicits._
+                      terms: Seq[String], bucketIds: Seq[Int]): Map[String, Long] = {
     val key = (path, terms.sorted)
-    val hit = dfqMemo.synchronized { dfqMemo.get(key) }
-      .collect { case (v, rows) if v == version(m) => rows }
-    val rows = hit.getOrElse {
-      val got = prunedDfq(spark, path, m, terms, bucketIds)
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-      dfqMemo.synchronized {
-        if (dfqMemo.size >= StatsMemoCap) dfqMemo.clear()
-        dfqMemo(key) = (version(m), got)
+    dfqMemo.synchronized { dfqMemo.get(key) }
+      .collect { case (v, dfq) if v == version(m) => dfq }
+      .getOrElse {
+        val got = prunedDfq(spark, path, m, terms, bucketIds)
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        dfqMemo.synchronized {
+          if (dfqMemo.size >= StatsMemoCap) dfqMemo.clear()
+          dfqMemo(key) = (version(m), got)
+        }
+        got
       }
-      got
-    }
-    rows.toSeq.toDF("token", "dfq")
   }
 
   /** Bucket ids for `terms`, computed DRIVER-SIDE: `pmod(xxhash64(term),
@@ -856,14 +854,14 @@ object TextAnalysis {
    * (query_id, rnk).
    *
    * The batch is driver-resident (serving batches are small by contract):
-   * the (query, term) pairs become a broadcast local relation, the union
-   * term list becomes static partition-pruning literals, and with
-   * [[lexicalStats]] memoized and [[termBuckets]] driver-side, a call on
-   * an index commit already seen runs ONE Spark job, the scoring scan.
-   * The one shuffle that scales is the (query_id, doc_id) score
-   * aggregation, proportional to matching postings × queries sharing the
-   * term, not to the corpus; the result (≤ queries × k rows) is ordered in
-   * one task.
+   * the term → query ids and term → dfq maps are plan literals, so the
+   * postings scan joins nothing, and the union term list becomes static
+   * partition-pruning literals. With [[lexicalStats]] and the dfq memoized
+   * and [[termBuckets]] driver-side, a call on an index commit already seen
+   * runs ONE Spark job, the scoring scan. The one shuffle that scales is
+   * the (query_id, doc_id) score aggregation, proportional to matching
+   * postings × queries sharing the term, not to the corpus; the result
+   * (≤ queries × k rows) is ordered in one task.
    *
    * The index is resolved by path inside the call, so an append, save or
    * compaction is served by the next call.
@@ -872,22 +870,24 @@ object TextAnalysis {
                           queries: Seq[(Long, Seq[String])], k: Int,
                           k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k > 0, "bm25QueryIndexBatch: k must be positive")
-    import spark.implicits._
     val m = lexManifest(spark, path)
-    val qt = queries.flatMap { case (qid, terms) => queryTokens(terms).map((qid, _)) }.distinct
-    val terms = qt.map(_._2).distinct
+    val queriesOf = queries
+      .flatMap { case (qid, terms) => queryTokens(terms).map(_ -> qid) }
+      .distinct.groupMap(_._1)(_._2)
+    val terms = queriesOf.keys.toSeq
     val (nDocs, avgdl, nBuckets) = lexicalStats(spark, path, m)
     val bucketIds = termBuckets(terms, nBuckets)
+    val dfqOf = memoDfq(spark, path, m, terms, bucketIds)
     val postings = lexTable(spark, path, m.live, "post")
-      .where(col("bucket").isin(bucketIds: _*) && col("token").isin(terms: _*))
+      .where(col("bucket").isin(bucketIds: _*) && col("token").isin(dfqOf.keys.toSeq: _*))
+    val dfq = element_at(typedLit(dfqOf), col("token"))
     val num = col("tf") * lit(k1 + 1.0)
     val den = col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl))
-    val idf = log((lit(nDocs) - col("dfq") + lit(0.5)) / (col("dfq") + lit(0.5)) + lit(1.0))
+    val idf = log((lit(nDocs) - dfq + lit(0.5)) / (dfq + lit(0.5)) + lit(1.0))
     val scored = postings
       // fan each posting out to its queries
-      .join(broadcast(qt.toDF("query_id", "token")), "token")
-      .join(broadcast(memoDfq(spark, path, m, terms, bucketIds)), "token")
-      .select(col("query_id"), col("doc_id"), (idf * num / den).as("s"))
+      .select(explode(element_at(typedLit(queriesOf), col("token"))).as("query_id"),
+        col("doc_id"), (idf * num / den).as("s"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(round(sum(col("s")), 6).as("score"))
     graft.plans.TopK.perKey(scored, k, Seq(col("query_id")),

@@ -270,8 +270,8 @@ class PlanSpec extends SparkSpec {
       val plan = explainFormatted(served)
       val partFilter = plan.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
       assert(partFilter.contains("bucket"), s"no bucket partition filter:\n$plan")
-      // the summed dfq sidecar joins as a BROADCAST, never a shuffle
-      assert(formattedPlan(served).contains("BroadcastHashJoin"), formattedPlan(served))
+      // the summed dfq sidecar is a plan literal: no join, so no shuffle
+      assert(!formattedPlan(served).contains("Join"), formattedPlan(served))
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(dir)).deleteRecursively()
