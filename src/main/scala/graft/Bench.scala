@@ -66,7 +66,7 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
-      // full engine extension stack (functions + TopK strategy + rewrite rule),
+      // engine extension stack (SQL functions + TopK strategy),
       // loaded the way a cluster deployment would
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .getOrCreate()

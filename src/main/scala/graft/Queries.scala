@@ -197,6 +197,8 @@ private[graft] object Queries {
     }),
 
     "topk_orders_per_priority" -> ((s, dir) => {
+      // the stock row_number Window: the baseline topk_custom_operator's
+      // heap operator is compared against
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("o_orderpriority"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)

@@ -12,7 +12,7 @@ object Smoke {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // full engine extension stack (functions + TopK strategy + rewrite rule),
+      // engine extension stack (SQL functions + TopK strategy),
       // loaded the way a cluster deployment would
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .getOrCreate()

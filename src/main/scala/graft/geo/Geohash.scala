@@ -191,8 +191,4 @@ object Geohash {
       Some(p.substring(0, i) + next)
     }
   }
-
-  /** Geohash prefix containment: cell(child) ⊆ cell(parent) iff
-    * child.startsWith(parent) — the spatial proxy the reference uses (F1/J3). */
-  def isWithin(child: String, parent: String): Boolean = child.startsWith(parent)
 }

@@ -473,14 +473,14 @@ object Curation {
    * ascending-id order rather than the A-Res distribution; rescale
    * weights into a sane range if that matters.
    *
-   * Scale shape: a narrow per-row key plus the same row_number-per-group
-   * filter every top-k here uses — [[graft.plans.TopKRewrite]] turns it
-   * into the heap-based sort-free operator when the extensions are loaded.
+   * Scale shape: a narrow per-row key (computed as a column, so the weight
+   * check runs on every row, a group of one included) and the heap-based
+   * sort-free per-group top-k ([[graft.plans.TopK.perKey]]) every ranked
+   * operator here uses.
    */
   def weightedSampleHash(docs: DataFrame, groupCol: String, weight: Column,
                          k: Int, idCol: String = "doc_id"): DataFrame = {
     require(k > 0, "k must be > 0")
-    import org.apache.spark.sql.expressions.Window
     // 13 hex chars = 52 bits (exact in a double); +1 shifts to (0, 2^52]
     val u = (conv(substring(md5(col(idCol).cast("string")), 1, 13), 16, 10)
       .cast("double") + 1.0) / 4503599627370496.0
@@ -490,11 +490,8 @@ object Curation {
     val wChecked = when(weight.isNull || isnan(weight) || weight <= 0.0,
       raise_error(concat(lit("weightedSampleHash: weight must be > 0, got "),
         coalesce(weight.cast("string"), lit("null"))))).otherwise(weight)
-    val key = round(pow(u, lit(1.0) / wChecked), 12)
-    val w = Window.partitionBy(col(groupCol)).orderBy(key.desc, col(idCol))
-    docs.withColumn("_wrn", row_number().over(w))
-      .filter(col("_wrn") <= k)
-      .drop("_wrn")
+    graft.plans.TopK.perKey(docs.withColumn("_wkey", round(pow(u, lit(1.0) / wChecked), 12)),
+      k, Seq(col(groupCol)), Seq(col("_wkey").desc, col(idCol))).drop("_wkey", "rnk")
   }
 
   /**

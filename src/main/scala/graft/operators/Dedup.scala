@@ -37,11 +37,11 @@ object Dedup {
       .groupBy(col("fp"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
-  /** Rows surviving exact dedup (the kept representatives). */
-  def exactDedupKept(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val w = Window.partitionBy(TextFunctions.fingerprint(col(textCol))).orderBy(col(idCol))
-    docs.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-  }
+  /** Rows surviving exact dedup (the kept representatives): the min
+    * `idCol` row per fingerprint, on the heap-based per-key top-k. */
+  def exactDedupKept(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    graft.plans.TopK.perKey(docs.withColumn("_fp", TextFunctions.fingerprint(col(textCol))),
+      1, Seq(col("_fp")), Seq(col(idCol))).drop("_fp", "rnk")
 
   /** [[exactDedupKept]] plus a `grp_n` column — the size of each
     * representative's duplicate group, counted in the SAME window pass

@@ -654,9 +654,4 @@ object Multimodal {
       }
     }
   }
-
-  /** Partition-friendly write shape: media tables should be written
-    * partitioned by kind and bucketed by id at scale. */
-  def repartitionForWrite(media: Dataset[MediaRecord], n: Int): DataFrame =
-    media.toDF().repartition(n, col("kind"), col("media_id"))
 }

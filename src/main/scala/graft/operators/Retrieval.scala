@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -58,10 +58,6 @@ object Retrieval {
   def ranked(scored: DataFrame, idCol: String, scoreCol: String): DataFrame =
     scored.withColumn("rnk",
       row_number().over(Window.orderBy(col(scoreCol).desc, col(idCol).asc)))
-
-  /** The RRF contribution of one rank — exposed for spec assertions. */
-  private[graft] def rrfTerm(rnk: Column, kRrf: Int): Column =
-    lit(1.0) / (lit(kRrf.toDouble) + rnk.cast("double"))
 
   /**
    * Character-TRIGRAM posting pairs of `lower(textCol)` — the classic

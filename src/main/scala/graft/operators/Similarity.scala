@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
@@ -31,19 +30,9 @@ object Similarity {
    * result set is fully deterministic (fp-noise-proof) across engines/plans.
    */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol).as("cid"), col(vecCol).as("cv"))
-    val q = queries.filter(VectorFunctions.isFiniteVec(col(vecCol))) // non-finite query -> no rows
-      .select(col(idCol).as("qid"), col(vecCol).as("qv"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("cid") =!= col("qid"))
-      .withColumn("cos", round(VectorFunctions.cosine(col("qv"), col("cv")), 6))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid").asc)
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("cid"), col("cos"))
-  }
+                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    exactTopK(corpus.select(col(idCol).as("cid"), col(vecCol).as("cv")),
+      queries, k, idCol, vecCol)
 
   /**
    * Exact-shape top-k over an SQ8-QUANTIZED corpus ([[Quantization]]): the
@@ -55,20 +44,40 @@ object Similarity {
    * dimension); gate `ann_sq8_recall` holds recall@5 vs the float baseline.
    */
   def quantizedTopK(corpusQ: DataFrame, queries: DataFrame, k: Int,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val c = corpusQ.select(col(idCol).as("cid"),
-      Quantization.dequantizeF(col("codes"), col("q_min"), col("q_scale")).as("cv"))
-    val q = queries.filter(VectorFunctions.isFiniteVec(col(vecCol))) // non-finite query -> no rows
-      .select(col(idCol).as("qid"), col(vecCol).as("qv"))
-    val scored = c.crossJoin(broadcast(q))
+                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    exactTopK(corpusQ.select(col(idCol).as("cid"),
+      Quantization.dequantizeF(col("codes"), col("q_min"), col("q_scale")).as("cv")),
+      queries, k, idCol, vecCol)
+
+  /** Cosine top-k of every finite query against every `(cid, cv)` corpus
+    * row but its own, the query side broadcast. */
+  private def exactTopK(c: DataFrame, queries: DataFrame, k: Int,
+                        idCol: String, vecCol: String): DataFrame =
+    topPerQuery(c.crossJoin(broadcast(finiteQueries(queries, idCol, vecCol)))
       .filter(col("cid") =!= col("qid"))
-      .withColumn("cos", round(VectorFunctions.cosine(col("qv"), col("cv")), 6))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid").asc)
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("cid"), col("cos"))
-  }
+      .withColumn("cos", round(VectorFunctions.cosine(col("qv"), col("cv")), 6)), k)
+
+  /** `(qid, qv)` of the queries with a finite vector: a non-finite query
+    * scores NaN, which sorts above every cosine, so it gets no rows. */
+  private def finiteQueries(queries: DataFrame, idCol: String, vecCol: String): DataFrame =
+    queries.filter(VectorFunctions.isFiniteVec(col(vecCol)))
+      .select(col(idCol).as("qid"), col(vecCol).as("qv"))
+
+  /** The `k` best rows of `scored` per `qid` by `cos desc, cid asc`, as
+    * `(qid, rnk, cid, cos)` plus the `carry` columns, on the heap-based
+    * [[graft.plans.TopK.perKey]]. Every ANN path here ranks through it. */
+  private def topPerQuery(scored: DataFrame, k: Int, carry: String*): DataFrame =
+    graft.plans.TopK.perKey(scored.select((Seq("qid", "cid", "cos") ++ carry).map(col): _*),
+      k, Seq(col("qid")), Seq(col("cos").desc, col("cid").asc))
+      .select((Seq("qid", "rnk", "cid", "cos") ++ carry).map(col): _*)
+
+  /** Exact re-rank of an ADC shortlist `(qid, qv, cid)` against the float
+    * corpus: only the shortlisted corpus rows are joined. */
+  private def rerank(shortlist: DataFrame, corpus: DataFrame, k: Int,
+                     idCol: String, vecCol: String): DataFrame =
+    topPerQuery(shortlist.select(col("qid"), col("qv"), col("cid"))
+      .join(corpus.select(col(idCol).as("cid"), col(vecCol).as("cv")), Seq("cid"))
+      .withColumn("cos", round(VectorFunctions.cosine(col("qv"), col("cv")), 6)), k)
 
   /**
    * Approximate top-k over a PQ-ENCODED corpus ([[Quantization.encodePq]]):
@@ -107,25 +116,12 @@ object Similarity {
               corpus: DataFrame, queries: DataFrame, k: Int, shortlist: Int = 0,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val bl = Quantization.pqBooksLiteral(books)
-    val enc = encoded.select(col(idCol).as("cid"), col("pq_codes"))
-    val q = queries.filter(VectorFunctions.isFiniteVec(col(vecCol))) // non-finite query -> no rows
-      .select(col(idCol).as("qid"), col(vecCol).as("qv"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid").asc)
-    val adc = enc.crossJoin(broadcast(q))
+    val adc = encoded.select(col(idCol).as("cid"), col("pq_codes"))
+      .crossJoin(broadcast(finiteQueries(queries, idCol, vecCol)))
       .filter(col("cid") =!= col("qid"))
       .withColumn("cos", round(VectorFunctions.pqCosine(col("qv"), col("pq_codes"), bl), 6))
-      .withColumn("rnk", row_number().over(w))
-    if (shortlist <= 0)
-      adc.filter(col("rnk") <= k).select(col("qid"), col("rnk"), col("cid"), col("cos"))
-    else {
-      val cand = adc.filter(col("rnk") <= math.max(shortlist, k))
-        .select(col("qid"), col("qv"), col("cid"))
-      cand.join(corpus.select(col(idCol).as("cid"), col(vecCol).as("cv")), Seq("cid"))
-        .withColumn("cos", round(VectorFunctions.cosine(col("qv"), col("cv")), 6))
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= k)
-        .select(col("qid"), col("rnk"), col("cid"), col("cos"))
-    }
+    if (shortlist <= 0) topPerQuery(adc, k)
+    else rerank(topPerQuery(adc, math.max(shortlist, k), "qv"), corpus, k, idCol, vecCol)
   }
 
   /**
@@ -336,22 +332,13 @@ object Similarity {
                  excludeSelf: Boolean = true): DataFrame = {
     val centsLit = centroidsLiteral(centroids)
     val bl = Quantization.pqBooksLiteral(books)
-    val q = queries.filter(VectorFunctions.isFiniteVec(col(vecCol)))
-      .select(col(idCol).as("qid"), col(vecCol).as("qv"))
+    val q = finiteQueries(queries, idCol, vecCol)
       .withColumn("list_id",
         explode(VectorFunctions.topCentroids(col("qv"), centsLit, nprobe)))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid").asc)
-    val cand = encoded.join(q, Seq("list_id"))
+    val adc = encoded.join(q, Seq("list_id"))
       .filter(if (excludeSelf) col("cid") =!= col("qid") else lit(true))
       .withColumn("cos", round(VectorFunctions.pqCosine(col("qv"), col("pq_codes"), bl), 6))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= math.max(shortlist, k))
-      .select(col("qid"), col("qv"), col("cid"))
-    cand.join(corpus.select(col(idCol).as("cid"), col(vecCol).as("cv")), Seq("cid"))
-      .withColumn("cos", round(VectorFunctions.cosine(col("qv"), col("cv")), 6))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("cid"), col("cos"))
+    rerank(topPerQuery(adc, math.max(shortlist, k), "qv"), corpus, k, idCol, vecCol)
   }
 
   /**
@@ -379,12 +366,7 @@ object Similarity {
     val cand = c.join(q, Seq("table", "bucket"))
       .filter(col("cid") =!= col("qid"))
       .select(col("qid"), col("qv"), col("cid"), col("cv")).distinct()
-    cand
-      .withColumn("cos", round(VectorFunctions.cosine(col("qv"), col("cv")), 6))
-      .withColumn("rnk", row_number().over(Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("cid").asc)))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("cid"), col("cos"))
+    topPerQuery(cand.withColumn("cos", round(VectorFunctions.cosine(col("qv"), col("cv")), 6)), k)
   }
 
   /** Per-vector L2 norm table (useful for normalize-once-then-dot at scale). */
@@ -692,17 +674,12 @@ object Similarity {
   def ivfQuery(index: IvfIndex, queries: DataFrame, k: Int, nprobe: Int = 4,
                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val centsLit = centroidsLiteral(index.centroids)
-    val q = queries.filter(VectorFunctions.isFiniteVec(col(vecCol))) // non-finite query -> no rows
-      .select(col(idCol).as("qid"), col(vecCol).as("qv"))
+    val q = finiteQueries(queries, idCol, vecCol)
       .withColumn("list_id",
         explode(VectorFunctions.topCentroids(col("qv"), centsLit, nprobe)))
-    index.assigned.join(q, Seq("list_id"))
+    topPerQuery(index.assigned.join(q, Seq("list_id"))
       .filter(col("cid") =!= col("qid"))
-      .withColumn("cos", round(VectorFunctions.cosine(col("qv"), col("cv")), 6))
-      .withColumn("rnk", row_number().over(Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("cid").asc)))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("cid"), col("cos"))
+      .withColumn("cos", round(VectorFunctions.cosine(col("qv"), col("cv")), 6)), k)
   }
 
   /**

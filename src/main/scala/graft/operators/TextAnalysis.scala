@@ -668,6 +668,19 @@ object TextAnalysis {
       .withColumn("terms_consistent", col("n_terms_expected") === col("n_terms_actual"))
   }
 
+  /** Fail, naming `caller`, unless `audit` ([[validateLexicalIndex]]'s
+    * row for the lexical index at `path`) finds it whole. */
+  private[graft] def requireWholeLexicalIndex(audit: DataFrame, path: String,
+                                              caller: String): Unit = {
+    val row = audit.collect()(0)
+    require(row.getAs[Boolean]("postings_consistent") && row.getAs[Boolean]("terms_consistent"),
+      s"$caller: lexical index at $path is torn (postings " +
+        s"${row.getAs[Long]("n_postings_actual")} vs committed " +
+        s"${row.getAs[Long]("n_postings_expected")}, termstats " +
+        s"${row.getAs[Long]("n_terms_actual")} vs committed " +
+        s"${row.getAs[Long]("n_terms_expected")}) — rebuild it from the corpus")
+  }
+
   /**
    * Compact a lexical index in place into a single segment, one commit
    * of its store ([[SegmentStore.compact]]): termstats delta rows are
@@ -686,15 +699,7 @@ object TextAnalysis {
       // derived from the rewritten tables, so compacting a TORN index would
       // otherwise launder data rows without their stat row into a
       // green-auditing artifact whose idf/avgdl stay silently skewed
-      val audit = lexAudit(pile).collect()(0)
-      require(audit.getAs[Boolean]("postings_consistent") &&
-        audit.getAs[Boolean]("terms_consistent"),
-        s"compactLexicalIndex: index at $path is torn (postings " +
-          s"${audit.getAs[Long]("n_postings_actual")} vs committed " +
-          s"${audit.getAs[Long]("n_postings_expected")}, termstats " +
-          s"${audit.getAs[Long]("n_terms_actual")} vs committed " +
-          s"${audit.getAs[Long]("n_terms_expected")}) — compacting would " +
-          "hide the tear; rebuild from the corpus")
+      requireWholeLexicalIndex(lexAudit(pile), path, "compactLexicalIndex")
       // the whole fold is ONE segment. Its stat row's audit counts are
       // computed IN-PLAN from the same expressions that produce the
       // written rows (postings preserved verbatim — their count is the
@@ -1199,7 +1204,7 @@ object TextAnalysis {
    *
    * Scale shape: one tokenize pass → (doc, term) counts (shuffle keyed on
    * doc+term), a term-keyed df aggregate (second, smaller shuffle), a
-   * term-keyed join back, and a per-doc top-k Window — every stage keyed,
+   * term-keyed join back, and a per-doc heap top-k — every stage keyed,
    * nothing corpus-sized on the driver (N is a metadata-cheap count).
    */
   def tfIdfTopTerms(docs: DataFrame, gramN: Int = 2, k: Int = 5,
@@ -1218,13 +1223,10 @@ object TextAnalysis {
     val dfq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val idf6 = round(
       log(lit(nDocs + 1.0) / (col("df") + lit(1)).cast("double")) + lit(1.0), 6)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col("score").desc, col("term").asc)
-    tf.join(dfq, "term")
+    graft.plans.TopK.perKey(tf.join(dfq, "term")
       .select(col(idCol), col("term"), col("tf"), col("df"),
-        round(col("tf") * idf6, 6).as("score"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+        round(col("tf") * idf6, 6).as("score")),
+      k, Seq(col(idCol)), Seq(col("score").desc, col("term").asc))
       .select(col(idCol), col("rnk"), col("term"), col("tf"), col("df"), col("score"))
   }
 
@@ -1305,10 +1307,8 @@ object TextAnalysis {
         col("dot"), col("n_shared"))
       .unionAll(pairs.select(col("db").as(idCol), col("da").as("nbr_id"),
         col("dot"), col("n_shared")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col("dot").desc, col("nbr_id").asc)
-    both.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    graft.plans.TopK.perKey(both, k, Seq(col(idCol)),
+        Seq(col("dot").desc, col("nbr_id").asc))
       .select(col(idCol), col("rnk"), col("nbr_id"), col("n_shared"),
         round(col("dot").cast("double") / lit(1e12), 6).as("cos"))
   }

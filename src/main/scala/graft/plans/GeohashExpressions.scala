@@ -97,7 +97,10 @@ object GraftFunctions {
 /**
  * `SparkSessionExtensions` hook so deployments can enable the functions via
  * `spark.sql.extensions=graft.plans.GraftExtensions` — the idiomatic way to
- * ship engine extensions to a cluster (no code changes at call sites).
+ * ship engine extensions to a cluster (no code changes at call sites). It
+ * also registers the [[TopKStrategy]] planner strategy, which
+ * [[TopK.perKey]] registers in its own session anyway, so no ranked
+ * operator plans differently without it.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -108,6 +111,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         builder))
     }
     ext.injectPlannerStrategy(_ => TopKStrategy)
-    ext.injectOptimizerRule(_ => TopKRewrite)
   }
 }

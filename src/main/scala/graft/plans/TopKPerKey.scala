@@ -7,10 +7,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, row_number}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, MapType, StructType}
 
 /**
  * Whole-operator custom plan: per-key top-k WITHOUT a full sort.
@@ -24,9 +26,10 @@ import org.apache.spark.sql.types.IntegerType
  * The full custom-operator stack (SURVEY.md §7.3 preference (c)):
  * logical node [[TopKPerKey]] → strategy [[TopKStrategy]] → physical
  * [[TopKPerKeyExec]] (declares `ClusteredDistribution`, so EnsureRequirements
- * plans the single hash shuffle) — registered per-session via
- * `spark.experimental.extraStrategies` ([[TopK.install]]) or cluster-wide via
- * [[GraftExtensions]].
+ * plans the single hash shuffle). [[TopK.perKey]] plants the node and
+ * registers the strategy in its session, so every ranked operator plans
+ * the same way in any session; [[GraftExtensions]] registers the strategy
+ * cluster-wide as well.
  */
 case class TopKPerKey(
     k: Int,
@@ -230,8 +233,17 @@ object TopK {
 
   /**
    * Top `k` rows per `partitionCols` group under `orderCols` (first = rank 1),
-   * with a `rnk` column appended — result-identical to the row_number
-   * formulation, executed heap-based.
+   * with a `rnk` column appended — result-identical to
+   * `row_number().over(partitionBy(p).orderBy(o)) <= k`, executed
+   * heap-based. The engine's one per-key top-k: every ranked operator
+   * calls it. Pass computed keys as columns of `df` (the heap compares
+   * rows many times, and a key evaluated only there would, for example,
+   * skip a per-row check on a group of one row).
+   *
+   * `k <= 0` answers no rows with the same schema. Float/double partition
+   * keys (nested too) run the stock window: it normalizes `-0.0`/`0.0` and
+   * NaN bit patterns before grouping, where the heap's raw `UnsafeRow`
+   * keys would split them into distinct keys.
    */
   def perKey(df: DataFrame, k: Int, partitionCols: Seq[Column],
              orderCols: Seq[Column]): DataFrame = {
@@ -248,12 +260,28 @@ object TopK {
           p.projectList.map { case a: Alias => a.child; case e => e }
         case other => throw new IllegalStateException(s"unexpected plan $other")
       }
-    val orderExprs: Seq[SortOrder] =
-      df.sort(orderCols: _*).queryExecution.analyzed match {
-        case s: org.apache.spark.sql.catalyst.plans.logical.Sort => s.order
-        case other => throw new IllegalStateException(s"unexpected plan $other")
-      }
-    val node = TopKPerKey(k, partExprs, orderExprs, rankAttr, analyzed)
-    org.apache.spark.sql.graftshim.GraftPlanBridge.ofRows(spark, node)
+    if (partExprs.exists(e => containsFloating(e.dataType)))
+      df.withColumn("rnk", row_number().over(
+        Window.partitionBy(partitionCols: _*).orderBy(orderCols: _*))).filter(col("rnk") <= k)
+    else {
+      val orderExprs: Seq[SortOrder] =
+        df.sort(orderCols: _*).queryExecution.analyzed match {
+          case s: org.apache.spark.sql.catalyst.plans.logical.Sort => s.order
+          case other => throw new IllegalStateException(s"unexpected plan $other")
+        }
+      // the heap would fail on `heap.head` with no room for a row
+      val node =
+        if (k <= 0) LocalRelation(analyzed.output :+ rankAttr)
+        else TopKPerKey(k, partExprs, orderExprs, rankAttr, analyzed)
+      org.apache.spark.sql.graftshim.GraftPlanBridge.ofRows(spark, node)
+    }
+  }
+
+  private def containsFloating(dt: DataType): Boolean = dt match {
+    case FloatType | DoubleType => true
+    case s: StructType => s.fields.exists(f => containsFloating(f.dataType))
+    case a: ArrayType => containsFloating(a.elementType)
+    case m: MapType => containsFloating(m.keyType) || containsFloating(m.valueType)
+    case _ => false
   }
 }

@@ -22,8 +22,8 @@ import graft.operators.{Quantization, Similarity}
  *    state store, no watermark, no shuffle of the static side beyond the
  *    pruned scan — the per-event cost is the same `corpus·nprobe/nlist`
  *    code rows as the batch path.
- *  - [[serveIvfPq]] — the full answer (exact re-rank + per-query top-k)
- *    per micro-batch via `foreachBatch`, reusing the EXACT batch
+ *  - [[serveIvfPqFromRoot]] — the full answer (exact re-rank + per-query
+ *    top-k) per micro-batch via `foreachBatch`, reusing the EXACT batch
  *    [[Similarity.ivfPqQuery]] — so streaming answers are row-identical to
  *    batch answers for the same query set by construction (gated in
  *    StreamingAnnSpec, not assumed). Per-query top-k needs a rank over the
@@ -64,38 +64,14 @@ object StreamingAnnServing {
   }
 
   /**
-   * Serve exact top-k answers for a stream of query vectors from the loaded
-   * index: every micro-batch runs the batch [[Similarity.ivfPqQuery]]
-   * (probe → ADC shortlist → exact re-rank against the float `corpus`) and
-   * hands the answer frame to `sink`.
-   *
-   * The captured `index.encoded`/`corpus` DataFrames keep the files they
-   * were created over (the index's commit at load time), so rows appended
-   * to the artifact after this call are NOT visible here — use
-   * [[serveIvfPqFromRoot]] for a growing index.
-   * The centroids and codebooks are driver-held literals baked into the
-   * plan either way; a RETRAINED quantizer always requires a reload +
-   * restart.
-   */
-  def serveIvfPq(queryStream: DataFrame, index: Similarity.IvfPqIndex,
-                 corpus: DataFrame, k: Int, nprobe: Int = 4, shortlist: Int = 20,
-                 idCol: String = "vec_id", vecCol: String = "embedding",
-                 excludeSelf: Boolean = false)
-                (sink: (DataFrame, Long) => Unit): StreamingQuery =
-    queryStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        sink(Similarity.ivfPqQuery(index.encoded, index.centroids, index.books,
-          corpus, batch.toDF(), k, nprobe, shortlist, idCol, vecCol, excludeSelf), epochId)
-      }
-      .start()
-
-  /**
-   * [[serveIvfPq]] for a GROWING index at `indexRoot`. Every micro-batch
-   * resolves the index's newest [[graft.operators.SegmentStore]] manifest
-   * once (one `_manifest` listing, no listing or schema-inference job at
-   * any list count), reads the code rows of exactly that commit, and
-   * re-reads the float corpus. So codes committed by
+   * Serve exact top-k answers for a stream of query vectors from the
+   * IVF-PQ index at `indexRoot`, which may grow while the stream runs.
+   * Every micro-batch resolves the index's newest
+   * [[graft.operators.SegmentStore]] manifest once (one `_manifest`
+   * listing, no listing or schema-inference job at any list count), reads
+   * the code rows of exactly that commit, re-reads the float corpus at
+   * `corpusPath`, and hands the batch [[Similarity.ivfPqQuery]] answer
+   * (probe → ADC shortlist → exact re-rank) to `sink`. So codes committed by
    * [[Similarity.appendIvfPq]] plus a matching corpus append are served
    * from the next epoch, and so is a re-cluster
    * ([[Similarity.maintainIvfPq]]) or any other save, with no stream

@@ -63,16 +63,9 @@ object StreamingLexicalServing {
     // silently skewed idf/avgdl) instead of letting the deployment look
     // healthy until epoch 0 serves wrong scores. One scan of the index —
     // a construction-time audit, never a per-epoch cost.
-    val audit = TextAnalysis.validateLexicalIndex(queryStream.sparkSession, indexPath)
-      .collect()(0)
-    require(audit.getAs[Boolean]("postings_consistent") &&
-      audit.getAs[Boolean]("terms_consistent"),
-      s"lexical index at $indexPath is torn: postings " +
-        s"${audit.getAs[Long]("n_postings_actual")} vs committed " +
-        s"${audit.getAs[Long]("n_postings_expected")}, termstats " +
-        s"${audit.getAs[Long]("n_terms_actual")} vs committed " +
-        s"${audit.getAs[Long]("n_terms_expected")} — recover by rebuilding " +
-        "from the corpus")
+    TextAnalysis.requireWholeLexicalIndex(
+      TextAnalysis.validateLexicalIndex(queryStream.sparkSession, indexPath),
+      indexPath, "serveBm25FromPath")
     queryStream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], epochId: Long) =>

@@ -79,13 +79,17 @@ class CurationOpsSpec extends SparkSpec {
   test("weightedSampleHash rejects nonpositive and NaN weights loudly") {
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e => e.getMessage +: msgs(e.getCause))
-    def assertRejected(bad: Double): Unit = {
-      val docs = Seq((1L, "g", 1.0), (2L, "g", bad)).toDF("doc_id", "grp", "w")
-      val ex = intercept[Exception] {
-        Curation.weightedSampleHash(docs, "grp", col("w"), k = 1).collect()
+    def assertRejected(bad: Double): Unit =
+      // a group of one row is checked too: no rank comparison ever reads
+      // its key, so the check must run on every row, not in the ranking
+      Seq(Seq((1L, "g", 1.0), (2L, "g", bad)), Seq((1L, "g", bad))).foreach { rows =>
+        val docs = rows.toDF("doc_id", "grp", "w")
+        val ex = intercept[Exception] {
+          Curation.weightedSampleHash(docs, "grp", col("w"), k = 1).collect()
+        }
+        assert(msgs(ex).exists(m => m != null && m.contains("weight must be > 0")),
+          s"bad=$bad rows=$rows")
       }
-      assert(msgs(ex).exists(m => m != null && m.contains("weight must be > 0")), s"bad=$bad")
-    }
     assertRejected(0.0)
     assertRejected(-1.5)
     // NaN <= 0.0 is false AND a NaN rank key sorts above every valid key —

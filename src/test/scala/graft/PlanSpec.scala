@@ -148,6 +148,37 @@ class PlanSpec extends SparkSpec {
       s"single-column window partition: ${w.partitionSpec}"))
   }
 
+  test("every ranked verb plans the heap top-k and no Window, in a session without extensions") {
+    // the shared test session loads no GraftExtensions: each verb plants
+    // TopKPerKey itself, so Verify, Bench and every other session plan the
+    // same operator
+    import graft.operators.{Curation, Dedup, Quantization, Similarity, TextAnalysis}
+    val e = Tables.embeddings(spark, Sf)
+    val q = e.filter(col("vec_id") < 4)
+    val docs = Tables.documents(spark, Sf)
+    val ivf = Similarity.buildIvfIndex(e, nlist = 8)
+    val books = Quantization.buildPqCodebooks(e, m = 8, ksub = 16)
+    val pq = Quantization.encodePq(e, books)
+    Seq(
+      "bruteForceTopK" -> Similarity.bruteForceTopK(e, q, k = 3),
+      "quantizedTopK" -> Similarity.quantizedTopK(Quantization.quantizeSQ8(e), q, k = 3),
+      "pqQuery (ADC rank)" -> Similarity.pqQuery(pq, books, e, q, k = 3),
+      "pqQuery (re-rank)" -> Similarity.pqQuery(pq, books, e, q, k = 3, shortlist = 10),
+      "ivfPqQuery" -> Similarity.ivfPqQuery(Similarity.ivfPqEncode(e, ivf.centroids, books),
+        ivf.centroids, books, e, q, k = 3),
+      "lshTopK" -> Similarity.lshTopK(e, q, k = 3, dim = 64),
+      "ivfQuery" -> Similarity.ivfQuery(ivf, q, k = 3),
+      "tfIdfTopTerms" -> TextAnalysis.tfIdfTopTerms(docs, k = 3),
+      "sparseSimilarDocs" -> TextAnalysis.sparseSimilarDocs(docs, k = 3),
+      "exactDedupKept" -> Dedup.exactDedupKept(docs),
+      "weightedSampleHash" -> Curation.weightedSampleHash(docs, "source", lit(1.0), k = 3)
+    ).foreach { case (verb, df) =>
+      val plan = formattedPlan(df)
+      assert(plan.contains("TopKPerKey"), s"$verb:\n$plan")
+      assert(!plan.contains("Window"), s"$verb:\n$plan")
+    }
+  }
+
   test("Bloom decontamination never shuffles the training corpus") {
     val docs = Tables.documents(spark, Sf)
     val plan = formattedPlan(graft.operators.TextAnalysis.decontaminateBloom(

@@ -17,12 +17,12 @@ case class QueryVec(vec_id: Long, embedding: Seq[Float])
 class StreamingAnnSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withIndex(f: (Similarity.IvfPqIndex, DataFrame) => Unit): Unit = {
+  private def withIndex(f: (String, Similarity.IvfPqIndex, DataFrame) => Unit): Unit = {
     val e = Tables.embeddings(spark, Sf)
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_serve").toString
     try {
       Similarity.saveIvfPq(e, dir, nlist = 8, m = 8, ksub = 16, kmeansIters = 1)
-      f(Similarity.loadIvfPq(spark, dir), e)
+      f(dir, Similarity.loadIvfPq(spark, dir), e)
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(dir)).deleteRecursively()
@@ -34,7 +34,7 @@ class StreamingAnnSpec extends SparkSpec {
       .map(r => QueryVec(r.getLong(0), r.getSeq[Float](1)))
 
   test("streamed IVF-PQ answers are row-identical to the batch query") {
-    withIndex { (idx, e) =>
+    withIndex { (dir, idx, e) =>
       implicit val sqlCtx = spark.sqlContext
       val qs = queryVecs(e, 8)
       val expected = Similarity
@@ -47,8 +47,9 @@ class StreamingAnnSpec extends SparkSpec {
       // queries here ARE corpus rows under their own ids, so self-matches
       // must be suppressed to mirror the batch gate (excludeSelf = true;
       // the streaming default is false for client-chosen id spaces)
-      val q = StreamingAnnServing.serveIvfPq(stream.toDF(), idx, e,
-        k = 3, nprobe = 4, shortlist = 10, excludeSelf = true) { (answers, _) =>
+      val q = StreamingAnnServing.serveIvfPqFromRoot(stream.toDF(), dir,
+        s"$Sf/embeddings.parquet", k = 3, nprobe = 4, shortlist = 10,
+        excludeSelf = true) { (answers, _) =>
         got ++= answers.collect().map(_.toSeq)
       }
       // two micro-batches: per-query answers must compose to the batch set
@@ -63,7 +64,7 @@ class StreamingAnnSpec extends SparkSpec {
   }
 
   test("stateless candidate tier: pure append stream, no state store, batch-identical") {
-    withIndex { (idx, e) =>
+    withIndex { (_, idx, e) =>
       implicit val sqlCtx = spark.sqlContext
       val qs = queryVecs(e, 4)
       val expected = StreamingAnnServing

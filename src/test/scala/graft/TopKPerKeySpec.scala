@@ -84,86 +84,26 @@ class TopKPerKeySpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.topk.maxKeysInMemory")
   }
 
-  test("optimizer rule rewrites row_number()<=k into TopKPerKeyExec automatically") {
-    graft.plans.TopKRewriteInstaller.install(spark)
-    val orders = Tables.orders(spark, Sf)
-    val w = Window.partitionBy(col("o_orderpriority"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-    // plain row_number idiom — user code, no TopK API in sight
-    val df = orders
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 3)
-      .select(col("o_orderpriority"), col("rnk"), col("o_orderkey"))
-
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("TopKPerKey"), plan) // physical nodes print w/o Exec
-    assert(!plan.contains("Window"), plan)    // also rejects WindowGroupLimit
-    assert(!plan.contains("Sort "), plan)
-
-    // results identical to stock execution (rule removed)
-    val rewritten = df.orderBy(col("o_orderpriority"), col("rnk")).collect().map(_.toSeq).toSeq
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == graft.plans.TopKRewrite)
-    val stock = orders
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 3)
-      .select(col("o_orderpriority"), col("rnk"), col("o_orderkey"))
-      .orderBy(col("o_orderpriority"), col("rnk")).collect().map(_.toSeq).toSeq
-    assert(rewritten == stock && stock.nonEmpty)
-  }
-
-  test("optimizer rule leaves non-rewritable window shapes alone") {
-    graft.plans.TopKRewriteInstaller.install(spark)
-    try {
-      val orders = Tables.orders(spark, Sf)
-      val w = Window.partitionBy(col("o_orderpriority")).orderBy(col("o_totalprice").desc)
-      // rank() has tie semantics TopKPerKey does not implement
-      val viaRank = orders.withColumn("rnk", rank().over(w)).filter(col("rnk") <= 3)
-      assert(viaRank.queryExecution.executedPlan.toString.contains("Window"))
-      // residual conjuncts survive as a Filter above the rewrite
-      val mixed = orders.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 3 && col("o_orderstatus") === "F")
-      val p = mixed.queryExecution.executedPlan.toString
-      assert(p.contains("TopKPerKey") && p.contains("o_orderstatus"), p)
-      assert(mixed.collect().forall(_.getAs[String]("o_orderstatus") == "F"))
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == graft.plans.TopKRewrite)
-    }
-  }
-
   test("non-positive rank bounds rewrite to empty, not a heap crash") {
-    graft.plans.TopKRewriteInstaller.install(spark)
-    try {
-      val orders = Tables.orders(spark, Sf)
-      val w = Window.partitionBy(col("o_orderpriority")).orderBy(col("o_totalprice").desc)
-      // legal-but-empty under stock Spark; must not reach TopKPerKeyExec
-      // where heap.head on an empty queue would throw NoSuchElementException
-      val le0 = orders.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 0)
-      assert(le0.collect().isEmpty)
-      val lt1 = orders.withColumn("rnk", row_number().over(w)).filter(col("rnk") < 1)
-      assert(lt1.collect().isEmpty)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == graft.plans.TopKRewrite)
-    }
+    val orders = Tables.orders(spark, Sf)
+    // k <= 0 must never reach TopKPerKeyExec, where heap.head on an empty
+    // queue would throw NoSuchElementException: the answer is no rows
+    // with the k > 0 answer's schema
+    val empty = TopK.perKey(orders, k = 0,
+      Seq(col("o_orderpriority")), Seq(col("o_totalprice").desc))
+    assert(empty.collect().isEmpty)
+    assert(empty.schema == TopK.perKey(orders, k = 1,
+      Seq(col("o_orderpriority")), Seq(col("o_totalprice").desc)).schema)
   }
 
   test("float/double partition keys stay on stock Window (-0.0/NaN normalization)") {
-    graft.plans.TopKRewriteInstaller.install(spark)
-    try {
-      import spark.implicits._
-      val df = Seq((0.0, 1), (-0.0, 2), (Double.NaN, 3), (Double.NaN, 4)).toDF("g", "v")
-      val w = Window.partitionBy(col("g")).orderBy(col("v").desc)
-      val q = df.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 1)
-      // rewrite must be skipped: TopKPerKeyExec's raw UnsafeRow grouping would
-      // split 0.0/-0.0 (and NaN payloads) into distinct keys
-      assert(!q.queryExecution.executedPlan.toString.contains("TopKPerKey"))
-      assert(q.count() == 2) // {0.0,-0.0} one key, {NaN,NaN} one key
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == graft.plans.TopKRewrite)
-    }
+    import spark.implicits._
+    val df = Seq((0.0, 1), (-0.0, 2), (Double.NaN, 3), (Double.NaN, 4)).toDF("g", "v")
+    val q = TopK.perKey(df, k = 1, Seq(col("g")), Seq(col("v").desc))
+    // TopKPerKeyExec's raw UnsafeRow grouping would split 0.0/-0.0 (and NaN
+    // payloads) into distinct keys; the stock window normalizes them
+    assert(!q.queryExecution.executedPlan.toString.contains("TopKPerKey"))
+    assert(q.count() == 2) // {0.0,-0.0} one key, {NaN,NaN} one key
   }
 
   test("works with k larger than group size and with multiple keys") {
